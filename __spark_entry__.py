@@ -4921,143 +4921,123 @@ def entry(spark: SparkSession) -> DataFrame:
     return q_pricing_summary(spark, "/root/testdata/sf0.001")
 
 
-#: Dict ORDER is the driver's check order and is deliberate: the
-#: dedup/ANN/media family and any query whose implementation changed
-#: this round come FIRST so a bounded correctness pass (count- or
-#: time-capped) always covers the least-recently-verified code before
-#: re-confirming long-stable rows.
+#: name -> (query, DuckDB twin SQL); None means the twin is built
+#: lazily by its ``_LAZY_SQL`` entry
 _QUERIES: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] = {
-    # FIRST 50 = the driver's per-round check window. Round-11 layout
-    # (VERDICT r10 ask #2):
-    #   1-13  every query whose closure changed this round: the
-    #         catalog/curation family (catalog.py sidecar budget +
-    #         pipeline.py gate-cadence/sized-gate-default changes)
-    #         and the rhp_bucket callers (lsh.py null-element mask)
-    #   14-50 the stalest driver attestations in the registry —
-    #         the r6/r7-era carries (media family, recall harnesses,
-    #         TPC-H-ish block, kanon/quality_outliers/cusum/unimax/
-    #         pagerank, time sugar) plus the r8-era lm/bpe tail —
-    #         rotated in; the r9/r10-green rows demoted in trade
-    #         (their modules untouched this round).
-    # tools/check_window.py verifies the invariant at any commit;
-    # tests/test_window_invariant.py runs it in CI and MUST be green
-    # at snapshot time (the round-5 lesson, twice learned).
-    "retention": (q_retention, RETENTION_SQL),  # store retention reaches catalog-adjacent store code
-    "ann_ivf_index_topk": (q_ann_ivf_index_topk, None),  # persisted index via CatalogStore
-    "minhash_catalog_incremental": (q_minhash_catalog_incremental, MINHASH_CATALOG_SQL),  # cross-run catalog (catalog.py changed r11)
-    "dedup_exact": (q_dedup_exact, DEDUP_EXACT_SQL),  # DigestCatalog module shares catalog.py
-    "curation": (q_curation, None),  # pipeline.py changed r11 (gate cadence + sized-gate default)
-    "curation_near": (q_curation_near, None),  # pipeline.py changed r11
-    "curation_incremental": (q_curation_incremental, CURATION_INCREMENTAL_SQL),  # pipeline.py + catalog.py changed r11
-    "catalog_retention_gate": (q_catalog_retention_gate, CATALOG_RETENTION_GATE_SQL),  # catalog.py changed r11
-    "embedding_catalog_incremental": (q_embedding_catalog_incremental, None),  # similarity/catalog.py + lsh.py changed r11
-    "embedding_gate_verified": (q_embedding_gate_verified, None),  # verified gate; lsh.py null-mask fix r11
-    "embedding_gate_bucketed": (q_embedding_gate_bucketed, None),  # bucketed verify sibling; sized-gate default r11
-    "ann_lsh_topk": (q_ann_lsh_topk, None),  # rhp_bucket caller; lsh.py changed r11
-    "bitext_pairs_ann": (q_bitext_pairs_ann, None),  # ANN tier routes through rhp_bucket; lsh.py changed r11
-    "embedding_near_pairs": (q_embedding_near_pairs, None),  # rhp_bucket caller; lsh.py changed r11 (checker-flagged)
-    "repetition": (q_repetition, REPETITION_SQL),  # rotated into the r11 window (stale-attestation refresh, VERDICT r10 ask #2)
-    "ngram_jaccard": (q_ngram_jaccard, NGRAM_JACCARD_SQL),  # rotated into the r11 window (stale-attestation refresh, VERDICT r10 ask #2)
-    "substring_dup": (q_substring_dup, SUBSTRING_DUP_SQL),  # rotated into the r11 window (stale-attestation refresh, VERDICT r10 ask #2)
-    "simhash_pairs": (q_simhash_pairs, NGRAM_JACCARD_SQL),  # rotated into the r11 window (stale-attestation refresh, VERDICT r10 ask #2)
-    "minhash_pairs": (q_minhash_pairs, NGRAM_JACCARD_SQL),  # rotated into the r11 window (stale-attestation refresh, VERDICT r10 ask #2)
-    "bloom_prefilter": (q_bloom_prefilter, None),  # promoted into the r11 window: entry closure changed (shared fingerprint pin, r11 optimization pass)
-    "kmv_churn": (q_kmv_churn, None),  # promoted into the r11 window: operators/kmv.py closure changed (bottom-k pin, r11 optimization pass)
-    "perplexity": (q_perplexity, PERPLEXITY_SQL),  # promoted into the r11 window: functions/lm.py closure changed (r11 optimization pass)
-    "near_dup_groups": (q_near_dup_groups, None),  # promoted into the r11 window: dedup/ngram.py closure changed (r11 optimization pass)
-    "line_dedup": (q_line_dedup, LINE_DEDUP_SQL),  # promoted into the r11 window: dedup/lines.py closure changed (r11 optimization pass)
-    "tfidf_keywords": (q_tfidf_keywords, None),  # promoted into the r11 window: functions/tfidf.py closure changed (r11 optimization pass)
-    "substring_strip": (q_substring_strip, SUBSTRING_STRIP_SQL),  # promoted into the r11 window: dedup/substr.py closure changed (r11 optimization pass)
-    "cusum_alerts": (q_cusum_alerts, None),  # rotated into the r11 window (stale-attestation refresh, VERDICT r10 ask #2)
-    "unimax_mixture": (q_unimax_mixture, None),  # rotated into the r11 window (stale-attestation refresh, VERDICT r10 ask #2)
-    "pagerank_top": (q_pagerank_top, None),  # rotated into the r11 window (stale-attestation refresh, VERDICT r10 ask #2)
-    "stats": (q_stats, STATS_SQL),  # rotated into the r11 window (stale-attestation refresh, VERDICT r10 ask #2)
-    "bm25_search": (q_bm25_search, None),  # promoted into the r11 window: functions/bm25.py closure changed (r11 optimization pass)
-    "hybrid_search": (q_hybrid_search, None),  # promoted into the r11 window: functions/bm25.py closure changed (r11 optimization pass)
-    "nb_classify": (q_nb_classify, None),  # promoted into the r11 window: functions/nbayes.py closure changed (r11 optimization pass)
-    "nb_confusion": (q_nb_confusion, None),  # promoted into the r11 window: functions/nbayes.py closure changed (r11 optimization pass)
-    "url_normalize": (q_url_normalize, URL_NORMALIZE_SQL),  # rotated into the r11 window (stale-attestation refresh, VERDICT r10 ask #2)
-    "top_parts_per_supplier": (q_top_parts_per_supplier, TOP_PARTS_SQL),  # rotated into the r11 window (stale-attestation refresh, VERDICT r10 ask #2)
-    "ann_ivfpq_topk": (q_ann_ivfpq_topk, None),  # promoted into the r11 window: util.compact_partition_dirs closure changed (overlapped compaction, r11 optimization pass)
-    "top_revenue_join": (q_top_revenue_join, TOP_REVENUE_SQL),  # rotated into the r11 window (stale-attestation refresh, VERDICT r10 ask #2)
-    "regional_revenue": (q_regional_revenue, REGIONAL_REVENUE_SQL),  # rotated into the r11 window (stale-attestation refresh, VERDICT r10 ask #2)
-    "daily_uniques_approx": (q_daily_uniques_approx, DAILY_UNIQUES_APPROX_SQL),  # promoted into the r11 window: entry closure changed (Expand-free two-level agg, r11 optimization pass)
-    "corpus_drift": (q_corpus_drift, None),  # promoted into the r11 window: operators/drift.py closure changed (per-bucket pin, r11 optimization pass)
-    "kanon_export": (q_kanon_export, None),  # rotated into the r11 window (stale-attestation refresh, VERDICT r10 ask #2)
-    "quality_outliers": (q_quality_outliers, None),  # rotated into the r11 window (stale-attestation refresh, VERDICT r10 ask #2)
-    "ann_ivf_topk": (q_ann_ivf_topk, None),  # rotated into the r11 window (stale-attestation refresh, VERDICT r10 ask #2)
-    "shuffle_shards": (q_shuffle_shards, None),  # rotated into the r11 window (stale-attestation refresh, VERDICT r10 ask #2)
-    "corpus_profile": (q_corpus_profile, None),  # promoted into the r11 window: operators/profile.py closure changed (Expand-free two-level agg, r11 optimization pass)
-    "funnel": (q_funnel, None),  # rotated into the r11 window (stale-attestation refresh, VERDICT r10 ask #2)
-    "bpe_vocab": (q_bpe_vocab, None),  # rotated into the r11 window (stale-attestation refresh, VERDICT r10 ask #2)
-    "bpe_tokenize": (q_bpe_tokenize, None),  # rotated into the r11 window (stale-attestation refresh, VERDICT r10 ask #2)
-    "vocab_stats": (q_vocab_stats, VOCAB_STATS_SQL),  # rotated into the r11 window (stale-attestation refresh, VERDICT r10 ask #2)
-    # ---- window boundary (index 50): everything below is green on --
-    # ---- files unchanged since its last attestation (legit carry) --
-    "media_decode": (q_media_decode, MEDIA_DECODE_SQL),  # r11-rotation row demoted in trade for the r11-opt promotions (multimodal module unchanged by the optimization pass)
-    "ann_pq_topk": (q_ann_pq_topk, None),  # r10-driver-green carry (demoted r11 in trade for the stale-attestation rotation; module unchanged this round)
-    "embedding_topk": (q_embedding_topk, EMBEDDING_TOPK_SQL),  # r10-driver-green carry (demoted r11 in trade for the stale-attestation rotation; module unchanged this round)
-    "knn_join": (q_knn_join, KNN_JOIN_SQL),  # r10-driver-green carry (demoted r11 in trade for the stale-attestation rotation; module unchanged this round)
-    "semantic_pairs": (q_semantic_pairs, None),  # r10-driver-green carry (demoted r11 in trade for the stale-attestation rotation; module unchanged this round)
-    "psl_domains": (q_psl_domains, None),  # r10-driver-green carry (demoted r11 in trade for the stale-attestation rotation; module unchanged this round)
-    "pii_scrub": (q_pii_scrub, None),  # r10-driver-green carry (demoted r11 in trade for the stale-attestation rotation; module unchanged this round)
-    "media_dhash_pairs": (q_media_dhash_pairs, MEDIA_DHASH_SQL),  # r10-driver-green carry (demoted r11 in trade for the stale-attestation rotation; module unchanged this round)
-    "media_audio_features": (q_media_audio_features, MEDIA_AUDIO_SQL),  # r11-rotation row demoted in trade for the r11-opt promotions (multimodal module unchanged by the optimization pass)
-    "media_decode_jpeg": (q_media_decode_jpeg, MEDIA_DECODE_JPEG_SQL),  # r11-rotation row demoted in trade for the r11-opt promotions (multimodal module unchanged by the optimization pass)
-    "media_decode_real": (q_media_decode_real, MEDIA_DECODE_REAL_SQL),  # r11-rotation row demoted in trade for the r11-opt promotions (multimodal module unchanged by the optimization pass)
-    "media_meta": (q_media_meta, MEDIA_META_SQL),  # r11-rotation row demoted in trade for the r11-opt promotions (multimodal module unchanged by the optimization pass)
-    "time_sugar": (q_time_sugar, None),  # r11-rotation row demoted in trade for the r11-opt promotions (timeparse module unchanged by the optimization pass)
-    "time_today": (q_time_today, None),  # r11-rotation row demoted in trade for the r11-opt promotions (timeparse module unchanged by the optimization pass)
-    "host_generator_uri": (q_host_generator_uri, None),  # r11-rotation row demoted in trade for the r11-opt promotions (filters module unchanged by the optimization pass)
-    "method_filter": (q_method_filter, None),  # r11-rotation row demoted in trade for the r11-opt promotions (filters module unchanged by the optimization pass)
-    "age_only": (q_age_only, AGE_ONLY_SQL),  # r11-rotation row demoted in trade for the r11-opt promotions (accumulate module unchanged by the optimization pass)
-    "pack_shards": (q_pack_shards, None),  # r10-driver-green carry (demoted r11 in trade for the stale-attestation rotation; module unchanged this round)
-    "fingerprint": (q_fingerprint, None),  # r10-driver-green carry (demoted r11 in trade for the stale-attestation rotation; module unchanged this round)
-    "dhash_exact_pairs": (q_dhash_exact_pairs, MEDIA_DHASH_EXACT_SQL),  # r10-driver-green carry (demoted r11 in trade for the stale-attestation rotation; module unchanged this round)
-    "range_join": (q_range_join, None),  # judge-green r10 session; demoted in trade for the r11-opt promotions (module unchanged by the optimization pass)
-    "hard_negatives": (q_hard_negatives, None),  # r10-driver-green carry (demoted r11 in trade for the stale-attestation rotation; module unchanged this round)
-    "bitext_pairs": (q_bitext_pairs, None),  # r10-driver-green carry (demoted r11 in trade for the stale-attestation rotation; module unchanged this round)
-    "sanitize_site": (q_sanitize_site, SANITIZE_SQL),  # r10-driver-green carry (demoted r11 in trade for the stale-attestation rotation; module unchanged this round)
-    "resolve_forwarded": (q_resolve_forwarded, RESOLVE_FORWARDED_SQL),  # r10-driver-green carry (demoted r11 in trade for the stale-attestation rotation; module unchanged this round)
-    "format_one_line": (q_format_one_line, FORMAT_ONE_LINE_SQL),  # r10-driver-green carry (demoted r11 in trade for the stale-attestation rotation; module unchanged this round)
-    "accumulate_more": (q_accumulate_more, ACCUMULATE_MORE_SQL),  # r10-driver-green carry (demoted r11 in trade for the stale-attestation rotation; module unchanged this round)
-    "anonymize": (q_anonymize, ANONYMIZE_SQL),  # r10-driver-green carry (demoted r11 in trade for the stale-attestation rotation; module unchanged this round)
-    "event_transitions": (q_event_transitions, None),  # r10-driver-green carry (demoted r11 in trade for the stale-attestation rotation; module unchanged this round)
-    "chunk_documents": (q_chunk_documents, None),  # r10-driver-green carry (demoted r11 in trade for the stale-attestation rotation; module unchanged this round)
-    "mixture": (q_mixture, None),  # r10-driver-green carry (demoted r11 in trade for the stale-attestation rotation; module unchanged this round)
-    "decontaminate": (q_decontaminate, DECONTAMINATE_SQL),  # r10-driver-green carry (demoted r11 in trade for the stale-attestation rotation; module unchanged this round)
-    "stratified_sample": (q_stratified_sample, None),  # r11-rotation row demoted in trade for the r11-opt promotions (sampling module unchanged by the optimization pass)
-    "pack_sequences": (q_pack_sequences, None),  # r10-driver-green carry (demoted r11 in trade for the stale-attestation rotation; module unchanged this round)
-    "geoip": (q_geoip, GEOIP_SQL),  # judge-green r10 session; demoted in trade for the r11-opt promotions (module unchanged by the optimization pass)
-    "cm_join_size": (q_cm_join_size, None),  # r10-driver-green carry (demoted r11 in trade for the stale-attestation rotation; module unchanged this round)
-    "dsir_weights": (q_dsir_weights, None),  # r10-driver-green carry (demoted r11 in trade for the stale-attestation rotation; module unchanged this round)
-    "dsir_topk": (q_dsir_topk, None),  # r10-driver-green carry (demoted r11 in trade for the stale-attestation rotation; module unchanged this round)
-    "cm_heavy_hitters": (q_cm_heavy_hitters, None),  # r10-driver-green carry (demoted r11 in trade for the stale-attestation rotation; module unchanged this round)
-    "quality_rules": (q_quality_rules, None),  # r10-driver-green carry (demoted r11 in trade for the stale-attestation rotation; module unchanged this round)
-    "bm25_index_search": (q_bm25_index_search, None),  # r10-driver-green carry (demoted r11 in trade for the stale-attestation rotation; module unchanged this round)
-    "uniques_sketch_rollup": (q_uniques_sketch_rollup, UNIQUES_SKETCH_SQL),  # r10-driver-green carry (demoted r11 in trade for the stale-attestation rotation; module unchanged this round)
-    "value_quantiles_sketch": (q_value_quantiles_sketch, VALUE_SKETCH_SQL),  # r10-driver-green carry (demoted r11 in trade for the stale-attestation rotation; module unchanged this round)
-    "pricing_summary": (q_pricing_summary, PRICING_SQL),  # judge-green r10 session; demoted in trade for the r11-opt promotions (module unchanged by the optimization pass)
-    "sessionize": (q_sessionize, SESSIONIZE_SQL),  # r9-driver-green carry
-    "scan_window": (q_scan_window, SCAN_WINDOW_SQL),  # r9-driver-green carry
-    "filter_surface": (q_filter_surface, FILTER_SURFACE_SQL),  # r9-driver-green carry
-    "last": (q_last, LAST_SQL),  # r9-driver-green carry
-    "group_site": (q_group_site, GROUP_SITE_SQL),  # r9-driver-green carry
-    "uri_prefix": (q_uri_prefix, URI_PREFIX_SQL),  # r9-driver-green carry
-    "unsafe_method": (q_unsafe_method, None),  # r9-driver-green carry
-    "duration_longer": (q_duration_longer, DURATION_SQL),  # r9-driver-green carry
-    "value_quantiles": (q_value_quantiles, VALUE_QUANTILES_SQL),  # r9-driver-green carry
-    "value_quantiles_approx": (q_value_quantiles_approx, VALUE_QUANTILES_APPROX_SQL),  # r9-driver-green carry
-    "daily_uniques": (q_daily_uniques, DAILY_UNIQUES_SQL),  # r9-driver-green carry
-    "promo_revenue": (q_promo_revenue, PROMO_REVENUE_SQL),  # r9-driver-green carry
-    "time_rollup": (q_time_rollup, TIME_ROLLUP_SQL),  # r9-driver-green carry
-    "site_delta": (q_site_delta, SITE_DELTA_SQL),  # r9-driver-green carry
-    "rollup_hierarchy": (q_rollup_hierarchy, ROLLUP_HIERARCHY_SQL),  # r9-driver-green carry
-    "text_stats": (q_text_stats, None),  # r8-driver-green carry
-    "lang_id": (q_lang_id, None),  # r8-driver-green carry
-    "asof_join": (q_asof_join, ASOF_JOIN_SQL),  # r8-driver-green carry
-    "temperature_mixture": (q_temperature_mixture, None),  # r8-driver-green carry
-    "accumulate_top": (q_accumulate_top, ACCUMULATE_TOP_SQL),  # judge-green r10 session; demoted in trade for the r11-opt promotions (module unchanged by the optimization pass)
+    "retention": (q_retention, RETENTION_SQL),
+    "ann_ivf_index_topk": (q_ann_ivf_index_topk, None),
+    "minhash_catalog_incremental": (q_minhash_catalog_incremental, MINHASH_CATALOG_SQL),
+    "dedup_exact": (q_dedup_exact, DEDUP_EXACT_SQL),
+    "curation": (q_curation, None),
+    "curation_near": (q_curation_near, None),
+    "curation_incremental": (q_curation_incremental, CURATION_INCREMENTAL_SQL),
+    "catalog_retention_gate": (q_catalog_retention_gate, CATALOG_RETENTION_GATE_SQL),
+    "embedding_catalog_incremental": (q_embedding_catalog_incremental, None),
+    "embedding_gate_verified": (q_embedding_gate_verified, None),
+    "embedding_gate_bucketed": (q_embedding_gate_bucketed, None),
+    "ann_lsh_topk": (q_ann_lsh_topk, None),
+    "bitext_pairs_ann": (q_bitext_pairs_ann, None),
+    "embedding_near_pairs": (q_embedding_near_pairs, None),
+    "repetition": (q_repetition, REPETITION_SQL),
+    "ngram_jaccard": (q_ngram_jaccard, NGRAM_JACCARD_SQL),
+    "substring_dup": (q_substring_dup, SUBSTRING_DUP_SQL),
+    "simhash_pairs": (q_simhash_pairs, NGRAM_JACCARD_SQL),
+    "minhash_pairs": (q_minhash_pairs, NGRAM_JACCARD_SQL),
+    "bloom_prefilter": (q_bloom_prefilter, None),
+    "kmv_churn": (q_kmv_churn, None),
+    "perplexity": (q_perplexity, PERPLEXITY_SQL),
+    "near_dup_groups": (q_near_dup_groups, None),
+    "line_dedup": (q_line_dedup, LINE_DEDUP_SQL),
+    "tfidf_keywords": (q_tfidf_keywords, None),
+    "substring_strip": (q_substring_strip, SUBSTRING_STRIP_SQL),
+    "cusum_alerts": (q_cusum_alerts, None),
+    "unimax_mixture": (q_unimax_mixture, None),
+    "pagerank_top": (q_pagerank_top, None),
+    "stats": (q_stats, STATS_SQL),
+    "bm25_search": (q_bm25_search, None),
+    "hybrid_search": (q_hybrid_search, None),
+    "nb_classify": (q_nb_classify, None),
+    "nb_confusion": (q_nb_confusion, None),
+    "url_normalize": (q_url_normalize, URL_NORMALIZE_SQL),
+    "top_parts_per_supplier": (q_top_parts_per_supplier, TOP_PARTS_SQL),
+    "ann_ivfpq_topk": (q_ann_ivfpq_topk, None),
+    "top_revenue_join": (q_top_revenue_join, TOP_REVENUE_SQL),
+    "regional_revenue": (q_regional_revenue, REGIONAL_REVENUE_SQL),
+    "daily_uniques_approx": (q_daily_uniques_approx, DAILY_UNIQUES_APPROX_SQL),
+    "corpus_drift": (q_corpus_drift, None),
+    "kanon_export": (q_kanon_export, None),
+    "quality_outliers": (q_quality_outliers, None),
+    "ann_ivf_topk": (q_ann_ivf_topk, None),
+    "shuffle_shards": (q_shuffle_shards, None),
+    "corpus_profile": (q_corpus_profile, None),
+    "funnel": (q_funnel, None),
+    "bpe_vocab": (q_bpe_vocab, None),
+    "bpe_tokenize": (q_bpe_tokenize, None),
+    "vocab_stats": (q_vocab_stats, VOCAB_STATS_SQL),
+    "media_decode": (q_media_decode, MEDIA_DECODE_SQL),
+    "ann_pq_topk": (q_ann_pq_topk, None),
+    "embedding_topk": (q_embedding_topk, EMBEDDING_TOPK_SQL),
+    "knn_join": (q_knn_join, KNN_JOIN_SQL),
+    "semantic_pairs": (q_semantic_pairs, None),
+    "psl_domains": (q_psl_domains, None),
+    "pii_scrub": (q_pii_scrub, None),
+    "media_dhash_pairs": (q_media_dhash_pairs, MEDIA_DHASH_SQL),
+    "media_audio_features": (q_media_audio_features, MEDIA_AUDIO_SQL),
+    "media_decode_jpeg": (q_media_decode_jpeg, MEDIA_DECODE_JPEG_SQL),
+    "media_decode_real": (q_media_decode_real, MEDIA_DECODE_REAL_SQL),
+    "media_meta": (q_media_meta, MEDIA_META_SQL),
+    "time_sugar": (q_time_sugar, None),
+    "time_today": (q_time_today, None),
+    "host_generator_uri": (q_host_generator_uri, None),
+    "method_filter": (q_method_filter, None),
+    "age_only": (q_age_only, AGE_ONLY_SQL),
+    "pack_shards": (q_pack_shards, None),
+    "fingerprint": (q_fingerprint, None),
+    "dhash_exact_pairs": (q_dhash_exact_pairs, MEDIA_DHASH_EXACT_SQL),
+    "range_join": (q_range_join, None),
+    "hard_negatives": (q_hard_negatives, None),
+    "bitext_pairs": (q_bitext_pairs, None),
+    "sanitize_site": (q_sanitize_site, SANITIZE_SQL),
+    "resolve_forwarded": (q_resolve_forwarded, RESOLVE_FORWARDED_SQL),
+    "format_one_line": (q_format_one_line, FORMAT_ONE_LINE_SQL),
+    "accumulate_more": (q_accumulate_more, ACCUMULATE_MORE_SQL),
+    "anonymize": (q_anonymize, ANONYMIZE_SQL),
+    "event_transitions": (q_event_transitions, None),
+    "chunk_documents": (q_chunk_documents, None),
+    "mixture": (q_mixture, None),
+    "decontaminate": (q_decontaminate, DECONTAMINATE_SQL),
+    "stratified_sample": (q_stratified_sample, None),
+    "pack_sequences": (q_pack_sequences, None),
+    "geoip": (q_geoip, GEOIP_SQL),
+    "cm_join_size": (q_cm_join_size, None),
+    "dsir_weights": (q_dsir_weights, None),
+    "dsir_topk": (q_dsir_topk, None),
+    "cm_heavy_hitters": (q_cm_heavy_hitters, None),
+    "quality_rules": (q_quality_rules, None),
+    "bm25_index_search": (q_bm25_index_search, None),
+    "uniques_sketch_rollup": (q_uniques_sketch_rollup, UNIQUES_SKETCH_SQL),
+    "value_quantiles_sketch": (q_value_quantiles_sketch, VALUE_SKETCH_SQL),
+    "pricing_summary": (q_pricing_summary, PRICING_SQL),
+    "sessionize": (q_sessionize, SESSIONIZE_SQL),
+    "scan_window": (q_scan_window, SCAN_WINDOW_SQL),
+    "filter_surface": (q_filter_surface, FILTER_SURFACE_SQL),
+    "last": (q_last, LAST_SQL),
+    "group_site": (q_group_site, GROUP_SITE_SQL),
+    "uri_prefix": (q_uri_prefix, URI_PREFIX_SQL),
+    "unsafe_method": (q_unsafe_method, None),
+    "duration_longer": (q_duration_longer, DURATION_SQL),
+    "value_quantiles": (q_value_quantiles, VALUE_QUANTILES_SQL),
+    "value_quantiles_approx": (q_value_quantiles_approx, VALUE_QUANTILES_APPROX_SQL),
+    "daily_uniques": (q_daily_uniques, DAILY_UNIQUES_SQL),
+    "promo_revenue": (q_promo_revenue, PROMO_REVENUE_SQL),
+    "time_rollup": (q_time_rollup, TIME_ROLLUP_SQL),
+    "site_delta": (q_site_delta, SITE_DELTA_SQL),
+    "rollup_hierarchy": (q_rollup_hierarchy, ROLLUP_HIERARCHY_SQL),
+    "text_stats": (q_text_stats, None),
+    "lang_id": (q_lang_id, None),
+    "asof_join": (q_asof_join, ASOF_JOIN_SQL),
+    "temperature_mixture": (q_temperature_mixture, None),
+    "accumulate_top": (q_accumulate_top, ACCUMULATE_TOP_SQL),
 }
 
 #: lazily-built oracle SQL (uses the twin builders in functions.text)

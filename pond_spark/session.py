@@ -2,8 +2,9 @@
 
 Defaults follow the scale guidance in SURVEY.md §4: AQE on (runtime
 re-planning, skew-join handling), shuffle partitions sized to the local
-parallelism (32 here; on a real cluster set ~2-3x total cores or rely on
-AQE coalescing), Arrow enabled for the Pandas-UDF slow path, UTC session
+parallelism (the host's core count unless ``SPARK_GRAFT_CPUS`` says
+otherwise; on a real cluster set ~2-3x total cores or rely on AQE
+coalescing), Arrow enabled for the Pandas-UDF slow path, UTC session
 timezone so timestamp semantics match the DuckDB oracle.
 """
 
@@ -14,6 +15,18 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_mem() -> str:
+    """Half of the host's RAM; 16g when /proc/meminfo is unreadable."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return f"{int(line.split()[1]) // 2048}m"  # kB -> MiB / 2
+    except (OSError, ValueError):
+        pass
+    return "16g"
+
+
 def get_spark(
     app_name: str = "pond_spark",
     master: str | None = None,
@@ -22,9 +35,11 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with engine defaults.
 
-    Honors ``SPARK_GRAFT_CPUS`` for local parallelism (default 32).
+    Honors ``SPARK_GRAFT_CPUS`` for local parallelism (default: the
+    host's core count) and ``POND_SPARK_DRIVER_MEM`` for the heap
+    (default: half the host's RAM).
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 1))
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         # SPARK_GRAFT_CPUS accepts any local-parallelism spec local[...]
@@ -55,9 +70,12 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.parquet.aggregatePushdown", "true")
         .config("spark.ui.enabled", "false")
-        # single-JVM local mode: driver heap IS the executor heap; 16g
-        # keeps GC pauses out of the bench at local[32] (host has 128g)
-        .config("spark.driver.memory", os.environ.get("POND_SPARK_DRIVER_MEM", "16g"))
+        # single-JVM local mode: driver heap IS the executor heap; half
+        # the RAM keeps GC pauses out and leaves room for Python workers
+        .config(
+            "spark.driver.memory",
+            os.environ.get("POND_SPARK_DRIVER_MEM") or _default_driver_mem(),
+        )
         # a 50-query session generates far more than 100 codegen
         # segments; the default class-cache size (100) thrashes, so
         # every rerun recompiles + re-JITs from scratch. Size the cache

@@ -171,8 +171,8 @@ def cross_scores(
     to the Arrow/numpy cross fold (r12; same bit-exactness contract as
     lsh._sig_vectorized) when the right side holds at least
     ``_VECTORIZED_MIN_RIGHT`` rows. The interpreted zip_with+aggregate
-    fold costs ~100-200us PER PAIR (measured r12: the 1M-pair bitext
-    cross was 6.7 s of an 7.9 s row), so at any real pair count the
+    fold costs ~7us PER PAIR (measured r12: the 1M-pair bitext cross
+    was 6.7 s of a 7.9 s row), so at any real pair count the
     numpy fold wins by 10x+; tiny right sides keep the all-JVM plan
     (no Python worker involved). Both backends are BIT-IDENTICAL
     (tests/test_similarity.py::test_cross_scores_vectorized_bit_exact)
@@ -241,7 +241,7 @@ def cross_scores(
 #: right-side row count above which cross_scores switches to the
 #: Arrow/numpy backend. Below it the Python worker round-trip costs
 #: more than the handful of JVM folds it replaces; above it the
-#: interpreted fold's ~100-200us/pair dwarfs everything else.
+#: interpreted fold's ~7us/pair dwarfs everything else.
 _VECTORIZED_MIN_RIGHT = 256
 
 #: cap on the (left-chunk x right) score-matrix cells a single numpy

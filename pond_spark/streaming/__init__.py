@@ -1,6 +1,5 @@
 from pond_spark.streaming.anomaly import cusum_stream
 from pond_spark.streaming.asof import asof_join_stream
-from pond_spark.streaming.asof_tws import asof_join_stream_fused, tws_available
 from pond_spark.streaming.kmv import kmv_uniques_stream
 from pond_spark.streaming.quantiles import value_quantiles_stream
 from pond_spark.streaming.follow import continue_stream, follow_stream, follow_visitors
@@ -17,8 +16,6 @@ from pond_spark.streaming.groupsite import (
 
 __all__ = [
     "asof_join_stream",
-    "asof_join_stream_fused",
-    "tws_available",
     "cusum_stream",
     "kmv_uniques_stream",
     "value_quantiles_stream",

@@ -62,7 +62,13 @@ def _source(
     modified_after: dt.datetime | None,
     max_files_per_trigger: int | None,
 ) -> DataFrame:
-    reader = spark.readStream.schema(LOG_SCHEMA).format("parquet")
+    # retention may delete a listed file (or its p_date dir) before a
+    # trigger reads it; an evicted record is simply never sent
+    reader = (
+        spark.readStream.schema(LOG_SCHEMA)
+        .format("parquet")
+        .option("ignoreMissingFiles", "true")
+    )
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     if modified_after is not None:

@@ -1,11 +1,13 @@
 from __future__ import annotations
 
 import datetime as dt
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# the checkout this conftest sits in, not some other copy on the path
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pond_spark.schema import LOG_SCHEMA  # noqa: E402
 from pond_spark.session import get_spark  # noqa: E402

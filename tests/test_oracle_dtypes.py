@@ -1,47 +1,37 @@
-"""Oracle-twin dtype lint (VERDICT r7 ask #1b).
+"""Every registered query against its DuckDB twin at sf0.001.
 
-The driver's correctness gate materializes each DuckDB oracle through
-pandas (``.df()``). DuckDB's HUGEINT — the return type of un-cast
-integer arithmetic like ``sum()`` products — has no int64 mapping, so
-pandas silently widens it to float64 and the driver's hasher sees
-``"0.0"`` where Spark emits ``"0"``. This artifact caused driver-red
-rows in rounds 3 (bm25/nbayes sums, fixed in bfd9e30) and 7
-(corpus_profile dup_ppm). This lint makes the class structurally
-impossible: every ``oracle_sql()`` twin is DESCRIBEd AND executed at
-sf0.001 through the exact pandas path the driver uses, and any column
-that is (a) declared HUGEINT/UHUGEINT/DECIMAL, or (b) declared
-integral but materialized float64 without a NULL to explain it, fails
-the suite with the offending query + column named.
+One case per ``queries()`` name runs ``tools.oracle_check.check_query``
+— the same comparison ``python tools/oracle_check.py`` makes: row
+count, schema, order-insensitive value hash, and the oracle dtype lint.
 
-NULL-caused float64 (nullable BIGINT with actual NULLs) is symmetric —
-Spark's toPandas does the same — and has always passed the driver
-(e.g. asof_join's horizon-miss payloads), so it is exempt by design.
+The lint (VERDICT r7 ask #1b): DuckDB's HUGEINT — the return type of
+un-cast integer arithmetic like ``sum()`` products — has no int64
+mapping, so pandas (``.df()``) silently widens it to float64 and the
+hasher sees ``"0.0"`` where Spark emits ``"0"``. This caused red rows
+in rounds 3 (bm25/nbayes sums, fixed in bfd9e30) and 7 (corpus_profile
+dup_ppm). ``fetch_oracle_df`` therefore fails any twin column that is
+(a) declared HUGEINT/UHUGEINT/DECIMAL, or (b) declared integral but
+materialized float64 without a NULL to explain it. NULL-caused float64
+(nullable BIGINT with actual NULLs) is symmetric — Spark's toPandas
+does the same — so it is exempt by design.
 """
 
 from __future__ import annotations
 
 import os
-import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+import __spark_entry__ as entrymod
+from tools.oracle_check import check_query, oracle_connect, oracle_dtype_drift
 
 SF_DIR = "/root/testdata/sf0.001"
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings".split()
-)
+QUERIES = entrymod.queries()
 
 
 @pytest.fixture(scope="module")
-def oracle_con(monkeypatch_module=None):
-    import duckdb
-
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
+def oracle_con():
+    con = oracle_connect(SF_DIR)
     yield con
     con.close()
 
@@ -54,8 +44,6 @@ def twins():
     old = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR")
     os.environ["SPARK_GRAFT_ORACLE_SF_DIR"] = SF_DIR
     try:
-        import __spark_entry__ as entrymod
-
         yield entrymod.oracle_sql()
     finally:
         if old is None:
@@ -64,30 +52,19 @@ def twins():
             os.environ["SPARK_GRAFT_ORACLE_SF_DIR"] = old
 
 
-def test_no_driver_visible_dtype_drift_in_any_twin(oracle_con, twins):
-    from tools.oracle_check import oracle_dtype_drift
+def test_every_query_has_a_twin(twins):
+    assert set(QUERIES) == set(twins)
+    assert len(QUERIES) == 114
 
-    assert len(twins) >= 100, "twin registry shrank — wrong import?"
-    offenders = {}
-    for name, sql in twins.items():
-        native = [
-            (r[0], r[1])
-            for r in oracle_con.execute(f"DESCRIBE {sql}").fetchall()
-        ]
-        odf = oracle_con.execute(sql).df()
-        drift = oracle_dtype_drift(native, odf)
-        if drift:
-            offenders[name] = drift
-    assert not offenders, (
-        "oracle twins whose pandas materialization diverges from their "
-        f"integral declaration (CAST ... AS BIGINT in the SQL): {offenders}"
-    )
+
+@pytest.mark.parametrize("name", list(QUERIES))
+def test_query_matches_twin(spark, oracle_con, twins, name):
+    fn = QUERIES[name]
+    assert check_query(spark, oracle_con, name, fn, twins.get(name), SF_DIR) == []
 
 
 def test_hugeint_would_be_caught(oracle_con):
     """Self-test: the lint actually fires on the r7 failure shape."""
-    from tools.oracle_check import oracle_dtype_drift
-
     sql = "SELECT sum(x) * 1000000 // count(*) AS dup_ppm FROM (VALUES (1), (2)) t(x)"
     native = [
         (r[0], r[1]) for r in oracle_con.execute(f"DESCRIBE {sql}").fetchall()

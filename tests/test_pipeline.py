@@ -1374,9 +1374,6 @@ def test_concurrent_curate_runs_two_processes(spark, tmp_path):
     without registering, and the catalog equals the single-writer
     reference both times. Shares the child entry with
     tools/concurrent_curate_stress.py."""
-    import sys
-
-    sys.path.insert(0, "/root/repo/tools")
     from tools.concurrent_curate_stress import run_legs
 
     report = run_legs(

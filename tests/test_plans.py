@@ -6,11 +6,7 @@ the properties that keep the same code fast at 100 TB."""
 
 from __future__ import annotations
 
-import sys
-
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 from pond_spark.plans import (
     count_exchanges,

@@ -947,3 +947,96 @@ def test_rhp_bucket_vectorized_bit_exact(spark):
         assert hof[9002] == vec[9002] == 0
         assert hof[9003] == vec[9003] == (1 << nbits) - 1
         assert hof[9004] == vec[9004] == 0  # null element -> null dot
+
+
+def test_cross_scores_vectorized_bit_exact(spark):
+    """The Arrow/numpy cross fold must equal the JVM HOF fold row for
+    row — cross_scores switches backends on size alone, so any
+    difference would make knn_join/bitext results depend on input
+    size. Random vectors plus the degenerate rows (NULL vector, null
+    element, NaN, +-inf, zero norm, squares that overflow to inf,
+    lengths off by one) in double and float32, with and without
+    ``dim``."""
+    from pond_spark.similarity.brute import cross_scores
+
+    rng = random.Random(0xC05)
+    dim = 8
+
+    # (q, r) pairs whose cosine sits on a 6-decimal rounding boundary:
+    # summing the products in any other order flips the rounded value
+    boundary = [
+        (
+            [-0.5424746012490332, 0.8905413911078446, 0.8028549152229671,
+             -0.9388200339328929, -0.9491082780130784, 0.08282494558699316,
+             0.8782983255570211, -0.23759152462357513],
+            [-0.5668012057387732, -0.15576684883456537, -0.9419184248502641,
+             -0.5566166674539299, -0.12422481269885588, -0.008375517236298702,
+             -0.5338310994848547, -0.5382669169180314],
+        ),
+        (
+            [-0.562437827068626, -0.08079306852453283, -0.42043677081902886,
+             -0.9570205894681822, 0.6751559513251457, 0.11290864530486688,
+             0.28458872586489115, -0.6281874682105646],
+            [0.9850868243521302, 0.7198930575905798, -0.7582200803883872,
+             -0.3346096292797418, 0.44296881516653674, 0.4223835393905593,
+             0.8728811735989193, -0.15578600007716958],
+        ),
+        (
+            [-0.25059381061057534, -0.12207673991087375, 0.016852976499963646,
+             0.5568852300002916, 0.041876835226290376, -0.21348981007154788,
+             -0.02061295907548355, -0.9408500720661859],
+            [-0.9130254192869451, 0.406764177207672, 0.9663754346193478,
+             0.18636746076011512, -0.21280062724417204, -0.6593016062886374,
+             0.004477116866966169, 0.9641532750770685],
+        ),
+    ]
+
+    def side(base: int, big: float):
+        rows = [
+            (base + i, [rng.uniform(-1, 1) for _ in range(dim)])
+            for i in range(30)
+        ]
+        rows += [
+            (base + 100, None),
+            (base + 101, [None] + [0.1] * (dim - 1)),
+            (base + 102, [math.nan] + [0.1] * (dim - 1)),
+            (base + 103, [math.inf] + [0.1] * (dim - 1)),
+            (base + 104, [-math.inf] + [0.1] * (dim - 1)),
+            (base + 105, [0.0] * dim),
+            (base + 106, [big] * dim),
+            (base + 107, [0.3] * (dim - 1)),
+            (base + 108, [0.2] * (dim + 1)),
+            (base + 109, [rng.uniform(-1, 1) for _ in range(dim + 1)]),
+        ]
+        return rows
+
+    def scores(left, right, k, vectorized):
+        out = {}
+        for r in cross_scores(
+            left, right, dim=k, guard=False, vectorized=vectorized
+        ).collect():
+            c = r.cosine
+            out[(r.qid, r.nid)] = "nan" if math.isnan(c) else c
+        return out
+
+    # float32 cannot hold 1e200: use its own overflow-prone magnitude
+    for elem, big in (("double", 1e200), ("float", 1e30)):
+        schema = f"vec_id long, embedding array<{elem}>"
+        left = spark.createDataFrame(
+            side(0, big) + [(110 + i, q) for i, (q, _) in enumerate(boundary)],
+            schema,
+        )
+        right = spark.createDataFrame(
+            side(1000, big) + [(1110 + i, r) for i, (_, r) in enumerate(boundary)],
+            schema,
+        )
+        for k in (None, dim):
+            jvm = scores(left, right, k, vectorized=False)
+            vec = scores(left, right, k, vectorized=True)
+            diff = sorted(set(vec.items()) ^ set(jvm.items()), key=str)
+            assert vec == jvm, (elem, k, diff[:5])
+            assert "nan" in jvm.values()
+            # null vector/element and zero-norm rows never score
+            assert not {(0, 1100), (101, 1000), (105, 1000)} & jvm.keys()
+            # a length mismatch only scores when dim slices it away
+            assert ((108, 1000) in jvm) == (k == dim)

@@ -1,9 +1,10 @@
-"""Local replica of the driver's correctness gate.
+"""Oracle check: every registered query against its DuckDB twin.
 
 Runs every ``__spark_entry__.queries()`` entry at a given sf_dir and
 compares against ``oracle_sql()`` via DuckDB: row count, schema width,
 and an order-insensitive value hash (rows stringified, columns sorted
-by name, rows sorted). Usage::
+by name, rows sorted). ``tests/test_oracle_dtypes.py`` runs the same
+``check_query`` for every query at sf0.001. Usage::
 
     python tools/oracle_check.py [sf_dir] [query ...]
 """
@@ -11,9 +12,15 @@ by name, rows sorted). Usage::
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+TABLES = (
+    "region nation customer supplier part orders lineitem events "
+    "documents embeddings".split()
+)
 
 
 def norm_cell(v) -> str:
@@ -111,9 +118,52 @@ def table_digest(cols: list[str], rows: list[tuple]) -> tuple[str, list[str]]:
     return h, lines
 
 
-def main() -> int:
+def oracle_connect(sf_dir: str):
+    """DuckDB connection with one view per testdata table at sf_dir."""
     import duckdb
 
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
+        )
+    return con
+
+
+def check_query(spark, con, name: str, fn, sql: str | None,
+                sf_dir: str) -> list[str]:
+    """Run query ``fn`` at sf_dir and its twin ``sql`` on ``con``;
+    return the failure reasons (empty when the two agree)."""
+    try:
+        sdf = fn(spark, sf_dir)
+        scols = sdf.columns
+        srows = [tuple(r) for r in sdf.collect()]
+    except Exception as e:  # noqa: BLE001
+        return [f"spark error: {e}"]
+    if sql is None:
+        return [f"no DuckDB twin for {name}"]
+    try:
+        ocols, orows, drift = fetch_oracle_df(con, sql)
+    except Exception as e:  # noqa: BLE001
+        return [f"duckdb error: {e}"]
+    sh, slines = table_digest(scols, srows)
+    oh, olines = table_digest(ocols, orows)
+    reasons = []
+    if drift:
+        reasons.append(f"oracle dtype drift (pandas-visible): {drift}")
+    if len(srows) != len(orows):
+        reasons.append(f"rowcount {len(srows)} vs {len(orows)}")
+    if sorted(scols) != sorted(ocols):
+        reasons.append(f"schema {sorted(scols)} vs {sorted(ocols)}")
+    if sh != oh:
+        sset, oset = set(slines), set(olines)
+        diff = [f"spark-only: {x[:160]}" for x in list(sset - oset)[:3]]
+        diff += [f"duck-only : {x[:160]}" for x in list(oset - sset)[:3]]
+        reasons.append("\n      ".join(["value-hash mismatch", *diff]))
+    return reasons
+
+
+def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
@@ -124,22 +174,13 @@ def main() -> int:
     # sample-dependent query then "fails" as a harness artifact
     # (happened twice: round-5 solo probes, round-6 background sweep).
     # Default it to the positional arg so the two sides always agree.
-    import os
-
     os.environ.setdefault("SPARK_GRAFT_ORACLE_SF_DIR", sf_dir)
 
     import __spark_entry__ as entrymod
     from pond_spark.session import get_spark
 
     spark = get_spark("oracle_check")
-    con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events "
-        "documents embeddings".split()
-    ):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
+    con = oracle_connect(sf_dir)
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
@@ -155,46 +196,12 @@ def main() -> int:
         if only and name not in only:
             continue
         attempted += 1
-        try:
-            sdf = fn(spark, sf_dir)
-            scols = sdf.columns
-            srows = [tuple(r) for r in sdf.collect()]
-        except Exception as e:  # noqa: BLE001
+        reasons = check_query(spark, con, name, fn, oracles.get(name), sf_dir)
+        if reasons:
             failures.append(name)
-            print(f"FAIL {name}: spark error: {e}")
-            continue
-        if name not in oracles:
-            print(f"ok?  {name}: rows={len(srows)} (no oracle — rows-only check)")
-            if len(srows) == 0:
-                print(f"      WARNING: zero rows")
-            continue
-        try:
-            ocols, orows, drift = fetch_oracle_df(con, oracles[name])
-        except Exception as e:  # noqa: BLE001
-            failures.append(name)
-            print(f"FAIL {name}: duckdb error: {e}")
-            continue
-        sh, slines = table_digest(scols, srows)
-        oh, olines = table_digest(ocols, orows)
-        status = []
-        if drift:
-            status.append(f"oracle dtype drift (driver-visible): {drift}")
-        if len(srows) != len(orows):
-            status.append(f"rowcount {len(srows)} vs {len(orows)}")
-        if sorted(scols) != sorted(ocols):
-            status.append(f"schema {sorted(scols)} vs {sorted(ocols)}")
-        if sh != oh:
-            status.append("value-hash mismatch")
-        if status:
-            failures.append(name)
-            print(f"FAIL {name}: {'; '.join(status)}")
-            sset, oset = set(slines), set(olines)
-            for line in list(sset - oset)[:3]:
-                print(f"      spark-only: {line[:160]}")
-            for line in list(oset - sset)[:3]:
-                print(f"      duck-only : {line[:160]}")
+            print(f"FAIL {name}: {'; '.join(reasons)}")
         else:
-            print(f"PASS {name}: rows={len(srows)} hash={sh}")
+            print(f"PASS {name}")
     print(f"\n{attempted - len(failures)}/{attempted} pass")
     return 1 if failures else 0
 
