@@ -125,27 +125,33 @@ def knn_join(
     ``max_right_rows``. The guard is a limit-probe (count of
     ``limit(max+1)`` on the pruned id column), so it reads at most
     max+1 rows — it never full-scans a 100 TB right side just to
-    refuse it. For large-vs-large, use lsh.embedding_near_pairs /
-    lsh_topk / ivf_topk; to override knowingly, raise
-    ``max_right_rows``."""
+    refuse it; the same count alone picks cross_scores' backend (no
+    other side action runs), and the Arrow backend pre-prunes each
+    left row to an exact superset of its top k (cross_scores' ``k``
+    says why it is exact). For large-vs-large, use
+    lsh.embedding_near_pairs / lsh_topk / ivf_topk; to override
+    knowingly, raise ``max_right_rows``."""
     from pyspark.sql.window import Window
 
-    if right.select(right_id).limit(max_right_rows + 1).count() > max_right_rows:
-        raise ValueError(
-            f"knn_join right side exceeds max_right_rows={max_right_rows}: "
-            "a broadcast cartesian at this size is a scale-killer. Use "
-            "similarity.lsh.embedding_near_pairs / lsh_topk or "
-            "similarity.ivf.ivf_topk for large right sides, or raise "
-            "max_right_rows explicitly."
-        )
     scored = cross_scores(
-        left, right, vec_col, left_id, right_id, dim, guard=False
+        left, right, vec_col, left_id, right_id, dim,
+        max_right_rows=max_right_rows, k=k,
     )
     w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("nid").asc())
     return (
         scored.withColumn("_rank", F.row_number().over(w))
         .filter(F.col("_rank") <= k)
         .drop("_rank")
+    )
+
+
+def _too_large(max_right_rows: int) -> ValueError:
+    return ValueError(
+        f"right side exceeds max_right_rows={max_right_rows}: a broadcast "
+        "cartesian at this size is a scale-killer. Use "
+        "similarity.lsh.embedding_near_pairs / lsh_topk or "
+        "similarity.ivf.ivf_topk for large right sides, or raise "
+        "max_right_rows explicitly."
     )
 
 
@@ -159,6 +165,7 @@ def cross_scores(
     guard: bool = True,
     max_right_rows: int = KNN_JOIN_MAX_RIGHT_ROWS,
     vectorized: bool | None = None,
+    k: int | None = None,
 ) -> DataFrame:
     """The broadcast cross-score frame ``(qid, nid, cosine)`` both
     knn_join and bitext_mine rank over — factored out so a consumer
@@ -168,46 +175,39 @@ def cross_scores(
     6-decimal rounding.
 
     ``vectorized`` picks the scoring backend — None (default) switches
-    to the Arrow/numpy cross fold (r12; same bit-exactness contract as
-    lsh._sig_vectorized) when the right side holds at least
-    ``_VECTORIZED_MIN_RIGHT`` rows. The interpreted zip_with+aggregate
-    fold costs ~7us PER PAIR (measured r12: the 1M-pair bitext cross
-    was 6.7 s of a 7.9 s row), so at any real pair count the
-    numpy fold wins by 10x+; tiny right sides keep the all-JVM plan
-    (no Python worker involved). Both backends are BIT-IDENTICAL
+    to the Arrow/numpy cross fold when the right side holds at least
+    ``_VECTORIZED_MIN_RIGHT`` rows, whatever the left's size (the
+    guard's count decides; unguarded, a limit-probe of that many ids).
+    The interpreted zip_with+aggregate fold costs ~7us PER PAIR (the
+    1M-pair bitext cross was 6.7 s of a 7.9 s row); tiny right sides
+    keep the all-JVM plan (no Python worker). Both backends are
+    BIT-IDENTICAL
     (tests/test_similarity.py::test_cross_scores_vectorized_bit_exact)
-    so the switch is purely a cost decision."""
-    probe_cap = (
-        max_right_rows + 1 if guard else _VECTORIZED_MIN_RIGHT
-    )
+    so the switch is purely a cost decision. The Arrow backend refuses
+    a right side over ``max_right_rows``, ``guard`` or not.
+
+    ``k``: the consumer keeps each qid's top k by ``(cosine desc, nid
+    asc)``, as knn_join does (None: the full matrix). The Arrow backend
+    then emits per left row only the pairs whose UNROUNDED cosine is
+    at least the row's k-th best finite one (in its right length-group)
+    minus one 6-decimal rounding step, plus every NaN/inf pair — an
+    exact superset of the ranked rows: rounding is monotone, cosines
+    that round equal (a tie the nid breaks) lie under 1e-6 apart, and
+    NaN sorts first descending. The JVM backend ignores ``k``."""
     if guard or vectorized is None:
-        cnt = right.select(right_id).limit(probe_cap).count()
-        if guard and cnt > max_right_rows:
-            raise ValueError(
-                f"cross_scores right side exceeds max_right_rows="
-                f"{max_right_rows}: a broadcast cartesian at this size is "
-                "a scale-killer. Use similarity.lsh / similarity.ivf "
-                "candidates."
-            )
-        if vectorized is None:
-            # pair count is what pays for the Python round-trips, so
-            # BOTH sides must clear the bar (knn_join probes 50 query
-            # vectors against the full table — 100k pairs stay faster
-            # all-JVM; the probe reads at most 256 ids)
-            vectorized = cnt >= _VECTORIZED_MIN_RIGHT and (
-                left.select(left_id)
-                .limit(_VECTORIZED_MIN_RIGHT)
-                .count()
-                >= _VECTORIZED_MIN_RIGHT
-            )
-    if vectorized:
-        out = _cross_scores_vectorized(
-            left, right, vec_col, left_id, right_id, dim
+        cnt = (
+            right.select(right_id)
+            .limit(max_right_rows + 1 if guard else _VECTORIZED_MIN_RIGHT)
+            .count()
         )
-        if out is not None:
-            return out
-        # empty right side: fall through to the (trivially empty) JVM
-        # plan so the output schema/laziness contract is unchanged
+        if guard and cnt > max_right_rows:
+            raise _too_large(max_right_rows)
+        if vectorized is None:
+            vectorized = cnt >= _VECTORIZED_MIN_RIGHT
+    if vectorized:
+        return _cross_scores_vectorized(
+            left, right, vec_col, left_id, right_id, dim, max_right_rows, k
+        )
     # hoist the norms out of the cross score: one norm per vector
     # instead of one per (query, neighbor) pair — identical value
     # (same fold over the same vector), 2/3 fewer flops in the join
@@ -249,6 +249,11 @@ _VECTORIZED_MIN_RIGHT = 256
 #: right-side size instead of letting a 10k-row Arrow batch allocate
 #: n_batch x m doubles.
 _VECTORIZED_BLOCK_CELLS = 4_000_000
+
+#: how far below a row's k-th best unrounded cosine the fused top-k
+#: still emits: one 6-decimal rounding step, plus slack for ulp-sized
+#: errors (the subtraction; round() works on the shortest decimal).
+_TOPK_MARGIN = 1e-6 + 1e-12
 
 
 def _arrow_vec_rows(col):
@@ -416,11 +421,13 @@ def _cross_scores_vectorized(
     left_id: str,
     right_id: str,
     dim: int | None,
-) -> DataFrame | None:
-    """Arrow/numpy backend for cross_scores: the (guarded,
-    broadcast-sized) right side is collected once, its clean vectors
-    stacked into per-length float64 matrices, and a mapInArrow pass
-    over the LEFT side emits ``(qid, nid, _num, _den, _nan)``
+    max_right_rows: int,
+    k: int | None,
+) -> DataFrame:
+    """Arrow/numpy backend for cross_scores: the broadcast-sized right
+    side (at most ``max_right_rows`` rows) is collected once, its clean
+    vectors stacked into per-length float64 matrices, and a mapInArrow
+    pass over the LEFT side emits ``(qid, nid, _num, _den, _nan)``
     id+double rows — the heavy vector payloads cross the Python
     boundary once per ROW, never once per pair, and the division +
     HALF_UP rounding stay in the JVM so no rounding semantics are
@@ -436,32 +443,21 @@ def _cross_scores_vectorized(
     ends in ``.filter(cosine.isNotNull())`` which drops exactly those.
     ``_num``/``_den`` are never NaN on the wire (pandas/Arrow return
     paths silently null NaN): a NaN JVM cosine rides ``_nan`` instead.
-    Returns None for an empty right side (caller keeps the JVM plan).
+    With ``k`` each left row's clean pairs are cut to the top-k
+    superset cross_scores describes.
     """
-    import numpy as np
-
-    tbl = right.select(
-        F.col(right_id).alias("nid"), F.col(vec_col).alias("_nv")
-    ).toArrow()
-    if tbl.num_rows == 0:
-        return None
-    nid_py = tbl.column("nid").to_pylist()
-    r_rows = _arrow_vec_rows(tbl.column("_nv"))
-    payload = {}
-    for key, g in _group_vec_rows(
-        r_rows, list(range(tbl.num_rows)), dim
-    ).items():
-        payload[key] = {
-            "R": g["Q"],
-            "rn": g["qn"],
-            "nids": [nid_py[i] for i in g["ids"]],
-            "nan_nids": [nid_py[i] for i in g["nan_ids"]],
-            "inf": [(nid_py[i], v) for i, v in g["inf"]],
-        }
-    nid_pa_type = tbl.schema.field("nid").type
-    bc = left.sparkSession.sparkContext.broadcast(
-        (payload, dim, nid_pa_type)
+    tbl = (
+        right.select(F.col(right_id).alias("nid"), F.col(vec_col).alias("_nv"))
+        .limit(max_right_rows + 1)
+        .toArrow()
     )
+    if tbl.num_rows > max_right_rows:
+        raise _too_large(max_right_rows)
+    payload = _group_vec_rows(
+        _arrow_vec_rows(tbl.column("_nv")), tbl.column("nid").to_pylist(), dim
+    )
+    nid_pa_type = tbl.schema.field("nid").type
+    bc = left.sparkSession.sparkContext.broadcast(payload)
 
     qid_dt = left.select(F.col(left_id)).schema.fields[0].dataType
     nid_dt = right.select(F.col(right_id)).schema.fields[0].dataType
@@ -474,13 +470,9 @@ def _cross_scores_vectorized(
         import numpy as np
         import pyarrow as pa
 
-        r_payload, k, nid_pa_type = bc.value
+        r_payload = bc.value
 
-        def emit(qids, nids, num, den, nan, qtype, ntype):
-            if not isinstance(qids, pa.Array):
-                qids = pa.array(qids, type=qtype)
-            if not isinstance(nids, pa.Array):
-                nids = pa.array(nids, type=ntype)
+        def emit(qids, nids, num, den, nan):
             return pa.record_batch(
                 [
                     qids,
@@ -494,27 +486,25 @@ def _cross_scores_vectorized(
 
         for batch in batches:
             qtype = batch.schema.field(0).type
-            qid_py = batch.column(0).to_pylist()
             l_groups = _group_vec_rows(
                 _arrow_vec_rows(batch.column(1)),
-                list(range(len(qid_py))),
-                k,
+                batch.column(0).to_pylist(),
+                dim,
             )
             for key, lg in l_groups.items():
                 rg = r_payload.get(key)
                 if rg is None:
                     continue
-                R, rn, nids = rg["R"], rg["rn"], rg["nids"]
+                R, rn, nids = rg["Q"], rg["qn"], rg["ids"]
                 m = len(nids)
                 Q, qn = lg["Q"], lg["qn"]
-                l_ids = [qid_py[i] for i in lg["ids"]]
-                l_nan = [qid_py[i] for i in lg["nan_ids"]]
-                l_inf = [(qid_py[i], v) for i, v in lg["inf"]]
+                l_ids, l_nan, l_inf = lg["ids"], lg["nan_ids"], lg["inf"]
                 nid_arr = (
                     pa.array(nids, type=nid_pa_type) if m else None
                 )
                 # clean x clean: blocked matrix fold
                 if m and l_ids:
+                    l_id_arr = pa.array(l_ids, type=qtype)
                     rows_per_block = max(
                         1, _VECTORIZED_BLOCK_CELLS // m
                     )
@@ -528,22 +518,28 @@ def _cross_scores_vectorized(
                         # must ride the flag (NaN doubles do not
                         # survive the Arrow return path)
                         nan_cells = np.isnan(DOT) | np.isnan(DEN)
-                        if nan_cells.any():
-                            DOT = np.where(nan_cells, 0.0, DOT)
-                            DEN = np.where(nan_cells, 1.0, DEN)
-                        n_blk = hi - lo
+                        # den == 0 is a NULL cosine: never emitted
+                        keep = nan_cells | (DEN != 0.0)
+                        if k is not None and 0 < k < m:
+                            with np.errstate(divide="ignore", invalid="ignore"):
+                                COS = DOT / DEN
+                            clean = np.isfinite(COS)
+                            kth = np.partition(
+                                np.where(clean, COS, -np.inf), m - k, axis=1
+                            )[:, m - k]
+                            keep &= ~clean | (
+                                COS >= (kth - _TOPK_MARGIN)[:, None]
+                            )
+                        rows, cols = np.nonzero(keep)
+                        nan = nan_cells[keep]
+                        num = np.where(nan, 0.0, DOT[keep])
+                        den = np.where(nan, 1.0, DEN[keep])
                         yield emit(
-                            pa.array(l_ids[lo:hi], type=qtype).take(
-                                pa.array(np.repeat(np.arange(n_blk), m))
-                            ),
-                            nid_arr.take(
-                                pa.array(np.tile(np.arange(m), n_blk))
-                            ),
-                            DOT.ravel(),
-                            DEN.ravel(),
-                            nan_cells.ravel(),
-                            qtype,
-                            None,
+                            l_id_arr.take(pa.array(rows + lo)),
+                            nid_arr.take(pa.array(cols)),
+                            num,
+                            den,
+                            nan,
                         )
                 # exceptional rows (NaN / inf classes): tiny by
                 # construction, resolved pair-by-pair with the exact
@@ -567,13 +563,13 @@ def _cross_scores_vectorized(
 
                 nan_partners = (
                     nids
-                    + rg["nan_nids"]
+                    + rg["nan_ids"]
                     + [nid for nid, _ in rg["inf"]]
                 )
                 for q in l_nan:  # Lnan x (Rclean|Rnan|Rinf)
                     for n in nan_partners:
                         nan_pair(q, n)
-                for n in rg["nan_nids"]:  # (Lclean|Linf) x Rnan
+                for n in rg["nan_ids"]:  # (Lclean|Linf) x Rnan
                     for q in l_ids:
                         nan_pair(q, n)
                     for q, _ in l_inf:
@@ -587,11 +583,10 @@ def _cross_scores_vectorized(
                     for li in range(len(l_ids)):
                         exact_pair(l_ids[li], n, Q[li], b)
                 if sp_q:
-                    # right-id type from the payload values; build via
-                    # the declared output schema types
                     yield emit(
-                        sp_q, sp_n, sp_num, sp_den, sp_nan,
-                        qtype, nid_pa_type,
+                        pa.array(sp_q, type=qtype),
+                        pa.array(sp_n, type=nid_pa_type),
+                        sp_num, sp_den, sp_nan,
                     )
 
     mapped = left.select(

@@ -1040,3 +1040,202 @@ def test_cross_scores_vectorized_bit_exact(spark):
             assert not {(0, 1100), (101, 1000), (105, 1000)} & jvm.keys()
             # a length mismatch only scores when dim slices it away
             assert ((108, 1000) in jvm) == (k == dim)
+
+
+def _fold_cos(a, b):
+    """knn_join's unrounded cosine with the engine's arithmetic: each
+    sum folded left to right in double."""
+    dot = na = nb = 0.0
+    for x, y in zip(a, b):
+        dot += x * y
+        na += x * x
+        nb += y * y
+    return dot / (math.sqrt(na) * math.sqrt(nb))
+
+
+def test_knn_join_fused_topk_matches_jvm(spark, monkeypatch):
+    """knn_join's fused path (the Arrow kernel keeps each left row's
+    top-k superset, the JVM ranks it) must equal the all-JVM knn_join
+    row for row: an exact tie and a rounding-level tie at the k-th
+    slot, cosines either side of a 6-decimal rounding boundary there,
+    NaN / +-inf / null-element / zero-norm / short / long / NULL
+    vectors, mixed lengths with and without ``dim``, and k larger than
+    the right side. The rounding-level tie is the case that fails if
+    the kernel prunes at the k-th best cosine without a margin."""
+    from pond_spark.similarity import brute
+
+    dim = 8
+    rng = random.Random(0xF05E)
+
+    def plane(i, a, b):
+        """a*e_i + b*e_(i+1): rows built in disjoint coordinate planes
+        score exactly 0 against each other's queries."""
+        v = [0.0] * dim
+        v[i], v[i + 1] = a, b
+        return v
+
+    # rounding-level tie against e0: r_a (nid 1001) is unrounded lower
+    # than r_b (nid 1002), yet both round to the same 6 decimals, so
+    # the nid puts r_a at rank 2
+    e0 = plane(0, 1.0, 0.0)
+    r_a, r_b = plane(0, 1.0, 0.5000003), plane(0, 1.0, 0.5)
+    c_a, c_b = _fold_cos(e0, r_a), _fold_cos(e0, r_b)
+    assert c_a < c_b and round(c_a, 6) == round(c_b, 6)
+    # rounding boundary against e2: bisect b for cos(e2, (1, b)) = boundary
+    boundary, lo, hi = 0.8944275, 0.4, 0.6
+    e2 = plane(2, 1.0, 0.0)
+    for _ in range(200):
+        mid = (lo + hi) / 2
+        if _fold_cos(e2, plane(2, 1.0, mid)) > boundary:
+            lo = mid
+        else:
+            hi = mid
+    r_up, r_dn = plane(2, 1.0, lo - 1e-9), plane(2, 1.0, hi + 1e-9)
+    assert _fold_cos(e2, r_dn) < boundary < _fold_cos(e2, r_up)
+
+    # fillers live in the last plane: cosine 0 against the designed queries
+    right = [
+        (i, plane(6, rng.uniform(-1, 1), rng.uniform(-1, 1))) for i in range(250)
+    ]
+    right += [
+        (1000, e0), (1001, r_a), (1002, r_b),
+        (1010, e2), (1011, r_dn), (1012, r_up),
+        (1020, plane(4, 1.0, 0.0)),
+        (1021, plane(4, 1.0, 0.5)),
+        (1022, plane(4, 1.0, 0.5)),
+        (1100, None),
+        (1101, [None] + [0.1] * (dim - 1)),
+        (1102, [0.0] * dim),
+        (1103, [0.3] * (dim - 1)),
+        (1104, [1e200] * dim),
+    ]
+    right += [
+        (1110 + i, [rng.uniform(-1, 1) for _ in range(dim + 1)]) for i in range(3)
+    ]
+    poison = [
+        (1200, [math.nan] + [0.1] * (dim - 1)),
+        (1201, [math.inf] + [0.1] * (dim - 1)),
+        (1202, [-math.inf] + [0.1] * (dim - 1)),
+    ]
+    left = [(0, e0), (1, e2), (2, plane(4, 1.0, 0.0))]
+    left += [(10 + i, [rng.uniform(-1, 1) for _ in range(dim)]) for i in range(30)]
+    left += [
+        (100, None),
+        (101, [None] + [0.1] * (dim - 1)),
+        (102, [math.nan] + [0.1] * (dim - 1)),
+        (103, [math.inf] + [0.1] * (dim - 1)),
+        (104, [-math.inf] + [0.1] * (dim - 1)),
+        (105, [0.0] * dim),
+        (106, [0.3] * (dim - 1)),
+        (107, [1e200] * dim),
+        (108, [rng.uniform(-1, 1) for _ in range(dim + 1)]),
+        (109, [rng.uniform(-1, 1) for _ in range(dim + 1)]),
+    ]
+    schema = "vec_id long, embedding array<double>"
+    ldf = spark.createDataFrame(left, schema)
+
+    def ranked(rdf, k, d):
+        df = knn_join(ldf, rdf, k=k, dim=d)
+        out = {}
+        for r in df.collect():
+            out[(r.qid, r.nid)] = "nan" if math.isnan(r.cosine) else r.cosine
+        return df, out
+
+    for rows in (right, right + poison):
+        rdf = spark.createDataFrame(rows, schema)
+        assert rdf.count() >= brute._VECTORIZED_MIN_RIGHT
+        for d in (None, dim):
+            for k in (2, 400):
+                fused_df, fused = ranked(rdf, k, d)
+                plan = fused_df._jdf.queryExecution().executedPlan().toString()
+                assert "MapInArrow" in plan
+                with monkeypatch.context() as mp:
+                    mp.setattr(brute, "_VECTORIZED_MIN_RIGHT", 10**9)
+                    jvm_df, jvm = ranked(rdf, k, d)
+                assert "MapInArrow" not in (
+                    jvm_df._jdf.queryExecution().executedPlan().toString()
+                )
+                diff = sorted(set(fused.items()) ^ set(jvm.items()), key=str)
+                assert fused == jvm, (len(rows), d, k, diff[:6])
+                if k == 2 and len(rows) == len(right):
+                    # the designed slots really sit at rank k
+                    assert {(0, 1000), (0, 1001)} <= jvm.keys()
+                    assert (0, 1002) not in jvm
+                    assert jvm[(1, 1012)] == 0.894428
+                    assert (1, 1011) not in jvm
+                    assert {(2, 1020), (2, 1021)} <= jvm.keys()
+                    assert (2, 1022) not in jvm
+                if k == 400:
+                    # k past the right side: every scorable pair is kept
+                    assert jvm[(1, 1011)] == 0.894427
+                    # long rows score whole or sliced; short ones only
+                    # against their own length, never under dim=8
+                    assert (108, 1110) in jvm
+                    assert ((106, 1103) in jvm) == (d is None)
+
+
+def test_knn_join_side_actions_never_scan_the_left(spark):
+    """A knn_join over a right side of at least _VECTORIZED_MIN_RIGHT
+    rows runs exactly two SQL executions before its ranked action: the
+    ids-only guard probe and the right side's toArrow. Neither reads
+    the left (the caller's query batch)."""
+    from pond_spark.similarity import brute
+
+    rng = random.Random(11)
+    right = spark.createDataFrame(
+        [
+            (i, [rng.gauss(0, 1) for _ in range(16)])
+            for i in range(brute._VECTORIZED_MIN_RIGHT + 44)
+        ],
+        "vec_id long, embedding array<double>",
+    )
+    left = spark.createDataFrame(
+        [(i, [rng.gauss(0, 1) for _ in range(16)]) for i in range(8)],
+        "batch_qid long, embedding array<double>",
+    )
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def latest(n):
+        """The newest ``n`` SQL executions, oldest first. The store keeps
+        a bounded number, so counts stop growing in a long session."""
+        bus.waitUntilEmpty()
+        total = store.executionsCount()
+        seq = store.executionsList(max(0, total - n), min(total, n))
+        return [seq.apply(i) for i in range(seq.size())]
+
+    before = max([e.executionId() for e in latest(1)], default=-1)
+    out = knn_join(left, right, k=3, left_id="batch_qid")
+    plans = [
+        e.physicalPlanDescription()
+        for e in latest(10)
+        if e.executionId() > before
+    ]
+    assert len(plans) == 2, plans
+    assert not any("batch_qid" in p for p in plans), plans
+    # the guard count, then the right side's (nid, vector) collect
+    assert "count(" in plans[0] and "_nv" not in plans[0]
+    assert "_nv" in plans[1] and "count(" not in plans[1]
+    assert out.count() == 8 * 3
+
+
+def test_cross_scores_unguarded_collect_is_capped(spark, vectors):
+    """With ``guard=False`` the Arrow backend still collects at most
+    max_right_rows + 1 right rows and refuses beyond that, instead of an
+    unbounded toArrow onto the driver."""
+    from pond_spark.similarity.brute import cross_scores
+
+    left = vectors.filter("vec_id < 3")
+    n = vectors.count()
+    with pytest.raises(ValueError, match="exceeds max_right_rows"):
+        cross_scores(left, vectors, guard=False, vectorized=True, max_right_rows=n - 1)
+    big = spark.range(300).selectExpr(
+        "id AS vec_id", "array(1.0D, CAST(id AS DOUBLE)) AS embedding"
+    )
+    # no backend pinned: the unguarded 256-id probe picks the Arrow one
+    with pytest.raises(ValueError, match="exceeds max_right_rows"):
+        cross_scores(left.limit(1), big, guard=False, max_right_rows=299)
+    out = cross_scores(
+        left, vectors, guard=False, vectorized=True, max_right_rows=n
+    )
+    assert out.count() == 3 * n

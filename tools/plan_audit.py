@@ -44,6 +44,7 @@ def audit(sf_dir: str) -> list[dict]:
                     "nlj": plan.count("NestedLoopJoin"),
                     "python": plan.count("EvalPython")
                     + plan.count("MapInPandas")
+                    + plan.count("MapInArrow")
                     + plan.count("FlatMapGroupsInPandas"),
                     # ANY scan with a non-empty pushed-filter list —
                     # requiring EVERY scan non-empty let one filterless
@@ -354,12 +355,17 @@ def main() -> None:
                 " operators in the plan, and whether any filter pushed"
                 " into a scan. Python appears ONLY where Spark lacks"
                 " the primitive (media decode, the stateful rate-limit"
-                " replay in stats). Nested-loop joins appear ONLY as"
-                " single-row broadcast crosses attaching a scalar"
-                " (corpus stats / vocab size in tfidf, bm25,"
-                " nb_classify, perplexity, stats — O(rows x 1)) and as"
-                " knn_join's guarded broadcast cartesian; never"
-                " between two data-sized relations.\n\n"
+                " replay in stats) and as the Arrow/numpy kernels that"
+                " replace interpreted JVM folds at size: cross_scores'"
+                " MapInArrow (knn_join, bitext_pairs,"
+                " embedding_catalog_incremental) once the right side"
+                " holds >= 256 rows, and lsh's wide RHP signature UDF."
+                " Nested-loop joins appear ONLY as single-row broadcast"
+                " crosses attaching a scalar (corpus stats / vocab size"
+                " in tfidf, bm25, nb_classify, perplexity, stats —"
+                " O(rows x 1)) and as cross_scores' guarded broadcast"
+                " cartesian below that cutover; never between two"
+                " data-sized relations.\n\n"
                 + text
                 + "\n"
             )
