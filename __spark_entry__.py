@@ -4269,7 +4269,6 @@ def q_bitext_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.filter(F.col("label") >= 5),
         k=4,
         margin_threshold_bp=9_000,
-        dim=64,
     )
 
 

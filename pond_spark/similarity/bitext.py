@@ -133,7 +133,6 @@ def bitext_mine(
     vec_col: str = "embedding",
     src_id: str = "vec_id",
     tgt_id: str = "vec_id",
-    dim: int | None = None,
     max_rows: int | None = None,
 ) -> DataFrame:
     """Mine aligned pairs: ``(src_id, tgt_id, cos_q, margin_bp)`` —
@@ -145,7 +144,8 @@ def bitext_mine(
     # cosine is symmetric, so the forward (src->tgt) and backward
     # (tgt->src) k-NN rank the SAME score matrix — score it once
     # (element-order-identical dot products, so values are bit-equal
-    # to two knn_join passes) and pin the (ids, cosine) frame: it
+    # to two knn_join passes; cross_scores collects tgt at call time,
+    # the scoring stays lazy) and pin the (ids, cosine) frame: it
     # feeds both direction windows plus the candidate union, and its
     # footprint is the O(n·m) the exact miner already is.
     # localCheckpoint instead of persist so the blocks are released
@@ -155,7 +155,7 @@ def bitext_mine(
     if max_rows is not None:
         kw["max_right_rows"] = max_rows
     sc = (
-        cross_scores(src, tgt, vec_col, src_id, tgt_id, dim, **kw)
+        cross_scores(src, tgt, vec_col, src_id, tgt_id, **kw)
         .select(
             F.col("qid").alias("sid"),
             F.col("nid").alias("tid"),
@@ -206,7 +206,7 @@ def bitext_mine_ann(
         .select(
             F.col(src_id).alias("sid"),
             F.col(vec_col).alias("_sv"),
-            _norm(F.col(vec_col), None).alias("_sn"),
+            _norm(F.col(vec_col)).alias("_sn"),
             "bucket",
         )
         .localCheckpoint(eager=False)
@@ -216,7 +216,7 @@ def bitext_mine_ann(
         .select(
             F.col(tgt_id).alias("tid"),
             F.col(vec_col).alias("_tv"),
-            _norm(F.col(vec_col), None).alias("_tn"),
+            _norm(F.col(vec_col)).alias("_tn"),
             "bucket",
         )
         .localCheckpoint(eager=False)
@@ -238,7 +238,7 @@ def bitext_mine_ann(
             _micro(
                 F.round(
                     _safe_cos_div(
-                        _dot(F.col("_sv"), F.col("_tv"), None),
+                        _dot(F.col("_sv"), F.col("_tv")),
                         F.col("_sn") * F.col("_tn"),
                     ),
                     6,

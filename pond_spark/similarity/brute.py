@@ -5,7 +5,8 @@ array expressions (``zip_with`` + ``aggregate`` — JVM-side, no Python),
 then top-k via ``orderBy().limit(k)`` → TakeOrderedAndProject (per-
 partition heaps, no global sort). This is the correct-by-construction
 reference; the LSH/IVF variants in .lsh trade recall for candidate
-pruning at scale.
+pruning at scale. knn_join's cross_scores runs the same fold in an
+Arrow/numpy kernel over a broadcast right side.
 
 Determinism: all arithmetic in double, summation strictly left-to-right
 (``aggregate`` folds sequentially), results rounded to 6 decimals —
@@ -21,26 +22,11 @@ from pyspark.sql import functions as F
 
 
 
-def _dot(a: Column, b: Column, dim: int | None = None) -> Column:
-    """Dot product, summed strictly left-to-right in double.
-
-    With ``dim`` known the fold can be UNROLLED into a flat
-    expression of ``dim`` multiply-adds. Measured (sf0.1, 64-dim,
-    best-of-2 warm runs): the HOF fold beats the unrolled form ~3x at
-    EVERY call site tried, including the 100k-pair knn_join broadcast
-    cross — the flat 64-term tree inflates analysis/codegen and,
-    stacked several times in one projection (cosine = dot + 2 norms;
-    LSH planes; IVF centroids), blows Janino's 64 KB method limit and
-    disables whole-stage codegen for the stage. Default to
-    ``dim=None`` everywhere; ``dim`` stays supported for plan
-    experiments. Both forms start from ``lit(0.0)`` and add terms in
-    index order, so they are bit-identical to each other and to the
-    DuckDB oracle's ``list_reduce``."""
-    if dim is not None:
-        acc: Column = F.lit(0.0)
-        for i in range(dim):
-            acc = acc + F.get(a, i).cast("double") * F.get(b, i).cast("double")
-        return acc
+def _dot(a: Column, b: Column) -> Column:
+    """Dot product, summed strictly left-to-right in double: the fold
+    starts from ``lit(0.0)`` and adds terms in index order, so it is
+    bit-identical to the DuckDB oracle's ``list_reduce`` and to
+    cross_scores' ``_fold_dot_block``."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0),
@@ -48,13 +34,7 @@ def _dot(a: Column, b: Column, dim: int | None = None) -> Column:
     )
 
 
-def _norm(a: Column, dim: int | None = None) -> Column:
-    if dim is not None:
-        acc: Column = F.lit(0.0)
-        for i in range(dim):
-            x = F.get(a, i).cast("double")
-            acc = acc + x * x
-        return F.sqrt(acc)
+def _norm(a: Column) -> Column:
     return F.sqrt(
         F.aggregate(
             F.transform(a, lambda x: x.cast("double") * x.cast("double")),
@@ -74,13 +54,8 @@ def _safe_cos_div(num: Column, den: Column) -> Column:
     return F.when(den != F.lit(0.0), num / den)
 
 
-def cosine_similarity(
-    a: Column, b: Column, decimals: int = 6, dim: int | None = None
-) -> Column:
-    return F.round(
-        _safe_cos_div(_dot(a, b, dim), _norm(a, dim) * _norm(b, dim)),
-        decimals,
-    )
+def cosine_similarity(a: Column, b: Column, decimals: int = 6) -> Column:
+    return F.round(_safe_cos_div(_dot(a, b), _norm(a) * _norm(b)), decimals)
 
 
 def brute_force_topk(
@@ -103,8 +78,11 @@ def brute_force_topk(
     )
 
 
-#: refuse to broadcast-cartesian a right side bigger than this many
-#: rows (≈1M × 64-dim float ≈ 256 MB broadcast — already generous).
+#: refuse a right side bigger than this many rows. cross_scores
+#: collects it onto the driver and stacks it into float64 matrices —
+#: ≈512 MB at 1M × 64 dims (8 B a value), on top of the collected
+#: Arrow table — then broadcasts that payload pickled, ≈512 MB again.
+#: A refused call reads at most this many + 1 rows.
 KNN_JOIN_MAX_RIGHT_ROWS = 1_000_000
 
 
@@ -116,25 +94,24 @@ def knn_join(
     left_id: str = "vec_id",
     right_id: str = "vec_id",
     max_right_rows: int = KNN_JOIN_MAX_RIGHT_ROWS,
-    dim: int | None = None,
 ) -> DataFrame:
     """Exact k-NN join: for each left row, its k nearest right rows by
-    cosine. The right side is broadcast and scored against every left
-    row — exact by construction, and a deliberate scale-killer if the
-    right side is large, so it REFUSES when ``right`` exceeds
-    ``max_right_rows``. The guard is a limit-probe (count of
-    ``limit(max+1)`` on the pruned id column), so it reads at most
-    max+1 rows — it never full-scans a 100 TB right side just to
-    refuse it; the same count alone picks cross_scores' backend (no
-    other side action runs), and the Arrow backend pre-prunes each
-    left row to an exact superset of its top k (cross_scores' ``k``
-    says why it is exact). For large-vs-large, use
-    lsh.embedding_near_pairs / lsh_topk / ivf_topk; to override
+    cosine, ties by right id. The right side is collected, broadcast
+    and scored against every left row (cross_scores) — exact by
+    construction, and a deliberate scale-killer if the right side is
+    large, so it REFUSES when ``right`` exceeds ``max_right_rows``.
+    That collect is the only side action: it reads at most max+1 rows
+    (ids and vectors), so it never full-scans a 100 TB right side just
+    to refuse it, and an accepted right side costs the driver ≈512 MB
+    of float64 per 1M × 64-dim copy (KNN_JOIN_MAX_RIGHT_ROWS). The
+    kernel pre-prunes each left row to an exact superset of its top k
+    (cross_scores' ``k`` says why it is exact). For large-vs-large,
+    use lsh.embedding_near_pairs / lsh_topk / ivf_topk; to override
     knowingly, raise ``max_right_rows``."""
     from pyspark.sql.window import Window
 
     scored = cross_scores(
-        left, right, vec_col, left_id, right_id, dim,
+        left, right, vec_col, left_id, right_id,
         max_right_rows=max_right_rows, k=k,
     )
     w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("nid").asc())
@@ -155,95 +132,6 @@ def _too_large(max_right_rows: int) -> ValueError:
     )
 
 
-def cross_scores(
-    left: DataFrame,
-    right: DataFrame,
-    vec_col: str = "embedding",
-    left_id: str = "vec_id",
-    right_id: str = "vec_id",
-    dim: int | None = None,
-    guard: bool = True,
-    max_right_rows: int = KNN_JOIN_MAX_RIGHT_ROWS,
-    vectorized: bool | None = None,
-    k: int | None = None,
-) -> DataFrame:
-    """The broadcast cross-score frame ``(qid, nid, cosine)`` both
-    knn_join and bitext_mine rank over — factored out so a consumer
-    that needs BOTH directions (bitext's forward and backward k-NN)
-    scores the symmetric matrix once instead of twice. Zero-norm rows
-    (NULL cosine) are already filtered; cosines carry knn_join's
-    6-decimal rounding.
-
-    ``vectorized`` picks the scoring backend — None (default) switches
-    to the Arrow/numpy cross fold when the right side holds at least
-    ``_VECTORIZED_MIN_RIGHT`` rows, whatever the left's size (the
-    guard's count decides; unguarded, a limit-probe of that many ids).
-    The interpreted zip_with+aggregate fold costs ~7us PER PAIR (the
-    1M-pair bitext cross was 6.7 s of a 7.9 s row); tiny right sides
-    keep the all-JVM plan (no Python worker). Both backends are
-    BIT-IDENTICAL
-    (tests/test_similarity.py::test_cross_scores_vectorized_bit_exact)
-    so the switch is purely a cost decision. The Arrow backend refuses
-    a right side over ``max_right_rows``, ``guard`` or not.
-
-    ``k``: the consumer keeps each qid's top k by ``(cosine desc, nid
-    asc)``, as knn_join does (None: the full matrix). The Arrow backend
-    then emits per left row only the pairs whose UNROUNDED cosine is
-    at least the row's k-th best finite one (in its right length-group)
-    minus one 6-decimal rounding step, plus every NaN/inf pair — an
-    exact superset of the ranked rows: rounding is monotone, cosines
-    that round equal (a tie the nid breaks) lie under 1e-6 apart, and
-    NaN sorts first descending. The JVM backend ignores ``k``."""
-    if guard or vectorized is None:
-        cnt = (
-            right.select(right_id)
-            .limit(max_right_rows + 1 if guard else _VECTORIZED_MIN_RIGHT)
-            .count()
-        )
-        if guard and cnt > max_right_rows:
-            raise _too_large(max_right_rows)
-        if vectorized is None:
-            vectorized = cnt >= _VECTORIZED_MIN_RIGHT
-    if vectorized:
-        return _cross_scores_vectorized(
-            left, right, vec_col, left_id, right_id, dim, max_right_rows, k
-        )
-    # hoist the norms out of the cross score: one norm per vector
-    # instead of one per (query, neighbor) pair — identical value
-    # (same fold over the same vector), 2/3 fewer flops in the join
-    l = left.select(
-        F.col(left_id).alias("qid"),
-        F.col(vec_col).alias("_qv"),
-        _norm(F.col(vec_col), dim).alias("_qn"),
-    )
-    r = right.select(
-        F.col(right_id).alias("nid"),
-        F.col(vec_col).alias("_nv"),
-        _norm(F.col(vec_col), dim).alias("_nn"),
-    )
-    return (
-        l.join(F.broadcast(r), F.lit(True))
-        .select(
-            "qid",
-            "nid",
-            F.round(
-                _safe_cos_div(
-                    _dot(F.col("_qv"), F.col("_nv"), dim),
-                    F.col("_qn") * F.col("_nn"),
-                ),
-                6,
-            ).alias("cosine"),
-        )
-        .filter(F.col("cosine").isNotNull())  # zero-norm rows out
-    )
-
-
-#: right-side row count above which cross_scores switches to the
-#: Arrow/numpy backend. Below it the Python worker round-trip costs
-#: more than the handful of JVM folds it replaces; above it the
-#: interpreted fold's ~7us/pair dwarfs everything else.
-_VECTORIZED_MIN_RIGHT = 256
-
 #: cap on the (left-chunk x right) score-matrix cells a single numpy
 #: block may hold (~32 MB of float64) — bounds task memory at any
 #: right-side size instead of letting a 10k-row Arrow batch allocate
@@ -258,10 +146,12 @@ _TOPK_MARGIN = 1e-6 + 1e-12
 
 def _arrow_vec_rows(col):
     """Per-row ``(float64 view | None, null-element mask | None)``
-    pairs from an arrow list<float/double> column. The validity
-    bitmaps keep a null ELEMENT distinct from a genuine NaN — Arrow's
-    float buffer stores both as NaN, but their JVM cosine semantics
-    differ (null product -> NULL cosine vs NaN -> NaN cosine)."""
+    pairs from an arrow list<numeric> column. The validity bitmaps keep
+    a null ELEMENT distinct from a genuine NaN — Arrow's float buffer
+    stores both as NaN, but their JVM cosine semantics differ (null
+    product -> NULL cosine vs NaN -> NaN cosine). The cast is unsafe
+    so a bigint beyond ±2^53 rounds to nearest, as Java's long ->
+    double does, instead of raising."""
     import numpy as np
     import pyarrow as pa
 
@@ -275,7 +165,7 @@ def _arrow_vec_rows(col):
         else col.is_valid().to_numpy(zero_copy_only=False)
     )
     v64 = np.asarray(
-        vals.cast(pa.float64()).to_numpy(zero_copy_only=False)
+        vals.cast(pa.float64(), safe=False).to_numpy(zero_copy_only=False)
     )
     nullmask = (
         None
@@ -294,17 +184,16 @@ def _arrow_vec_rows(col):
     return rows
 
 
-def _classify_vec(vec, nullmask, k: int | None):
-    """JVM-cosine row class for one vector (slice to ``k`` when the
-    dim-unrolled expression semantics apply):
+def _classify_vec(vec, nullmask):
+    """JVM-cosine row class for one vector (a length mismatch is a
+    NULL cosine too; the caller only pairs rows of equal length):
 
-    - ``skip``: NULL vector, too short for ``k``, length-group misfit
-      handled by the caller, or a null element — every cosine of this
-      row is provably NULL and the downstream isNotNull filter would
-      drop it, so no pair is emitted at all;
-    - ``nan``: a NaN element (and no null) — every equal-length/
-      first-k cosine is NaN (NaN product poisons the fold, and the
-      norm side keeps the NaN through ``when(den != 0.0)``);
+    - ``skip``: NULL vector or a null element — every cosine of this
+      row is provably NULL and the JVM's isNotNull filter would drop
+      it, so no pair is emitted at all;
+    - ``nan``: a NaN element (and no null) — every equal-length
+      cosine is NaN (NaN product poisons the fold, and the norm side
+      keeps the NaN through ``when(den != 0.0)``);
     - ``inf``: an infinite element — the fold can overflow to
       inf/-inf/NaN in value-dependent ways, so pairs go through the
       exact scalar emulation;
@@ -312,20 +201,13 @@ def _classify_vec(vec, nullmask, k: int | None):
     """
     import numpy as np
 
-    if vec is None:
-        return "skip", None
-    if k is not None:
-        if len(vec) < k:
-            return "skip", None
-        vec = vec[:k]
-        nullmask = None if nullmask is None else nullmask[:k]
-    if nullmask is not None and nullmask.any():
-        return "skip", None
+    if vec is None or (nullmask is not None and nullmask.any()):
+        return "skip"
     if np.isnan(vec).any():
-        return "nan", vec
+        return "nan"
     if np.isinf(vec).any():
-        return "inf", vec
-    return "clean", vec
+        return "inf"
+    return "clean"
 
 
 def _fold_dot_block(Q, R):
@@ -381,29 +263,27 @@ def _scalar_cross_pair(a, b):
     return dot, den, False
 
 
-def _group_vec_rows(rows, ids, k: int | None):
+def _group_vec_rows(rows, ids):
     """Bucket classified rows for the cross fold. Returns
     {length: {"ids": [...], "Q": matrix, "qn": norms,
-              "nan_ids": [...], "inf": [(id, vec)]}} — in dim mode
-    (k given) there is a single pseudo-group keyed by k."""
+              "nan_ids": [...], "inf": [(id, vec)]}}."""
     import numpy as np
 
     groups: dict = {}
     for (vec, nullmask), rid in zip(rows, ids):
-        cls, v = _classify_vec(vec, nullmask, k)
+        cls = _classify_vec(vec, nullmask)
         if cls == "skip":
             continue
-        key = k if k is not None else len(v)
         g = groups.setdefault(
-            key, {"ids": [], "vecs": [], "nan_ids": [], "inf": []}
+            len(vec), {"ids": [], "vecs": [], "nan_ids": [], "inf": []}
         )
         if cls == "clean":
             g["ids"].append(rid)
-            g["vecs"].append(v)
+            g["vecs"].append(vec)
         elif cls == "nan":
             g["nan_ids"].append(rid)
         else:
-            g["inf"].append((rid, v))
+            g["inf"].append((rid, vec))
     for key, g in groups.items():
         if g["vecs"]:
             g["Q"] = np.stack(g["vecs"]).astype(np.float64, copy=False)
@@ -414,37 +294,53 @@ def _group_vec_rows(rows, ids, k: int | None):
     return groups
 
 
-def _cross_scores_vectorized(
+def cross_scores(
     left: DataFrame,
     right: DataFrame,
-    vec_col: str,
-    left_id: str,
-    right_id: str,
-    dim: int | None,
-    max_right_rows: int,
-    k: int | None,
+    vec_col: str = "embedding",
+    left_id: str = "vec_id",
+    right_id: str = "vec_id",
+    max_right_rows: int = KNN_JOIN_MAX_RIGHT_ROWS,
+    k: int | None = None,
 ) -> DataFrame:
-    """Arrow/numpy backend for cross_scores: the broadcast-sized right
-    side (at most ``max_right_rows`` rows) is collected once, its clean
-    vectors stacked into per-length float64 matrices, and a mapInArrow
-    pass over the LEFT side emits ``(qid, nid, _num, _den, _nan)``
-    id+double rows — the heavy vector payloads cross the Python
-    boundary once per ROW, never once per pair, and the division +
-    HALF_UP rounding stay in the JVM so no rounding semantics are
-    re-implemented:
+    """The cross-score frame ``(qid, nid, cosine)`` both knn_join and
+    bitext_mine rank over — factored out so a consumer that needs BOTH
+    directions (bitext's forward and backward k-NN) scores the
+    symmetric matrix once instead of twice. Zero-norm rows (NULL
+    cosine) are already filtered; cosines carry knn_join's 6-decimal
+    rounding, exactly as ``cosine_similarity`` over a cross join
+    would compute them.
+
+    One side action, run at call time: ``right``'s ``(id, vector)``
+    rows are collected with ``limit(max_right_rows + 1).toArrow()``,
+    and more than ``max_right_rows`` of them raise ValueError — a
+    refused call reads at most max+1 rows, as many as the largest
+    accepted one. The clean vectors are stacked into per-length
+    float64 matrices on the driver and broadcast pickled: ≈512 MB
+    each at 1M × 64 dims (KNN_JOIN_MAX_RIGHT_ROWS). A mapInArrow pass
+    over the LEFT side then emits ``(qid, nid, _num, _den, _nan)``
+    id+double rows — the vector payloads cross the Python boundary
+    once per ROW, never once per pair, and the division + HALF_UP
+    rounding stay in the JVM:
 
         cosine = round(when(_nan, NaN)
                        .when(_den != 0.0, _num / _den), 6)
 
-    is term-for-term ``round(_safe_cos_div(dot, qn*nn), 6)`` with dot,
-    qn, nn produced by the bit-exact ascending folds above. Pairs
-    whose JVM cosine is provably NULL (null/short vector, null
-    element, length mismatch) are simply not emitted — the JVM path
-    ends in ``.filter(cosine.isNotNull())`` which drops exactly those.
+    is term-for-term ``round(_safe_cos_div(_dot, _norm * _norm), 6)``
+    with the dot and norms produced by the bit-exact ascending folds
+    above. Pairs whose cosine is provably NULL (NULL vector, null
+    element, length mismatch, zero norm) are not emitted.
     ``_num``/``_den`` are never NaN on the wire (pandas/Arrow return
-    paths silently null NaN): a NaN JVM cosine rides ``_nan`` instead.
-    With ``k`` each left row's clean pairs are cut to the top-k
-    superset cross_scores describes.
+    paths silently null NaN): a NaN cosine rides ``_nan`` instead.
+
+    ``k``: the consumer keeps each qid's top k by ``(cosine desc, nid
+    asc)``, as knn_join does (None: the full matrix). The kernel then
+    emits per left row only the pairs whose UNROUNDED cosine is at
+    least the row's k-th best finite one (in its right length-group)
+    minus one 6-decimal rounding step, plus every NaN/inf pair — an
+    exact superset of the ranked rows: rounding is monotone, cosines
+    that round equal (a tie the nid breaks) lie under 1e-6 apart, and
+    NaN sorts first descending.
     """
     tbl = (
         right.select(F.col(right_id).alias("nid"), F.col(vec_col).alias("_nv"))
@@ -454,7 +350,7 @@ def _cross_scores_vectorized(
     if tbl.num_rows > max_right_rows:
         raise _too_large(max_right_rows)
     payload = _group_vec_rows(
-        _arrow_vec_rows(tbl.column("_nv")), tbl.column("nid").to_pylist(), dim
+        _arrow_vec_rows(tbl.column("_nv")), tbl.column("nid").to_pylist()
     )
     nid_pa_type = tbl.schema.field("nid").type
     bc = left.sparkSession.sparkContext.broadcast(payload)
@@ -487,9 +383,7 @@ def _cross_scores_vectorized(
         for batch in batches:
             qtype = batch.schema.field(0).type
             l_groups = _group_vec_rows(
-                _arrow_vec_rows(batch.column(1)),
-                batch.column(0).to_pylist(),
-                dim,
+                _arrow_vec_rows(batch.column(1)), batch.column(0).to_pylist()
             )
             for key, lg in l_groups.items():
                 rg = r_payload.get(key)

@@ -269,11 +269,6 @@ class EmbeddingCatalog:
             old_vecs = self._vstore.read().select(
                 F.col("vec_id").alias("old_id"), F.col("vec").alias("_ov")
             )
-            # HOF-fold cosine (dim=None), NOT the dim-unrolled form:
-            # bit-identical (both fold left-to-right in double,
-            # brute._dot) and the unrolled 3*dim-term tree blows
-            # Catalyst's recursive analyzer with a StackOverflow at
-            # dim=1024 (r10 stress) besides being ~3x slower to plan
             hits = (
                 cand.join(new_vecs, "new_id")
                 .join(old_vecs, "old_id")

@@ -266,11 +266,9 @@ def embedding_near_pairs(
     pin)."""
     from pond_spark.similarity.brute import _dot, _norm, _safe_cos_div
 
-    # scoring uses the HOF fold (dim=None), not the unrolled form —
-    # see brute._dot: the flat 64-term tree measured ~3x slower here
     b = (
         rhp_bucket(df, dim, nbits, seed, vec_col)
-        .withColumn("_nrm", _norm(F.col(vec_col), None))
+        .withColumn("_nrm", _norm(F.col(vec_col)))
         .persist()
     )
     left = b.select(F.col(id_col).alias("id_a"), "bucket")
@@ -304,7 +302,7 @@ def embedding_near_pairs(
             "id_b",
             F.round(
                 _safe_cos_div(
-                    _dot(F.col("_va"), F.col("_vb"), None),
+                    _dot(F.col("_va"), F.col("_vb")),
                     F.col("_na") * F.col("_nb"),
                 ),
                 6,

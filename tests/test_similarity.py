@@ -435,14 +435,14 @@ def test_bitext_margin_suppresses_hub(spark):
         "vec_id long, embedding array<float>",
     )
     out = {r.sid: r for r in bitext_mine(
-        src, tgt, k=2, margin_threshold_bp=0, dim=8
+        src, tgt, k=2, margin_threshold_bp=0
     ).collect()}
     assert out[1].tid == 11
     assert out[2].tid == 12
     assert out[3].tid == 13
     # determinism
     again = {r.sid: r.tid for r in bitext_mine(
-        src, tgt, k=2, margin_threshold_bp=0, dim=8
+        src, tgt, k=2, margin_threshold_bp=0
     ).collect()}
     assert again == {s: r.tid for s, r in out.items()}
 
@@ -745,7 +745,7 @@ def test_bitext_all_integer_projection(spark):
     )
     df = bitext_mine(
         emb.filter("vec_id < 10"), emb.filter("vec_id >= 10"),
-        k=3, margin_threshold_bp=0, dim=8,
+        k=3, margin_threshold_bp=0,
     )
     kinds = dict(df.dtypes)
     assert kinds == {"sid": "bigint", "tid": "bigint",
@@ -949,14 +949,42 @@ def test_rhp_bucket_vectorized_bit_exact(spark):
         assert hof[9004] == vec[9004] == 0  # null element -> null dot
 
 
+def _jvm_cross_scores(left, right):
+    """Reference ``(qid, nid, cosine)`` frame: ``cosine_similarity`` (the
+    HOF fold) over an explicit cross join, NULL cosines dropped."""
+    from pyspark.sql import functions as F
+
+    from pond_spark.similarity.brute import cosine_similarity
+
+    l = left.select(F.col("vec_id").alias("qid"), F.col("embedding").alias("_a"))
+    r = right.select(F.col("vec_id").alias("nid"), F.col("embedding").alias("_b"))
+    return (
+        l.crossJoin(r)
+        .select(
+            "qid",
+            "nid",
+            cosine_similarity(F.col("_a"), F.col("_b")).alias("cosine"),
+        )
+        .filter(F.col("cosine").isNotNull())
+    )
+
+
+def _score_map(df):
+    return {
+        (r.qid, r.nid): "nan" if math.isnan(r.cosine) else r.cosine
+        for r in df.collect()
+    }
+
+
 def test_cross_scores_vectorized_bit_exact(spark):
-    """The Arrow/numpy cross fold must equal the JVM HOF fold row for
-    row — cross_scores switches backends on size alone, so any
-    difference would make knn_join/bitext results depend on input
-    size. Random vectors plus the degenerate rows (NULL vector, null
-    element, NaN, +-inf, zero norm, squares that overflow to inf,
-    lengths off by one) in double and float32, with and without
-    ``dim``."""
+    """cross_scores' Arrow/numpy fold must equal the JVM HOF fold
+    (cosine_similarity over a cross join) row for row: random vectors
+    plus the degenerate rows (NULL vector, null element, NaN, +-inf,
+    zero norm, squares that overflow to inf, lengths off by one) in
+    double and float32, and int / bigint / decimal elements — bigints
+    beyond 2^53 round to nearest like Java's long -> double."""
+    from decimal import Decimal
+
     from pond_spark.similarity.brute import cross_scores
 
     rng = random.Random(0xC05)
@@ -991,7 +1019,7 @@ def test_cross_scores_vectorized_bit_exact(spark):
         ),
     ]
 
-    def side(base: int, big: float):
+    def float_side(base: int, big: float, pick: int):
         rows = [
             (base + i, [rng.uniform(-1, 1) for _ in range(dim)])
             for i in range(30)
@@ -1008,38 +1036,56 @@ def test_cross_scores_vectorized_bit_exact(spark):
             (base + 108, [0.2] * (dim + 1)),
             (base + 109, [rng.uniform(-1, 1) for _ in range(dim + 1)]),
         ]
-        return rows
+        return rows + [(base + 110 + i, b[pick]) for i, b in enumerate(boundary)]
 
-    def scores(left, right, k, vectorized):
-        out = {}
-        for r in cross_scores(
-            left, right, dim=k, guard=False, vectorized=vectorized
-        ).collect():
-            c = r.cosine
-            out[(r.qid, r.nid)] = "nan" if math.isnan(c) else c
-        return out
+    def exact_side(base: int, num):
+        def vec(n):
+            return [num(rng.uniform(-1, 1)) for _ in range(n)]
 
-    # float32 cannot hold 1e200: use its own overflow-prone magnitude
-    for elem, big in (("double", 1e200), ("float", 1e30)):
+        rows = [(base + i, vec(dim)) for i in range(30)]
+        return rows + [
+            (base + 100, None),
+            (base + 101, [None] + vec(dim - 1)),
+            (base + 105, [num(0.0)] * dim),
+            (base + 107, vec(dim - 1)),
+            (base + 108, vec(dim + 1)),
+            (base + 109, vec(dim + 1)),
+        ]
+
+    big_ints = [[2**53 + 1] + [3] * (dim - 1), [2**53 + 3] * dim,
+                [-(2**63), 2**63 - 1] + [1] * (dim - 2)]
+    cases = {
+        # float32 cannot hold 1e200: use its own overflow-prone magnitude
+        "double": (float_side(0, 1e200, 0), float_side(1000, 1e200, 1)),
+        "float": (float_side(0, 1e30, 0), float_side(1000, 1e30, 1)),
+        "int": tuple(
+            exact_side(b, lambda x: int(x * 1000)) for b in (0, 1000)
+        ),
+        "bigint": tuple(
+            exact_side(b, lambda x: int(x * 2**62))
+            + [(b + 120 + i, v) for i, v in enumerate(big_ints)]
+            for b in (0, 1000)
+        ),
+        "decimal(10,3)": tuple(
+            exact_side(b, lambda x: Decimal(f"{x * 1000:.3f}")) for b in (0, 1000)
+        ),
+    }
+    for elem, (lrows, rrows) in cases.items():
         schema = f"vec_id long, embedding array<{elem}>"
-        left = spark.createDataFrame(
-            side(0, big) + [(110 + i, q) for i, (q, _) in enumerate(boundary)],
-            schema,
-        )
-        right = spark.createDataFrame(
-            side(1000, big) + [(1110 + i, r) for i, (_, r) in enumerate(boundary)],
-            schema,
-        )
-        for k in (None, dim):
-            jvm = scores(left, right, k, vectorized=False)
-            vec = scores(left, right, k, vectorized=True)
-            diff = sorted(set(vec.items()) ^ set(jvm.items()), key=str)
-            assert vec == jvm, (elem, k, diff[:5])
+        left = spark.createDataFrame(lrows, schema)
+        right = spark.createDataFrame(rrows, schema)
+        jvm = _score_map(_jvm_cross_scores(left, right))
+        vec = _score_map(cross_scores(left, right))
+        diff = sorted(set(vec.items()) ^ set(jvm.items()), key=str)
+        assert vec == jvm, (elem, diff[:5])
+        # null vector/element and zero-norm rows never score
+        assert not {(0, 1100), (101, 1000), (105, 1000)} & jvm.keys()
+        # a length mismatch never scores; equal odd lengths do
+        assert (108, 1000) not in jvm and (108, 1109) in jvm
+        if elem in ("double", "float"):
             assert "nan" in jvm.values()
-            # null vector/element and zero-norm rows never score
-            assert not {(0, 1100), (101, 1000), (105, 1000)} & jvm.keys()
-            # a length mismatch only scores when dim slices it away
-            assert ((108, 1000) in jvm) == (k == dim)
+        if elem == "bigint":
+            assert {(120, 1121), (122, 1120)} <= jvm.keys()
 
 
 def _fold_cos(a, b):
@@ -1053,16 +1099,18 @@ def _fold_cos(a, b):
     return dot / (math.sqrt(na) * math.sqrt(nb))
 
 
-def test_knn_join_fused_topk_matches_jvm(spark, monkeypatch):
+def test_knn_join_fused_topk_matches_jvm(spark):
     """knn_join's fused path (the Arrow kernel keeps each left row's
-    top-k superset, the JVM ranks it) must equal the all-JVM knn_join
-    row for row: an exact tie and a rounding-level tie at the k-th
-    slot, cosines either side of a 6-decimal rounding boundary there,
-    NaN / +-inf / null-element / zero-norm / short / long / NULL
-    vectors, mixed lengths with and without ``dim``, and k larger than
-    the right side. The rounding-level tie is the case that fails if
-    the kernel prunes at the k-th best cosine without a margin."""
-    from pond_spark.similarity import brute
+    top-k superset, the JVM ranks it) must equal an all-JVM rank —
+    cosine_similarity over a cross join, row_number over (cosine desc,
+    nid asc) — row for row: an exact tie and a rounding-level tie at
+    the k-th slot, cosines either side of a 6-decimal rounding
+    boundary there, NaN / +-inf / null-element / zero-norm / short /
+    long / NULL vectors, mixed lengths, and k larger than the right
+    side. The rounding-level tie is the case that fails if the kernel
+    prunes at the k-th best cosine without a margin."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.window import Window
 
     dim = 8
     rng = random.Random(0xF05E)
@@ -1134,59 +1182,46 @@ def test_knn_join_fused_topk_matches_jvm(spark, monkeypatch):
     schema = "vec_id long, embedding array<double>"
     ldf = spark.createDataFrame(left, schema)
 
-    def ranked(rdf, k, d):
-        df = knn_join(ldf, rdf, k=k, dim=d)
-        out = {}
-        for r in df.collect():
-            out[(r.qid, r.nid)] = "nan" if math.isnan(r.cosine) else r.cosine
-        return df, out
+    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("nid").asc())
 
     for rows in (right, right + poison):
         rdf = spark.createDataFrame(rows, schema)
-        assert rdf.count() >= brute._VECTORIZED_MIN_RIGHT
-        for d in (None, dim):
-            for k in (2, 400):
-                fused_df, fused = ranked(rdf, k, d)
-                plan = fused_df._jdf.queryExecution().executedPlan().toString()
-                assert "MapInArrow" in plan
-                with monkeypatch.context() as mp:
-                    mp.setattr(brute, "_VECTORIZED_MIN_RIGHT", 10**9)
-                    jvm_df, jvm = ranked(rdf, k, d)
-                assert "MapInArrow" not in (
-                    jvm_df._jdf.queryExecution().executedPlan().toString()
-                )
-                diff = sorted(set(fused.items()) ^ set(jvm.items()), key=str)
-                assert fused == jvm, (len(rows), d, k, diff[:6])
-                if k == 2 and len(rows) == len(right):
-                    # the designed slots really sit at rank k
-                    assert {(0, 1000), (0, 1001)} <= jvm.keys()
-                    assert (0, 1002) not in jvm
-                    assert jvm[(1, 1012)] == 0.894428
-                    assert (1, 1011) not in jvm
-                    assert {(2, 1020), (2, 1021)} <= jvm.keys()
-                    assert (2, 1022) not in jvm
-                if k == 400:
-                    # k past the right side: every scorable pair is kept
-                    assert jvm[(1, 1011)] == 0.894427
-                    # long rows score whole or sliced; short ones only
-                    # against their own length, never under dim=8
-                    assert (108, 1110) in jvm
-                    assert ((106, 1103) in jvm) == (d is None)
+        for k in (2, 400):
+            fused_df = knn_join(ldf, rdf, k=k)
+            plan = fused_df._jdf.queryExecution().executedPlan().toString()
+            assert "MapInArrow" in plan
+            fused = _score_map(fused_df)
+            jvm = _score_map(
+                _jvm_cross_scores(ldf, rdf)
+                .withColumn("_rank", F.row_number().over(w))
+                .filter(F.col("_rank") <= k)
+            )
+            diff = sorted(set(fused.items()) ^ set(jvm.items()), key=str)
+            assert fused == jvm, (len(rows), k, diff[:6])
+            if k == 2 and len(rows) == len(right):
+                # the designed slots really sit at rank k
+                assert {(0, 1000), (0, 1001)} <= jvm.keys()
+                assert (0, 1002) not in jvm
+                assert jvm[(1, 1012)] == 0.894428
+                assert (1, 1011) not in jvm
+                assert {(2, 1020), (2, 1021)} <= jvm.keys()
+                assert (2, 1022) not in jvm
+            if k == 400:
+                # k past the right side: every scorable pair is kept
+                assert jvm[(1, 1011)] == 0.894427
+                # long and short rows score only against their own length
+                assert (108, 1110) in jvm
+                assert (106, 1103) in jvm
 
 
 def test_knn_join_side_actions_never_scan_the_left(spark):
-    """A knn_join over a right side of at least _VECTORIZED_MIN_RIGHT
-    rows runs exactly two SQL executions before its ranked action: the
-    ids-only guard probe and the right side's toArrow. Neither reads
-    the left (the caller's query batch)."""
-    from pond_spark.similarity import brute
-
+    """knn_join runs exactly one SQL execution before its ranked
+    action: the right side's (id, vector) toArrow, which is also the
+    row-cap guard. It never reads the left (the caller's query
+    batch)."""
     rng = random.Random(11)
     right = spark.createDataFrame(
-        [
-            (i, [rng.gauss(0, 1) for _ in range(16)])
-            for i in range(brute._VECTORIZED_MIN_RIGHT + 44)
-        ],
+        [(i, [rng.gauss(0, 1) for _ in range(16)]) for i in range(300)],
         "vec_id long, embedding array<double>",
     )
     left = spark.createDataFrame(
@@ -1211,31 +1246,27 @@ def test_knn_join_side_actions_never_scan_the_left(spark):
         for e in latest(10)
         if e.executionId() > before
     ]
-    assert len(plans) == 2, plans
-    assert not any("batch_qid" in p for p in plans), plans
-    # the guard count, then the right side's (nid, vector) collect
-    assert "count(" in plans[0] and "_nv" not in plans[0]
-    assert "_nv" in plans[1] and "count(" not in plans[1]
+    assert len(plans) == 1, plans
+    # the right side's (nid, vector) collect, no separate count
+    assert "_nv" in plans[0] and "count(" not in plans[0], plans
+    assert "batch_qid" not in plans[0], plans
     assert out.count() == 8 * 3
 
 
 def test_cross_scores_unguarded_collect_is_capped(spark, vectors):
-    """With ``guard=False`` the Arrow backend still collects at most
-    max_right_rows + 1 right rows and refuses beyond that, instead of an
-    unbounded toArrow onto the driver."""
+    """cross_scores' one collect reads at most max_right_rows + 1 right
+    rows and refuses beyond that, instead of an unbounded toArrow onto
+    the driver."""
     from pond_spark.similarity.brute import cross_scores
 
     left = vectors.filter("vec_id < 3")
     n = vectors.count()
     with pytest.raises(ValueError, match="exceeds max_right_rows"):
-        cross_scores(left, vectors, guard=False, vectorized=True, max_right_rows=n - 1)
+        cross_scores(left, vectors, max_right_rows=n - 1)
     big = spark.range(300).selectExpr(
         "id AS vec_id", "array(1.0D, CAST(id AS DOUBLE)) AS embedding"
     )
-    # no backend pinned: the unguarded 256-id probe picks the Arrow one
     with pytest.raises(ValueError, match="exceeds max_right_rows"):
-        cross_scores(left.limit(1), big, guard=False, max_right_rows=299)
-    out = cross_scores(
-        left, vectors, guard=False, vectorized=True, max_right_rows=n
-    )
+        cross_scores(left.limit(1), big, max_right_rows=299)
+    out = cross_scores(left, vectors, max_right_rows=n)
     assert out.count() == 3 * n

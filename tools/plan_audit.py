@@ -356,16 +356,15 @@ def main() -> None:
                 " into a scan. Python appears ONLY where Spark lacks"
                 " the primitive (media decode, the stateful rate-limit"
                 " replay in stats) and as the Arrow/numpy kernels that"
-                " replace interpreted JVM folds at size: cross_scores'"
-                " MapInArrow (knn_join, bitext_pairs,"
-                " embedding_catalog_incremental) once the right side"
-                " holds >= 256 rows, and lsh's wide RHP signature UDF."
-                " Nested-loop joins appear ONLY as single-row broadcast"
-                " crosses attaching a scalar (corpus stats / vocab size"
-                " in tfidf, bm25, nb_classify, perplexity, stats —"
-                " O(rows x 1)) and as cross_scores' guarded broadcast"
-                " cartesian below that cutover; never between two"
-                " data-sized relations.\n\n"
+                " replace interpreted JVM folds: cross_scores'"
+                " MapInArrow (knn_join, embedding_catalog_incremental;"
+                " bitext_pairs' sits behind its lazy localCheckpoint,"
+                " which the plan shows as an RDD scan) at every size,"
+                " and lsh's wide RHP signature UDF. Nested-loop joins"
+                " appear ONLY as single-row broadcast crosses attaching"
+                " a scalar (corpus stats / vocab size in tfidf, bm25,"
+                " nb_classify, perplexity, stats — O(rows x 1)); never"
+                " between two data-sized relations.\n\n"
                 + text
                 + "\n"
             )
