@@ -4,11 +4,30 @@
 
 Execution is measured end-to-end per query with a ``noop``-format write
 so the full plan runs (scan → shuffle → sink) without driver-side
-collection skewing the numbers.
+collection skewing the numbers. Each sample's jobs carry the job
+description ``bench:<row>#<i>``.
+
+Usage::
+
+    python bench.py [--only q1,q2,...] [--samples N] [--plans DIR [--suffix S]]
+
+- ``--only``: run just the named rows (contract, bench-only or probe
+  rows); an unknown name exits 2.
+- ``--samples N``: exactly N samples per row (episode discards still
+  apply) instead of the adaptive min-of-2..4; every sample is recorded
+  under ``samples`` in the JSON.
+- ``--plans DIR``: write each DataFrame row's formatted physical plan
+  to ``DIR/<row><S>.txt`` before timing it.
+
+To A/B two checkouts, run each checkout's own ``bench.py`` (it puts its
+own directory first on ``sys.path``) with the same ``--only`` and
+``--samples``, interleaved on an otherwise idle host — PERF_NOTES
+records 1.5-4x sample swings under concurrent load.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import re
@@ -18,25 +37,62 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
-def main() -> None:
+def _parse_args(argv: list[str] | None) -> argparse.Namespace:
+    ap = argparse.ArgumentParser(description="pond_spark query benchmark")
+    ap.add_argument("--only", help="comma-separated row names to run")
+    ap.add_argument("--samples", type=int, help="exactly N samples per row")
+    ap.add_argument("--plans", help="dir for <row><suffix>.txt plan dumps")
+    ap.add_argument("--suffix", default="", help="plan filename suffix")
+    args = ap.parse_args(argv)
+    if args.samples is not None and args.samples < 1:
+        ap.error("--samples must be >= 1")
+    return args
+
+
+def main(argv: list[str] | None = None) -> None:
+    args = _parse_args(argv)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else 0.0
 
     import __spark_entry__ as entrymod
-    from pond_spark.session import get_spark
 
-    spark = get_spark("pond_spark_bench")
-
-    qs = entrymod.queries()
-    contract = set(qs)
+    all_qs = entrymod.queries()
+    contract = set(all_qs)
     # bench-only probes (approx stage of the recall harnesses, timed
     # alone); reported per-query but excluded from the headline total
     # so round-over-round totals compare the same contract surface
-    qs.update(getattr(entrymod, "bench_queries", dict)())
+    all_qs.update(getattr(entrymod, "bench_queries", dict)())
+    probes = getattr(entrymod, "bench_probes", dict)()
+    qs = all_qs
+    if args.only:
+        only = args.only.split(",")
+        unknown = [n for n in only if n not in all_qs and n not in probes]
+        if unknown:
+            print(f"bench: unknown row(s): {', '.join(unknown)}", file=sys.stderr)
+            sys.exit(2)
+        qs = {n: all_qs[n] for n in only if n in all_qs}
+        probes = {n: probes[n] for n in only if n in probes}
+
+    from pond_spark.session import get_spark
+
+    spark = get_spark("pond_spark_bench")
+    sc = spark.sparkContext
+
+    def _sample(name: str, i: int, run) -> float:
+        """One labelled sample of ``run`` (seconds), then drop the
+        intermediates operators persist so reruns and later queries
+        aren't timed under accumulated cache + GC pressure."""
+        sc.setJobDescription(f"bench:{name}#{i}")
+        try:
+            return run()
+        finally:
+            sc.setJobDescription(None)
+            spark.catalog.clearCache()
+
     # warm the JVM + parquet footers once with the cheapest query
     try:
-        qs["pricing_summary"](spark, sf_dir).write.format("noop").mode(
+        all_qs["pricing_summary"](spark, sf_dir).write.format("noop").mode(
             "overwrite"
         ).save()
     except Exception:
@@ -104,7 +160,21 @@ def main() -> None:
         "probe_max_sec": 0.0,
     }
 
+    if args.plans:
+        from pond_spark.plans import formatted_plan
+
+        os.makedirs(args.plans, exist_ok=True)
+
+    def _noop_write(fn):
+        def run() -> float:
+            t0 = time.perf_counter()
+            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            return round(time.perf_counter() - t0, 3)
+
+        return run
+
     times: dict[str, float] = {}
+    all_samples: dict[str, list[float]] = {}
     for name, fn in qs.items():
         # best of N runs: the first pays one-time codegen/JIT compile
         # of the query's generated classes; steady-state throughput is
@@ -115,9 +185,16 @@ def main() -> None:
         # ~1.1x on those rows. A >1.5x-disagreeing pair (observed 2-4x
         # inflation under concurrent load) also takes the extra
         # sample, so one noisy window can't inflate the total.
+        # ``--samples N`` replaces the adaptive count with exactly N.
         best = -1.0
+        samples: list[float] = []
         try:
-            samples: list[float] = []
+            if args.plans:
+                plan = formatted_plan(fn(spark, sf_dir))
+                spark.catalog.clearCache()
+                out = os.path.join(args.plans, f"{name}{args.suffix}.txt")
+                with open(out, "w") as f:
+                    f.write(plan)
             discards = 0
             while True:
                 # reject samples attempted inside a host episode — for
@@ -136,13 +213,7 @@ def main() -> None:
                     calibration["discards"][name] = discards
                     time.sleep(2.0)
                     continue
-                t0 = time.perf_counter()
-                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-                samples.append(round(time.perf_counter() - t0, 3))
-                # operators persist intermediates; drop them so reruns
-                # and later queries aren't timed under accumulated
-                # cache + GC pressure
-                spark.catalog.clearCache()
+                samples.append(_sample(name, len(samples), _noop_write(fn)))
                 best_now = min(samples)
                 # <2s: min-of-3; <0.6s (where a single GC pause is a
                 # 1.5x outlier): min-of-4 — the extra sample costs
@@ -156,46 +227,46 @@ def main() -> None:
                     ratio = max(samples) / max(1e-9, min(samples))
                     if ratio > (1.2 if best_now >= 2.0 else 1.5):
                         need = max(need, 3)
-                if len(samples) >= need:
+                if len(samples) >= (args.samples or need):
                     break
             best = min(samples)
         except Exception as e:  # noqa: BLE001
             print(f"bench error in {name}: {e}", file=sys.stderr)
             best = -1.0
         times[name] = best
+        all_samples[name] = samples
         print(f"bench {name}: {best}", file=sys.stderr, flush=True)
 
     # self-timed probes (streaming micro-batch latency, store
     # retention/compaction): the callable measures and returns seconds
     # itself; best-of-2 like the query rows, outside the contract total
-    for name, fn in getattr(entrymod, "bench_probes", dict)().items():
+    for name, fn in probes.items():
         best = -1.0
+        samples = []
         try:
-            samples = []
-            for _ in range(2):
-                samples.append(fn(spark, sf_dir))
-                spark.catalog.clearCache()
+            for i in range(args.samples or 2):
+                samples.append(_sample(name, i, lambda: fn(spark, sf_dir)))
             best = min(samples)
         except Exception as e:  # noqa: BLE001
             print(f"bench error in {name}: {e}", file=sys.stderr)
         times[name] = best
+        all_samples[name] = samples
         print(f"bench {name}: {best}", file=sys.stderr, flush=True)
 
     total = round(
         sum(t for n, t in times.items() if t >= 0 and n in contract), 3
     )
-    print(
-        json.dumps(
-            {
-                "metric": "total_query_sec",
-                "value": total,
-                "unit": "sec",
-                "queries": times,
-                "sf": sf,
-                "calibration": calibration,
-            }
-        )
-    )
+    record = {
+        "metric": "total_query_sec",
+        "value": total,
+        "unit": "sec",
+        "queries": times,
+        "sf": sf,
+        "calibration": calibration,
+    }
+    if args.samples:
+        record["samples"] = all_samples
+    print(json.dumps(record))
 
 
 if __name__ == "__main__":

@@ -174,17 +174,14 @@ def rhp_bucket(
     nbits: int = 12,
     seed: int = 42,
     vec_col: str = "embedding",
-    vectorized: bool | None = None,
 ) -> DataFrame:
-    """Append ``bucket`` (int64 signature) to each row. ``vectorized``
-    picks the signature backend — None (default) switches to the
-    Arrow/numpy fold when ``dim * nbits >= _VECTORIZED_MIN_WORK``;
-    both backends are bit-identical (catalog keys stay comparable
-    across the switch), so this is purely a cost decision."""
+    """Append ``bucket`` (int64 signature) to each row. The signature
+    backend follows the input size: the Arrow/numpy fold when
+    ``dim * nbits >= _VECTORIZED_MIN_WORK``, else the HOF fold; both
+    are bit-identical (catalog keys stay comparable across the
+    switch), so this is purely a cost decision."""
     planes = hyperplanes(dim, nbits, seed)
-    if vectorized is None:
-        vectorized = dim * nbits >= _VECTORIZED_MIN_WORK
-    if vectorized:
+    if dim * nbits >= _VECTORIZED_MIN_WORK:
         # null ELEMENTS become NaN across Arrow (ADVICE r10) — mask
         # whole-vector here, while null vs NaN are still distinct, so
         # the numpy fold sees NULL and lands on the HOF's bucket 0

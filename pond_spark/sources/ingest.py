@@ -56,6 +56,34 @@ def parse_datagrams(raw: DataFrame, payload_col: str = "payload") -> DataFrame:
     )
 
 
+def token_bucket(
+    timestamps, tokens: float, last_us: int | None, rate: float, cap: float
+) -> tuple[list[bool], float, int | None]:
+    """One site's token-bucket pass over its charged rows, in (ts, id)
+    order; every row pays a token. Returns (discarded flags, tokens,
+    last_us). ``last_us`` is the refill clock in epoch microseconds
+    (None before the first timestamp): a null timestamp leaves it
+    alone, and it only advances — a late event must not rewind it, or
+    the next on-time event would re-credit refill time already granted
+    (the streaming twin carries the clock across micro-batches, where
+    sorting cannot reach)."""
+    flags = []
+    for ts in timestamps:
+        if ts is not None and not pd.isna(ts):
+            now_us = int(ts.value // 1000)
+            if last_us is None:
+                last_us = now_us
+            elif now_us > last_us:
+                tokens = min(cap, tokens + rate * (now_us - last_us) / 1e6)
+                last_us = now_us
+        if tokens >= 1.0:
+            tokens -= 1.0
+            flags.append(False)
+        else:
+            flags.append(True)
+    return flags, tokens, last_us
+
+
 def rate_limit(
     df: DataFrame,
     rate: float,
@@ -87,25 +115,10 @@ def rate_limit(
         # — the token bucket is sequential by construction. Rows here
         # are pre-filtered to charged ones (type == message_type with
         # a site), so every row pays a token.
-        tokens = burst
-        prev_us: int | None = None
         pdf = pdf.sort_values([ts_col, id_col], na_position="first")
-        out_flags = []
-        for ts in pdf[ts_col]:
-            now_us = (
-                int(ts.value // 1000) if ts is not None and not pd.isna(ts) else prev_us
-            )
-            if now_us is not None:
-                if prev_us is not None and now_us > prev_us:
-                    tokens = min(burst, tokens + rate * (now_us - prev_us) / 1e6)
-                prev_us = now_us
-            if tokens >= 1.0:
-                tokens -= 1.0
-                out_flags.append(False)
-            else:
-                out_flags.append(True)
+        flags, _, _ = token_bucket(pdf[ts_col], burst, None, rate, burst)
         pdf = pdf.copy()
-        pdf["_discarded"] = out_flags
+        pdf["_discarded"] = flags
         return pdf
 
     # charged/exempt must PARTITION the frame under SQL three-valued

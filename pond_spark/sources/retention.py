@@ -27,6 +27,8 @@ import datetime as dt
 import os
 from dataclasses import dataclass
 
+from pond_spark.timeparse import naive_utc
+
 
 @dataclass
 class RetentionReport:
@@ -55,10 +57,7 @@ def _file_stats(fs, path: str) -> tuple[int, dt.datetime | None]:
                     if stats is not None and stats.has_min_max:
                         mx = stats.max
                         if isinstance(mx, dt.datetime):
-                            if mx.tzinfo is not None:  # TIMESTAMP_MICROS is UTC-adjusted
-                                mx = mx.astimezone(dt.timezone.utc).replace(
-                                    tzinfo=None
-                                )
+                            mx = naive_utc(mx)  # TIMESTAMP_MICROS is UTC-adjusted
                             if newest is None or mx > newest:
                                 newest = mx
             return size, newest
@@ -71,7 +70,6 @@ def apply_retention(
     max_age: dt.timedelta | None = None,
     max_bytes: int | None = None,
     now: dt.datetime | None = None,
-    dry_run: bool = False,
     spark=None,
 ) -> RetentionReport:
     """Drop aged files, then oldest-first down to the size budget.
@@ -83,12 +81,10 @@ def apply_retention(
     from pond_spark.catalog import _fs_for_maintenance
 
     fs = _fs_for_maintenance(store_dir, spark)
-    now = now or dt.datetime.utcnow()
-    if now.tzinfo is not None:
-        # file stats are naive-UTC; an aware `now` (the modern
-        # datetime.now(timezone.utc) idiom) would make the age compare
-        # raise TypeError — normalize instead of crashing the reaper
-        now = now.astimezone(dt.timezone.utc).replace(tzinfo=None)
+    # file stats are naive-UTC; an aware `now` (the modern
+    # datetime.now(timezone.utc) idiom) would make the age compare
+    # raise TypeError — normalize instead of crashing the reaper
+    now = naive_utc(now or dt.datetime.utcnow())
     # flat layouts and LogStore's p_date=… partition dirs both retain
     # at file granularity; emptied partition dirs are pruned afterwards
     safe_dir = fs.glob_escape(store_dir)
@@ -125,15 +121,14 @@ def apply_retention(
             dropped_size.append(f)
             total -= stats[f][0]
 
-    if not dry_run:
-        for f in dropped_age + dropped_size:
-            fs.remove(f)
-        for d in fs.glob(os.path.join(safe_dir, "p_date=*")):
-            if not fs.glob(os.path.join(fs.glob_escape(d), "*.parquet")):
-                # only checksum/marker droppings remain — clear them
-                for leftover in fs.listdir(d):
-                    fs.remove(os.path.join(d, leftover))
-                fs.rmdir(d)
+    for f in dropped_age + dropped_size:
+        fs.remove(f)
+    for d in fs.glob(os.path.join(safe_dir, "p_date=*")):
+        if not fs.glob(os.path.join(fs.glob_escape(d), "*.parquet")):
+            # only checksum/marker droppings remain — clear them
+            for leftover in fs.listdir(d):
+                fs.remove(os.path.join(d, leftover))
+            fs.rmdir(d)
 
     dropped_all = dropped_age_set | set(dropped_size)
     remaining = sum(stats[f][0] for f in files if f not in dropped_all)

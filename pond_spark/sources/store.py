@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pond_spark.schema import LOG_SCHEMA
+from pond_spark.timeparse import naive_utc
 
 
 @contextmanager
@@ -53,21 +54,9 @@ def _micros_output(spark: SparkSession):
 
 
 class LogStore:
-    def __init__(
-        self,
-        spark: SparkSession,
-        path: str,
-        zorder: tuple[str, ...] | None = None,
-    ) -> None:
-        """``zorder=('site', 'timestamp')`` switches the within-date
-        layout from site-major sort to Morton clustering
-        (sources/zorder.py) — better row-group pruning for pure
-        time-range scans inside a day at the cost of slightly coarser
-        site clustering; the default site-major sort remains optimal
-        for ``site=``-heavy workloads."""
+    def __init__(self, spark: SparkSession, path: str) -> None:
         self.spark = spark
         self.path = path
-        self.zorder = zorder
 
     def _layout(self, df: DataFrame, num_partitions: int | None = None) -> DataFrame:
         """Partition + sort discipline shared by append, clone and
@@ -88,30 +77,6 @@ class LogStore:
                 F.date_format("timestamp", "yyyy-MM-dd"), F.lit("unknown")
             ),
         )
-        if self.zorder:
-            # Morton clustering within each date: one range shuffle on
-            # (p_date, zkey) — same cost as the default sort, but
-            # row-groups cover rectangles of the dim space
-            from pond_spark.sources.zorder import (
-                rank16,
-                rank16_time_of_day,
-                zorder_key,
-            )
-
-            dtypes = dict(dated.dtypes)
-
-            def _rank(c: str) -> F.Column:
-                if dtypes[c].startswith("timestamp"):
-                    return rank16_time_of_day(F.col(c))
-                return rank16(F.col(c), dtypes[c])
-
-            key = zorder_key([_rank(c) for c in self.zorder])
-            return (
-                dated.withColumn("_zkey", key)
-                .repartitionByRange(*np, "p_date", "_zkey")
-                .sortWithinPartitions("p_date", "_zkey", "id")
-                .drop("_zkey")
-            )
         return dated.repartitionByRange(
             *np, "p_date", "site", "timestamp"
         ).sortWithinPartitions("site", "timestamp", "id")
@@ -134,8 +99,11 @@ class LogStore:
         ``p_date`` bound, a timestamp filter alone would scan every
         date directory. The 'unknown' partition (null timestamps) is
         excluded whenever a time bound is set: records without a
-        timestamp fail a configured range (Filter.hxx:26-48).
+        timestamp fail a configured range (Filter.hxx:26-48). Aware
+        bounds are converted to naive UTC first: ``p_date`` is the UTC
+        date, and an aware value's own-zone date can miss a directory.
         """
+        since, until = naive_utc(since), naive_utc(until)
         # copy — StructType.add would mutate the shared LOG_SCHEMA
         schema = T.StructType(
             LOG_SCHEMA.fields + [T.StructField("p_date", T.StringType())]
@@ -172,7 +140,6 @@ class LogStore:
         max_age=None,
         max_bytes: int | None = None,
         now=None,
-        dry_run: bool = False,
     ):
         """Ring-buffer + max_age eviction for the partitioned store
         (SURVEY.md §1.3): file-granular drops inside p_date dirs,
@@ -184,7 +151,6 @@ class LogStore:
             max_age=max_age,
             max_bytes=max_bytes,
             now=now,
-            dry_run=dry_run,
             spark=self.spark,
         )
 
@@ -193,11 +159,7 @@ class LogStore:
         (/root/reference/src/Instance.hxx:47, src/Database.cxx:76-89 —
         shrink-to-fit + GC of empty per-site lists): rewrite date
         partitions whose file count exceeds what their byte size needs,
-        restoring the configured layout — the z-order clustering when
-        ``zorder`` is set, else the (site, timestamp, id) sort — in the
-        process (a plain-sort rewrite would silently degrade the
-        row-group pruning the zorder option was chosen for; r6 review
-        finding).
+        restoring the (site, timestamp, id) sort in the process.
 
         Returns {p_date: files_removed}. Uses dynamic partition
         overwrite (compact_partition_dirs — the skeleton shared with

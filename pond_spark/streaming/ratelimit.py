@@ -28,8 +28,10 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pond_spark.streaming.conf import set_state_partitions
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from pond_spark.sources.ingest import token_bucket
+from pond_spark.streaming.conf import set_state_partitions
 
 
 def rate_limit_stream(
@@ -58,7 +60,7 @@ def rate_limit_stream(
     state_schema = T.StructType(
         [
             T.StructField("tokens", T.DoubleType()),
-            T.StructField("last_us", T.LongType()),  # -1 = no timestamp yet
+            T.StructField("last_us", T.LongType()),  # null = no timestamp yet
         ]
     )
 
@@ -70,7 +72,7 @@ def rate_limit_stream(
         if state.exists:
             tokens, last_us = state.get
         else:
-            tokens, last_us = float(cap), -1
+            tokens, last_us = float(cap), None
         # concatenate the group's frames BEFORE sorting: Arrow splits a
         # large group into multiple frames in no guaranteed order, so a
         # per-frame sort would process a later-frame-but-earlier-ts
@@ -80,31 +82,17 @@ def rate_limit_stream(
         # ones, so every row pays a token.
         parts = [p for p in frames if len(p)]
         if not parts:
-            state.update((float(tokens), int(last_us)))
+            state.update((float(tokens), last_us))
             return
         pdf = pd.concat(parts, ignore_index=True).sort_values(
             ["timestamp", "id"], na_position="first"
         )
-        flags = []
-        for ts in pdf["timestamp"]:
-            if ts is not None and not pd.isna(ts):
-                now_us = int(ts.value // 1000)
-                if last_us >= 0 and now_us > last_us:
-                    tokens = min(cap, tokens + rate * (now_us - last_us) / 1e6)
-                # only ADVANCE the clock: a late event from a previous
-                # micro-batch must not rewind last_us, or the next
-                # on-time event would re-credit refill time that was
-                # already granted before the checkpoint (sorting can't
-                # see across batches)
-                last_us = max(last_us, now_us)
-            if tokens >= 1.0:
-                tokens -= 1.0
-                flags.append(False)
-            else:
-                flags.append(True)
+        flags, tokens, last_us = token_bucket(
+            pdf["timestamp"], tokens, last_us, rate, cap
+        )
         pdf = pdf.copy()
         pdf["_discarded"] = flags
-        state.update((float(tokens), int(last_us)))
+        state.update((float(tokens), last_us))
         yield pdf
 
     # two-valued split (same fix as the batch twin, sources/ingest.py):

@@ -46,6 +46,15 @@ _PATTERNS: list[tuple[re.Pattern[str], str, dt.timedelta]] = [
 ]
 
 
+def naive_utc(t: dt.datetime | None) -> dt.datetime | None:
+    """``t`` as a naive UTC datetime, the engine-wide convention (the
+    session timezone is UTC): aware values are converted, naive ones
+    and None pass through."""
+    if t is None or t.tzinfo is None:
+        return t
+    return t.astimezone(dt.timezone.utc).replace(tzinfo=None)
+
+
 def _midnight(now: dt.datetime) -> dt.datetime:
     return now.replace(hour=0, minute=0, second=0, microsecond=0)
 

@@ -164,16 +164,27 @@ def test_store_roundtrip_and_clone(spark, tmp_path, logs):
 
 
 def test_store_compact_merges_small_files(spark, tmp_path, logs):
-    s = LogStore(spark, str(tmp_path / "c"))
-    for _ in range(4):  # repeated appends → many small files per date
-        s.append(logs)
-    before = s.read().count()
-    pdirs = sorted(glob.glob(str(tmp_path / "c" / "p_date=*")))
-    assert pdirs
-    files_before = sum(
-        len(glob.glob(os.path.join(d, "*.parquet"))) for d in pdirs
-    )
-    report = s.compact()
+    """Also: store writes run under TIMESTAMP_MICROS but must not leak
+    ``outputTimestampType`` into the session — a preset INT96 survives
+    both append and compact."""
+    key = "spark.sql.parquet.outputTimestampType"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "INT96")
+    try:
+        s = LogStore(spark, str(tmp_path / "c"))
+        for _ in range(4):  # repeated appends → many small files per date
+            s.append(logs)
+        assert spark.conf.get(key) == "INT96"  # append didn't leak
+        before = s.read().count()
+        pdirs = sorted(glob.glob(str(tmp_path / "c" / "p_date=*")))
+        assert pdirs
+        files_before = sum(
+            len(glob.glob(os.path.join(d, "*.parquet"))) for d in pdirs
+        )
+        report = s.compact()
+        assert spark.conf.get(key) == "INT96"  # compact didn't leak
+    finally:
+        spark.conf.set(key, old)
     files_after = sum(
         len(glob.glob(os.path.join(d, "*.parquet")))
         for d in glob.glob(str(tmp_path / "c" / "p_date=*"))
@@ -218,6 +229,35 @@ def test_store_read_time_bounds_prune_partitions(spark, tmp_path, logs):
     # the derived p_date predicate must reach the scan as a partition
     # filter (directory pruning), the timestamp bound as a data filter
     assert "PartitionFilters" in plan and "p_date" in plan.split("PartitionFilters")[1][:200]
+
+
+def test_store_read_aware_bounds_use_utc_dates(spark, tmp_path):
+    """An aware since/until names an instant; the p_date bound must be
+    that instant's UTC date, not the date in the value's own zone (which
+    pruned a whole day of matching rows)."""
+    from pond_spark.schema import LOG_SCHEMA
+
+    base = dict.fromkeys(f.name for f in LOG_SCHEMA.fields)
+    rows = [
+        {**base, "id": i, "timestamp": ts, "site": "s", "type": "t"}
+        for i, ts in enumerate(
+            [dt.datetime(2024, 1, 4, 23, 30), dt.datetime(2024, 1, 5, 2)]
+        )
+    ]
+    s = LogStore(spark, str(tmp_path / "tz"))
+    s.append(spark.createDataFrame(rows, LOG_SCHEMA))
+
+    def ids(**bounds):
+        return sorted(r.id for r in s.read(**bounds).select("id").collect())
+
+    plus2 = dt.timezone(dt.timedelta(hours=2))
+    minus5 = dt.timezone(dt.timedelta(hours=-5))
+    # 2024-01-05T01:00+02:00 == 2024-01-04T23:00Z
+    assert ids(since=dt.datetime(2024, 1, 5, 1, tzinfo=plus2)) == [0, 1]
+    assert ids(since=dt.datetime(2024, 1, 4, 23)) == [0, 1]
+    # 2024-01-04T23:45-05:00 == 2024-01-05T04:45Z
+    assert ids(until=dt.datetime(2024, 1, 4, 23, 45, tzinfo=minus5)) == [0, 1]
+    assert ids(until=dt.datetime(2024, 1, 5, 4, 45)) == [0, 1]
 
 
 def test_rate_limit_null_type_rows_survive(spark):

@@ -892,19 +892,22 @@ def test_rhp_gate_coefficient_dim_aware(spark, tmp_path):
     assert stats["gate_nbits_capped_by_dim"] is True
 
 
-def test_rhp_bucket_vectorized_bit_exact(spark):
+def test_rhp_bucket_vectorized_bit_exact(spark, monkeypatch):
     """Round-10 perf path: the Arrow/numpy signature must be
     BIT-IDENTICAL to the HOF fold at every dim — catalogs pin bucket
     keys across runs, so a catalog registered through one backend
     must probe identically through the other. Random float32 vectors
     plus the degenerate rows (NULL, wrong length, NaN element) at
-    dims spanning both sides of the auto-switch threshold."""
-    import math
-    import random
+    dims spanning both sides of the auto-switch threshold; each
+    backend is forced by moving the threshold."""
+    from pond_spark.plans import formatted_plan
+    from pond_spark.similarity import lsh
 
-    from pyspark.sql import functions as F
-
-    from pond_spark.similarity.lsh import rhp_bucket
+    def buckets(df, dim, nbits, min_work):
+        monkeypatch.setattr(lsh, "_VECTORIZED_MIN_WORK", min_work)
+        out = lsh.rhp_bucket(df, dim, nbits, vec_col="embedding")
+        arrow = "ArrowEvalPython" in formatted_plan(out)
+        return {r.vec_id: r.bucket for r in out.collect()}, arrow
 
     rng = random.Random(0xB17)
     for dim, nbits in ((16, 8), (64, 24), (256, 28), (1024, 20)):
@@ -926,18 +929,10 @@ def test_rhp_bucket_vectorized_bit_exact(spark):
         df = spark.createDataFrame(
             rows, "vec_id long, embedding array<float>"
         )
-        hof = {
-            r.vec_id: r.bucket
-            for r in rhp_bucket(
-                df, dim, nbits, vec_col="embedding", vectorized=False
-            ).collect()
-        }
-        vec = {
-            r.vec_id: r.bucket
-            for r in rhp_bucket(
-                df, dim, nbits, vec_col="embedding", vectorized=True
-            ).collect()
-        }
+        hof, hof_arrow = buckets(df, dim, nbits, 1 << 62)
+        vec, vec_arrow = buckets(df, dim, nbits, 0)
+        # the backends really differ: only the numpy fold runs in Arrow
+        assert (hof_arrow, vec_arrow) == (False, True)
         diff = {k for k in hof if hof[k] != vec[k]}
         assert not diff, (dim, nbits, sorted(diff)[:5],
                           [(hof[k], vec[k]) for k in sorted(diff)[:3]])

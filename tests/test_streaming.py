@@ -901,6 +901,67 @@ def test_rate_limit_stream_frame_order_independent(spark, tmp_path):
     assert got == exp
 
 
+def test_rate_limit_stream_matches_batch_nulls_ties_sites(spark, tmp_path):
+    """The batch and streaming token buckets share one step
+    (sources/ingest.token_bucket): over one micro-batch with null
+    timestamps, equal-timestamp ties and three sites, both flag exactly
+    the same ids — site "c" sits before the epoch, where the stream's
+    old -1 "no clock yet" sentinel never refilled."""
+    from pond_spark.sources.ingest import rate_limit
+    from pond_spark.streaming import rate_limit_stream
+
+    store = str(tmp_path / "store")
+    t0 = dt.datetime(2024, 5, 1, 12)
+    # per site: (id, seconds after t0 or None); ids deliberately out
+    # of time order so the (ts, id) sort decides every tie
+    plan = {
+        "a": [(7, None), (3, None), (1, 0), (2, 0), (9, 0), (4, 0),
+              (5, 1), (6, 1), (8, 4), (10, 4), (11, None), (12, 9)],
+        "b": [(21, 2), (22, 2), (23, 2), (20, None), (24, 2), (25, 2),
+              (26, 3), (27, 30), (28, 30), (29, 30), (30, 30)],
+        "c": [(31, -2e9), (32, -2e9), (33, -2e9), (34, -2e9), (35, -2e9),
+              (36, -2e9 + 4), (37, -2e9 + 4), (38, None)],
+    }
+    rows = []
+    for site, pairs in plan.items():
+        for i, sec in pairs:
+            r = _rows([i], site, t0)[0]
+            r["type"] = "http_error"
+            r["timestamp"] = None if sec is None else t0 + dt.timedelta(seconds=sec)
+            rows.append(r)
+    exempt = _rows([40, 41], "a", t0) + _rows([42], None, t0)
+    exempt[-1]["type"] = "http_error"  # siteless message: exempt
+    _write_batch(spark, store, rows + exempt)
+
+    sdf = spark.readStream.schema(LOG_SCHEMA).format("parquet").load(store)
+    q = (
+        rate_limit_stream(sdf, rate=0.5, burst=3.0)
+        .writeStream.format("memory")
+        .queryName("rls_parity")
+        .outputMode("append")
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    got = {
+        r.id: r._discarded
+        for r in spark.sql("select id, _discarded from rls_parity").collect()
+    }
+    batch_logs = spark.read.schema(LOG_SCHEMA).parquet(store)
+    exp = {
+        r.id: r._discarded
+        for r in rate_limit(batch_logs, rate=0.5, burst=3.0).collect()
+    }
+    assert len(got) == len(rows) + len(exempt)
+    assert got == exp
+    # non-trivial: both sites pass some rows and discard others
+    for site, pairs in plan.items():
+        flags = {exp[i] for i, _ in pairs}
+        assert flags == {True, False}, site
+    assert not any(exp[i] for i in (40, 41, 42))
+
+
 def test_asof_join_stream_matches_batch_within_horizon(spark, tmp_path):
     """Streaming as-of (VERDICT r6 ask #8): emitted rows equal the
     batch twin's output with matches outside the horizon NULLed —
