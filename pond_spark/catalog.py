@@ -776,32 +776,36 @@ class CatalogStore:
         present (HDFS rename_overwrite crash window) reads the staged
         copy — the full history sits there, not nowhere; a torn final
         line (local append crash window) is skipped, never fatal."""
-        side = self.path + suffix
-        # schemed stores write rotating segments (r10 #7): merge the
-        # pre-r11 legacy single file (strictly oldest) then segments
-        # ascending; each file independently falls back to its staged
-        # sibling when the live copy is missing mid-rename
-        # map staged names back to their base so a segment surviving
-        # ONLY as its staged sibling (rename crash window) still reads
-        segs = sorted({
-            s[: -len("._staged")] if s.endswith("._staged") else s
-            for s in self.fs.glob(self.fs.glob_escape(side) + ".seg-*")
-        })
-        files = [side] + segs
-        out = []
-        for f in files:
-            if not self.fs.exists(f):
-                f = f + "._staged"
-                if not self.fs.exists(f):
-                    continue
-            for line in self.fs.read_text(f).splitlines():
-                if not line.strip():
-                    continue
-                try:
-                    out.append(json.loads(line))
-                except ValueError:
-                    continue  # torn tail from an append crash — skip
-        return out
+        return read_jsonl_history(self.fs, self.path + suffix)
+
+
+def read_jsonl_history(fs, side: str) -> list[dict]:
+    """Every record of the JSONL sidecar ``side``, oldest first, by the
+    recovery rules of :meth:`CatalogStore.stats_history`."""
+    # schemed stores write rotating segments (r10 #7): merge the
+    # pre-r11 legacy single file (strictly oldest) then segments
+    # ascending; each file independently falls back to its staged
+    # sibling when the live copy is missing mid-rename
+    # map staged names back to their base so a segment surviving
+    # ONLY as its staged sibling (rename crash window) still reads
+    segs = sorted({
+        s[: -len("._staged")] if s.endswith("._staged") else s
+        for s in fs.glob(fs.glob_escape(side) + ".seg-*")
+    })
+    out = []
+    for f in [side] + segs:
+        if not fs.exists(f):
+            f = f + "._staged"
+            if not fs.exists(f):
+                continue
+        for line in fs.read_text(f).splitlines():
+            if not line.strip():
+                continue
+            try:
+                out.append(json.loads(line))
+            except ValueError:
+                continue  # torn tail from an append crash — skip
+    return out
 
 
 def history_deltas(history: list[dict]) -> list[dict]:

@@ -1137,8 +1137,6 @@ def _run_pipeline(spark, rest: list[str]) -> int:
     scheduler re-invokes the SAME ``pipeline run`` after any crash and
     the chain resumes from its first incomplete stage; ``status``
     inspects a work_dir without touching Spark jobs."""
-    import json as _json
-
     stages = "quality,exact_dedup,sample"
     min_words, max_words = 20, 100_000
     sample_rate, sample_salt = 1.0, "curate"
@@ -1202,36 +1200,33 @@ def _run_pipeline(spark, rest: list[str]) -> int:
         print(_PIPELINE_USAGE, file=sys.stderr)
         return 2
     sub, args = args[0], args[1:]
+    from pond_spark.pipeline import CurationConfig
+
+    cfg = CurationConfig(
+        min_words=min_words,
+        max_words=max_words,
+        sample_rate=sample_rate,
+        sample_salt=sample_salt,
+        stages=tuple(s for s in stages.split(",") if s),
+        extra=near,
+    )
     try:
         if sub == "status":
             (work,) = args
             from pond_spark.catalog import _fs_for
+            from pond_spark.pipeline import _pin_manifest, _stage_dirs
 
             fs = _fs_for(spark, work)
-            mpath = work.rstrip("/") + "/manifest.json"
-            if not fs.exists(mpath):
-                print(f"no run at {work} (manifest.json missing)",
-                      file=sys.stderr)
-                return 2
-            manifest = _json.loads(fs.read_text(mpath))
-            stages = list(manifest["stages"])
-            gated = (
-                manifest.get("digest_catalog_path")
-                or manifest.get("minhash_catalog_path")
-                or manifest.get("embedding_catalog_path")
-            )
-            if gated:
-                stages = ["catalog_gate"] + stages
-            for idx, stage in enumerate(stages):
-                sdir = f"{work.rstrip('/')}/stage_{idx:02d}_{stage}"
-                state = (
-                    "complete" if fs.exists(sdir + "/_SUCCESS") else "missing"
-                )
-                print(f"{state:8s} {stage:14s} {sdir}")
-            if gated:
-                marker = work.rstrip("/") + "/_REGISTERED"
-                state = "complete" if fs.exists(marker) else "missing"
-                print(f"{state:8s} {'catalog_register':14s} {marker}")
+            stage_dirs, marker = _stage_dirs(work, _pin_manifest(fs, work))
+            states = [
+                (stage, path, fs.exists(path + "/_SUCCESS"))
+                for stage, path in stage_dirs
+            ]
+            if marker:
+                states.append(("catalog_register", marker, fs.exists(marker)))
+            for stage, path, done in states:
+                state = "complete" if done else "missing"
+                print(f"{state:8s} {stage:14s} {path}")
             return 0
         if sub == "report-runs":
             if not args:
@@ -1269,16 +1264,8 @@ def _run_pipeline(spark, rest: list[str]) -> int:
             return 0
         if sub == "report":
             (inp,) = args
-            from pond_spark.pipeline import CurationConfig, report
+            from pond_spark.pipeline import report
 
-            cfg = CurationConfig(
-                min_words=min_words,
-                max_words=max_words,
-                sample_rate=sample_rate,
-                sample_salt=sample_salt,
-                stages=tuple(s for s in stages.split(",") if s),
-                extra=near,
-            )
             eval_df = spark.read.parquet(eval_set) if eval_set else None
             docs = spark.read.parquet(inp)
             for r in report(docs, cfg, eval_df):
@@ -1290,16 +1277,8 @@ def _run_pipeline(spark, rest: list[str]) -> int:
             return 0
         if sub == "run":
             inp, work = args
-            from pond_spark.pipeline import CurationConfig, curate_run
+            from pond_spark.pipeline import curate_run, final_corpus_path
 
-            cfg = CurationConfig(
-                min_words=min_words,
-                max_words=max_words,
-                sample_rate=sample_rate,
-                sample_salt=sample_salt,
-                stages=tuple(s for s in stages.split(",") if s),
-                extra=near,
-            )
             rows = curate_run(
                 spark,
                 inp,
@@ -1311,8 +1290,6 @@ def _run_pipeline(spark, rest: list[str]) -> int:
                 embedding_catalog_path=embedding_catalog,
                 lease_ttl=lease_ttl,
             )
-            from pond_spark.pipeline import final_corpus_path
-
             for r in rows:
                 timing = f" ({r['seconds']}s)" if "seconds" in r else ""
                 print(

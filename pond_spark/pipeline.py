@@ -32,7 +32,10 @@ tests/audits, not in the hot path).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+import contextlib
+import json
+import time
+from dataclasses import dataclass, field, replace
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -80,6 +83,19 @@ class CurationConfig:
     extra: dict = field(default_factory=dict, hash=False, compare=False)
 
 
+#: every stage :func:`curate` dispatches; checked before anything runs
+_STAGES = (
+    "quality", "exact_dedup", "near_dedup", "line_dedup", "pii",
+    "decontaminate", "sample",
+)
+
+
+def _check_stages(stages) -> None:
+    for stage in stages:
+        if stage not in _STAGES:
+            raise ValueError(f"unknown curation stage: {stage}")
+
+
 def curate(
     docs: DataFrame,
     config: CurationConfig = CurationConfig(),
@@ -92,6 +108,7 @@ def curate(
 
     ``eval_set`` is required iff "decontaminate" is in stages.
     """
+    _check_stages(config.stages)
     out = docs
     for stage in config.stages:
         if stage == "quality":
@@ -222,8 +239,6 @@ def curate(
                 out = sample(
                     out, config.sample_rate, id_col, config.sample_salt
                 )
-        else:
-            raise ValueError(f"unknown curation stage: {stage}")
     return out
 
 
@@ -283,57 +298,35 @@ def curate_foreach_batch(
     still disables entirely; the verified gate never needs it. The
     cadence governs only the ADVISORY path: an explicitly configured
     ``emb_max_overshoot`` refusal bound is re-checked on EVERY batch
-    (ADVICE r10 — see :func:`_emb_gate`).
+    (ADVICE r10 — see :meth:`_CatalogGate.filter_new`).
     """
     checks_done = {"n": 0}
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        if (
-            digest_catalog_path is None
-            and minhash_catalog_path is None
-            and embedding_catalog_path is None
-        ):
+        gate = _CatalogGate(
+            batch_df.sparkSession, config, text_col, id_col,
+            digest_catalog_path, minhash_catalog_path, embedding_catalog_path,
+        )
+        if not gate:
             writer(
                 curate(batch_df, config, eval_set, text_col, id_col),
                 batch_id,
             )
             return
-        spark = batch_df.sparkSession
-        dcat = mcat = ecat = None
-        fresh = batch_df
-        if digest_catalog_path is not None:
-            from pond_spark.dedup.exact import DigestCatalog
-
-            dcat = DigestCatalog(spark, digest_catalog_path)
-            fresh = dcat.filter_new(fresh, text_col, id_col=id_col)
-        if minhash_catalog_path is not None:
-            mcat = _minhash_catalog(spark, minhash_catalog_path, config)
-            fresh = mcat.filter_new(fresh, text_col, id_col)
-        if embedding_catalog_path is not None:
-            ecat = _embedding_catalog(spark, embedding_catalog_path, config)
-            every = max(1, int(config.extra.get("emb_gate_check_every", 16)))
-            fresh = _emb_gate(
-                ecat, fresh, config, id_col,
-                check=checks_done["n"] % every == 0,
-            )
-            checks_done["n"] += 1
+        every = max(1, int(config.extra.get("emb_gate_check_every", 16)))
         # pin `fresh`: it feeds both the writer's curate chain and
         # register — unpinned, every micro-batch would pay the
         # catalog joins + within-batch sha256 dedup TWICE
-        fresh = fresh.persist()
+        fresh = gate.filter_new(
+            batch_df, check=checks_done["n"] % every == 0
+        ).persist()
+        checks_done["n"] += 1
         try:
             writer(
                 curate(fresh, config, eval_set, text_col, id_col),
                 batch_id,
             )
-            if dcat is not None:
-                dcat.register(fresh, text_col)
-            if mcat is not None:
-                mcat.register(fresh, text_col, id_col)
-            if ecat is not None:
-                ecat.register(
-                    fresh, config.extra.get("emb_col", "embedding"), id_col
-                )
+            gate.register(fresh)
         finally:
             fresh.unpersist()
 
@@ -391,20 +384,10 @@ def curate_stream(
             from pond_spark.streaming.dedup import dedup_stream
 
             out = dedup_stream(out, text_col, ts_col, watermark)
-        elif stage == "pii":
-            if config.scrub_pii:
-                from pond_spark.functions.pii import pii_scrub
-
-                out = out.withColumn(text_col, pii_scrub(F.col(text_col)))
-        elif stage == "sample":
-            if config.sample_rate < 1.0:
-                from pond_spark.operators.sampling import sample
-
-                out = sample(
-                    out, config.sample_rate, id_col, config.sample_salt
-                )
-        else:
-            raise ValueError(f"unknown curation stage: {stage}")
+        else:  # pii, sample: the batch expressions as they are
+            out = curate(
+                out, replace(config, stages=(stage,)), None, text_col, id_col
+            )
     return out
 
 
@@ -444,9 +427,6 @@ def _embedding_catalog(spark, path: str, config: CurationConfig):
     from a flag-less streaming run — the pre-r11 literal defaults
     (nbits=8) would refuse at open with a params mismatch. Explicit
     keys still win (and still refuse a genuine mismatch)."""
-    import json as _json
-
-    from pond_spark.catalog import _fs_for
     from pond_spark.similarity.catalog import EmbeddingCatalog
 
     x = config.extra
@@ -456,16 +436,7 @@ def _embedding_catalog(spark, path: str, config: CurationConfig):
             "(the hyperplane shape is pinned per catalog)"
         )
     if "emb_nbits" not in x or "emb_vector_buckets" not in x:
-        fs = _fs_for(spark, path)
-        sidecar = path + ".params.json"
-        if fs.exists(sidecar):
-            stored = _json.loads(fs.read_text(sidecar))
-            x = dict(x)
-            x.setdefault("emb_nbits", int(stored["nbits"]))
-            svb = stored.get("vector_buckets")
-            x.setdefault(
-                "emb_vector_buckets", int(svb) if svb else None
-            )
+        x = _adopt_emb_sizing(spark, path, x) or x
     vb = x.get("emb_vector_buckets")
     return EmbeddingCatalog(
         spark,
@@ -479,6 +450,23 @@ def _embedding_catalog(spark, path: str, config: CurationConfig):
         ),
         vector_buckets=int(vb) if vb is not None else None,
     )
+
+
+def _adopt_emb_sizing(spark, path: str, extra: dict) -> dict | None:
+    """``extra`` with emb_nbits/emb_vector_buckets defaulted from the
+    catalog's params sidecar; None before its first register."""
+    from pond_spark.catalog import _fs_for
+
+    fs = _fs_for(spark, path)
+    sidecar = path + ".params.json"
+    if not fs.exists(sidecar):
+        return None
+    stored = json.loads(fs.read_text(sidecar))
+    x = dict(extra)
+    x.setdefault("emb_nbits", int(stored["nbits"]))
+    vb = stored.get("vector_buckets")
+    x.setdefault("emb_vector_buckets", int(vb) if vb else None)
+    return x
 
 
 def _derive_emb_sizing(spark, input_path: str, catalog_path: str,
@@ -514,10 +502,7 @@ def _derive_emb_sizing(spark, input_path: str, catalog_path: str,
     or day-2 run reopens the catalog with identical parameters (a
     crash before first register re-derives from the same input count;
     after it, the params sidecar exists and is adopted)."""
-    import json as _json
     import math
-
-    from pond_spark.catalog import _fs_for
 
     x = dict(config.extra)
     verified = "emb_verify_cos" in x or bool(x.get("emb_store_vectors"))
@@ -525,15 +510,9 @@ def _derive_emb_sizing(spark, input_path: str, catalog_path: str,
         "emb_nbits" in x and "emb_vector_buckets" in x
     ):
         return config
-    from dataclasses import replace
-
-    fs = _fs_for(spark, catalog_path)
-    sidecar = catalog_path + ".params.json"
-    if fs.exists(sidecar):
-        stored = _json.loads(fs.read_text(sidecar))
-        x.setdefault("emb_nbits", int(stored["nbits"]))
-        vb = stored.get("vector_buckets")
-        x.setdefault("emb_vector_buckets", int(vb) if vb else None)
+    adopted = _adopt_emb_sizing(spark, catalog_path, x)
+    if adopted is not None:
+        x = adopted
         # marker must be IDENTICAL across the derive/adopt branches:
         # a day-1 crash after first register resumes through adoption
         # while its manifest was pinned through derivation — the
@@ -562,36 +541,155 @@ def _derive_emb_sizing(spark, input_path: str, catalog_path: str,
     return replace(config, extra=x)
 
 
-def _emb_gate(cat, df, config: CurationConfig, id_col: str,
-              check: bool = True):
-    """The embedding gate shared by curate_run and
-    curate_foreach_batch (VERDICT r8 #2): ``emb_verify_cos`` selects
-    the exact-cosine VERIFIED gate (only true near-dups drop);
-    otherwise the verify-less bucket gate runs behind
-    :meth:`EmbeddingCatalog.gate_check` — refusing when
-    ``emb_max_overshoot`` is configured and the predicted false-drop
-    rate exceeds it, warning above 5% when not — so occupancy-driven
-    content loss is loud, never silent. ``check=False`` skips this
-    batch's ADVISORY job only (the streaming path's cadence control,
-    ADVICE r9 — a full-catalog groupBy+collect per micro-batch is a
-    hot-path cost the estimate's slow drift doesn't justify). An
-    explicitly configured ``emb_max_overshoot`` is a hard safety
-    bound and runs EVERY batch regardless of cadence (ADVICE r10:
-    registered volume grows every batch, so the predicted overshoot
-    can cross the bound between cadence checks — a skipped refusal is
-    silent content loss, the one thing the gate exists to prevent)."""
-    x = config.extra
-    vec_col = x.get("emb_col", "embedding")
-    vcos = x.get("emb_verify_cos")
-    if vcos is not None:
-        return cat.filter_new(df, vec_col, id_col,
-                              verify_cos=float(vcos))
-    bound = x.get("emb_max_overshoot")
-    if bound is not None:
-        cat.gate_check(float(bound))  # refusal path: cadence-exempt
-    elif check and not x.get("emb_skip_gate_check", False):
-        cat.gate_check(None)
-    return cat.filter_new(df, vec_col, id_col)
+class _CatalogGate:
+    """The catalog gate of curate_run and curate_foreach_batch: opens
+    the Digest, MinHash and Embedding catalogs whose paths are given,
+    drops the rows any of them has seen (:meth:`filter_new`) and
+    records what passed once it shipped (:meth:`register`). Falsy
+    when it holds no catalog — the ungated run."""
+
+    def __init__(self, spark, config: CurationConfig, text_col: str,
+                 id_col: str, digest_path: str | None,
+                 minhash_path: str | None, emb_path: str | None):
+        from pond_spark.dedup.exact import DigestCatalog
+
+        self.config, self.text_col, self.id_col = config, text_col, id_col
+        self.digest = (
+            DigestCatalog(spark, digest_path) if digest_path else None
+        )
+        self.minhash = (
+            _minhash_catalog(spark, minhash_path, config)
+            if minhash_path else None
+        )
+        self.emb = (
+            _embedding_catalog(spark, emb_path, config) if emb_path else None
+        )
+
+    def __bool__(self) -> bool:
+        return any(c is not None for c in (self.digest, self.minhash, self.emb))
+
+    def filter_new(self, df: DataFrame, check: bool = True) -> DataFrame:
+        """``df`` less the rows a held catalog has seen. The embedding
+        leg (VERDICT r8 #2): ``emb_verify_cos`` selects
+        the exact-cosine VERIFIED gate (only true near-dups drop);
+        otherwise the verify-less bucket gate runs behind
+        :meth:`EmbeddingCatalog.gate_check` — refusing when
+        ``emb_max_overshoot`` is configured and the predicted false-drop
+        rate exceeds it, warning above 5% when not — so occupancy-driven
+        content loss is loud, never silent. ``check=False`` skips this
+        batch's ADVISORY job only (the streaming path's cadence control,
+        ADVICE r9 — a full-catalog groupBy+collect per micro-batch is a
+        hot-path cost the estimate's slow drift doesn't justify). An
+        explicitly configured ``emb_max_overshoot`` is a hard safety
+        bound and runs EVERY batch regardless of cadence (ADVICE r10:
+        registered volume grows every batch, so the predicted overshoot
+        can cross the bound between cadence checks — a skipped refusal is
+        silent content loss, the one thing the gate exists to prevent)."""
+        if self.digest is not None:
+            df = self.digest.filter_new(df, self.text_col, id_col=self.id_col)
+        if self.minhash is not None:
+            df = self.minhash.filter_new(df, self.text_col, self.id_col)
+        if self.emb is None:
+            return df
+        x = self.config.extra
+        vec_col = x.get("emb_col", "embedding")
+        vcos = x.get("emb_verify_cos")
+        if vcos is not None:
+            return self.emb.filter_new(df, vec_col, self.id_col,
+                                       verify_cos=float(vcos))
+        bound = x.get("emb_max_overshoot")
+        if bound is not None:
+            self.emb.gate_check(float(bound))  # refusal path: cadence-exempt
+        elif check and not x.get("emb_skip_gate_check", False):
+            self.emb.gate_check(None)
+        return self.emb.filter_new(df, vec_col, self.id_col)
+
+    def register(self, df: DataFrame) -> None:
+        if self.digest is not None:
+            self.digest.register(df, self.text_col)
+        if self.minhash is not None:
+            self.minhash.register(df, self.text_col, self.id_col)
+        if self.emb is not None:
+            self.emb.register(
+                df, self.config.extra.get("emb_col", "embedding"), self.id_col
+            )
+
+
+@contextlib.contextmanager
+def _leases(spark, ttl_s: int | None, paths):
+    """Cooperative single-writer gate (catalog.WriterLease): one lease
+    per non-None path, acquired in order and held for the whole run —
+    a scheduler double-fire gets LeaseHeldError instead of two writers
+    racing the read-then-append catalogs. Yields the callable that
+    renews every held lease; ``ttl_s=None`` holds none."""
+    from pond_spark.catalog import WriterLease
+
+    with contextlib.ExitStack() as stack:
+        held = [
+            stack.enter_context(WriterLease(spark, p, ttl_s=ttl_s))
+            for p in (paths if ttl_s is not None else ())
+            if p is not None
+        ]
+
+        def renew() -> None:
+            # stage boundaries renew every held lease (ADVICE r8: a run
+            # longer than ttl_s was exposed to takeover mid-run;
+            # renew()'s ownership check also turns a takeover that DID
+            # happen into a loud LeaseLostError before the next stage
+            # mutates shared state)
+            for lease in held:
+                lease.renew()
+
+        yield renew
+
+
+#: the run-definition keys naming a work_dir's gate catalogs
+_CATALOG_KEYS = (
+    "digest_catalog_path", "minhash_catalog_path", "embedding_catalog_path",
+)
+
+
+def _pin_manifest(fs, work_dir: str, manifest: dict | None = None) -> dict:
+    """The run definition pinned in ``work_dir/manifest.json``. With
+    ``manifest``: pin it on the first run, refuse a different one on
+    resume. Without: read the pinned one (ValueError before the first
+    run). Manifests written before the gated mode existed lack the
+    catalog keys; absent == None (ungated), not a config change —
+    strict equality would break resume across the upgrade."""
+    path = work_dir.rstrip("/") + "/manifest.json"
+    if not fs.exists(path):
+        if manifest is None:
+            raise ValueError(
+                f"no curate_run at {work_dir} (manifest.json missing)"
+            )
+        fs.mkdirs(work_dir)
+        fs.write_text(path, json.dumps(manifest))
+        return manifest
+    stored = json.loads(fs.read_text(path))
+    for key in _CATALOG_KEYS:
+        stored.setdefault(key, None)
+    if manifest is not None and stored != manifest:
+        diff = {
+            k for k in set(stored) | set(manifest)
+            if stored.get(k) != manifest.get(k)
+        }
+        raise ValueError(
+            f"work_dir {work_dir} was started with a different run "
+            f"definition (differs in {sorted(diff)}); resuming would "
+            "mix stage semantics — use a new work_dir"
+        )
+    return stored
+
+
+def _stage_dirs(work_dir: str, manifest: dict):
+    """A pinned run's stage chain as ``(stage, dir)`` pairs in run
+    order — the synthetic ``catalog_gate`` first when any gate catalog
+    is named — and its ``_REGISTERED`` marker (None when ungated)."""
+    root = work_dir.rstrip("/")
+    gated = any(manifest[key] for key in _CATALOG_KEYS)
+    stages = (["catalog_gate"] if gated else []) + list(manifest["stages"])
+    dirs = [(s, f"{root}/stage_{i:02d}_{s}") for i, s in enumerate(stages)]
+    return dirs, (root + "/_REGISTERED" if gated else None)
 
 
 def curate_run(
@@ -606,7 +704,6 @@ def curate_run(
     minhash_catalog_path: str | None = None,
     embedding_catalog_path: str | None = None,
     lease_ttl: int | None = None,
-    _renew=None,
 ) -> list[dict]:
     """Stage-level RESUMABLE curation run — the multi-day 100 TB story
     (VERDICT r7 ask #8): each configured stage materializes its
@@ -682,222 +779,120 @@ def curate_run(
       can append a batch twice — duplicate catalog rows are harmless
       to the anti-join/semi-join probes and cleaned by compact()).
     """
-    import json as _json
-
-    from pond_spark.catalog import _fs_for
-
-    if lease_ttl is not None:
-        # cooperative single-writer gate (catalog.WriterLease): one
-        # lease on the work_dir and one per shared catalog, held for
-        # the whole run — a scheduler double-fire gets LeaseHeldError
-        # instead of two writers racing the read-then-append catalogs
-        from pond_spark.catalog import WriterLease
-
-        acquired = []
-        try:
-            for p in (
-                work_dir,
-                digest_catalog_path,
-                minhash_catalog_path,
-                embedding_catalog_path,
-            ):
-                if p is not None:
-                    acquired.append(
-                        WriterLease(spark, p, ttl_s=lease_ttl).acquire()
-                    )
-            def _renew_all() -> None:
-                # stage boundaries renew every held lease (ADVICE r8:
-                # a run longer than ttl_s was exposed to takeover
-                # mid-run; renew()'s ownership check also turns a
-                # takeover that DID happen into a loud LeaseLostError
-                # before the next stage mutates shared state)
-                for lease in acquired:
-                    lease.renew()
-
-            return curate_run(
-                spark, input_path, work_dir, config, eval_set_path,
-                text_col, id_col, digest_catalog_path,
-                minhash_catalog_path, embedding_catalog_path,
-                lease_ttl=None, _renew=_renew_all,
-            )
-        finally:
-            for lease in acquired:
-                lease.release()
-
+    # every check that can refuse the run comes before anything is
+    # written: a refused first call must leave the work_dir unpinned
+    # (catalog_gate is no curation stage: the catalog paths prepend it)
     if not config.stages:
         raise ValueError("curate_run needs at least one stage")
-    if "catalog_gate" in config.stages:
-        raise ValueError(
-            "catalog_gate is not a configurable stage — it is prepended "
-            "by digest_catalog_path/minhash_catalog_path"
-        )
-    gated = (
-        digest_catalog_path is not None
-        or minhash_catalog_path is not None
-        or embedding_catalog_path is not None
-    )
-    if embedding_catalog_path is not None:
-        # default the sized+bucketed verified gate BEFORE the manifest
-        # is pinned, so derived values resume identically (r10 ask #3)
-        config = _derive_emb_sizing(
-            spark, input_path, embedding_catalog_path, config
-        )
-    fs = _fs_for(spark, work_dir)
-    fs.mkdirs(work_dir)
-    manifest_path = work_dir.rstrip("/") + "/manifest.json"
-    manifest = {
-        "input_path": input_path,
-        "eval_set_path": eval_set_path,
-        "text_col": text_col,
-        "id_col": id_col,
-        "stages": list(config.stages),
-        "digest_catalog_path": digest_catalog_path,
-        "minhash_catalog_path": minhash_catalog_path,
-        "embedding_catalog_path": embedding_catalog_path,
-        "config": {
-            "min_words": config.min_words,
-            "max_words": config.max_words,
-            "line_min_docs": config.line_min_docs,
-            "line_words_per_chunk": config.line_words_per_chunk,
-            "decontaminate_n": config.decontaminate_n,
-            "sample_rate": config.sample_rate,
-            "sample_salt": config.sample_salt,
-            "scrub_pii": config.scrub_pii,
-            "extra": dict(config.extra),
-        },
-    }
-    if fs.exists(manifest_path):
-        stored = _json.loads(fs.read_text(manifest_path))
-        # manifests written before the gated mode existed lack the
-        # catalog keys; absent == None (ungated), not a config change —
-        # strict equality would break resume across the upgrade
-        for key in (
-            "digest_catalog_path",
-            "minhash_catalog_path",
-            "embedding_catalog_path",
-        ):
-            stored.setdefault(key, None)
-        if stored != manifest:
-            diff = {
-                k for k in set(stored) | set(manifest)
-                if stored.get(k) != manifest.get(k)
-            }
-            raise ValueError(
-                f"work_dir {work_dir} was started with a different run "
-                f"definition (differs in {sorted(diff)}); resuming would "
-                "mix stage semantics — use a new work_dir"
+    _check_stages(config.stages)
+    if "decontaminate" in config.stages and not eval_set_path:
+        raise ValueError("decontaminate stage needs eval_set_path")
+    from pond_spark.catalog import _fs_for
+
+    with _leases(
+        spark, lease_ttl,
+        (work_dir, digest_catalog_path, minhash_catalog_path,
+         embedding_catalog_path),
+    ) as renew:
+        if embedding_catalog_path is not None:
+            # default the sized+bucketed verified gate BEFORE the
+            # manifest is pinned, so derived values resume identically
+            # (r10 ask #3)
+            config = _derive_emb_sizing(
+                spark, input_path, embedding_catalog_path, config
             )
-    else:
-        fs.write_text(manifest_path, _json.dumps(manifest))
-
-    from dataclasses import replace
-
-    eval_set = (
-        spark.read.parquet(eval_set_path) if eval_set_path else None
-    )
-    rows: list[dict] = []
-    cur_path = input_path
-    gate_dir = f"{work_dir.rstrip('/')}/stage_00_catalog_gate"
-    marker = work_dir.rstrip("/") + "/_REGISTERED"
-    run_stages = (("catalog_gate",) if gated else ()) + tuple(config.stages)
-    recompute = False  # once a stage recomputes, everything after does
-    for idx, stage in enumerate(run_stages):
-        stage_dir = f"{work_dir.rstrip('/')}/stage_{idx:02d}_{stage}"
-        if not recompute and fs.exists(stage_dir + "/_SUCCESS"):
+        gate = _CatalogGate(
+            spark, config, text_col, id_col, digest_catalog_path,
+            minhash_catalog_path, embedding_catalog_path,
+        )
+        fs = _fs_for(spark, work_dir)
+        manifest = _pin_manifest(fs, work_dir, {
+            "input_path": input_path,
+            "eval_set_path": eval_set_path,
+            "text_col": text_col,
+            "id_col": id_col,
+            "stages": list(config.stages),
+            "digest_catalog_path": digest_catalog_path,
+            "minhash_catalog_path": minhash_catalog_path,
+            "embedding_catalog_path": embedding_catalog_path,
+            "config": {
+                "min_words": config.min_words,
+                "max_words": config.max_words,
+                "line_min_docs": config.line_min_docs,
+                "line_words_per_chunk": config.line_words_per_chunk,
+                "decontaminate_n": config.decontaminate_n,
+                "sample_rate": config.sample_rate,
+                "sample_salt": config.sample_salt,
+                "scrub_pii": config.scrub_pii,
+                "extra": dict(config.extra),
+            },
+        })
+        stage_dirs, marker = _stage_dirs(work_dir, manifest)
+        eval_set = (
+            spark.read.parquet(eval_set_path) if eval_set_path else None
+        )
+        rows: list[dict] = []
+        cur_path = input_path
+        recompute = False  # once a stage recomputes, everything after does
+        for stage, stage_dir in stage_dirs:
+            if not recompute and fs.exists(stage_dir + "/_SUCCESS"):
+                rows.append(
+                    {"stage": stage, "path": stage_dir, "status": "resumed"}
+                )
+                cur_path = stage_dir
+                continue
+            recompute = True
+            t0 = time.perf_counter()
+            if stage == "catalog_gate" and fs.exists(marker):
+                    # re-gating AFTER this run registered would anti-join
+                    # the run's own digests and silently ship an empty
+                    # corpus — the silent-no-op class this repo refuses
+                    # loudly
+                    raise RuntimeError(
+                        f"catalog_gate at {stage_dir} needs recomputing "
+                        f"but {marker} says this run already registered "
+                        "its content — re-gating against the run's own "
+                        "catalog entries would produce an empty corpus. "
+                        "Restore the stage output from backup, or start a "
+                        "new work_dir (compact/rebuild the catalog first "
+                        "if this run's content must re-ship)."
+                    )
+            src = spark.read.parquet(cur_path)
+            if stage == "catalog_gate":
+                out = gate.filter_new(src)
+            else:
+                out = curate(
+                    src, replace(config, stages=(stage,)), eval_set,
+                    text_col, id_col,
+                )
+            out.write.mode("overwrite").parquet(stage_dir)
+            renew()
             rows.append(
-                {"stage": stage, "path": stage_dir, "status": "resumed"}
+                {
+                    "stage": stage,
+                    "path": stage_dir,
+                    "status": "computed",
+                    # per-stage wall — the ops telemetry a multi-day run
+                    # reads to find its expensive stage; resumed rows are
+                    # metadata-only and carry no timing
+                    "seconds": round(time.perf_counter() - t0, 1),
+                }
             )
             cur_path = stage_dir
-            continue
-        recompute = True
-        import time as _time
-
-        t0 = _time.perf_counter()
-        if stage == "catalog_gate" and fs.exists(marker):
-            # re-gating AFTER this run registered would anti-join the
-            # run's own digests and silently ship an empty corpus —
-            # the silent-no-op class this repo refuses loudly
-            raise RuntimeError(
-                f"catalog_gate at {gate_dir} needs recomputing but "
-                f"{marker} says this run already registered its "
-                "content — re-gating against the run's own catalog "
-                "entries would produce an empty corpus. Restore the "
-                "stage output from backup, or start a new work_dir "
-                "(compact/rebuild the catalog first if this run's "
-                "content must re-ship)."
-            )
-        src = spark.read.parquet(cur_path)
-        if stage == "catalog_gate":
-            out = src
-            if digest_catalog_path is not None:
-                from pond_spark.dedup.exact import DigestCatalog
-
-                out = DigestCatalog(spark, digest_catalog_path).filter_new(
-                    out, text_col, id_col=id_col
-                )
-            if minhash_catalog_path is not None:
-                out = _minhash_catalog(
-                    spark, minhash_catalog_path, config
-                ).filter_new(out, text_col, id_col)
-            if embedding_catalog_path is not None:
-                out = _emb_gate(
-                    _embedding_catalog(spark, embedding_catalog_path, config),
-                    out, config, id_col,
-                )
-        else:
-            out = curate(
-                src,
-                replace(config, stages=(stage,)),
-                eval_set,
-                text_col,
-                id_col,
-            )
-        out.write.mode("overwrite").parquet(stage_dir)
-        if _renew is not None:
-            _renew()
-        rows.append(
-            {
-                "stage": stage,
-                "path": stage_dir,
-                "status": "computed",
-                # per-stage wall — the ops telemetry a multi-day run
-                # reads to find its expensive stage; resumed rows are
-                # metadata-only and carry no timing
-                "seconds": round(_time.perf_counter() - t0, 1),
-            }
-        )
-        cur_path = stage_dir
-    if gated:
-        # register AFTER the whole chain shipped (at-least-once: a
-        # crashed run must stay re-admittable), from the MATERIALIZED
-        # gate output so a resume registers exactly what was gated
-        if fs.exists(marker):
+        if marker is not None:
+            # register AFTER the whole chain shipped (at-least-once: a
+            # crashed run must stay re-admittable), from the
+            # MATERIALIZED gate output so a resume registers exactly
+            # what was gated
+            status = "resumed"
+            if not fs.exists(marker):
+                gate_dir = stage_dirs[0][1]
+                gate.register(spark.read.parquet(gate_dir))
+                fs.write_text(marker, json.dumps({"source": gate_dir}))
+                status = "computed"
             rows.append(
                 {"stage": "catalog_register", "path": marker,
-                 "status": "resumed"}
-            )
-        else:
-            fresh = spark.read.parquet(gate_dir)
-            if digest_catalog_path is not None:
-                from pond_spark.dedup.exact import DigestCatalog
-
-                DigestCatalog(spark, digest_catalog_path).register(
-                    fresh, text_col
-                )
-            if minhash_catalog_path is not None:
-                _minhash_catalog(
-                    spark, minhash_catalog_path, config
-                ).register(fresh, text_col, id_col)
-            if embedding_catalog_path is not None:
-                _embedding_catalog(
-                    spark, embedding_catalog_path, config
-                ).register(
-                    fresh, config.extra.get("emb_col", "embedding"), id_col
-                )
-            fs.write_text(marker, _json.dumps({"source": gate_dir}))
-            rows.append(
-                {"stage": "catalog_register", "path": marker,
-                 "status": "computed"}
+                 "status": status}
             )
     return rows
 
@@ -917,55 +912,34 @@ def report_runs(spark, work_dirs: list[str]) -> list[dict]:
     not the hot path. Incomplete stages report ``rows_out: None``.
     Returns one dict per work_dir, in the given order (the daily-run
     shape: one work_dir per day against shared catalogs)."""
-    import json as _json
+    from pond_spark.catalog import _fs_for, read_jsonl_history
 
-    from pond_spark.catalog import _fs_for
-
-    cat_keys = (
-        ("digest", "digest_catalog_path"),
-        ("minhash", "minhash_catalog_path"),
-        ("emb", "embedding_catalog_path"),
-    )
     out: list[dict] = []
     for work in work_dirs:
         fs = _fs_for(spark, work)
-        mpath = work.rstrip("/") + "/manifest.json"
-        if not fs.exists(mpath):
-            raise ValueError(f"no curate_run at {work} (manifest.json missing)")
-        man = _json.loads(fs.read_text(mpath))
-        for _, key in cat_keys:
-            man.setdefault(key, None)
-        gated = any(man[key] for _, key in cat_keys)
-        stages = (["catalog_gate"] if gated else []) + list(man["stages"])
+        man = _pin_manifest(fs, work)
+        stage_dirs, marker = _stage_dirs(work, man)
         input_rows = spark.read.parquet(man["input_path"]).count()
         day: dict = {
             "work_dir": work,
             "input_path": man["input_path"],
             "input_rows": input_rows,
             "stages": [],
-            "registered": gated
-            and fs.exists(work.rstrip("/") + "/_REGISTERED"),
+            "registered": marker is not None and fs.exists(marker),
         }
         prev: int | None = input_rows
         shipped = None
-        for idx, stage in enumerate(stages):
-            sdir = f"{work.rstrip('/')}/stage_{idx:02d}_{stage}"
-            if fs.exists(sdir + "/_SUCCESS"):
-                n = spark.read.parquet(sdir).count()
-                day["stages"].append(
-                    {
-                        "stage": stage,
-                        "rows_out": n,
-                        "dropped": (prev - n) if prev is not None else None,
-                    }
-                )
-                prev = n
-                shipped = n
-            else:
-                day["stages"].append(
-                    {"stage": stage, "rows_out": None, "dropped": None}
-                )
-                prev = None
+        for stage, sdir in stage_dirs:
+            n = (
+                spark.read.parquet(sdir).count()
+                if fs.exists(sdir + "/_SUCCESS") else None
+            )
+            dropped = None if n is None or prev is None else prev - n
+            day["stages"].append(
+                {"stage": stage, "rows_out": n, "dropped": dropped}
+            )
+            prev = n
+            shipped = shipped if n is None else n
         day["shipped_rows"] = shipped
         day["complete"] = all(
             s["rows_out"] is not None for s in day["stages"]
@@ -974,24 +948,16 @@ def report_runs(spark, work_dirs: list[str]) -> list[dict]:
         # ops-facing read of the gate's health (for emb:
         # predicted_gate_overshoot_ppm is the r9 overshoot dial)
         snapshots: dict = {}
-        for kind, key in cat_keys:
+        for kind, key in zip(("digest", "minhash", "emb"), _CATALOG_KEYS):
             path = man[key]
             if not path:
                 continue
             cfs = _fs_for(spark, path)
             entry: dict = {"path": path}
-            for label, suffix in (
-                ("advise", ".advise.jsonl"),
-                ("retention", ".retention.jsonl"),
-            ):
-                side = path + suffix
-                if cfs.exists(side):
-                    lines = [
-                        ln for ln in cfs.read_text(side).splitlines()
-                        if ln.strip()
-                    ]
-                    if lines:
-                        entry[label] = _json.loads(lines[-1])
+            for label in ("advise", "retention"):
+                history = read_jsonl_history(cfs, f"{path}.{label}.jsonl")
+                if history:
+                    entry[label] = history[-1]
             snapshots[kind] = entry
         day["catalogs"] = snapshots
         out.append(day)
@@ -1014,8 +980,6 @@ def report(
     belongs in tests and scheduled audits, not the hot path. The
     returned list is driver-side and bounded by the stage count.
     """
-    from dataclasses import replace
-
     rows: list[dict] = []
     cur = docs
     n_in = cur.count()

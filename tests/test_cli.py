@@ -981,6 +981,25 @@ def test_cli_pipeline_run_incremental_catalogs(spark, store_dir, tmp_path, capsy
     assert out.count("complete") == 3  # gate, quality, register
     assert "catalog_register" in out and "missing" not in out
 
+    # status lists exactly the paths curate_run returns, in order (one
+    # work-dir layout for both), and a stage that lost its _SUCCESS
+    # shows missing
+    import os
+
+    from pond_spark.pipeline import CurationConfig, curate_run
+
+    rows = curate_run(spark, day2, w2, CurationConfig(stages=("quality",)),
+                      digest_catalog_path=cat)
+    assert [r["status"] for r in rows] == ["resumed"] * 3
+    assert main([f"--store={store_dir}", "pipeline", "status", w2]) == 0
+    lines = capsys.readouterr().out.splitlines()
+    assert [ln.split()[-1] for ln in lines] == [r["path"] for r in rows]
+    os.remove(os.path.join(rows[1]["path"], "_SUCCESS"))
+    assert main([f"--store={store_dir}", "pipeline", "status", w2]) == 0
+    states = [ln.split()[:2] for ln in capsys.readouterr().out.splitlines()]
+    assert states == [["complete", "catalog_gate"], ["missing", "quality"],
+                      ["complete", "catalog_register"]]
+
 
 def test_cli_pipeline_report_funnel(spark, store_dir, tmp_path, capsys):
     """`pipeline report` prints the per-stage funnel (pipeline.report)

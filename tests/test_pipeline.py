@@ -582,6 +582,33 @@ def test_curate_run_cross_run_incremental_catalogs(spark, tmp_path):
         "catalog_gate", "quality", "exact_dedup", "catalog_register",
     ]
     assert all(r["status"] == "computed" for r in r1)
+    # the resume format, byte for byte: manifest and registration marker
+    import json
+
+    assert (tmp_path / "w1" / "manifest.json").read_text() == json.dumps({
+        "input_path": day1,
+        "eval_set_path": None,
+        "text_col": "text",
+        "id_col": "doc_id",
+        "stages": ["quality", "exact_dedup"],
+        "digest_catalog_path": digest_cat,
+        "minhash_catalog_path": minhash_cat,
+        "embedding_catalog_path": None,
+        "config": {
+            "min_words": 10,
+            "max_words": 100000,
+            "line_min_docs": 2,
+            "line_words_per_chunk": None,
+            "decontaminate_n": 8,
+            "sample_rate": 1.0,
+            "sample_salt": "curate",
+            "scrub_pii": True,
+            "extra": {},
+        },
+    })
+    assert (tmp_path / "w1" / "_REGISTERED").read_text() == json.dumps(
+        {"source": str(tmp_path / "w1" / "stage_00_catalog_gate")}
+    )
     assert {
         r.doc_id for r in spark.read.parquet(r1[-2]["path"]).collect()
     } == {1, 2}
@@ -658,6 +685,41 @@ def test_curate_run_refuses_explicit_catalog_gate_stage(spark, tmp_path):
             spark, str(tmp_path / "in"), str(tmp_path / "w"),
             CurationConfig(stages=("catalog_gate", "quality")),
         )
+
+
+def test_curate_run_validates_stages_before_pinning(spark, tmp_path):
+    """A refused stage list writes nothing: a misspelt stage, or
+    decontaminate without eval_set_path, leaves no manifest behind, so
+    the corrected rerun on the same work_dir computes instead of being
+    refused for a run definition that never ran."""
+    import os
+
+    from pond_spark.pipeline import curate_run
+
+    good = "clean prose with plenty of ordinary readable words " * 3
+    docs = str(tmp_path / "docs")
+    spark.createDataFrame(
+        [(1, good + "one")], "doc_id long, text string"
+    ).write.parquet(docs)
+    work = str(tmp_path / "w")
+    manifest = os.path.join(work, "manifest.json")
+    with pytest.raises(ValueError, match="unknown curation stage"):
+        curate_run(
+            spark, docs, work,
+            CurationConfig(min_words=10, stages=("qualty",)),
+        )
+    assert not os.path.exists(manifest)
+    with pytest.raises(ValueError, match="eval_set"):
+        curate_run(
+            spark, docs, work,
+            CurationConfig(min_words=10, stages=("quality", "decontaminate")),
+        )
+    assert not os.path.exists(manifest)
+    r = curate_run(
+        spark, docs, work, CurationConfig(min_words=10, stages=("quality",))
+    )
+    assert [x["status"] for x in r] == ["computed"]
+    assert os.path.exists(manifest)
 
 
 def test_curate_run_manifest_upgrade_and_register_guard(spark, tmp_path):
@@ -1129,6 +1191,40 @@ def test_report_runs_two_day_funnel(spark, tmp_path, capsys):
     out = capsys.readouterr().out
     assert "shipped=2" in out and "catalog_gate" in out and "registered" in out
     assert main([f"--store={store}", "pipeline", "report-runs"]) == 2
+
+
+def test_report_runs_reads_segmented_and_torn_snapshots(spark, tmp_path):
+    """report_runs takes each gate catalog's latest snapshot with the
+    stats_history reader: a file:-schemed catalog keeps its history in
+    rotating .seg-NNNNNN sidecars, and a torn last line (append crash)
+    is skipped, not fatal."""
+    from pond_spark.dedup.exact import DigestCatalog
+    from pond_spark.pipeline import curate_run, report_runs
+
+    good = "clean prose with plenty of ordinary readable words " * 3
+    docs = str(tmp_path / "docs")
+    spark.createDataFrame(
+        [(1, good + "one"), (2, good + "two")], "doc_id long, text string"
+    ).write.parquet(docs)
+    cfg = CurationConfig(min_words=10, stages=("quality",))
+    schemed, local = f"file://{tmp_path}/scat", str(tmp_path / "lcat")
+    ws, wl = str(tmp_path / "ws"), str(tmp_path / "wl")
+    curate_run(spark, docs, ws, cfg, digest_catalog_path=schemed)
+    curate_run(spark, docs, wl, cfg, digest_catalog_path=local)
+    scat, lcat = DigestCatalog(spark, schemed), DigestCatalog(spark, local)
+    scat.expire(before_ts=0)
+    lcat.expire(before_ts=0)
+    assert list(tmp_path.glob("scat.retention.jsonl.seg-*"))
+    with open(local + ".retention.jsonl", "a") as f:
+        f.write('{"rows_kept": 9')  # torn by a crash mid-append
+    s_day, l_day = report_runs(spark, [ws, wl])
+    assert s_day["catalogs"]["digest"]["retention"] == (
+        scat.retention_history()[-1]
+    )
+    assert l_day["catalogs"]["digest"]["retention"] == (
+        lcat.retention_history()[-1]
+    )
+    assert l_day["catalogs"]["digest"]["retention"]["rows_kept"] == 2
 
 
 def test_embedding_gate_fuzz_oracle_parity(spark, tmp_path):

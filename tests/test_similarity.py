@@ -622,7 +622,7 @@ def test_embedding_catalog_verified_gate(spark, tmp_path):
 
 
 def test_curate_run_embedding_verified_gate(spark, tmp_path):
-    """The pipeline wiring (pipeline._emb_gate): emb_verify_cos turns
+    """The pipeline wiring (pipeline._CatalogGate): emb_verify_cos turns
     the cross-run semantic gate into the verified mode — unrelated
     vectors survive a saturated bucket space; emb_max_overshoot makes
     the verify-less mode refuse loudly instead."""
