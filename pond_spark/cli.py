@@ -13,15 +13,23 @@ Every validation message and mutual-exclusion rule mirrors the
 reference client (duplicate site, site vs group_site, --follow vs
 --continue, method= vs unsafe_method, …). Parsing is pure Python —
 no SparkSession needed until :func:`build` — so the grammar is unit-
-testable in milliseconds.
+testable in milliseconds. The engine command groups (sketch, pack,
+catalog, index, pipeline) are declared once each, as a table their
+parser, arity checks and usage text are built from, and :func:`main`
+parses them before it starts Spark as well.
 """
 
 from __future__ import annotations
 
 import datetime as dt
+import json
+import math
 import re
 import sys
-from dataclasses import dataclass, field
+import textwrap
+import time
+from dataclasses import dataclass, field, replace
+from types import SimpleNamespace
 
 from pond_spark.filters import FilterSpec, QueryValidationError
 from pond_spark.schema import HTTP_METHODS, RECORD_TYPES
@@ -370,19 +378,9 @@ def build(
 
             return to_json_projection(out)
         return out
-    from pond_spark.functions.format import OneLineOptions, one_line
+    from pond_spark.functions.format import one_line
 
-    line = one_line(
-        OneLineOptions(
-            show_host=o.show_host,
-            show_forwarded_to=o.show_forwarded_to,
-            show_referer=o.show_referer,
-            show_agent=o.show_agent,
-            show_content_type=o.show_content_type,
-            iso8601=o.iso8601,
-            anonymize=o.anonymize,
-        )
-    )
+    line = one_line(_line_options(o))
     # reference appends " COUNTRY" / " VISITOR" to http_access lines
     # when --geoip / --track-visitors are on (ResultWriter.cxx:278-301)
     is_http = F.col("type") == F.lit("http_access")
@@ -406,188 +404,263 @@ def build(
         )
     return out.select(line.alias("line"))
 
+def _line_options(o: OutputOptions):
+    """The one-line formatter's options for these output flags — one
+    mapping for the stdout path, ``--follow``/``--continue`` and the
+    ``--per-site`` tree."""
+    from pond_spark.functions.format import OneLineOptions
 
-_COMMANDS = ("query", "stats", "inject", "clone", "cancel", "sketch", "pack", "catalog", "index", "pipeline")
+    return OneLineOptions(
+        show_host=o.show_host,
+        show_forwarded_to=o.show_forwarded_to,
+        show_referer=o.show_referer,
+        show_agent=o.show_agent,
+        show_content_type=o.show_content_type,
+        iso8601=o.iso8601,
+        anonymize=o.anonymize,
+    )
 
-_SKETCH_USAGE = (
-    "usage: ... sketch SUBCOMMAND ARGS\n"
-    "  build-kmv PATH [--k=64] [--seed=1] [--value-col=remote_host]\n"
-    "  update-kmv PATH DAY... [--k=64] [--seed=1] [--value-col=remote_host]\n"
-    "  kmv-uniques PATH LO HI [--k=64]\n"
-    "  kmv-churn PATH A_LO A_HI B_LO B_HI [--k=64]\n"
-    "  build-cm PATH [--key-col=message]\n"
-    "  update-cm PATH [--key-col=message]\n"
-    "  cm-estimate PATH LO HI KEY... \n"
-    "  cm-join-size PATH A_LO A_HI B_LO B_HI"
+
+# Each engine command group is declared once, as a _Group: its flags
+# (``--name`` → (type, default)) and its subcommands (name → positional
+# names; a trailing ``NAME...`` takes one or more, an ``a|b`` name takes
+# one of the listed words, and "" is the one subcommand of a group that
+# takes none). _parse_group parses and checks every token against it and
+# _usage renders the usage text from it. A flag lands in
+# ``opts.<name>`` (dashes → underscores); a default of _EXTRA puts it in
+# ``opts.extra`` (pipeline's ``config.extra``) only when given, and a
+# default of ``...`` makes the flag required. Flags are group-wide.
+_EXTRA = object()
+
+
+@dataclass(frozen=True)
+class _Group:
+    flags: dict
+    subs: dict
+
+
+class _UsageError(Exception):
+    pass
+
+
+def _at_least(lo: int):
+    def parse(v: str) -> int:
+        if (n := int(v)) < lo:
+            raise ValueError(v)
+        return n
+
+    return parse
+
+
+def _usage(group: str) -> str:
+    g = _GROUPS[group][0]
+
+    def flag(name, typ, default):
+        if typ is not bool:
+            shown = default if default not in (None, _EXTRA, ...) else (
+                {float: "X", str: "STR"}.get(typ, "N")
+            )
+            name = f"{name}={shown}"
+        return name if default is ... else f"[{name}]"
+
+    verb = "ARGS" if "" in g.subs else "SUBCOMMAND ARGS"
+    return "\n".join([
+        f"usage: ... {group} {verb} [FLAGS]",
+        *("  " + " ".join(filter(None, (s, *n))) for s, n in g.subs.items()),
+        textwrap.fill(
+            " ".join(flag(n, *spec) for n, spec in g.flags.items()),
+            width=72, initial_indent="flags: ", subsequent_indent="  ",
+            break_on_hyphens=False,
+        ),
+    ])
+
+
+def _parse_group(group: str, rest: list[str]):
+    """Tokens after a group name → ``(subcommand, positionals, opts)``.
+
+    A token is a flag only as ``--name=value``, or ``--name`` for a bool
+    flag; any other token is a positional, so ``-0.5,1,0`` stays a
+    vector. The positionals come back in declaration order, a trailing
+    ``NAME...`` folded into one list. Raises :class:`_UsageError` for an
+    unknown ``--`` token, a value that fails its type, a missing
+    required flag, an unknown subcommand or a wrong positional count."""
+    g = _GROUPS[group][0]
+    dest = {name: name[2:].replace("-", "_") for name in g.flags}
+    opts = SimpleNamespace(extra={})
+    for name, (_, default) in g.flags.items():
+        if default is not _EXTRA:
+            setattr(opts, dest[name], default)
+    pos: list[str] = []
+    for tok in rest:
+        if not tok.startswith("--"):
+            pos.append(tok)
+            continue
+        name, eq, v = tok.partition("=")
+        typ, default = g.flags.get(name, (None, None))
+        if typ is None or (typ is bool) == bool(eq):
+            raise _UsageError(f"unknown {group} flag: {tok!r}")
+        try:
+            val = True if typ is bool else typ(v)
+        except ValueError:
+            raise _UsageError(f"bad {group} flag value: {tok!r}") from None
+        if default is _EXTRA:
+            opts.extra[dest[name]] = val
+        else:
+            setattr(opts, dest[name], val)
+    for name in g.flags:
+        if getattr(opts, dest[name], None) is ...:
+            raise _UsageError(f"{group} needs {name}=...")
+    if "" in g.subs:
+        sub = ""
+    elif not pos:
+        raise _UsageError(f"{group} needs a subcommand")
+    else:
+        sub, pos = pos[0], pos[1:]
+    names = g.subs.get(sub)
+    if names is None:
+        raise _UsageError(f"unknown {group} subcommand: {sub!r}")
+    many = names[-1].endswith("...")
+    if len(pos) < len(names) or (len(pos) > len(names) and not many):
+        raise _UsageError(f"{group} {sub}".rstrip() + f" takes {' '.join(names)}")
+    for name, v in zip(names, pos):
+        if "|" in name and v not in name.split("|"):
+            raise _UsageError(f"{group} {sub}: {v!r} is not one of {name}")
+    if many:
+        pos = [*pos[: len(names) - 1], pos[len(names) - 1:]]
+    return sub, pos, opts
+
+
+_SKETCH = _Group(
+    flags={
+        "--k": (int, 64),
+        "--seed": (int, 1),
+        "--value-col": (str, "remote_host"),
+        "--key-col": (str, "message"),
+    },
+    subs={
+        "build-kmv": ("PATH",),
+        "update-kmv": ("PATH", "DAY..."),
+        "kmv-uniques": ("PATH", "LO", "HI"),
+        "kmv-churn": ("PATH", "A_LO", "A_HI", "B_LO", "B_HI"),
+        "build-cm": ("PATH",),
+        "update-cm": ("PATH",),
+        "cm-estimate": ("PATH", "LO", "HI", "KEY..."),
+        "cm-join-size": ("PATH", "A_LO", "A_HI", "B_LO", "B_HI"),
+    },
 )
 
 
-def _run_sketch(spark, log_store, rest: list[str]) -> int:
+def _run_sketch(spark, log_store, sub: str, pos: list, o) -> int:
     """``sketch`` command group — the operator-facing surface for the
     KMV/theta and Count-Min cubes (operators/kmv.py, sketches.py,
     cmjoin.py): build/update maintain the day-partitioned sketch
     tables from the store; the serve subcommands answer from the
     sketch tables ALONE (no raw-store scan). Output is one stable
     ``key=value`` line per row, like ``stats``."""
-    k = 64
-    seed = 1
-    value_col = "remote_host"
-    key_col = "message"
-    args: list[str] = []
-    for a in rest:
-        if (v := _filter_value(a, "--k")) is not None:
-            k = int(v)
-        elif (v := _filter_value(a, "--seed")) is not None:
-            seed = int(v)
-        elif (v := _filter_value(a, "--value-col")) is not None:
-            value_col = v
-        elif (v := _filter_value(a, "--key-col")) is not None:
-            key_col = v
-        else:
-            args.append(a)
-    if not args:
-        print(_SKETCH_USAGE, file=sys.stderr)
-        return 2
-    sub, args = args[0], args[1:]
-    try:
-        if sub == "build-kmv":
-            from pond_spark.operators.kmv import build_kmv_sketches
+    if sub == "build-kmv":
+        from pond_spark.operators.kmv import build_kmv_sketches
 
-            (path,) = args
-            build_kmv_sketches(
-                log_store.read(), path, k=k, value_col=value_col, seed=seed
+        (path,) = pos
+        build_kmv_sketches(
+            log_store.read(), path, k=o.k, value_col=o.value_col, seed=o.seed
+        )
+        print(f"built kmv path={path} k={o.k} seed={o.seed}")
+    elif sub == "update-kmv":
+        from pond_spark.operators.kmv import update_kmv_sketches
+
+        path, days = pos
+        update_kmv_sketches(
+            log_store.read(), path, days, k=o.k, value_col=o.value_col,
+            seed=o.seed,
+        )
+        print(f"updated kmv path={path} days={','.join(days)}")
+    elif sub == "kmv-uniques":
+        from pond_spark.operators.kmv import kmv_uniques_over_range
+
+        path, lo, hi = pos
+        for r in sorted(
+            kmv_uniques_over_range(spark, path, lo, hi, k=o.k).collect(),
+            key=lambda r: r.site or "",
+        ):
+            print(
+                f"site={r.site} uniques_est={r.uniques_est} "
+                f"n_keys={r.n_keys} theta={r.theta}"
             )
-            print(f"built kmv path={path} k={k} seed={seed}")
-            return 0
-        if sub == "update-kmv":
-            from pond_spark.operators.kmv import update_kmv_sketches
+    elif sub == "kmv-churn":
+        from pond_spark.operators.kmv import kmv_churn
 
-            path, days = args[0], args[1:]
-            if not days:
-                raise ValueError("update-kmv needs at least one DAY")
-            update_kmv_sketches(
-                log_store.read(), path, days, k=k, value_col=value_col, seed=seed
+        for r in sorted(
+            kmv_churn(spark, *pos, k=o.k).collect(),
+            key=lambda r: r.site or "",
+        ):
+            print(
+                f"site={r.site} uniques_a={r.uniques_a} "
+                f"uniques_b={r.uniques_b} returning_est={r.returning_est} "
+                f"new_est={r.new_est}"
             )
-            print(f"updated kmv path={path} days={','.join(days)}")
-            return 0
-        if sub == "kmv-uniques":
-            from pond_spark.operators.kmv import kmv_uniques_over_range
+    elif sub == "build-cm":
+        from pond_spark.operators.sketches import build_cm_sketches
 
-            path, lo, hi = args
-            for r in sorted(
-                kmv_uniques_over_range(spark, path, lo, hi, k=k).collect(),
-                key=lambda r: r.site or "",
-            ):
-                print(
-                    f"site={r.site} uniques_est={r.uniques_est} "
-                    f"n_keys={r.n_keys} theta={r.theta}"
-                )
-            return 0
-        if sub == "kmv-churn":
-            from pond_spark.operators.kmv import kmv_churn
+        (path,) = pos
+        build_cm_sketches(log_store.read(), path, key_col=o.key_col)
+        print(f"built cm path={path} key_col={o.key_col}")
+    elif sub == "update-cm":
+        from pond_spark.operators.sketches import update_cm_sketches
 
-            path, a_lo, a_hi, b_lo, b_hi = args
-            for r in sorted(
-                kmv_churn(spark, path, a_lo, a_hi, b_lo, b_hi, k=k).collect(),
-                key=lambda r: r.site or "",
-            ):
-                print(
-                    f"site={r.site} uniques_a={r.uniques_a} "
-                    f"uniques_b={r.uniques_b} returning_est={r.returning_est} "
-                    f"new_est={r.new_est}"
-                )
-            return 0
-        if sub == "build-cm":
-            from pond_spark.operators.sketches import build_cm_sketches
+        (path,) = pos
+        update_cm_sketches(log_store.read(), path, key_col=o.key_col)
+        print(f"updated cm path={path} key_col={o.key_col}")
+    elif sub == "cm-estimate":
+        from pond_spark.operators.sketches import cm_estimate_over_range
 
-            (path,) = args
-            build_cm_sketches(log_store.read(), path, key_col=key_col)
-            print(f"built cm path={path} key_col={key_col}")
-            return 0
-        if sub == "update-cm":
-            from pond_spark.operators.sketches import update_cm_sketches
+        path, lo, hi, keys = pos
+        kdf = spark.createDataFrame([(x,) for x in keys], "key string")
+        for r in sorted(
+            cm_estimate_over_range(spark, path, kdf, lo, hi).collect(),
+            key=lambda r: r.key,
+        ):
+            print(f"key={r.key} est={r.est}")
+    else:  # cm-join-size
+        from pond_spark.operators.cmjoin import cm_join_size
 
-            (path,) = args
-            update_cm_sketches(log_store.read(), path, key_col=key_col)
-            print(f"updated cm path={path} key_col={key_col}")
-            return 0
-        if sub == "cm-estimate":
-            from pond_spark.operators.sketches import cm_estimate_over_range
-
-            path, lo, hi, keys = args[0], args[1], args[2], args[3:]
-            if not keys:
-                raise ValueError("cm-estimate needs at least one KEY")
-            kdf = spark.createDataFrame([(x,) for x in keys], "key string")
-            for r in sorted(
-                cm_estimate_over_range(spark, path, kdf, lo, hi).collect(),
-                key=lambda r: r.key,
-            ):
-                print(f"key={r.key} est={r.est}")
-            return 0
-        if sub == "cm-join-size":
-            from pond_spark.operators.cmjoin import cm_join_size
-
-            path, a_lo, a_hi, b_lo, b_hi = args
-            for r in sorted(
-                cm_join_size(spark, path, a_lo, a_hi, b_lo, b_hi).collect(),
-                key=lambda r: r.row,
-            ):
-                label = "est" if r.row == -1 else f"row{r.row}"
-                print(f"{label}={r.dot}")
-            return 0
-    except (ValueError, TypeError) as e:
-        # wrong arity / bad params (incl. sidecar refusals): user
-        # error contract — message to stderr, exit 2, no traceback
-        print(str(e) or _SKETCH_USAGE, file=sys.stderr)
-        return 2
-    print(_SKETCH_USAGE, file=sys.stderr)
-    return 2
+        for r in sorted(
+            cm_join_size(spark, *pos).collect(), key=lambda r: r.row
+        ):
+            label = "est" if r.row == -1 else f"row{r.row}"
+            print(f"{label}={r.dot}")
+    return 0
 
 
-def _run_pack(spark, rest: list[str]) -> int:
+_PACK = _Group(
+    flags={
+        "--capacity": (_at_least(1), ...),
+        "--out": (str, None),
+        "--tokens-col": (str, "n_tokens"),
+        "--id-col": (str, "doc_id"),
+        "--n-buckets": (int, 16),
+    },
+    subs={"": ("PARQUET",)},
+)
+
+
+def _run_pack(spark, log_store, sub: str, pos: list, o) -> int:
     """``pack PARQUET --capacity=N [--out=PATH]`` — FFD sequence
     packing (operators/seqpack.py) over a (id, n_tokens) parquet;
     writes assignments to --out or prints the bin summary."""
-    capacity = None
-    out_path = None
-    tokens_col = "n_tokens"
-    id_col = "doc_id"
-    n_buckets = 16
-    args: list[str] = []
-    for a in rest:
-        if (v := _filter_value(a, "--capacity")) is not None:
-            capacity = int(v)
-        elif (v := _filter_value(a, "--out")) is not None:
-            out_path = v
-        elif (v := _filter_value(a, "--tokens-col")) is not None:
-            tokens_col = v
-        elif (v := _filter_value(a, "--id-col")) is not None:
-            id_col = v
-        elif (v := _filter_value(a, "--n-buckets")) is not None:
-            n_buckets = int(v)
-        else:
-            args.append(a)
-    if capacity is None or capacity < 1 or len(args) != 1:
-        print(
-            "usage: ... pack PARQUET --capacity=N [--out=PATH] "
-            "[--tokens-col=n_tokens] [--id-col=doc_id] [--n-buckets=16]",
-            file=sys.stderr,
-        )
-        return 2
     from pyspark.sql import functions as F
 
     from pond_spark.operators.seqpack import pack_sequences
 
     packed = pack_sequences(
-        spark.read.parquet(args[0]),
-        capacity,
-        tokens_col=tokens_col,
-        id_col=id_col,
-        n_buckets=n_buckets,
+        spark.read.parquet(pos[0]),
+        o.capacity,
+        tokens_col=o.tokens_col,
+        id_col=o.id_col,
+        n_buckets=o.n_buckets,
     )
-    if out_path:
-        packed.write.mode("overwrite").parquet(out_path)
-        print(f"packed to {out_path}")
+    if o.out:
+        packed.write.mode("overwrite").parquet(o.out)
+        print(f"packed to {o.out}")
         return 0
     agg = packed.groupBy().agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -596,49 +669,57 @@ def _run_pack(spark, rest: list[str]) -> int:
     ).collect()[0]
     print(
         f"n_docs={agg.n_docs} n_bins={agg.n_bins} n_tokens={agg.n_tokens} "
-        f"capacity={capacity}"
+        f"capacity={o.capacity}"
     )
     return 0
 
 
-_CATALOG_USAGE = (
-    "usage: ... catalog SUBCOMMAND ARGS\n"
-    "  digest-register  CAT DOCS_PARQUET [--text-col=text]\n"
-    "  digest-filter    CAT DOCS_PARQUET [--text-col=] [--id-col=] [--out=]\n"
-    "  minhash-register CAT DOCS_PARQUET [--text-col=] [--id-col=]\n"
-    "                   [--k=64 --bands=16 --n=3 --seed=42]\n"
-    "  minhash-filter   CAT DOCS_PARQUET [same flags] [--out=]\n"
-    "  minhash-candidates CAT DOCS_PARQUET [same flags]\n"
-    "                   [--max-bucket-size=N] [--out=]\n"
-    "  emb-register     CAT VECS_PARQUET --dim=D [--vec-col=embedding]\n"
-    "                   [--vector-buckets=N] — vec_id-bucketed verify\n"
-    "                   sibling files (exchange-free payload joins)\n"
-    "                   [--id-col=vec_id] [--nbits=8 --tables=2 --seed=42]\n"
-    "                   [--store-vectors] — persist vectors for the\n"
-    "                   exact-cosine verified gate\n"
-    "  emb-filter       CAT VECS_PARQUET --dim=D [same flags] [--out=]\n"
-    "                   [--verify-cos=C] — verified gate: drop only\n"
-    "                   rows with a stored neighbor at cosine >= C\n"
-    "  emb-candidates   CAT VECS_PARQUET --dim=D [same flags]\n"
-    "                   [--max-bucket-size=N] [--out=]\n"
-    "  compact          digest|minhash|emb CAT [open flags, --dim for emb]\n"
-    "  advise           minhash|emb CAT [--max-bucket-size=N] [--snapshot]\n"
-    "                   [open flags, --dim for emb] — bucket histogram\n"
-    "                   + recommended cap (and nbits for emb);\n"
-    "                   --snapshot appends it to CAT.advise.jsonl\n"
-    "  advise-history   minhash|emb CAT [open flags] [--delta] — one\n"
-    "                   JSON line per persisted snapshot, oldest\n"
-    "                   first; --delta prints adjacent-snapshot growth\n"
-    "  expire           digest|minhash|emb CAT (--before-ts=EPOCH |\n"
-    "                   --max-age=SECONDS) [open flags] — age-evict\n"
-    "                   rows registered before the horizon (re-seen\n"
-    "                   content re-admits); compaction-integrated\n"
-    "  retention-history digest|minhash|emb CAT [open flags] — one\n"
-    "                   JSON line per recorded eviction, oldest first"
+_CATALOG = _Group(
+    flags={
+        "--text-col": (str, "text"),
+        "--id-col": (str, None),
+        "--vec-col": (str, "embedding"),
+        # minhash defaults mirror the pipeline gate's near_* defaults
+        # (pipeline._minhash_catalog: k=64/bands=16/n=3/seed=42) so a
+        # catalog registered here with defaults opens cleanly from
+        # `pipeline run --minhash-catalog` with defaults — the sidecar
+        # refuses a mismatch loudly either way
+        "--k": (int, 64),
+        "--bands": (int, 16),
+        "--n": (int, 3),
+        "--seed": (int, 42),
+        "--dim": (int, None),
+        "--nbits": (int, 8),
+        "--tables": (int, 2),
+        "--max-bucket-size": (int, None),
+        "--out": (str, None),
+        "--before-ts": (int, None),
+        "--max-age": (_at_least(0), None),
+        "--snapshot": (bool, False),
+        "--delta": (bool, False),
+        "--store-vectors": (bool, False),
+        "--verify-cos": (float, None),
+        "--vector-buckets": (int, None),
+    },
+    subs={
+        "digest-register": ("CAT", "DOCS_PARQUET"),
+        "digest-filter": ("CAT", "DOCS_PARQUET"),
+        "minhash-register": ("CAT", "DOCS_PARQUET"),
+        "minhash-filter": ("CAT", "DOCS_PARQUET"),
+        "minhash-candidates": ("CAT", "DOCS_PARQUET"),
+        "emb-register": ("CAT", "VECS_PARQUET"),
+        "emb-filter": ("CAT", "VECS_PARQUET"),
+        "emb-candidates": ("CAT", "VECS_PARQUET"),
+        "compact": ("digest|minhash|emb", "CAT"),
+        "advise": ("minhash|emb", "CAT"),
+        "advise-history": ("minhash|emb", "CAT"),
+        "expire": ("digest|minhash|emb", "CAT"),
+        "retention-history": ("digest|minhash|emb", "CAT"),
+    },
 )
 
 
-def _run_catalog(spark, rest: list[str]) -> int:
+def _run_catalog(spark, log_store, sub: str, pos: list, o) -> int:
     """``catalog`` command group — the operator-facing surface for the
     three incremental dedup catalogs (dedup/exact.py DigestCatalog,
     dedup/minhash.py MinHashCatalog, similarity/catalog.py
@@ -647,67 +728,19 @@ def _run_catalog(spark, rest: list[str]) -> int:
     (catalogs gate DOCUMENT/EMBEDDING tables, not the log store).
     ``*-filter``/``*-candidates`` print ``rows=N`` and write the full
     result to ``--out`` when given; parameter-sidecar refusals follow
-    the user-error contract (stderr + exit 2, no traceback)."""
-    text_col, id_col, vec_col = "text", None, "embedding"
-    # minhash defaults mirror the pipeline gate's near_* defaults
-    # (pipeline._minhash_catalog: k=64/bands=16/n=3/seed=42) so a
-    # catalog registered here with defaults opens cleanly from
-    # `pipeline run --minhash-catalog` with defaults — the sidecar
-    # refuses a mismatch loudly either way (ADVICE r8: n defaulted to
-    # 1 here, a needless cross-surface footgun)
-    k, bands, n, seed = 64, 16, 3, 42
-    dim, nbits, tables = None, 8, 2
-    max_bucket, out_path = None, None
-    before_ts, max_age = None, None
-    snapshot = delta = store_vectors = False
-    verify_cos = None
-    vector_buckets = None
-    args: list[str] = []
-    for a in rest:
-        if (v := _filter_value(a, "--text-col")) is not None:
-            text_col = v
-        elif (v := _filter_value(a, "--id-col")) is not None:
-            id_col = v
-        elif (v := _filter_value(a, "--vec-col")) is not None:
-            vec_col = v
-        elif (v := _filter_value(a, "--k")) is not None:
-            k = int(v)
-        elif (v := _filter_value(a, "--bands")) is not None:
-            bands = int(v)
-        elif (v := _filter_value(a, "--n")) is not None:
-            n = int(v)
-        elif (v := _filter_value(a, "--seed")) is not None:
-            seed = int(v)
-        elif (v := _filter_value(a, "--dim")) is not None:
-            dim = int(v)
-        elif (v := _filter_value(a, "--nbits")) is not None:
-            nbits = int(v)
-        elif (v := _filter_value(a, "--tables")) is not None:
-            tables = int(v)
-        elif (v := _filter_value(a, "--max-bucket-size")) is not None:
-            max_bucket = int(v)
-        elif (v := _filter_value(a, "--out")) is not None:
-            out_path = v
-        elif (v := _filter_value(a, "--before-ts")) is not None:
-            before_ts = int(v)
-        elif (v := _filter_value(a, "--max-age")) is not None:
-            max_age = int(v)
-        elif a == "--snapshot":
-            snapshot = True
-        elif a == "--delta":
-            delta = True
-        elif a == "--store-vectors":
-            store_vectors = True
-        elif (v := _filter_value(a, "--verify-cos")) is not None:
-            verify_cos = float(v)
-        elif (v := _filter_value(a, "--vector-buckets")) is not None:
-            vector_buckets = int(v)
-        else:
-            args.append(a)
-    if not args:
-        print(_CATALOG_USAGE, file=sys.stderr)
-        return 2
-    sub, args = args[0], args[1:]
+    the user-error contract (stderr + exit 2, no traceback).
+
+    Embedding catalogs need ``--dim``; ``--store-vectors`` persists the
+    vectors for the exact-cosine verified gate (``emb-filter
+    --verify-cos=C`` drops only rows with a stored neighbor at cosine
+    >= C, and implies it on open); ``--vector-buckets=N`` buckets that
+    vector sibling by vec_id. ``advise`` prints the bucket histogram
+    and the recommended cap (and nbits for emb), ``--snapshot``
+    appends it to CAT.advise.jsonl and ``advise-history [--delta]``
+    replays those snapshots. ``expire`` age-evicts rows registered
+    before ``--before-ts=EPOCH`` or ``--max-age=SECONDS`` ago (exactly
+    one; re-seen content re-admits) and ``retention-history`` lists the
+    recorded evictions."""
 
     def open_digest(path):
         from pond_spark.dedup.exact import DigestCatalog
@@ -717,298 +750,181 @@ def _run_catalog(spark, rest: list[str]) -> int:
     def open_minhash(path):
         from pond_spark.dedup.minhash import MinHashCatalog
 
-        return MinHashCatalog(spark, path, k=k, bands=bands, n=n, seed=seed)
+        return MinHashCatalog(
+            spark, path, k=o.k, bands=o.bands, n=o.n, seed=o.seed
+        )
 
     def open_emb(path):
         from pond_spark.similarity.catalog import EmbeddingCatalog
 
-        if dim is None:
+        if o.dim is None:
             raise ValueError("emb catalogs need --dim=D (hyperplane shape)")
         return EmbeddingCatalog(
-            spark, path, dim=dim, nbits=nbits, n_tables=tables, seed=seed,
-            store_vectors=store_vectors or verify_cos is not None,
-            vector_buckets=vector_buckets,
+            spark, path, dim=o.dim, nbits=o.nbits, n_tables=o.tables,
+            seed=o.seed,
+            store_vectors=o.store_vectors or o.verify_cos is not None,
+            vector_buckets=o.vector_buckets,
         )
 
     def emit(df) -> int:
-        if out_path:
-            df.write.mode("overwrite").parquet(out_path)
-            written = spark.read.parquet(out_path).count()
-            print(f"rows={written} out={out_path}")
+        if o.out:
+            df.write.mode("overwrite").parquet(o.out)
+            written = spark.read.parquet(o.out).count()
+            print(f"rows={written} out={o.out}")
         else:
             print(f"rows={df.count()}")
         return 0
 
-    known = (
-        "compact", "advise", "advise-history", "digest-register", "digest-filter",
-        "minhash-register", "minhash-filter", "minhash-candidates",
-        "emb-register", "emb-filter", "emb-candidates",
-        "expire", "retention-history",
-    )
-    if sub not in known:
-        print(_CATALOG_USAGE, file=sys.stderr)
-        return 2
-    try:
+    if sub in ("compact", "advise", "advise-history", "expire",
+               "retention-history"):
+        kind, path = pos
+        if sub == "expire" and (o.before_ts is None) == (o.max_age is None):
+            raise ValueError(
+                "expire needs exactly one of --before-ts=EPOCH or "
+                "--max-age=SECONDS"
+            )
+        cat = {"digest": open_digest, "minhash": open_minhash,
+               "emb": open_emb}[kind](path)
         if sub == "compact":
-            kind, path = args
-            {"digest": open_digest, "minhash": open_minhash, "emb": open_emb}[
-                kind
-            ](path).compact()
+            cat.compact()
             print(f"compacted kind={kind} path={path}")
-            return 0
-        if sub == "expire":
+        elif sub == "expire":
             # age eviction (reference max_age, Instance.cxx:190-203):
             # --before-ts is the explicit horizon; --max-age computes
-            # it from the wall clock. Exactly one must be given.
-            import time as _time
-
-            kind, path = args
-            if (before_ts is None) == (max_age is None):
-                raise ValueError(
-                    "expire needs exactly one of --before-ts=EPOCH or "
-                    "--max-age=SECONDS"
-                )
-            horizon = (
-                before_ts if before_ts is not None
-                else int(_time.time()) - max_age
+            # it from the wall clock
+            rec = cat.expire(
+                o.before_ts if o.before_ts is not None
+                else int(time.time()) - o.max_age
             )
-            rec = {"digest": open_digest, "minhash": open_minhash,
-                   "emb": open_emb}[kind](path).expire(horizon)
             for key in sorted(rec):
                 print(f"{key}={rec[key]}")
-            return 0
-        if sub == "retention-history":
-            import json as _json
-
-            kind, path = args
-            for evt in {"digest": open_digest, "minhash": open_minhash,
-                        "emb": open_emb}[kind](path).retention_history():
-                print(_json.dumps(evt, sort_keys=True))
-            return 0
-        if sub == "advise":
-            # bucket histogram + tuning recommendation (VERDICT r7 #4);
-            # --snapshot appends it to the advisory history (round-9 #4)
-            kind, path = args
-            rep = {"minhash": open_minhash, "emb": open_emb}[kind](
-                path
-            ).advise(max_bucket_size=max_bucket, snapshot=snapshot)
+        elif sub == "retention-history":
+            for evt in cat.retention_history():
+                print(json.dumps(evt, sort_keys=True))
+        elif sub == "advise":
+            rep = cat.advise(
+                max_bucket_size=o.max_bucket_size, snapshot=o.snapshot
+            )
             for key in sorted(rep):
                 print(f"{key}={rep[key]}")
-            return 0
-        if sub == "advise-history":
-            # skew trend over the catalog's lifetime, no re-scan;
-            # --delta prints adjacent-snapshot growth instead of the
-            # raw snapshots
-            import json as _json
-
-            kind, path = args
-            hist = {"minhash": open_minhash, "emb": open_emb}[kind](
-                path
-            ).advise_history()
-            if delta:
+        else:  # advise-history: the skew trend, no re-scan
+            hist = cat.advise_history()
+            if o.delta:
                 from pond_spark.catalog import history_deltas
 
                 hist = history_deltas(hist)
             for snap in hist:
-                print(_json.dumps(snap, sort_keys=True))
-            return 0
-        path, data = args
-        docs = spark.read.parquet(data)
-        if sub == "digest-register":
-            open_digest(path).register(docs, text_col)
-            print(f"registered path={path}")
-            return 0
-        if sub == "digest-filter":
-            # default to the conventional id name like the minhash/emb
-            # subcommands — docs.columns[0] was a positional guess that
-            # could silently pick the text column as the id (ADVICE r7)
-            return emit(
-                open_digest(path).filter_new(docs, text_col, id_col or "doc_id")
-            )
-        mh_id = id_col or "doc_id"
-        if sub == "minhash-register":
-            open_minhash(path).register(docs, text_col, mh_id)
-            print(f"registered path={path}")
-            return 0
+                print(json.dumps(snap, sort_keys=True))
+        return 0
+    path, data = pos
+    docs = spark.read.parquet(data)
+    if sub == "digest-register":
+        open_digest(path).register(docs, o.text_col)
+    elif sub == "digest-filter":
+        # default to the conventional id name like the minhash/emb
+        # subcommands — docs.columns[0] was a positional guess that
+        # could silently pick the text column as the id
+        return emit(
+            open_digest(path).filter_new(docs, o.text_col, o.id_col or "doc_id")
+        )
+    elif sub.startswith("minhash-"):
+        cat, args = open_minhash(path), (docs, o.text_col, o.id_col or "doc_id")
         if sub == "minhash-filter":
-            return emit(open_minhash(path).filter_new(docs, text_col, mh_id))
+            return emit(cat.filter_new(*args))
         if sub == "minhash-candidates":
             return emit(
-                open_minhash(path).near_candidates(
-                    docs, text_col, mh_id, max_bucket_size=max_bucket
-                )
+                cat.near_candidates(*args, max_bucket_size=o.max_bucket_size)
             )
-        emb_id = id_col or "vec_id"
-        if sub == "emb-register":
-            open_emb(path).register(docs, vec_col, emb_id)
-            print(f"registered path={path}")
-            return 0
+        cat.register(*args)
+    else:
+        cat, args = open_emb(path), (docs, o.vec_col, o.id_col or "vec_id")
         if sub == "emb-filter":
-            # --verify-cos selects the exact-cosine VERIFIED gate
-            # (needs a --store-vectors catalog; implied on open)
-            return emit(
-                open_emb(path).filter_new(
-                    docs, vec_col, emb_id, verify_cos=verify_cos
-                )
-            )
+            return emit(cat.filter_new(*args, verify_cos=o.verify_cos))
         if sub == "emb-candidates":
             return emit(
-                open_emb(path).near_candidates(
-                    docs, vec_col, emb_id, max_bucket_size=max_bucket
-                )
+                cat.near_candidates(*args, max_bucket_size=o.max_bucket_size)
             )
-    except KeyError:
-        print(_CATALOG_USAGE, file=sys.stderr)
-        return 2
-    except (ValueError, TypeError) as e:
-        print(str(e) or _CATALOG_USAGE, file=sys.stderr)
-        return 2
-    print(_CATALOG_USAGE, file=sys.stderr)
-    return 2
+        cat.register(*args)
+    print(f"registered path={path}")
+    return 0
 
 
-_INDEX_USAGE = (
-    "usage: ... index SUBCOMMAND ARGS\n"
-    "  build-text   IX DOCS_PARQUET [--text-col=text] [--id-col=doc_id]\n"
-    "               [--n-buckets=64]\n"
-    "  append-text  IX DOCS_PARQUET [--text-col=] [--id-col=]\n"
-    "  compact-text IX\n"
-    "  search-text  IX TERM... [--topk=10]\n"
-    "  build-ivf    IX VECS_PARQUET [--n-centroids=16] [--pq-m=N]\n"
-    "               [--vec-col=embedding] [--id-col=vec_id]\n"
-    "  append-ivf   IX VECS_PARQUET\n"
-    "  compact-ivf  IX\n"
-    "  search-ivf   IX V1,V2,... [--topk=10] [--nprobe=4] [--adc]"
+_INDEX = _Group(
+    flags={
+        "--text-col": (str, "text"),
+        "--id-col": (str, None),
+        "--vec-col": (str, "embedding"),
+        "--n-buckets": (int, 64),
+        "--n-centroids": (int, 16),
+        "--pq-m": (int, None),
+        "--topk": (int, 10),
+        "--nprobe": (int, 4),
+        "--adc": (bool, False),
+    },
+    subs={
+        "build-text": ("IX", "DOCS_PARQUET"),
+        "append-text": ("IX", "DOCS_PARQUET"),
+        "compact-text": ("IX",),
+        "search-text": ("IX", "TERM..."),
+        "build-ivf": ("IX", "VECS_PARQUET"),
+        "append-ivf": ("IX", "VECS_PARQUET"),
+        "compact-ivf": ("IX",),
+        "search-ivf": ("IX", "V1,V2,VN"),
+    },
 )
 
 
-def _run_index(spark, rest: list[str]) -> int:
+def _run_index(spark, log_store, sub: str, pos: list, o) -> int:
     """``index`` command group — the operator-facing surface for the
     two persisted serving indexes (functions/lexindex.py TextIndex,
     similarity/index.py IVFIndex): build/append/compact maintain the
     segment/list directories; the search subcommands answer from the
-    index alone. Output is one stable ``key=value`` line per hit."""
-    text_col, id_col, vec_col = "text", None, "embedding"
-    n_buckets, n_centroids, pq_m = 64, 16, None
-    topk, nprobe, adc = 10, 4, False
-    args: list[str] = []
-    for a in rest:
-        if (v := _filter_value(a, "--text-col")) is not None:
-            text_col = v
-        elif (v := _filter_value(a, "--id-col")) is not None:
-            id_col = v
-        elif (v := _filter_value(a, "--vec-col")) is not None:
-            vec_col = v
-        elif (v := _filter_value(a, "--n-buckets")) is not None:
-            n_buckets = int(v)
-        elif (v := _filter_value(a, "--n-centroids")) is not None:
-            n_centroids = int(v)
-        elif (v := _filter_value(a, "--pq-m")) is not None:
-            pq_m = int(v)
-        elif (v := _filter_value(a, "--topk")) is not None:
-            topk = int(v)
-        elif (v := _filter_value(a, "--nprobe")) is not None:
-            nprobe = int(v)
-        elif a == "--adc":
-            adc = True
-        else:
-            args.append(a)
-    if not args:
-        print(_INDEX_USAGE, file=sys.stderr)
-        return 2
-    sub, args = args[0], args[1:]
-    known = (
-        "build-text", "append-text", "compact-text", "search-text",
-        "build-ivf", "append-ivf", "compact-ivf", "search-ivf",
-    )
-    if sub not in known:
-        print(_INDEX_USAGE, file=sys.stderr)
-        return 2
+    index alone (``--adc`` scores IVF hits by PQ asymmetric distance).
+    Output is one stable ``key=value`` line per hit."""
+    from pond_spark.functions.lexindex import TextIndex, build_text_index
+    from pond_spark.similarity.index import IVFIndex, build_ivf_index
+
+    path = pos[0]
     try:
         if sub == "build-text":
-            from pond_spark.functions.lexindex import build_text_index
-
-            path, data = args
             ix = build_text_index(
-                spark.read.parquet(data), path,
-                text_col, id_col or "doc_id", n_buckets,
+                spark.read.parquet(pos[1]), path,
+                o.text_col, o.id_col or "doc_id", o.n_buckets,
             )
             print(f"built text index path={path} n_docs={ix.n_docs}")
-            return 0
-        if sub == "append-text":
-            from pond_spark.functions.lexindex import TextIndex
-
-            path, data = args
+        elif sub == "append-text":
             ix = TextIndex(spark, path).append(
-                spark.read.parquet(data), text_col, id_col or "doc_id"
+                spark.read.parquet(pos[1]), o.text_col, o.id_col or "doc_id"
             )
             print(f"appended path={path} n_docs={ix.n_docs}")
-            return 0
-        if sub == "compact-text":
-            from pond_spark.functions.lexindex import TextIndex
-
-            (path,) = args
+        elif sub == "compact-text":
             TextIndex(spark, path).compact()
             print(f"compacted path={path}")
-            return 0
-        if sub == "search-text":
-            from pond_spark.functions.lexindex import TextIndex
-
-            path, terms = args[0], args[1:]
-            if not terms:
-                raise ValueError("search-text needs at least one TERM")
-            for r in TextIndex(spark, path).search(terms, k=topk).collect():
-                print(
-                    f"doc_id={r[0]} n_terms={r[1]} score_q={r[2]}"
-                )
-            return 0
-        if sub == "build-ivf":
-            from pond_spark.similarity.index import build_ivf_index
-
-            path, data = args
+        elif sub == "search-text":
+            for r in TextIndex(spark, path).search(pos[1], k=o.topk).collect():
+                print(f"doc_id={r[0]} n_terms={r[1]} score_q={r[2]}")
+        elif sub == "build-ivf":
             build_ivf_index(
-                spark.read.parquet(data), path,
-                n_centroids=n_centroids, vec_col=vec_col,
-                id_col=id_col or "vec_id", pq_m=pq_m,
+                spark.read.parquet(pos[1]), path,
+                n_centroids=o.n_centroids, vec_col=o.vec_col,
+                id_col=o.id_col or "vec_id", pq_m=o.pq_m,
             )
-            print(f"built ivf index path={path} n_centroids={n_centroids}")
-            return 0
-        if sub == "append-ivf":
-            from pond_spark.similarity.index import IVFIndex
-
-            path, data = args
-            IVFIndex(spark, path).append(spark.read.parquet(data))
+            print(f"built ivf index path={path} n_centroids={o.n_centroids}")
+        elif sub == "append-ivf":
+            IVFIndex(spark, path).append(spark.read.parquet(pos[1]))
             print(f"appended path={path}")
-            return 0
-        if sub == "compact-ivf":
-            from pond_spark.similarity.index import IVFIndex
-
-            (path,) = args
+        elif sub == "compact-ivf":
             stats = IVFIndex(spark, path).compact()
             print(f"compacted path={path} {stats}")
-            return 0
-        if sub == "search-ivf":
-            from pond_spark.similarity.index import IVFIndex
-
-            path, qcsv = args
-            qvec = [float(x) for x in qcsv.split(",")]
+        else:  # search-ivf
+            qvec = [float(x) for x in pos[1].split(",")]
             ix = IVFIndex(spark, path)
-            hits = (
-                ix.search_adc(qvec, k=topk, nprobe=nprobe)
-                if adc
-                else ix.search(qvec, k=topk, nprobe=nprobe)
-            )
-            for r in hits.collect():
+            search = ix.search_adc if o.adc else ix.search
+            for r in search(qvec, k=o.topk, nprobe=o.nprobe).collect():
                 print(f"{ix.id_col}={r[0]} cosine={r[1]}")
-            return 0
-    except (ValueError, TypeError) as e:
-        print(str(e) or _INDEX_USAGE, file=sys.stderr)
-        return 2
     except FileNotFoundError as e:
-        print(f"no index at that path: {e}", file=sys.stderr)
-        return 2
-    print(_INDEX_USAGE, file=sys.stderr)
-    return 2
+        raise ValueError(f"no index at that path: {e}") from None
+    return 0
 
 
 def _run_follow(
@@ -1040,7 +956,7 @@ def _run_follow(
     warning so truncation is never silent."""
     from pyspark.sql import functions as F
 
-    from pond_spark.functions.format import OneLineOptions, one_line
+    from pond_spark.functions.format import one_line
     from pond_spark.streaming.follow import continue_stream, follow_stream
 
     o = parsed.options
@@ -1050,17 +966,7 @@ def _run_follow(
         if o.continue_
         else follow_stream(spark, store_dir, spec)
     )
-    line = one_line(
-        OneLineOptions(
-            show_host=o.show_host,
-            show_forwarded_to=o.show_forwarded_to,
-            show_referer=o.show_referer,
-            show_agent=o.show_agent,
-            show_content_type=o.show_content_type,
-            iso8601=o.iso8601,
-            anonymize=o.anonymize,
-        )
-    )
+    line = one_line(_line_options(o))
 
     def _emit(batch_df, _bid):
         ordered = batch_df.select(
@@ -1086,222 +992,160 @@ def _run_follow(
         q.awaitTermination()
         return 0
     q = writer.start()
-    q.awaitTermination(duration)
-    q.stop()
+    try:
+        q.awaitTermination(duration)
+    finally:
+        q.stop()
     return 0
 
 
-_PIPELINE_USAGE = (
-    "usage: ... pipeline SUBCOMMAND ARGS\n"
-    "  run    INPUT_PARQUET WORK_DIR [--stages=quality,exact_dedup,sample]\n"
-    "         [--min-words=20 --max-words=100000] [--sample-rate=1.0]\n"
-    "         [--sample-salt=curate] [--eval-set=PARQUET]\n"
-    "         [--near-method=minhash --near-threshold=0.8 --near-n=3]\n"
-    "         [--near-block-col=COL --near-max-bucket=N]\n"
-    "         [--digest-catalog=PATH] [--minhash-catalog=PATH]\n"
-    "         [--near-k=64 --near-bands=16]\n"
-    "         [--embedding-catalog=PATH --emb-dim=D]\n"
-    "         [--emb-col=embedding --emb-nbits=8 --emb-tables=2]\n"
-    "         [--lease-ttl=SECONDS]\n"
-    "         — compute-or-resume the stage chain (pipeline.curate_run);\n"
-    "           the catalog flags add the cross-run incremental gate +\n"
-    "           after-ship registration (daily-corpus mode); --lease-ttl\n"
-    "           holds a writer lease on the work_dir + catalogs so a\n"
-    "           scheduler double-fire refuses instead of racing\n"
-    "  report INPUT_PARQUET [stage/config flags as for run]\n"
-    "         — funnel audit: rows in/out per configured stage\n"
-    "           (pipeline.report; counts are jobs — audit cadence)\n"
-    "  report-runs WORK_DIR [WORK_DIR...]\n"
-    "         — gate-aware cross-run funnel over completed curate_run\n"
-    "           days: input -> gate drops -> stage drops -> shipped,\n"
-    "           registration state, latest catalog advise/eviction\n"
-    "           snapshots (pipeline.report_runs; reads persisted stage\n"
-    "           outputs, no recomputation)\n"
-    "  status WORK_DIR — per-stage complete/missing, no computation\n"
-    "  run extra gate flags: [--emb-verify-cos=C] exact-cosine verified\n"
-    "         gate (persists vectors); [--emb-max-overshoot=F] refuse a\n"
-    "         verify-less gate whose predicted false-drop rate exceeds F;\n"
-    "         [--emb-store-vectors] store vectors without verifying yet.\n"
-    "         With the verified gate and no explicit --emb-nbits /\n"
-    "         --emb-vector-buckets, curate_run derives the sized+bucketed\n"
-    "         configuration from the day-1 input count, pins it in the\n"
-    "         manifest, and adopts the catalog's stored params on later\n"
-    "         days (round-11 default; measured 0.525x the saturated\n"
-    "         day-2 cost at 10M/day)"
+_PIPELINE = _Group(
+    flags={
+        "--stages": (str, "quality,exact_dedup,sample"),
+        "--min-words": (int, 20),
+        "--max-words": (int, 100_000),
+        "--sample-rate": (float, 1.0),
+        "--sample-salt": (str, "curate"),
+        "--eval-set": (str, None),
+        "--digest-catalog": (str, None),
+        "--minhash-catalog": (str, None),
+        "--embedding-catalog": (str, None),
+        "--lease-ttl": (int, None),
+        "--near-method": (str, _EXTRA),
+        "--near-threshold": (float, _EXTRA),
+        "--near-n": (int, _EXTRA),
+        "--near-block-col": (str, _EXTRA),
+        "--near-max-bucket": (int, _EXTRA),
+        "--near-k": (int, _EXTRA),
+        "--near-bands": (int, _EXTRA),
+        "--emb-dim": (int, _EXTRA),
+        "--emb-col": (str, _EXTRA),
+        "--emb-nbits": (int, _EXTRA),
+        "--emb-tables": (int, _EXTRA),
+        "--emb-vector-buckets": (int, _EXTRA),
+        "--emb-verify-cos": (float, _EXTRA),
+        "--emb-max-overshoot": (float, _EXTRA),
+        "--emb-store-vectors": (bool, _EXTRA),
+    },
+    subs={
+        "run": ("INPUT_PARQUET", "WORK_DIR"),
+        "report": ("INPUT_PARQUET",),
+        "report-runs": ("WORK_DIR...",),
+        "status": ("WORK_DIR",),
+    },
 )
 
 
-def _run_pipeline(spark, rest: list[str]) -> int:
+def _run_pipeline(spark, log_store, sub: str, pos: list, o) -> int:
     """``pipeline`` command group — the resumable curation driver
     (pipeline.curate_run) scriptable like the catalog/index groups: a
     scheduler re-invokes the SAME ``pipeline run`` after any crash and
-    the chain resumes from its first incomplete stage; ``status``
+    the chain resumes from its first incomplete stage. The catalog
+    flags add the cross-run incremental gate and after-ship
+    registration (daily-corpus mode); ``--lease-ttl`` holds a writer
+    lease on the work_dir and catalogs so a scheduler double-fire
+    refuses instead of racing. ``report`` audits rows in/out per
+    configured stage; ``report-runs`` is the gate-aware funnel over
+    completed runs, read from their persisted stage outputs; ``status``
     inspects a work_dir without touching Spark jobs."""
-    stages = "quality,exact_dedup,sample"
-    min_words, max_words = 20, 100_000
-    sample_rate, sample_salt = 1.0, "curate"
-    eval_set = None
-    digest_catalog = minhash_catalog = embedding_catalog = None
-    lease_ttl = None
-    near: dict = {}
-    args: list[str] = []
-    for a in rest:
-        if (v := _filter_value(a, "--stages")) is not None:
-            stages = v
-        elif (v := _filter_value(a, "--min-words")) is not None:
-            min_words = int(v)
-        elif (v := _filter_value(a, "--max-words")) is not None:
-            max_words = int(v)
-        elif (v := _filter_value(a, "--sample-rate")) is not None:
-            sample_rate = float(v)
-        elif (v := _filter_value(a, "--sample-salt")) is not None:
-            sample_salt = v
-        elif (v := _filter_value(a, "--eval-set")) is not None:
-            eval_set = v
-        elif (v := _filter_value(a, "--near-method")) is not None:
-            near["near_method"] = v
-        elif (v := _filter_value(a, "--near-threshold")) is not None:
-            near["near_threshold"] = float(v)
-        elif (v := _filter_value(a, "--near-n")) is not None:
-            near["near_n"] = int(v)
-        elif (v := _filter_value(a, "--near-block-col")) is not None:
-            near["near_block_col"] = v
-        elif (v := _filter_value(a, "--near-max-bucket")) is not None:
-            near["near_max_bucket"] = int(v)
-        elif (v := _filter_value(a, "--digest-catalog")) is not None:
-            digest_catalog = v
-        elif (v := _filter_value(a, "--minhash-catalog")) is not None:
-            minhash_catalog = v
-        elif (v := _filter_value(a, "--embedding-catalog")) is not None:
-            embedding_catalog = v
-        elif (v := _filter_value(a, "--emb-dim")) is not None:
-            near["emb_dim"] = int(v)
-        elif (v := _filter_value(a, "--emb-col")) is not None:
-            near["emb_col"] = v
-        elif (v := _filter_value(a, "--emb-nbits")) is not None:
-            near["emb_nbits"] = int(v)
-        elif (v := _filter_value(a, "--emb-tables")) is not None:
-            near["emb_tables"] = int(v)
-        elif (v := _filter_value(a, "--emb-verify-cos")) is not None:
-            near["emb_verify_cos"] = float(v)
-        elif (v := _filter_value(a, "--emb-max-overshoot")) is not None:
-            near["emb_max_overshoot"] = float(v)
-        elif a == "--emb-store-vectors":
-            near["emb_store_vectors"] = True
-        elif (v := _filter_value(a, "--near-k")) is not None:
-            near["near_k"] = int(v)
-        elif (v := _filter_value(a, "--near-bands")) is not None:
-            near["near_bands"] = int(v)
-        elif (v := _filter_value(a, "--lease-ttl")) is not None:
-            lease_ttl = int(v)
-        else:
-            args.append(a)
-    if not args:
-        print(_PIPELINE_USAGE, file=sys.stderr)
-        return 2
-    sub, args = args[0], args[1:]
     from pond_spark.pipeline import CurationConfig
 
     cfg = CurationConfig(
-        min_words=min_words,
-        max_words=max_words,
-        sample_rate=sample_rate,
-        sample_salt=sample_salt,
-        stages=tuple(s for s in stages.split(",") if s),
-        extra=near,
+        min_words=o.min_words,
+        max_words=o.max_words,
+        sample_rate=o.sample_rate,
+        sample_salt=o.sample_salt,
+        stages=tuple(s for s in o.stages.split(",") if s),
+        extra=o.extra,
     )
-    try:
-        if sub == "status":
-            (work,) = args
-            from pond_spark.catalog import _fs_for
-            from pond_spark.pipeline import _pin_manifest, _stage_dirs
+    if sub == "status":
+        from pond_spark.catalog import _fs_for
+        from pond_spark.pipeline import _pin_manifest, _stage_dirs
 
-            fs = _fs_for(spark, work)
-            stage_dirs, marker = _stage_dirs(work, _pin_manifest(fs, work))
-            states = [
-                (stage, path, fs.exists(path + "/_SUCCESS"))
-                for stage, path in stage_dirs
-            ]
-            if marker:
-                states.append(("catalog_register", marker, fs.exists(marker)))
-            for stage, path, done in states:
-                state = "complete" if done else "missing"
-                print(f"{state:8s} {stage:14s} {path}")
-            return 0
-        if sub == "report-runs":
-            if not args:
-                print(_PIPELINE_USAGE, file=sys.stderr)
-                return 2
-            from pond_spark.pipeline import report_runs
+        (work,) = pos
+        fs = _fs_for(spark, work)
+        stage_dirs, marker = _stage_dirs(work, _pin_manifest(fs, work))
+        states = [
+            (stage, path, fs.exists(path + "/_SUCCESS"))
+            for stage, path in stage_dirs
+        ]
+        if marker:
+            states.append(("catalog_register", marker, fs.exists(marker)))
+        for stage, path, done in states:
+            state = "complete" if done else "missing"
+            print(f"{state:8s} {stage:14s} {path}")
+    elif sub == "report-runs":
+        from pond_spark.pipeline import report_runs
 
-            for day in report_runs(spark, args):
-                reg = " registered" if day.get("registered") else ""
-                comp = "" if day.get("complete") else " INCOMPLETE"
-                print(
-                    f"run {day['work_dir']}: in={day['input_rows']} "
-                    f"shipped={day['shipped_rows']}{reg}{comp}"
-                )
-                for s in day["stages"]:
-                    o = "?" if s["rows_out"] is None else s["rows_out"]
-                    d = "?" if s["dropped"] is None else s["dropped"]
-                    print(f"  {s['stage']:14s} out={o:>10} dropped={d}")
-                for kind, snap in day.get("catalogs", {}).items():
-                    adv = snap.get("advise", {})
-                    ret = snap.get("retention", {})
-                    bits = [f"  catalog[{kind}] {snap['path']}"]
-                    if "predicted_gate_overshoot_ppm" in adv:
-                        bits.append(
-                            "overshoot_ppm="
-                            f"{adv['predicted_gate_overshoot_ppm']}"
-                        )
-                    if "n_rows" in adv:
-                        bits.append(f"rows={adv['n_rows']}")
-                    if ret:
-                        bits.append(
-                            f"last_eviction_kept={ret.get('rows_kept')}"
-                        )
-                    print(" ".join(bits))
-            return 0
-        if sub == "report":
-            (inp,) = args
-            from pond_spark.pipeline import report
-
-            eval_df = spark.read.parquet(eval_set) if eval_set else None
-            docs = spark.read.parquet(inp)
-            for r in report(docs, cfg, eval_df):
-                dropped = r["rows_in"] - r["rows_out"]
-                print(
-                    f"{r['stage']:14s} in={r['rows_in']:>10d} "
-                    f"out={r['rows_out']:>10d} dropped={dropped}"
-                )
-            return 0
-        if sub == "run":
-            inp, work = args
-            from pond_spark.pipeline import curate_run, final_corpus_path
-
-            rows = curate_run(
-                spark,
-                inp,
-                work,
-                cfg,
-                eval_set_path=eval_set,
-                digest_catalog_path=digest_catalog,
-                minhash_catalog_path=minhash_catalog,
-                embedding_catalog_path=embedding_catalog,
-                lease_ttl=lease_ttl,
+        for day in report_runs(spark, pos[0]):
+            reg = " registered" if day.get("registered") else ""
+            comp = "" if day.get("complete") else " INCOMPLETE"
+            print(
+                f"run {day['work_dir']}: in={day['input_rows']} "
+                f"shipped={day['shipped_rows']}{reg}{comp}"
             )
-            for r in rows:
-                timing = f" ({r['seconds']}s)" if "seconds" in r else ""
-                print(
-                    f"{r['status']:8s} {r['stage']:14s} {r['path']}{timing}"
-                )
-            print(f"final={final_corpus_path(rows)}")
-            return 0
-        print(_PIPELINE_USAGE, file=sys.stderr)
-        return 2
-    except ValueError as e:  # user errors: message + exit 2, no traceback
-        print(str(e), file=sys.stderr)
-        return 2
+            for s in day["stages"]:
+                out = "?" if s["rows_out"] is None else s["rows_out"]
+                d = "?" if s["dropped"] is None else s["dropped"]
+                print(f"  {s['stage']:14s} out={out:>10} dropped={d}")
+            for kind, snap in day.get("catalogs", {}).items():
+                adv = snap.get("advise", {})
+                ret = snap.get("retention", {})
+                bits = [f"  catalog[{kind}] {snap['path']}"]
+                if "predicted_gate_overshoot_ppm" in adv:
+                    bits.append(
+                        "overshoot_ppm="
+                        f"{adv['predicted_gate_overshoot_ppm']}"
+                    )
+                if "n_rows" in adv:
+                    bits.append(f"rows={adv['n_rows']}")
+                if ret:
+                    bits.append(
+                        f"last_eviction_kept={ret.get('rows_kept')}"
+                    )
+                print(" ".join(bits))
+    elif sub == "report":
+        from pond_spark.pipeline import report
+
+        eval_df = spark.read.parquet(o.eval_set) if o.eval_set else None
+        for r in report(spark.read.parquet(pos[0]), cfg, eval_df):
+            dropped = r["rows_in"] - r["rows_out"]
+            print(
+                f"{r['stage']:14s} in={r['rows_in']:>10d} "
+                f"out={r['rows_out']:>10d} dropped={dropped}"
+            )
+    else:  # run
+        from pond_spark.pipeline import curate_run, final_corpus_path
+
+        inp, work = pos
+        rows = curate_run(
+            spark,
+            inp,
+            work,
+            cfg,
+            eval_set_path=o.eval_set,
+            digest_catalog_path=o.digest_catalog,
+            minhash_catalog_path=o.minhash_catalog,
+            embedding_catalog_path=o.embedding_catalog,
+            lease_ttl=o.lease_ttl,
+        )
+        for r in rows:
+            timing = f" ({r['seconds']}s)" if "seconds" in r else ""
+            print(
+                f"{r['status']:8s} {r['stage']:14s} {r['path']}{timing}"
+            )
+        print(f"final={final_corpus_path(rows)}")
+    return 0
+
+
+_GROUPS = {
+    "sketch": (_SKETCH, _run_sketch),
+    "pack": (_PACK, _run_pack),
+    "catalog": (_CATALOG, _run_catalog),
+    "index": (_INDEX, _run_index),
+    "pipeline": (_PIPELINE, _run_pipeline),
+}
+_COMMANDS = ("query", "stats", "inject", "clone", "cancel", *_GROUPS)
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -1333,6 +1177,10 @@ def main(argv: list[str] | None = None) -> int:
             try:
                 follow_duration = float(v)
             except ValueError:
+                follow_duration = None
+            if follow_duration is None or not 0 <= follow_duration < math.inf:
+                # negative, inf and nan (which fails every comparison)
+                # would reach the stream's awaitTermination and crash
                 print(f"Bad --follow-duration: {v!r}", file=sys.stderr)
                 return 2
         elif (v := _filter_value(a, "--max-batch-rows")) is not None:
@@ -1364,6 +1212,21 @@ def main(argv: list[str] | None = None) -> int:
     if rest and rest[0] in _COMMANDS:
         command = rest[0]
         rest = rest[1:]
+    # parse before get_spark: a usage error starts no JVM
+    try:
+        if command in _GROUPS:
+            sub, pos, opts = _parse_group(command, rest)
+        elif command == "query":
+            parsed = parse_query_args(rest)
+    except _UsageError as e:
+        print(f"{e}\n{_usage(command)}", file=sys.stderr)
+        return 2
+    except (QueryValidationError, ValueError) as e:
+        # parse_time_spec/parse_duration_us/strptime raise ValueError
+        # for malformed specs — the user typo contract is the same:
+        # message to stderr, exit 2, never a traceback
+        print(str(e), file=sys.stderr)
+        return 2
 
     from pond_spark.session import get_spark
     from pond_spark.sources.store import LogStore
@@ -1406,25 +1269,14 @@ def main(argv: list[str] | None = None) -> int:
         log_store.clone_from(LogStore(spark, rest[0]))
         print(f"cloned from {rest[0]}")
         return 0
-    if command == "sketch":
-        return _run_sketch(spark, log_store, rest)
-    if command == "pack":
-        return _run_pack(spark, rest)
-    if command == "catalog":
-        return _run_catalog(spark, rest)
-    if command == "index":
-        return _run_index(spark, rest)
-    if command == "pipeline":
-        return _run_pipeline(spark, rest)
-
-    try:
-        parsed = parse_query_args(rest)
-    except (QueryValidationError, ValueError) as e:
-        # parse_time_spec/parse_duration_us/strptime raise ValueError
-        # for malformed specs — the user typo contract is the same:
-        # message to stderr, exit 2, never a traceback
-        print(str(e), file=sys.stderr)
-        return 2
+    if command in _GROUPS:
+        try:
+            return _GROUPS[command][1](spark, log_store, sub, pos, opts)
+        except (ValueError, TypeError) as e:
+            # bad params the tables cannot see (incl. sidecar
+            # refusals): message to stderr, exit 2, no traceback
+            print(str(e) or _usage(command), file=sys.stderr)
+            return 2
 
     df = log_store.read()
 
@@ -1438,8 +1290,6 @@ def main(argv: list[str] | None = None) -> int:
             # --per-site has neither a site filter nor an explicit
             # group_site (Main.cxx:336-343)
             parsed.group_site = (2**32 - 1, 0)
-        from pond_spark.functions.format import OneLineOptions
-
         query = Query(df).filter(parsed.to_filter_spec())
         if parsed.group_site is not None:
             query = query.group_site(*parsed.group_site)
@@ -1455,16 +1305,7 @@ def main(argv: list[str] | None = None) -> int:
             # the per-site text lines honor the same formatting flags
             # the stdout path does (show_site stays off: records route
             # to their own site's file)
-            opts=OneLineOptions(
-                show_site=False,
-                show_host=po.show_host,
-                show_forwarded_to=po.show_forwarded_to,
-                show_referer=po.show_referer,
-                show_agent=po.show_agent,
-                show_content_type=po.show_content_type,
-                iso8601=po.iso8601,
-                anonymize=po.anonymize,
-            ),
+            opts=replace(_line_options(po), show_site=False),
             filename=po.per_site_filename,
         )
         print(f"wrote per-site tree: {po.per_site}")

@@ -1136,3 +1136,146 @@ def test_cli_catalog_emb_vector_buckets(spark, store_dir, tmp_path, capsys):
                  cat, d2, "--verify-cos=0.9", "--dim=4", "--nbits=1",
                  "--tables=2", "--store-vectors"]) == 2
     assert "incomparable" in capsys.readouterr().err
+
+
+@pytest.fixture()
+def no_spark(monkeypatch):
+    """Fail the test if main() reaches get_spark: a usage error must be
+    refused while parsing, before any JVM starts."""
+    import pond_spark.session
+
+    def refuse(*a, **kw):
+        raise AssertionError("main() started Spark for a usage error")
+
+    monkeypatch.setattr(pond_spark.session, "get_spark", refuse)
+
+
+@pytest.mark.parametrize("argv,needle", [
+    # misspelled flags used to be taken as data, with exit 0
+    (["index", "search-text", "IX", "foo", "--top-k=3"], "--top-k=3"),
+    (["sketch", "update-kmv", "P", "2024-01-01", "--seeed=7"], "--seeed=7"),
+    (["pipeline", "report-runs", "W", "--lease-tll=60"], "--lease-tll=60"),
+    (["catalog", "digest-register", "C", "D", "--text_col=t"], "--text_col=t"),
+    (["pack", "P", "--capacity=8", "--out-dir=x"], "--out-dir=x"),
+    # a value flag without a value, a bool flag with one
+    (["index", "search-text", "IX", "a", "--topk"], "--topk"),
+    (["index", "search-ivf", "IX", "1,0", "--adc=1"], "--adc=1"),
+    # bad numbers used to raise ValueError out of main()
+    (["sketch", "build-kmv", "P", "--k=abc"], "--k=abc"),
+    (["catalog", "compact", "minhash", "C", "--bands=x"], "--bands=x"),
+    (["index", "search-text", "I", "foo", "--topk=ten"], "--topk=ten"),
+    (["pipeline", "status", "W", "--min-words=many"], "--min-words=many"),
+    (["pack", "P", "--capacity=lots"], "--capacity=lots"),
+    (["pack", "P", "--capacity=0"], "--capacity=0"),
+    # wrong arity
+    (["sketch", "kmv-uniques", "P"], "kmv-uniques"),
+    (["sketch", "cm-estimate", "P", "LO", "HI"], "cm-estimate"),
+    (["pack", "P", "Q", "--capacity=8"], "pack"),
+    (["catalog", "compact", "minhash"], "compact"),
+    (["index", "search-text", "IX"], "search-text"),
+    (["pipeline", "run", "IN"], "run"),
+    (["pipeline", "report-runs"], "report-runs"),
+    # unknown or missing subcommand, kind or required flag
+    (["sketch", "no-such"], "no-such"),
+    (["catalog", "no-such", "a", "b"], "no-such"),
+    (["catalog", "compact", "bogus", "C"], "bogus"),
+    (["index", "no-such", "a"], "no-such"),
+    (["pipeline", "no-such", "W"], "no-such"),
+    (["sketch"], "usage"),
+    (["catalog"], "usage"),
+    (["index"], "usage"),
+    (["pipeline"], "usage"),
+    (["pack", "P"], "--capacity"),
+])
+def test_cli_group_usage_errors_exit_2_before_spark(no_spark, capsys, argv, needle):
+    from pond_spark.cli import main
+
+    assert main(["--store=/nonexistent", *argv]) == 2
+    out, err = capsys.readouterr()
+    assert out == ""
+    assert needle in err and "Traceback" not in err
+    assert f"usage: ... {argv[0]}" in err  # rendered from the group table
+
+
+def test_cli_query_usage_error_exits_2_before_spark(no_spark, capsys):
+    from pond_spark.cli import main
+
+    assert main(["--store=/nonexistent", "query", "status=abc"]) == 2
+    assert "Bad status filter" in capsys.readouterr().err
+
+
+def test_parse_group_keeps_negative_vector_positional():
+    from pond_spark.cli import _parse_group
+
+    sub, pos, opts = _parse_group(
+        "index", ["search-ivf", "IX", "-0.5,1,0", "--topk=3", "--adc"]
+    )
+    assert (sub, pos, opts.topk, opts.adc) == (
+        "search-ivf", ["IX", "-0.5,1,0"], 3, True
+    )
+    # a trailing NAME... folds into one list; defaults fill the rest
+    sub, pos, opts = _parse_group("sketch", ["update-kmv", "P", "d1", "d2"])
+    assert (pos, opts.k, opts.seed) == (["P", ["d1", "d2"]], 64, 1)
+
+
+def test_cli_pipeline_run_passes_emb_vector_buckets(monkeypatch, capsys):
+    """--emb-vector-buckets (documented, but never parsed before) lands
+    in config.extra like the other --emb-* flags."""
+    import pond_spark.pipeline
+    import pond_spark.session
+    from pond_spark.cli import main
+
+    seen = {}
+
+    def fake_curate_run(spark, inp, work, cfg, **kw):
+        seen.update(inp=inp, work=work, extra=cfg.extra, **kw)
+        return [{"status": "computed", "stage": "quality",
+                 "path": work + "/stage_00_quality"}]
+
+    monkeypatch.setattr(pond_spark.session, "get_spark", lambda *a, **k: None)
+    monkeypatch.setattr(pond_spark.pipeline, "curate_run", fake_curate_run)
+    assert main(["--store=/nonexistent", "pipeline", "run", "IN", "W",
+                 "--embedding-catalog=E", "--emb-dim=4",
+                 "--emb-vector-buckets=8"]) == 0
+    assert seen["extra"] == {"emb_dim": 4, "emb_vector_buckets": 8}
+    assert seen["embedding_catalog_path"] == "E"
+    assert (seen["inp"], seen["work"]) == ("IN", "W")
+    assert capsys.readouterr().out.splitlines()[-1] == (
+        "final=W/stage_00_quality"
+    )
+
+
+def test_cli_catalog_expire_refuses_negative_max_age(
+    spark, store_dir, tmp_path, capsys
+):
+    """--max-age=-N used to put the horizon N seconds in the future and
+    evict the whole catalog; it is refused and the catalog untouched."""
+    from pond_spark.cli import main
+    from pond_spark.dedup.exact import DigestCatalog
+
+    cat = str(tmp_path / "dcat")
+    DigestCatalog(spark, cat).register(
+        spark.createDataFrame(
+            [(1, "alpha beta"), (2, "gamma delta")], "doc_id long, text string"
+        ),
+        run_ts=1_000,
+    )
+    assert main([f"--store={store_dir}", "catalog", "expire", "digest",
+                 cat, "--max-age=-3600"]) == 2
+    assert "--max-age=-3600" in capsys.readouterr().err
+    assert main([f"--store={store_dir}", "catalog", "expire", "digest",
+                 cat, "--before-ts=0"]) == 0
+    out = capsys.readouterr().out
+    assert "rows_before=2" in out and "rows_kept=2" in out
+
+
+@pytest.mark.parametrize("duration", ["-1", "nan", "inf", "soon"])
+def test_cli_follow_duration_refused_leaves_no_stream(
+    spark, store_dir, capsys, duration
+):
+    from pond_spark.cli import main
+
+    assert main([f"--store={store_dir}", f"--follow-duration={duration}",
+                 "query", "--follow"]) == 2
+    assert "Bad --follow-duration" in capsys.readouterr().err
+    assert spark.streams.active == []
