@@ -316,6 +316,22 @@ def _fs_for(spark: SparkSession, path: str):
     return _HadoopFS(spark, path)
 
 
+def replace_text(fs, path: str, text: str) -> None:
+    """Replace the file ``path`` through a staged sibling and
+    ``rename_overwrite``, so a crash mid-write never leaves a truncated
+    live file (the sidecar discipline of CatalogStore)."""
+    staged = path + "._staged"
+    fs.write_text(staged, text)
+    fs.rename_overwrite(staged, path)
+
+
+def read_replaced_text(fs, path: str) -> str:
+    """Read a file written by :func:`replace_text`; across the
+    delete-then-rename window of a schemed ``rename_overwrite`` the
+    staged sibling holds the contents."""
+    return fs.read_text(path if fs.exists(path) else path + "._staged")
+
+
 def _fs_for_maintenance(path: str, spark: SparkSession | None = None):
     """_fs_for for entry points that historically took no SparkSession
     (apply_retention): local paths never need one; schemed paths pick

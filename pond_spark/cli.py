@@ -543,7 +543,7 @@ _SKETCH = _Group(
         "kmv-uniques": ("PATH", "LO", "HI"),
         "kmv-churn": ("PATH", "A_LO", "A_HI", "B_LO", "B_HI"),
         "build-cm": ("PATH",),
-        "update-cm": ("PATH",),
+        "update-cm": ("PATH", "DAY..."),
         "cm-estimate": ("PATH", "LO", "HI", "KEY..."),
         "cm-join-size": ("PATH", "A_LO", "A_HI", "B_LO", "B_HI"),
     },
@@ -605,11 +605,11 @@ def _run_sketch(spark, log_store, sub: str, pos: list, o) -> int:
         build_cm_sketches(log_store.read(), path, key_col=o.key_col)
         print(f"built cm path={path} key_col={o.key_col}")
     elif sub == "update-cm":
-        from pond_spark.operators.sketches import update_cm_sketches
+        from pond_spark.operators.sketches import replace_cm_days
 
-        (path,) = pos
-        update_cm_sketches(log_store.read(), path, key_col=o.key_col)
-        print(f"updated cm path={path} key_col={o.key_col}")
+        path, days = pos
+        replace_cm_days(log_store.read(), path, days, key_col=o.key_col)
+        print(f"updated cm path={path} days={','.join(days)}")
     elif sub == "cm-estimate":
         from pond_spark.operators.sketches import cm_estimate_over_range
 
@@ -1227,6 +1227,13 @@ def main(argv: list[str] | None = None) -> int:
         # message to stderr, exit 2, never a traceback
         print(str(e), file=sys.stderr)
         return 2
+    if command == "cancel":
+        print("nothing to cancel (no server connection)", file=sys.stderr)
+        return 0
+    if command in ("inject", "clone") and len(rest) != 1:
+        arg = "FILE" if command == "inject" else "SRC_STORE_DIR"
+        print(f"usage: ... {command} {arg}", file=sys.stderr)
+        return 2
 
     from pond_spark.session import get_spark
     from pond_spark.sources.store import LogStore
@@ -1234,9 +1241,6 @@ def main(argv: list[str] | None = None) -> int:
     spark = get_spark("pond_cli")
     log_store = LogStore(spark, store)
 
-    if command == "cancel":
-        print("nothing to cancel (no server connection)", file=sys.stderr)
-        return 0
     if command == "stats":
         from pond_spark.operators.stats import stats as stats_op
 
@@ -1244,9 +1248,6 @@ def main(argv: list[str] | None = None) -> int:
         print(f"n_records={row.n_records} memory_usage={row.memory_usage}")
         return 0
     if command == "inject":
-        if len(rest) != 1:
-            print("usage: ... inject FILE", file=sys.stderr)
-            return 2
         from pond_spark.sources.ingest import ingest_batch
 
         raw = (
@@ -1263,9 +1264,6 @@ def main(argv: list[str] | None = None) -> int:
         )
         return 0
     if command == "clone":
-        if len(rest) != 1:
-            print("usage: ... clone SRC_STORE_DIR", file=sys.stderr)
-            return 2
         log_store.clone_from(LogStore(spark, rest[0]))
         print(f"cloned from {rest[0]}")
         return 0

@@ -46,6 +46,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pond_spark.catalog import _fs_for, read_replaced_text, replace_text
 from pond_spark.functions.bm25 import bm25_contribution_q
 from pond_spark.functions.text import _words
 
@@ -135,8 +136,8 @@ def build_text_index(
         "id_type": dict(df.dtypes)[id_col],
         "segments": [{"name": seg, **stats}],
     }
-    with open(os.path.join(path, _META), "w") as fh:
-        json.dump(meta, fh)
+    fs = _fs_for(df.sparkSession, path)
+    replace_text(fs, os.path.join(path, _META), json.dumps(meta))
     return TextIndex(df.sparkSession, path)
 
 
@@ -166,15 +167,18 @@ class TextIndex:
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
+        self.fs = _fs_for(spark, path)
         self._load_meta()
 
     def _load_meta(self) -> None:
-        with open(os.path.join(self.path, _META)) as fh:
-            self.meta = json.load(fh)
+        meta = read_replaced_text(self.fs, os.path.join(self.path, _META))
+        self.meta = json.loads(meta)
 
     def _save_meta(self) -> None:
-        with open(os.path.join(self.path, _META), "w") as fh:
-            json.dump(self.meta, fh)
+        # staged + rename: a crash mid-write must not truncate the meta,
+        # the source of truth for which segment directories are live
+        meta = json.dumps(self.meta)
+        replace_text(self.fs, os.path.join(self.path, _META), meta)
 
     @property
     def n_docs(self) -> int:
@@ -236,8 +240,6 @@ class TextIndex:
         the old list or the new singleton — never at deleted ones;
         stray non-live segment dirs are garbage to re-compact, not
         corruption."""
-        import shutil
-
         old_segments = list(self.meta["segments"])
         n_docs, sum_dl = self.n_docs, self.sum_dl
         seg = _next_segment_name(old_segments)  # ids only grow: unused
@@ -263,7 +265,7 @@ class TextIndex:
         ]
         self._save_meta()
         for s in old_segments:
-            shutil.rmtree(os.path.join(self.path, s["name"]))
+            self.fs.rmtree(os.path.join(self.path, s["name"]))
         return self
 
     def search(

@@ -43,12 +43,12 @@ def cm_join_size(
     the estimate row ``(-1, min-over-rows)``. Both reads are
     day-partition-pruned; the join and aggregation run over fixed
     depth*width cell grids."""
-    from pond_spark.operators.sketches import _check_cm_params
+    from pond_spark.operators.sketches import _check_params, _cm_params
 
     # dot products are cell-wise (no re-hashing), but a table stamped
     # with a different hash family than this build means its cells
     # were written by incompatible writers — refuse (ADVICE r6)
-    _check_cm_params(spark, path)
+    _check_params(spark, path, "CM", _cm_params())
     sk = spark.read.parquet(path)
 
     def grid(lo: str, hi: str, name: str) -> DataFrame:

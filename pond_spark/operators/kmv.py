@@ -37,15 +37,16 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from pond_spark.functions.text import fingerprint, fingerprint_sql
 from pond_spark.operators.sketches import (
     BK_A,
     BK_C,
     BK_MOD,
-    _check_bk_params,
-    _write_bk_params,
+    _bottom_k,
+    _check_params,
+    _day_rows,
+    _write_days,
 )
 
 __all__ = [
@@ -78,28 +79,15 @@ def kmv_key_sql(expr: str, seed: int = 1) -> str:
     )
 
 
-def _daily_bottom_k(
-    logs: DataFrame,
-    k: int,
-    value_col: str,
-    site_col: str,
-    ts_col: str,
+def _kmv_daily(
+    logs: DataFrame, k: int, value_col: str, site_col: str, ts_col: str,
     seed: int,
 ) -> DataFrame:
-    src = logs.filter(
-        F.col(ts_col).isNotNull() & F.col(value_col).isNotNull()
-    ).select(
-        F.date_format(F.col(ts_col), "yyyy-MM-dd").alias("day"),
-        F.col(site_col).alias("site"),
-        kmv_key(F.col(value_col), seed).alias("bk"),
+    rows = _day_rows(
+        logs, ts_col, value_col, site=F.col(site_col),
+        bk=kmv_key(F.col(value_col), seed),
     )
-    dedup = src.dropDuplicates(["day", "site", "bk"])
-    w = Window.partitionBy("day", "site").orderBy("bk")
-    return (
-        dedup.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn")
-    )
+    return _bottom_k(rows.dropDuplicates(["day", "site", "bk"]), k, ("bk",))
 
 
 def build_kmv_sketches(
@@ -116,14 +104,8 @@ def build_kmv_sketches(
     sidecar (ADVICE r6: serving with a larger k or a different seed
     than the build silently biases estimates — the sidecar makes the
     mismatch loud, reusing the value-sketch discipline)."""
-    (
-        _daily_bottom_k(logs, k, value_col, site_col, ts_col, seed)
-        .repartition("day")
-        .write.mode("overwrite")
-        .partitionBy("day")
-        .parquet(path)
-    )
-    _write_bk_params(logs.sparkSession, path, k, seed)
+    daily = _kmv_daily(logs, k, value_col, site_col, ts_col, seed)
+    _write_days(daily, path, "build", "KMV sketch", {"k": k, "seed": seed})
 
 
 def update_kmv_sketches(
@@ -136,28 +118,14 @@ def update_kmv_sketches(
     ts_col: str = "timestamp",
     seed: int = 1,
 ) -> None:
-    """Incremental maintenance: rebuild only ``days`` (dynamic
-    partition overwrite — untouched day directories stay as-is), the
-    same discipline as the HLL/CM sketch updaters. (k, seed) must
-    match the build sidecar exactly — mixed-parameter day partitions
-    would poison later merges."""
-    _check_bk_params(logs.sparkSession, path, k, seed, kind="KMV sketch")
-    daily = _daily_bottom_k(
-        logs.filter(
-            F.date_format(F.col(ts_col), "yyyy-MM-dd").isin(days)
-        ),
-        k,
-        value_col,
-        site_col,
-        ts_col,
-        seed,
-    )
-    (
-        daily.repartition("day")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("day")
-        .parquet(path)
+    """Incremental maintenance: recompute only ``days`` from ``logs``
+    and rewrite those day partitions (sketches._write_days replace —
+    untouched day directories stay as-is). (k, seed) must match the
+    build sidecar exactly — mixed-parameter day partitions would
+    poison later merges."""
+    daily = _kmv_daily(logs, k, value_col, site_col, ts_col, seed)
+    _write_days(
+        daily, path, "replace", "KMV sketch", {"k": k, "seed": seed}, days=days
     )
 
 
@@ -172,18 +140,13 @@ def _merged_side(sk: DataFrame, lo: str, hi: str, k: int, name: str) -> DataFram
         .select("site", "bk")
         .dropDuplicates(["site", "bk"])
     )
-    w = Window.partitionBy("site").orderBy("bk")
     # persist (r11, guide §1.2): both returned frames derive from this
     # bottom-k — consumers that use the keys AND the theta (kmv_churn,
     # per side) otherwise recompute the pruned scan + dedup + window
     # twice. k-bounded (≤ k keys/site, sub-KB); lazy, so a theta-only
     # consumer (kmv_uniques_over_range) just fills it on its single
     # pass. Pin dropped by the loop drivers' clearCache contract.
-    bot = (
-        keys.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .persist()
-    )
+    bot = _bottom_k(keys, k, ("bk",), ("site",)).persist()
     theta = bot.groupBy("site").agg(
         F.when(F.count(F.lit(1)) >= k, F.max("bk"))
         .otherwise(F.lit(BK_MOD))
@@ -207,7 +170,7 @@ def kmv_uniques_over_range(
     ``(site, uniques_est, n_keys, theta)``. Serve-time k must not
     exceed the build k (sidecar-validated: a larger k would read a
     non-uniform merged sample and overshoot)."""
-    _check_bk_params(spark, path, k, None, serve=True, kind="KMV sketch")
+    _check_params(spark, path, "KMV sketch", {"k": k}, serve=True)
     sk = spark.read.parquet(path)
     _bot, th = _merged_side(sk, lo, hi, k, "x")
     return th.select(
@@ -241,7 +204,7 @@ def kmv_churn(
     the set-algebra terms below ``theta = min(theta_a, theta_b)``.
     Everything after the partition-pruned sketch read is k-bounded.
     Serve-time k is sidecar-validated like kmv_uniques_over_range."""
-    _check_bk_params(spark, path, k, None, serve=True, kind="KMV sketch")
+    _check_params(spark, path, "KMV sketch", {"k": k}, serve=True)
     sk = spark.read.parquet(path)
     bot_a, th_a = _merged_side(sk, a_lo, a_hi, k, "a")
     bot_b, th_b = _merged_side(sk, b_lo, b_hi, k, "b")

@@ -21,12 +21,25 @@ Accuracy: DataSketches HLL at lg_k=12 has ~1.6% relative standard
 error; estimates are engine-specific, so oracle rows follow the
 established accuracy-envelope pattern (emit exact + within-bound
 flag; see __spark_entry__.q_daily_uniques_approx).
+
+Every day-partitioned sketch table here and in operators/kmv.py
+(HLL, bottom-k values, Count-Min, KMV) shares one lifecycle: the
+events→day front (``_day_rows``), the write path (``_write_days``:
+build, fold or replace days) and the params sidecar
+(``_pin_params`` / ``_check_params``). A family declares only its
+daily aggregate, its merge and its sidecar parameters.
 """
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
+
+from pond_spark.catalog import _fs_for
+from pond_spark.functions.text import fingerprint
 
 __all__ = [
     "build_uniques_sketches",
@@ -37,27 +50,201 @@ __all__ = [
     "value_quantiles_over_range",
     "build_cm_sketches",
     "update_cm_sketches",
+    "replace_cm_days",
     "cm_estimate_over_range",
 ]
 
 
-def _overwrite_day_partitions(
-    spark: SparkSession, merged: DataFrame, path: str
+# ---------------------------------------------------------------------------
+# the shared lifecycle of a day-partitioned sketch table
+
+
+def _day_rows(
+    logs: DataFrame, ts_col: str, value_col: str, **cols: Column
+) -> DataFrame:
+    """The events→day front of every sketch family: drop events whose
+    timestamp or sketched column is null, and project ``day`` (the
+    ISO date string the tables partition on, so range predicates prune
+    directories) plus ``cols`` (output name → expression)."""
+    return logs.filter(
+        F.col(ts_col).isNotNull() & F.col(value_col).isNotNull()
+    ).select(
+        F.date_format(F.col(ts_col), "yyyy-MM-dd").alias("day"),
+        *(c.alias(name) for name, c in cols.items()),
+    )
+
+
+def _bottom_k(
+    df: DataFrame,
+    k: int,
+    order: tuple[str, ...] = ("bk", "rid"),
+    by: tuple[str, ...] = ("day", "site"),
+) -> DataFrame:
+    """The ``k`` rows of each ``by`` group that sort first by ``order``
+    — the bottom-k sample of the value and KMV families, at build,
+    fold and serve time."""
+    w = Window.partitionBy(*by).orderBy(*order)
+    return (
+        df.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") <= k)
+        .drop("_rn")
+    )
+
+
+def _read_days(spark: SparkSession, path: str, lo: str, hi: str) -> DataFrame:
+    """The sketch rows of the days in ``[lo, hi]`` (inclusive ISO
+    dates) — a partition filter, so only those directories are read."""
+    return spark.read.parquet(path).filter(
+        (F.col("day") >= lo) & (F.col("day") <= hi)
+    )
+
+
+#: why a sidecar mismatch refuses, per pinned parameter
+_PARAM_WHY = {
+    "seed": "sample membership keys are incomparable",
+    "k": "that would mix sample sizes across days",
+    "hash_version": "rebuild the table; mixing hash families corrupts cells",
+    "depth": "cell indices are incompatible",
+    "width": "cell indices are incompatible",
+}
+
+
+def _pin_params(spark: SparkSession, path: str, params: dict) -> None:
+    """Write the table's ``.params.json`` sidecar (every value an int)."""
+    _fs_for(spark, path).write_text(
+        path + ".params.json",
+        json.dumps({name: int(v) for name, v in params.items()}),
+    )
+
+
+def _check_params(
+    spark: SparkSession,
+    path: str,
+    kind: str,
+    want: dict,
+    serve: bool = False,
 ) -> None:
-    """Dynamic-partition-overwrite write shared by the three sketch
-    updaters (only the touched day directories are rewritten); the
-    conf toggle is scoped save/restore."""
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    """Refuse to use a sketch table whose sidecar disagrees with
+    ``want``; ``kind`` labels the error. Every given parameter must
+    match exactly (``None`` = not checked): mixed-parameter day
+    partitions poison later merges — CM cell indices are a function of
+    hash family, depth and width; bottom-k membership keys of the
+    seed. The one relaxation is the serve-time ``k`` of a bottom-k
+    table (``serve=True``): the merge identity ``bottom_k(A∪B) =
+    bottom_k(bottom_k(A)∪bottom_k(B))`` holds for any k up to the
+    build k, while a larger k silently returns a non-uniform sample
+    and biased estimates. A sidecar missing a parameter does not check
+    it — so a CM sidecar without ``hash_version`` reads as the current
+    version — and a table with no sidecar (HLL, or written before the
+    sidecar existed) is not checked at all.
+
+    Sidecar I/O goes through catalog._fs_for, never builtin open():
+    the parquet table itself supports hdfs://-style paths, so the
+    sidecar must too, or remote tables silently skip validation."""
+    fs = _fs_for(spark, path)
+    sidecar = path + ".params.json"
+    if not fs.exists(sidecar):
+        return
+    stored = json.loads(fs.read_text(sidecar))
+    for name, got in want.items():
+        built = stored.get(name, got)
+        if got is None or got == built:
+            continue
+        if serve and name == "k":
+            if got < built:
+                continue
+            raise ValueError(
+                f"{kind} table at {path} holds bottom-{built} per day; "
+                f"serving k={got} would exceed it and bias the merged "
+                "sample (merge identity needs k <= build k)"
+            )
+        raise ValueError(
+            f"{kind} table at {path} was built with {name}={built}, used "
+            f"with {name}={got} — {_PARAM_WHY[name]}"
+        )
+
+
+def _write_days(
+    daily: DataFrame,
+    path: str,
+    mode: str,
+    kind: str = "",
+    params: dict | None = None,
+    merge=None,
+    days=(),
+) -> None:
+    """The one write path of a day-partitioned sketch table; ``daily``
+    is the family's per-(day, group) aggregate of the events.
+
+    ``build``: static overwrite of the whole table, then pin
+    ``params`` in the sidecar. ``fold``: check the sidecar, then union
+    the batch with the existing rows of exactly the days it touches
+    and ``merge`` them — equal to a rebuild over old+new, because each
+    family's merge is how its sketch absorbs new members. ``replace``:
+    check the sidecar, then rewrite the ``days`` partitions from
+    ``daily`` alone. Fold and replace overwrite only the day
+    directories they write (dynamic partition overwrite, set as a
+    writer option — never the process-global session conf); untouched
+    days are never read or written. Single-writer, like every mutable
+    layout here (DigestCatalog, TextIndex)."""
+    spark = daily.sparkSession
+    if mode != "build" and params is not None:
+        _check_params(spark, path, kind, params)
+    if mode == "replace":
+        daily = daily.filter(F.col("day").isin(list(days)))
+    elif mode == "fold":
+        # persist: the batch feeds BOTH the days collect and the merged
+        # write — without the pin its aggregation over the new events
+        # runs twice
+        daily = daily.persist()
     try:
+        out = daily
+        if mode == "fold":
+            touched = [r.day for r in daily.select("day").distinct().collect()]
+            if not touched:
+                return
+            existing = (
+                spark.read.parquet(path)
+                .filter(F.col("day").isin(touched))
+                .select(*daily.columns)
+            )
+            out = merge(daily.unionByName(existing))
         (
-            merged.repartition("day")
+            out.repartition("day")
             .write.mode("overwrite")
+            .option(
+                "partitionOverwriteMode",
+                "static" if mode == "build" else "dynamic",
+            )
             .partitionBy("day")
             .parquet(path)
         )
     finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        if mode == "fold":
+            daily.unpersist()
+    if mode == "build" and params is not None:
+        _pin_params(spark, path, params)
+
+
+# ---------------------------------------------------------------------------
+# mergeable DISTINCT-COUNT sketches: DataSketches HLL per day
+
+
+def _hll_daily(
+    logs: DataFrame, value_col: str, site_col: str, ts_col: str, lg_k: int
+) -> DataFrame:
+    rows = _day_rows(
+        logs, ts_col, value_col, site=F.col(site_col), v=F.col(value_col)
+    )
+    return rows.groupBy("day", "site").agg(
+        F.hll_sketch_agg(F.col("v"), F.lit(lg_k)).alias("sketch")
+    )
+
+
+def _hll_merge(df: DataFrame) -> DataFrame:
+    return df.groupBy("day", "site").agg(
+        F.hll_union_agg(F.col("sketch"), F.lit(True)).alias("sketch")
+    )
 
 
 def build_uniques_sketches(
@@ -69,23 +256,10 @@ def build_uniques_sketches(
     lg_k: int = 12,
 ) -> None:
     """One pass over the events: per (day, site) HLL sketch, written
-    ``partitionBy(day)`` (ISO date strings, so range predicates prune
-    directories). The sketch column is the DataSketches binary —
-    ~KBs per group at lg_k=12 regardless of cardinality."""
-    daily = (
-        logs.filter(F.col(ts_col).isNotNull() & F.col(value_col).isNotNull())
-        .groupBy(
-            F.date_format(F.col(ts_col), "yyyy-MM-dd").alias("day"),
-            F.col(site_col).alias("site"),
-        )
-        .agg(F.hll_sketch_agg(F.col(value_col), F.lit(lg_k)).alias("sketch"))
-    )
-    (
-        daily.repartition("day")
-        .write.mode("overwrite")
-        .partitionBy("day")
-        .parquet(path)
-    )
+    ``partitionBy(day)``. The sketch column is the DataSketches binary
+    — ~KBs per group at lg_k=12 regardless of cardinality."""
+    daily = _hll_daily(logs, value_col, site_col, ts_col, lg_k)
+    _write_days(daily, path, "build")
 
 
 def update_uniques_sketches(
@@ -97,43 +271,11 @@ def update_uniques_sketches(
     lg_k: int = 12,
 ) -> None:
     """Incremental maintenance: fold a NEW batch of events into the
-    cube without rebuilding. The batch's per-(day, site) sketches are
-    unioned with the existing sketches of exactly the days the batch
-    touches, and only those day partitions are rewritten (dynamic
-    partition overwrite — untouched days' directories are never read
-    or written). Sketch union is exactly how HLL absorbs new members,
-    so the result equals a full rebuild over old+new (asserted in
-    tests). Single-writer, like every mutable layout here
-    (DigestCatalog, TextIndex)."""
-    spark = logs.sparkSession
-    batch = (
-        logs.filter(F.col(ts_col).isNotNull() & F.col(value_col).isNotNull())
-        .groupBy(
-            F.date_format(F.col(ts_col), "yyyy-MM-dd").alias("day"),
-            F.col(site_col).alias("site"),
-        )
-        .agg(F.hll_sketch_agg(F.col(value_col), F.lit(lg_k)).alias("sketch"))
-    )
-    # persist: the batch aggregation feeds BOTH the days collect and
-    # the merged write — without the pin the full groupBy over the new
-    # events runs twice (r6 review finding; same in the CM and
-    # bottom-k updaters)
-    batch = batch.persist()
-    try:
-        days = [r.day for r in batch.select("day").distinct().collect()]
-        if not days:
-            return
-        existing = spark.read.parquet(path).filter(F.col("day").isin(days))
-        merged = (
-            batch.unionByName(existing)
-            .groupBy("day", "site")
-            .agg(
-                F.hll_union_agg(F.col("sketch"), F.lit(True)).alias("sketch")
-            )
-        )
-        _overwrite_day_partitions(spark, merged, path)
-    finally:
-        batch.unpersist()
+    cube without rebuilding (``_write_days`` fold). Sketch union is
+    exactly how HLL absorbs new members, so the result equals a full
+    rebuild over old+new (asserted in tests)."""
+    daily = _hll_daily(logs, value_col, site_col, ts_col, lg_k)
+    _write_days(daily, path, "fold", merge=_hll_merge)
 
 
 def uniques_over_range(
@@ -147,9 +289,7 @@ def uniques_over_range(
     dates) from the sketch table alone — no raw-event scan. The day
     filter is a partition filter on the sketch directories; the union
     is one tiny groupBy over KB-sized sketches."""
-    sk = spark.read.parquet(path).filter(
-        (F.col("day") >= start_day) & (F.col("day") <= end_day)
-    )
+    sk = _read_days(spark, path, start_day, end_day)
     merged = (
         sk.groupBy("site") if by_site else sk.groupBy(F.lit(1).alias("_g"))
     ).agg(F.hll_union_agg(F.col("sketch")).alias("_u"))
@@ -203,132 +343,15 @@ def quantile_col_names(quantiles) -> list[str]:
     return names
 
 
-def _check_bk_params(
-    spark: SparkSession,
-    path: str,
-    k: int,
-    seed: int | None,
-    serve: bool = False,
-    kind: str = "value sketch",
-) -> None:
-    """Validate bottom-k parameters against the table's sidecar. The
-    merge identity ``bottom_k(A∪B) = bottom_k(bottom_k(A)∪bottom_k(B))``
-    only holds when the merge k does not EXCEED the per-day k the
-    table was built with — a larger serve-time k silently returns a
-    non-uniform sample and biased quantiles (r6 review finding).
-    Updates must match exactly (mixed-k day partitions would poison
-    later merges). Tables written before the sidecar existed validate
-    against nothing (best-effort compatibility). Shared by the value
-    sketches here and the KMV/theta sketches (operators/kmv.py) —
-    ``kind`` labels the error.
-
-    Sidecar I/O goes through catalog._fs_for, never builtin open():
-    the parquet table itself supports hdfs://-style paths, so the
-    sidecar must too, or remote tables silently skip validation
-    (ADVICE r7)."""
-    import json
-
-    from pond_spark.catalog import _fs_for
-
-    fs = _fs_for(spark, path)
-    sidecar = path + ".params.json"
-    if not fs.exists(sidecar):
-        return
-    stored = json.loads(fs.read_text(sidecar))
-    if seed is not None and stored.get("seed") != seed:
-        raise ValueError(
-            f"{kind} table at {path} was built with seed="
-            f"{stored.get('seed')}, used with seed={seed} — sample "
-            "membership keys are incomparable"
-        )
-    if serve:
-        if k > stored.get("k", k):
-            raise ValueError(
-                f"{kind} table at {path} holds bottom-{stored['k']} "
-                f"per day; serving k={k} would exceed it and bias the "
-                "merged sample (merge identity needs k <= build k)"
-            )
-    elif stored.get("k") != k:
-        raise ValueError(
-            f"{kind} table at {path} was built with k={stored['k']}; "
-            f"updating with k={k} would mix sample sizes across days"
-        )
-
-
-def _write_bk_params(spark: SparkSession, path: str, k: int, seed: int) -> None:
-    import json
-
-    from pond_spark.catalog import _fs_for
-
-    _fs_for(spark, path).write_text(
-        path + ".params.json", json.dumps({"k": int(k), "seed": int(seed)})
+def _value_daily(
+    logs: DataFrame, k: int, value_col: str, id_col: str, site_col: str,
+    ts_col: str, seed: int,
+) -> DataFrame:
+    rows = _day_rows(
+        logs, ts_col, value_col, site=F.col(site_col), value=F.col(value_col),
+        bk=_bk_key(id_col, seed), rid=F.col(id_col),
     )
-
-
-#: CM hash-family version: 2 = per-row MULTIPLIERS (cm_row_mult, the
-#: r6 fix); 1 = the pre-r6 per-row additive offsets. Cells from the
-#: two families land in different columns, so merging them corrupts
-#: counts and can break CM's never-underestimate guarantee — tables
-#: are stamped and update/serve refuse on mismatch (ADVICE r6).
-CM_HASH_VERSION = 2
-
-
-def _write_cm_params(
-    spark: SparkSession, path: str, depth: int, width: int
-) -> None:
-    import json
-
-    from pond_spark.catalog import _fs_for
-
-    _fs_for(spark, path).write_text(
-        path + ".params.json",
-        json.dumps(
-            {
-                "hash_version": CM_HASH_VERSION,
-                "depth": int(depth),
-                "width": int(width),
-            }
-        ),
-    )
-
-
-def _check_cm_params(
-    spark: SparkSession,
-    path: str,
-    depth: int | None = None,
-    width: int | None = None,
-) -> None:
-    """Refuse to update or serve a CM table whose sidecar disagrees on
-    hash family, depth or width — cell indices are a function of all
-    three, so a mismatch silently mixes incompatible grids (merged
-    cells land in wrong columns; the min-over-rows estimate can fall
-    BELOW the true count). Tables written before the sidecar existed
-    (both hash families, indistinguishable) validate against nothing —
-    best-effort, like the bottom-k sidecar. Sidecar I/O through
-    catalog._fs_for so hdfs://-style tables validate too (ADVICE r7)."""
-    import json
-
-    from pond_spark.catalog import _fs_for
-
-    fs = _fs_for(spark, path)
-    sidecar = path + ".params.json"
-    if not fs.exists(sidecar):
-        return
-    stored = json.loads(fs.read_text(sidecar))
-    if stored.get("hash_version", CM_HASH_VERSION) != CM_HASH_VERSION:
-        raise ValueError(
-            f"CM table at {path} was built with hash_version="
-            f"{stored.get('hash_version')} (this build is "
-            f"{CM_HASH_VERSION}) — rebuild the table; mixing families "
-            "corrupts cells"
-        )
-    for name, got in (("depth", depth), ("width", width)):
-        if got is not None and stored.get(name, got) != got:
-            raise ValueError(
-                f"CM table at {path} was built with {name}="
-                f"{stored.get(name)}, used with {name}={got} — cell "
-                "indices are incompatible"
-            )
+    return _bottom_k(rows, k)
 
 
 def build_value_sketches(
@@ -355,31 +378,33 @@ def build_value_sketches(
     across engines, so oracle twins replay it exactly instead of
     settling for an accuracy envelope. Error is the uniform-sampling
     bound O(1/sqrt(k)) on rank, ~12% rank error at k=64; raise k for
-    tighter tails (cost is linear in k per group).
+    tighter tails (cost is linear in k per group). (k, seed) are
+    pinned in the params sidecar.
     """
-    ranked = (
-        logs.filter(F.col(ts_col).isNotNull() & F.col(value_col).isNotNull())
-        .select(
-            F.date_format(F.col(ts_col), "yyyy-MM-dd").alias("day"),
-            F.col(site_col).alias("site"),
-            F.col(value_col).alias("value"),
-            _bk_key(id_col, seed).alias("bk"),
-            F.col(id_col).alias("rid"),
-        )
-    )
-    from pyspark.sql.window import Window
+    daily = _value_daily(logs, k, value_col, id_col, site_col, ts_col, seed)
+    _write_days(daily, path, "build", "value sketch", {"k": k, "seed": seed})
 
-    w = Window.partitionBy("day", "site").orderBy("bk", "rid")
-    sample = ranked.withColumn("_rn", F.row_number().over(w)).filter(
-        F.col("_rn") <= k
-    ).drop("_rn")
-    (
-        sample.repartition("day")
-        .write.mode("overwrite")
-        .partitionBy("day")
-        .parquet(path)
+
+def update_value_sketches(
+    logs: DataFrame,
+    path: str,
+    k: int = 64,
+    value_col: str = "value",
+    id_col: str = "id",
+    site_col: str = "site",
+    ts_col: str = "timestamp",
+    seed: int = 1,
+) -> None:
+    """Incremental maintenance, the update_uniques_sketches twin: fold
+    a NEW batch into the sample table — the merge re-takes bottom-k
+    over the batch's and the touched days' samples, equal to a full
+    rebuild by the bottom-k merge identity (asserted in tests).
+    (k, seed) must match the sidecar exactly."""
+    daily = _value_daily(logs, k, value_col, id_col, site_col, ts_col, seed)
+    _write_days(
+        daily, path, "fold", "value sketch", {"k": k, "seed": seed},
+        merge=lambda df: _bottom_k(df, k),
     )
-    _write_bk_params(logs.sparkSession, path, k, seed)
 
 
 def value_quantiles_over_range(
@@ -401,16 +426,9 @@ def value_quantiles_over_range(
 
     ``k`` must not exceed the table's build-time k (validated against
     the params sidecar) — the merge identity breaks upward."""
-    from pyspark.sql.window import Window
-
-    _check_bk_params(spark, path, k, seed=None, serve=True)
-    sk = spark.read.parquet(path).filter(
-        (F.col("day") >= start_day) & (F.col("day") <= end_day)
-    )
-    wk = Window.partitionBy("site").orderBy("bk", "rid")
-    merged = sk.withColumn("_rn", F.row_number().over(wk)).filter(
-        F.col("_rn") <= k
-    )
+    _check_params(spark, path, "value sketch", {"k": k}, serve=True)
+    sk = _read_days(spark, path, start_day, end_day)
+    merged = _bottom_k(sk, k, by=("site",))
     wv = Window.partitionBy("site").orderBy("value", "rid")
     sized = (
         merged.withColumn("_vr", F.row_number().over(wv))
@@ -440,6 +458,18 @@ def value_quantiles_over_range(
 CM_DEPTH = 4
 CM_WIDTH = 1024
 
+#: CM hash-family version: 2 = per-row MULTIPLIERS (cm_row_mult, the
+#: r6 fix); 1 = the pre-r6 per-row additive offsets. Cells from the
+#: two families land in different columns, so merging them corrupts
+#: counts and can break CM's never-underestimate guarantee — tables
+#: are stamped and update/serve refuse on mismatch (ADVICE r6).
+CM_HASH_VERSION = 2
+
+
+def _cm_params(depth: int | None = None, width: int | None = None) -> dict:
+    """A CM table's sidecar: hash family, depth and width."""
+    return {"hash_version": CM_HASH_VERSION, "depth": depth, "width": width}
+
 
 def cm_row_mult(row: int) -> int:
     """Row-``row`` MULTIPLIER: ``BK_A^(row+1) mod p``. The rows must
@@ -466,6 +496,32 @@ def _cm_col(keyhash: Column, row: int, width: int) -> Column:
     )
 
 
+def _cm_sum(df: DataFrame) -> DataFrame:
+    """CM merge: cell-wise addition."""
+    return df.groupBy("day", "row", "col").agg(F.sum("cnt").alias("cnt"))
+
+
+def _cm_daily(
+    logs: DataFrame, key_col: str, ts_col: str, depth: int, width: int
+) -> DataFrame:
+    keyed = (
+        _day_rows(logs, ts_col, key_col, key=F.col(key_col))
+        .groupBy("day", "key")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+        .withColumn("kh", fingerprint(F.col("key")))
+    )
+    cells = [
+        F.struct(
+            F.lit(r).alias("row"), _cm_col(F.col("kh"), r, width).alias("col")
+        )
+        for r in range(depth)
+    ]
+    return _cm_sum(
+        keyed.select("day", "cnt", F.explode(F.array(*cells)).alias("rc"))
+        .select("day", "rc.row", "rc.col", "cnt")
+    )
+
+
 def build_cm_sketches(
     logs: DataFrame,
     path: str,
@@ -486,43 +542,8 @@ def build_cm_sketches(
     a hard hash-match oracle, not an accuracy envelope: the estimate
     is DETERMINISTIC; only its relation to the true count is
     probabilistic (est ≥ true always; est ≤ true + ε·N w.p. 1-δ)."""
-    from pond_spark.functions.text import fingerprint
-
-    keyed = (
-        logs.filter(F.col(ts_col).isNotNull() & F.col(key_col).isNotNull())
-        .groupBy(
-            F.date_format(F.col(ts_col), "yyyy-MM-dd").alias("day"),
-            F.col(key_col).alias("key"),
-        )
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .withColumn("kh", fingerprint(F.col("key")))
-    )
-    cells = (
-        keyed.select(
-            "day",
-            "cnt",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(r).alias("row"),
-                            _cm_col(F.col("kh"), r, width).alias("col"),
-                        )
-                        for r in range(depth)
-                    ]
-                )
-            ).alias("rc"),
-        )
-        .groupBy("day", F.col("rc.row").alias("row"), F.col("rc.col").alias("col"))
-        .agg(F.sum("cnt").alias("cnt"))
-    )
-    (
-        cells.repartition("day")
-        .write.mode("overwrite")
-        .partitionBy("day")
-        .parquet(path)
-    )
-    _write_cm_params(logs.sparkSession, path, depth, width)
+    daily = _cm_daily(logs, key_col, ts_col, depth, width)
+    _write_days(daily, path, "build", "CM", _cm_params(depth, width))
 
 
 def update_cm_sketches(
@@ -533,60 +554,32 @@ def update_cm_sketches(
     depth: int = CM_DEPTH,
     width: int = CM_WIDTH,
 ) -> None:
-    """Incremental maintenance (update_uniques_sketches twin): CM
-    merge is cell-wise ADDITION, so folding a new batch = add its
-    day-cells to the existing cells of exactly the touched days and
-    rewrite only those partitions. Equal to a full rebuild over
-    old+new (asserted in tests); single-writer like every mutable
-    layout here."""
-    from pond_spark.functions.text import fingerprint
+    """Incremental maintenance (update_uniques_sketches twin): fold a
+    NEW batch by adding its day-cells to the existing cells of exactly
+    the touched days. Equal to a full rebuild over old+new (asserted
+    in tests) — ``logs`` must hold only events the table has not
+    counted yet; to recompute days from a store that holds them all,
+    use replace_cm_days."""
+    daily = _cm_daily(logs, key_col, ts_col, depth, width)
+    _write_days(daily, path, "fold", "CM", _cm_params(depth, width), _cm_sum)
 
-    spark = logs.sparkSession
-    _check_cm_params(spark, path, depth, width)
-    keyed = (
-        logs.filter(F.col(ts_col).isNotNull() & F.col(key_col).isNotNull())
-        .groupBy(
-            F.date_format(F.col(ts_col), "yyyy-MM-dd").alias("day"),
-            F.col(key_col).alias("key"),
-        )
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .withColumn("kh", fingerprint(F.col("key")))
+
+def replace_cm_days(
+    logs: DataFrame,
+    path: str,
+    days: list[str],
+    key_col: str = "message",
+    ts_col: str = "timestamp",
+    depth: int = CM_DEPTH,
+    width: int = CM_WIDTH,
+) -> None:
+    """Recompute only ``days`` from ``logs`` (all of their events) and
+    rewrite those day partitions — idempotent, unlike a fold of the
+    same events; the kmv.update_kmv_sketches counterpart."""
+    daily = _cm_daily(logs, key_col, ts_col, depth, width)
+    _write_days(
+        daily, path, "replace", "CM", _cm_params(depth, width), days=days
     )
-    batch = (
-        keyed.select(
-            "day",
-            "cnt",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(r).alias("row"),
-                            _cm_col(F.col("kh"), r, width).alias("col"),
-                        )
-                        for r in range(depth)
-                    ]
-                )
-            ).alias("rc"),
-        )
-        .groupBy("day", F.col("rc.row").alias("row"), F.col("rc.col").alias("col"))
-        .agg(F.sum("cnt").alias("cnt"))
-    )
-    batch = batch.persist()  # feeds the days collect AND the write
-    try:
-        days = [r.day for r in batch.select("day").distinct().collect()]
-        if not days:
-            return
-        existing = spark.read.parquet(path).filter(
-            F.col("day").isin(days)
-        ).select("day", "row", "col", "cnt")
-        merged = (
-            batch.unionByName(existing)
-            .groupBy("day", "row", "col")
-            .agg(F.sum("cnt").alias("cnt"))
-        )
-        _overwrite_day_partitions(spark, merged, path)
-    finally:
-        batch.unpersist()
 
 
 def cm_estimate_over_range(
@@ -606,12 +599,9 @@ def cm_estimate_over_range(
     over its ``depth`` cells — ``depth`` chained broadcast joins
     against the merged grid, zero shuffles on the key relation.
     Returns ``(key, est)``; est ≥ the true range count, always."""
-    from pond_spark.functions.text import fingerprint
-
-    _check_cm_params(spark, path, depth, width)
+    _check_params(spark, path, "CM", _cm_params(depth, width))
     cells = (
-        spark.read.parquet(path)
-        .filter((F.col("day") >= start_day) & (F.col("day") <= end_day))
+        _read_days(spark, path, start_day, end_day)
         .groupBy("row", "col")
         .agg(F.sum("cnt").alias("cnt"))
     )
@@ -629,53 +619,3 @@ def cm_estimate_over_range(
         )
         ests.append(F.coalesce(F.col(f"_n{r}"), F.lit(0)))
     return out.select("key", F.least(*ests).cast("long").alias("est"))
-
-
-def update_value_sketches(
-    logs: DataFrame,
-    path: str,
-    k: int = 64,
-    value_col: str = "value",
-    id_col: str = "id",
-    site_col: str = "site",
-    ts_col: str = "timestamp",
-    seed: int = 1,
-) -> None:
-    """Incremental maintenance, the update_uniques_sketches twin: fold
-    a NEW batch into the sample table by unioning the batch's
-    per-(day, site) bottom-k with the existing samples of exactly the
-    touched days and re-taking bottom-k — equal to a full rebuild by
-    the bottom-k merge identity (asserted in tests). Only touched day
-    partitions rewrite (dynamic partition overwrite)."""
-    from pyspark.sql.window import Window
-
-    spark = logs.sparkSession
-    batch = (
-        logs.filter(F.col(ts_col).isNotNull() & F.col(value_col).isNotNull())
-        .select(
-            F.date_format(F.col(ts_col), "yyyy-MM-dd").alias("day"),
-            F.col(site_col).alias("site"),
-            F.col(value_col).alias("value"),
-            _bk_key(id_col, seed).alias("bk"),
-            F.col(id_col).alias("rid"),
-        )
-    )
-    _check_bk_params(spark, path, k, seed)
-    batch = batch.persist()  # feeds the days collect AND the write
-    try:
-        days = [r.day for r in batch.select("day").distinct().collect()]
-        if not days:
-            return
-        existing = spark.read.parquet(path).filter(
-            F.col("day").isin(days)
-        ).select("day", "site", "value", "bk", "rid")
-        w = Window.partitionBy("day", "site").orderBy("bk", "rid")
-        merged = (
-            batch.unionByName(existing)
-            .withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= k)
-            .drop("_rn")
-        )
-        _overwrite_day_partitions(spark, merged, path)
-    finally:
-        batch.unpersist()

@@ -47,6 +47,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pond_spark.catalog import _fs_for, read_replaced_text, replace_text
 from pond_spark.similarity.brute import _dot, _norm, _safe_cos_div
 from pond_spark.similarity.ivf import (
     ivf_assign,
@@ -104,8 +105,8 @@ def build_ivf_index(
         "centroids": centroids,
         "pq_codebooks": pq_codebooks,
     }
-    with open(os.path.join(path, _META), "w") as fh:
-        json.dump(meta, fh)
+    fs = _fs_for(df.sparkSession, path)
+    replace_text(fs, os.path.join(path, _META), json.dumps(meta))
     return IVFIndex(df.sparkSession, path)
 
 
@@ -115,8 +116,8 @@ class IVFIndex:
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
-        with open(os.path.join(path, _META)) as fh:
-            meta = json.load(fh)
+        fs = _fs_for(spark, path)
+        meta = json.loads(read_replaced_text(fs, os.path.join(path, _META)))
         self.centroids: list[list[float]] = meta["centroids"]
         self.vec_col: str = meta["vec_col"]
         self.id_col: str = meta["id_col"]

@@ -619,6 +619,33 @@ def test_cli_sketch_group_cm_estimate_and_join_size(
     assert "est=" in out
 
 
+def test_cli_sketch_update_cm_recomputes_named_days(spark, tmp_path, capsys):
+    """``update-cm PATH DAY...`` recomputes the named days from the
+    store, so repeating it is idempotent. It used to fold the whole
+    store into cells that already held it: one update turned est=10
+    into est=20."""
+    from pond_spark.cli import main
+    from pond_spark.schema import LOG_SCHEMA
+    from pond_spark.sources.store import LogStore
+    from tests.conftest import ts
+
+    store = str(tmp_path / "store")
+    blank = dict.fromkeys(f.name for f in LOG_SCHEMA.fields)
+    rows = [{**blank, "id": i, "timestamp": ts(1, i), "site": "a"}
+            for i in range(10)]
+    LogStore(spark, store).append(spark.createDataFrame(rows, LOG_SCHEMA))
+    path = str(tmp_path / "cm")
+    base = [f"--store={store}", "sketch"]
+    assert main([*base, "build-cm", path, "--key-col=site"]) == 0
+    for _ in range(2):
+        assert main([*base, "update-cm", path, "2024-01-01",
+                     "--key-col=site"]) == 0
+        assert "updated cm path=" in capsys.readouterr().out
+        assert main([*base, "cm-estimate", path, "2020-01-01", "2030-01-01",
+                     "a"]) == 0
+        assert "key=a est=10" in capsys.readouterr().out
+
+
 def test_cli_pack_summary_and_out(spark, store_dir, tmp_path, capsys):
     from pond_spark.cli import main
 
@@ -1195,6 +1222,25 @@ def test_cli_group_usage_errors_exit_2_before_spark(no_spark, capsys, argv, need
     assert out == ""
     assert needle in err and "Traceback" not in err
     assert f"usage: ... {argv[0]}" in err  # rendered from the group table
+
+
+@pytest.mark.parametrize("argv,code", [
+    (["inject"], 2),
+    (["inject", "a", "b"], 2),
+    (["clone"], 2),
+    (["clone", "a", "b"], 2),
+    (["sketch", "update-cm", "P"], 2),
+    (["cancel"], 0),
+])
+def test_cli_plain_commands_start_no_spark(no_spark, capsys, argv, code):
+    """inject/clone arity errors and cancel (which has nothing to do)
+    return before a JVM starts."""
+    from pond_spark.cli import main
+
+    assert main(["--store=/nonexistent", *argv]) == code
+    out, err = capsys.readouterr()
+    assert out == "" and "Traceback" not in err
+    assert ("usage" in err) == (code == 2)
 
 
 def test_cli_query_usage_error_exits_2_before_spark(no_spark, capsys):

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 
 from pond_spark.functions.anonymize import anonymize_ip
@@ -1453,6 +1454,88 @@ def test_sketch_sidecars_work_on_schemed_paths(spark, tmp_path):
         ).count()
         == 1
     )
+
+
+def _sketch_events(spark, ids, days):
+    rows = [
+        (
+            i,
+            dt.datetime(2024, 3, days[i % len(days)], i % 24),
+            f"s{i % 3}",
+            f"h{i % 11}",
+            f"m{i % 7}",
+            float(i % 97),
+        )
+        for i in ids
+    ]
+    return spark.createDataFrame(
+        rows,
+        "id long, timestamp timestamp, site string, remote_host string,"
+        " message string, value double",
+    )
+
+
+@pytest.mark.parametrize("family", ["hll", "value", "cm", "kmv"])
+def test_sketch_update_never_rewrites_untouched_days(
+    spark, tmp_path, monkeypatch, family
+):
+    """An update that touches one day rewrites only that day's
+    directory: every other day keeps the same file names and bytes.
+    The dynamic overwrite is a writer option, so the update never sets
+    the process-global partitionOverwriteMode session conf."""
+    from pond_spark.operators import kmv, sketches
+
+    day = "2024-03-02"
+    # family -> (build(logs, path), update(new events, all events, path))
+    build, update = {
+        "hll": (
+            sketches.build_uniques_sketches,
+            lambda new, every, p: sketches.update_uniques_sketches(new, p),
+        ),
+        "value": (
+            lambda logs, p: sketches.build_value_sketches(logs, p, k=8),
+            lambda new, every, p: sketches.update_value_sketches(new, p, k=8),
+        ),
+        "cm": (
+            sketches.build_cm_sketches,
+            lambda new, every, p: sketches.update_cm_sketches(new, p),
+        ),
+        "kmv": (
+            lambda logs, p: kmv.build_kmv_sketches(logs, p, k=8),
+            lambda new, every, p: kmv.update_kmv_sketches(every, p, [day], k=8),
+        ),
+    }[family]
+    logs = _sketch_events(spark, range(300), [1, 2, 3])
+    new = _sketch_events(spark, range(1000, 1100), [2])
+    path = str(tmp_path / family)
+    build(logs, path)
+
+    def files():
+        return {
+            (d.name, f.name): f.read_bytes()
+            for d in (tmp_path / family).glob("day=*")
+            for f in d.iterdir()
+        }
+
+    before = files()
+    conf_keys = []
+    real_set = spark.conf.set
+    monkeypatch.setattr(
+        spark.conf, "set", lambda k, v: (conf_keys.append(k), real_set(k, v))
+    )
+    update(new, logs.unionByName(new), path)
+    monkeypatch.undo()
+    after = files()
+    split = lambda snap: (  # noqa: E731
+        {key: b for key, b in snap.items() if key[0] != f"day={day}"},
+        {key for key in snap if key[0] == f"day={day}"},
+    )
+    (kept_before, touched_before), (kept_after, touched_after) = (
+        split(before), split(after)
+    )
+    assert kept_before and kept_after == kept_before
+    assert touched_after and touched_after != touched_before  # rewritten
+    assert not [k for k in conf_keys if "partitionOverwriteMode" in k]
 
 
 def test_cm_rows_are_collision_decorrelated():

@@ -1265,3 +1265,19 @@ def test_cross_scores_unguarded_collect_is_capped(spark, vectors):
         cross_scores(left.limit(1), big, max_right_rows=299)
     out = cross_scores(left, vectors, max_right_rows=n)
     assert out.count() == 3 * n
+
+
+def test_ivf_index_works_on_schemed_paths(vectors, tmp_path):
+    """build_ivf_index writes, and IVFIndex reads, the quantizer meta
+    through the path's filesystem: a ``file:`` URI (which builtin
+    open() cannot address) builds, reopens and searches."""
+    from pond_spark.similarity.index import IVFIndex, build_ivf_index
+
+    path = f"file:{tmp_path}/ivf_schemed"
+    idx = build_ivf_index(vectors, path, n_centroids=4, sample_n=102)
+    again = IVFIndex(vectors.sparkSession, path)
+    assert again.centroids == idx.centroids
+    q = [0.5] * 16
+    assert [r.vec_id for r in again.search(q, k=5, nprobe=2).collect()] == [
+        r.vec_id for r in idx.search(q, k=5, nprobe=2).collect()
+    ]

@@ -793,3 +793,35 @@ def test_short_docs_have_zero_ngrams(spark):
     assert out[1].dup_3gram_frac == 0.0
     assert out[2].dup_3gram_frac == 0.0  # no trigram exists
     assert out[3].top_2gram_char_frac > 0.0  # real bigrams scored
+
+
+def test_text_index_works_on_schemed_paths(spark, tmp_path):
+    """The index meta goes through the path's filesystem like the
+    segments do: build, search, append and compact on a ``file:`` URI
+    (builtin open() cannot address one), and the meta is replaced
+    through a staged sibling that never outlives the write."""
+    from pond_spark.catalog import _HadoopFS
+    from pond_spark.functions.bm25 import bm25_search
+    from pond_spark.functions.lexindex import TextIndex, build_text_index
+
+    old = spark.createDataFrame(
+        [(1, "apple banana"), (2, "banana date")], "doc_id long, text string"
+    )
+    new = spark.createDataFrame([(3, "apple fig")], "doc_id long, text string")
+    path = f"file:{tmp_path}/tix"
+    idx = build_text_index(old, path, n_buckets=4)
+    idx.append(new)
+    idx = TextIndex(spark, path)  # reopen: the meta reads back remotely
+    assert idx.n_docs == 3 and len(idx.meta["segments"]) == 2
+    want = [
+        (r.doc_id, r.score_q)
+        for r in bm25_search(old.unionAll(new), ["apple"], k=5).collect()
+    ]
+    assert [
+        (r.doc_id, r.score_q) for r in idx.search(["apple"], k=5).collect()
+    ] == want
+    idx.compact()
+    assert len(TextIndex(spark, path).meta["segments"]) == 1
+    fs = _HadoopFS(spark, path)
+    assert fs.exists(f"{path}/_text_index_meta.json")
+    assert not fs.exists(f"{path}/_text_index_meta.json._staged")
