@@ -2,11 +2,13 @@
 implementation of the read-bootstrap / parameter-sidecar /
 crash-safe-compact discipline that DigestCatalog (dedup/exact.py),
 MinHashCatalog (dedup/minhash.py) and EmbeddingCatalog
-(similarity/catalog.py) all follow. The catalogs keep their
-domain-specific key building and probe joins; everything about HOW a
-catalog persists lives here exactly once, so a fix to the failure
-discipline (e.g. a Spark release renaming the PATH_NOT_FOUND
-condition) lands in one place.
+(similarity/catalog.py) all follow (:class:`CatalogStore`).
+Everything about HOW a catalog persists lives here exactly once, so a
+fix to the failure discipline (e.g. a Spark release renaming the
+PATH_NOT_FOUND condition) lands in one place. The two keyed gates,
+MinHash and Embedding, also share their probe, candidate join,
+hot-bucket cap, occupancy advisory and maintenance jobs through
+:class:`GateCatalog`; they keep only their key building.
 
 The discipline, shared verbatim by all three:
 
@@ -484,46 +486,39 @@ class CatalogStore:
         if self.bucket_by:
             if self._ensure_table():
                 return self.spark.table(self._table)
-            old = self.path + "._old"
-            if self.fs.exists(old):
-                raise RuntimeError(
-                    f"{self.kind} missing at {self.path} but a "
-                    f"compaction remnant exists at {old} — a compact() "
-                    f"crashed mid-swap. Recover with: mv {old} "
-                    f"{self.path} (then re-run compact)"
+        else:
+            try:
+                # mergeSchema: pre-retention files lack registered_ts;
+                # the merged footer keeps the column and fills NULL for
+                # old files. Driver-side O(#files) footer reads —
+                # bounded by the compact() discipline, fine for a
+                # maintenance-grade reader (the data plane reads only
+                # key columns anyway).
+                df = self.spark.read.option("mergeSchema", "true").parquet(
+                    self.path
                 )
-            return self.spark.createDataFrame(
-                [], self.empty_schema + f", {TS_COL} long"
-            )
-        try:
-            # mergeSchema: pre-retention files lack registered_ts; the
-            # merged footer keeps the column and fills NULL for old
-            # files. Driver-side O(#files) footer reads — bounded by
-            # the compact() discipline, fine for a maintenance-grade
-            # reader (the data plane reads only key columns anyway).
-            df = self.spark.read.option("mergeSchema", "true").parquet(
-                self.path
-            )
-        except AnalysisException as e:
-            get_cond = getattr(e, "getCondition", None) or getattr(
-                e, "getErrorClass", None
-            )
-            if get_cond and get_cond() == "PATH_NOT_FOUND":
-                old = self.path + "._old"
-                if self.fs.exists(old):
-                    raise RuntimeError(
-                        f"{self.kind} missing at {self.path} but a "
-                        f"compaction remnant exists at {old} — a "
-                        "compact() crashed mid-swap. Recover with: "
-                        f"mv {old} {self.path} (then re-run compact)"
-                    ) from e
-                return self.spark.createDataFrame(
-                    [], self.empty_schema + f", {TS_COL} long"
+            except AnalysisException as e:
+                get_cond = getattr(e, "getCondition", None) or getattr(
+                    e, "getErrorClass", None
                 )
-            raise
-        if TS_COL not in df.columns:
-            df = df.withColumn(TS_COL, F.lit(None).cast("long"))
-        return df
+                if not (get_cond and get_cond() == "PATH_NOT_FOUND"):
+                    raise
+            else:
+                if TS_COL not in df.columns:
+                    df = df.withColumn(TS_COL, F.lit(None).cast("long"))
+                return df
+        # the path is missing: a first run, unless a compact() died
+        # between its two renames
+        old = self.path + "._old"
+        if self.fs.exists(old):
+            raise RuntimeError(
+                f"{self.kind} missing at {self.path} but a compaction "
+                f"remnant exists at {old} — a compact() crashed mid-swap. "
+                f"Recover with: mv {old} {self.path} (then re-run compact)"
+            )
+        return self.spark.createDataFrame(
+            [], self.empty_schema + f", {TS_COL} long"
+        )
 
     def _mutation_lease(self):
         """Context for one mutation: a WriterLease when
@@ -1030,26 +1025,23 @@ class LeaseLostError(RuntimeError):
     """The lease was taken over (ttl expiry) while we held it."""
 
 
-def bucket_stats(
-    keys: DataFrame, key_cols, cap: int | None = None
-) -> dict[str, int]:
-    """Occupancy histogram of a catalog's bucket-key table — the probe
-    the round-7 10M-doc stress analysis ran by hand (PERF_NOTES r7:
-    nbits=8 degenerates to 256 always-hot buckets at 10M vectors; the
+def bucket_stats(counts: DataFrame, cap: int | None = None) -> dict[str, int]:
+    """Occupancy histogram of a catalog's key table — the probe the
+    round-7 10M-doc stress analysis ran by hand (PERF_NOTES r7: nbits=8
+    degenerates to 256 always-hot buckets at 10M vectors; the
     hot-bucket cap is the quadratic-tail guard), now a first-class
     advisory (VERDICT r7 ask #4).
 
-    One groupBy over the ids+ints key table (never documents), one
-    1-row aggregate over the per-bucket counts. Returns integers only:
-    ``n_rows`` (stored keys), ``n_buckets``, occupancy ``p50/p90/p99/
-    max``, ``pair_mass`` = sum c*(c-1)/2 (the candidate pairs an
-    uncapped self-join of the catalog would generate — the quantity
-    that explodes on hub buckets), and with ``cap``:
-    ``hot_buckets`` (occupancy > cap, i.e. buckets the cap silences)
-    and ``pair_mass_capped``."""
+    ``counts`` is the per-key occupancy frame (column ``c``, see
+    :meth:`GateCatalog._occupancy`); one 1-row aggregate over it.
+    Returns integers only: ``n_rows`` (stored (key, id) rows),
+    ``n_buckets``, occupancy ``p50/p90/p99/max``, ``pair_mass`` = sum
+    c*(c-1)/2 (the candidate pairs an uncapped self-join of the
+    catalog would generate — the quantity that explodes on hub
+    buckets), and with ``cap``: ``hot_buckets`` (occupancy > cap, i.e.
+    buckets the cap silences) and ``pair_mass_capped``."""
     from pyspark.sql import functions as F
 
-    counts = keys.groupBy(*key_cols).agg(F.count(F.lit(1)).alias("c"))
     aggs = [
         F.count(F.lit(1)).alias("n_buckets"),
         F.sum("c").alias("n_rows"),
@@ -1092,3 +1084,167 @@ def recommend_cap(stats: dict[str, int], floor: int = 16) -> int:
     hub/boilerplate buckets — never on the working mass), floored so a
     tiny catalog doesn't recommend a cap that silences normal buckets."""
     return max(int(floor), int(stats["occ_p99"]))
+
+
+class GateCatalog:
+    """A cross-run dedup gate: a persisted table of ``(id, key...)``
+    rows that each new batch, keyed the same way, probes. The two
+    keyed families subclass it — ``MinHashCatalog`` (LSH band keys,
+    dedup/minhash.py) and ``EmbeddingCatalog`` (RHP ``(table,
+    bucket)`` keys, similarity/catalog.py) — and declare only their
+    parameters, store schema, keying and public signatures. The base
+    holds the key store (``_store``) and its sibling stores (the
+    embedding vectors), the probe, the candidate join with its
+    hot-bucket cap, the occupancy advisory and the maintenance jobs.
+    ``DigestCatalog`` (dedup/exact.py) has no ids or bucket keys and
+    uses :class:`CatalogStore` directly.
+
+    **Occupancy counts distinct ids per key** — in the hot-bucket cap,
+    the :meth:`advise` histogram and the embedding gate's overshoot
+    prediction. A key row registered twice (a re-run of a registered
+    batch) therefore counts once, and :meth:`compact`, a storage-only
+    rewrite that merges such twins, never changes a probe's result.
+
+    Subclasses set ``_ID`` (the stored id column) and ``_KEYS`` (the
+    key columns)."""
+
+    _ID: str
+    _KEYS: list[str]
+
+    def __init__(self, spark, path: str, params: dict, schema: str,
+                 kind: str, mismatch_hint: str,
+                 stored_defaults: dict | None = None):
+        self.spark = spark
+        self.path = path
+        self.params = params
+        # persistence discipline (sidecar pinning / bootstrap /
+        # remnant-refusal / crash-safe compact): CatalogStore
+        self._store = CatalogStore(
+            spark, path, schema, kind, params=params,
+            mismatch_hint=mismatch_hint, stored_defaults=stored_defaults,
+        )
+        #: stores that compact and expire with the key table, on the
+        #: same horizon (the embedding catalog's vectors)
+        self._siblings: list[CatalogStore] = []
+
+    def _read(self) -> DataFrame:
+        return self._store.read()
+
+    def _occupancy(self, keys: DataFrame) -> DataFrame:
+        """``(key..., c)``: the distinct ids stored under each key."""
+        from pyspark.sql import functions as F
+
+        return keys.groupBy(*self._KEYS).agg(
+            F.countDistinct(self._ID).alias("c")
+        )
+
+    def _filter(self, df: DataFrame, keyed: DataFrame, id_col: str) -> DataFrame:
+        """``df`` minus the rows whose keys (``keyed``: the batch's
+        ``(id, key...)`` rows) meet a stored key — a semi-join probe on
+        the key columns, then an anti-join on ``id_col``."""
+        from pyspark.sql import functions as F
+
+        hits = (
+            keyed.join(self._read().select(*self._KEYS), self._KEYS, "left_semi")
+            .select(F.col(self._ID).alias(id_col))
+            .distinct()
+        )
+        return df.join(hits, id_col, "left_anti")
+
+    def _candidates(
+        self,
+        keyed: DataFrame,
+        max_bucket_size: int | None = None,
+        self_pairs: bool = False,
+    ) -> DataFrame:
+        """Distinct ``(new_id, old_id)`` key collisions of the batch's
+        ``keyed`` rows with the store. ``max_bucket_size`` skips stored
+        keys holding more ids than that (a broadcast anti-join on the
+        hot key set): mega-clusters are exact-dup territory and would
+        multiply every colliding new id by the cluster size.
+        ``self_pairs=False`` drops ``new_id == old_id``, so re-probing
+        a registered batch yields nothing."""
+        from pyspark.sql import functions as F
+
+        cat = self._read()
+        if max_bucket_size is not None:
+            hot = (
+                self._occupancy(cat)
+                .filter(F.col("c") > max_bucket_size)
+                .select(*self._KEYS)
+            )
+            cat = cat.join(F.broadcast(hot), self._KEYS, "left_anti")
+        pairs = keyed.select(F.col(self._ID).alias("new_id"), *self._KEYS).join(
+            cat.select(F.col(self._ID).alias("old_id"), *self._KEYS), self._KEYS
+        )
+        if not self_pairs:
+            pairs = pairs.filter(F.col("new_id") != F.col("old_id"))
+        return pairs.select("new_id", "old_id").dropDuplicates(
+            ["new_id", "old_id"]
+        )
+
+    def advise(
+        self, max_bucket_size: int | None = None, snapshot: bool = False
+    ) -> dict:
+        """Bucket-occupancy advisory (VERDICT r7 ask #4): the key
+        histogram (:func:`bucket_stats`: p50/p90/p99/max occupancy,
+        candidate-pair mass) with the hot-bucket count at
+        ``max_bucket_size`` — or, when not given, at the recommended
+        cap, which costs one more histogram pass — plus
+        ``recommended_max_bucket_size`` (:func:`recommend_cap`: p99
+        occupancy floored at 16, so the cap engages only on the
+        hub/boilerplate tail). The key structure is sidecar-pinned and
+        not re-tunable without re-registering; the cap is the free
+        dial. Cost: a groupBy over the ids+ints key table — never
+        documents. ``snapshot=True`` appends the result to the
+        ``.advise.jsonl`` history."""
+        occ = self._occupancy(self._read())
+        cap = max_bucket_size
+        if cap is None:
+            cap = recommend_cap(bucket_stats(occ))
+        stats = bucket_stats(occ, cap=cap)
+        stats["recommended_max_bucket_size"] = recommend_cap(stats)
+        self._advise_fields(stats)
+        if snapshot:
+            self._store.snapshot_stats(stats)
+        return stats
+
+    def _advise_fields(self, stats: dict) -> None:
+        """Add the family's own fields to an :meth:`advise` result
+        (before it is snapshotted)."""
+
+    def advise_history(self) -> list[dict]:
+        """Persisted advisory snapshots, oldest first (round-9 #4):
+        how occupancy/pair-mass skew trends as the catalog grows,
+        without re-scanning anything."""
+        return self._store.stats_history()
+
+    def compact(self) -> None:
+        """Rewrite the key table — and each sibling — as one distinct
+        row set (newest stamp per row): repeated registers accumulate
+        small files that cost every future probe. Crash-safe double
+        rename (:meth:`CatalogStore.compact`); ``_read`` refuses to
+        bootstrap over a ``._old`` remnant."""
+        for store in [self._store, *self._siblings]:
+            store.compact()
+
+    def expire(self, before_ts: int) -> dict:
+        """Age-evict key rows registered before ``before_ts`` — the
+        reference's max_age discipline (src/Instance.cxx:190-203) for
+        the gate stores (a 10M-doc day leaves 236.8M MinHash band
+        rows; without eviction a year of runs is a multi-TB gate).
+        Eviction also lowers bucket occupancy, which drives the
+        verify-less embedding gate's false-drop rate. Evicted content
+        re-admits — and re-registers — on its next appearance.
+        Compaction-integrated, recorded in ``.retention.jsonl``; the
+        siblings expire on the same horizon, so the embedding verify
+        corpus never outlives its bucket keys. Returns the key table's
+        record (:meth:`CatalogStore.expire`)."""
+        rec = self._store.expire(before_ts)
+        for store in self._siblings:
+            store.expire(before_ts)
+        return rec
+
+    def retention_history(self) -> list[dict]:
+        """Recorded evictions, oldest first."""
+        return self._store.stats_history(suffix=".retention.jsonl")

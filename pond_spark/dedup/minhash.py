@@ -32,6 +32,7 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pond_spark.catalog import GateCatalog
 from pond_spark.util import fan_out
 
 # Mersenne-31: keeps a*x (a, x < p) under 2^62 — no int64 overflow in
@@ -351,7 +352,7 @@ def minhash_lsh_pairs(
     )
 
 
-class MinHashCatalog:
+class MinHashCatalog(GateCatalog):
     """Cross-run incremental NEAR-dedup: a persisted band-key table the
     next batch joins against — the near-dup sibling of
     ``exact.DigestCatalog`` (VERDICT r5 ask #8), mirroring the
@@ -383,6 +384,9 @@ class MinHashCatalog:
     rewrite and double-renames, and a crash between the renames leaves
     a ``._old`` remnant that the reader refuses to silently ignore."""
 
+    _ID = "doc_id"
+    _KEYS = ["band_key"]
+
     def __init__(
         self,
         spark,
@@ -392,29 +396,17 @@ class MinHashCatalog:
         n: int = 1,
         seed: int = 42,
     ):
-        from pond_spark.catalog import CatalogStore
-
-        self.spark = spark
-        self.path = path
         # key_hash joins the pinned parameters: catalogs banded with
         # the pre-r7 32-bit murmur3 keys are incomparable with the
         # 64-bit keys and must refuse to mix, not silently gate noise
-        self.params = {
-            "k": k, "bands": bands, "n": n, "seed": seed,
-            "key_hash": "xxhash64",
-        }
-        # persistence discipline (sidecar pinning / bootstrap /
-        # remnant-refusal / crash-safe compact): pond_spark.catalog
-        self._store = CatalogStore(
+        super().__init__(
             spark,
             path,
+            {"k": k, "bands": bands, "n": n, "seed": seed,
+             "key_hash": "xxhash64"},
             "doc_id long, band_key long",
             "minhash catalog",
-            params=self.params,
-            mismatch_hint=(
-                "band keys from different signature parameters are "
-                "incomparable"
-            ),
+            "band keys from different signature parameters are incomparable",
         )
 
     def _banded(
@@ -458,21 +450,12 @@ class MinHashCatalog:
             F.col("_band_key").alias("band_key"),
         )
 
-    def _read(self) -> DataFrame:
-        return self._store.read()
-
     def filter_new(
         self, df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
     ) -> DataFrame:
         """Rows sharing no band key with any registered doc. NULL-text
         rows always pass (they band to nothing — see _banded)."""
-        hits = (
-            self._banded(df, text_col, id_col)
-            .join(self._read().select("band_key"), "band_key", "left_semi")
-            .select(F.col("doc_id").alias(id_col))
-            .distinct()
-        )
-        return df.join(hits, id_col, "left_anti")
+        return self._filter(df, self._banded(df, text_col, id_col), id_col)
 
     def near_candidates(
         self,
@@ -487,26 +470,9 @@ class MinHashCatalog:
         already-registered batch) are dropped, so re-runs are
         idempotent. ``max_bucket_size`` mirrors minhash_lsh_pairs'
         boilerplate guard: catalog band keys shared by more than that
-        many stored docs are skipped (broadcast anti-join on the hot
-        key set) — mega-clusters are exact-dup territory and would
-        multiply every colliding new doc by the cluster size."""
-        cat = self._read()
-        if max_bucket_size is not None:
-            hot = (
-                cat.groupBy("band_key")
-                .count()
-                .filter(F.col("count") > max_bucket_size)
-                .select("band_key")
-            )
-            cat = cat.join(F.broadcast(hot), "band_key", "left_anti")
-        new = self._banded(df, text_col, id_col, grams=grams).select(
-            F.col("doc_id").alias("new_id"), "band_key"
-        )
-        return (
-            new.join(cat.withColumnRenamed("doc_id", "old_id"), "band_key")
-            .filter(F.col("new_id") != F.col("old_id"))
-            .select("new_id", "old_id")
-            .dropDuplicates(["new_id", "old_id"])
+        many stored docs are skipped (see GateCatalog._candidates)."""
+        return self._candidates(
+            self._banded(df, text_col, id_col, grams=grams), max_bucket_size
         )
 
     def register(
@@ -532,58 +498,3 @@ class MinHashCatalog:
         )
         if snapshot:
             self.advise(snapshot=True)
-
-    def compact(self) -> None:
-        """Rewrite as one distinct (doc_id, band_key) set — repeated
-        registers accumulate small files that cost every future probe.
-        Crash-safe double rename (pond_spark.catalog); ``_read``
-        refuses to bootstrap over a ``._old`` remnant."""
-        self._store.compact()
-
-    def expire(self, before_ts: int) -> dict:
-        """Age-evict band rows registered before ``before_ts`` — the
-        reference's max_age discipline (src/Instance.cxx:190-203) for
-        the near-dup gate store (a 10M-doc day leaves 236.8M band rows;
-        without eviction a year of runs is a multi-TB gate). Evicted
-        docs re-admit — and re-register — on next appearance.
-        Compaction-integrated, recorded in ``.retention.jsonl``."""
-        return self._store.expire(before_ts)
-
-    def retention_history(self) -> list[dict]:
-        """Recorded evictions, oldest first."""
-        return self._store.stats_history(suffix=".retention.jsonl")
-
-    def advise(
-        self, max_bucket_size: int | None = None, snapshot: bool = False
-    ) -> dict:
-        """Bucket-occupancy advisory (VERDICT r7 ask #4): the band-key
-        histogram (p50/p90/p99/max occupancy, candidate-pair mass) and
-        the hot-bucket count at ``max_bucket_size`` (or at the
-        recommendation when not given), plus a recommended probe-time
-        ``max_bucket_size`` — p99 occupancy floored at 16, so the cap
-        engages only on the hub/boilerplate tail the r7 10M stress
-        isolated (16 hot band keys = exactly the planted hub; capping
-        them removed 1M-per-10-docs accidental pairs). The band
-        STRUCTURE (k/bands/seed) is sidecar-pinned and not re-tunable
-        without re-registering; the cap is the free dial. Cost: one
-        groupBy over the ids+ints key table — never documents."""
-        from pond_spark.catalog import bucket_stats, recommend_cap
-
-        keys = self._store.read()
-        stats = bucket_stats(keys, ["band_key"])
-        cap = (
-            max_bucket_size
-            if max_bucket_size is not None
-            else recommend_cap(stats)
-        )
-        stats = bucket_stats(keys, ["band_key"], cap=cap)
-        stats["recommended_max_bucket_size"] = recommend_cap(stats)
-        if snapshot:
-            self._store.snapshot_stats(stats)
-        return stats
-
-    def advise_history(self) -> list[dict]:
-        """Persisted advisory snapshots, oldest first (round-9 #4):
-        how occupancy/pair-mass skew trends as the catalog grows,
-        without re-scanning anything."""
-        return self._store.stats_history()

@@ -106,6 +106,7 @@ _PARAM_WHY = {
     "hash_version": "rebuild the table; mixing hash families corrupts cells",
     "depth": "cell indices are incompatible",
     "width": "cell indices are incompatible",
+    "lg_k": "HLL unions of days at different lg_k fail every range serve",
 }
 
 
@@ -135,8 +136,8 @@ def _check_params(
     build k, while a larger k silently returns a non-uniform sample
     and biased estimates. A sidecar missing a parameter does not check
     it — so a CM sidecar without ``hash_version`` reads as the current
-    version — and a table with no sidecar (HLL, or written before the
-    sidecar existed) is not checked at all.
+    version — and a table with no sidecar (written before the sidecar
+    existed) is not checked at all.
 
     Sidecar I/O goes through catalog._fs_for, never builtin open():
     the parquet table itself supports hdfs://-style paths, so the
@@ -259,7 +260,7 @@ def build_uniques_sketches(
     ``partitionBy(day)``. The sketch column is the DataSketches binary
     — ~KBs per group at lg_k=12 regardless of cardinality."""
     daily = _hll_daily(logs, value_col, site_col, ts_col, lg_k)
-    _write_days(daily, path, "build")
+    _write_days(daily, path, "build", params={"lg_k": lg_k})
 
 
 def update_uniques_sketches(
@@ -273,9 +274,10 @@ def update_uniques_sketches(
     """Incremental maintenance: fold a NEW batch of events into the
     cube without rebuilding (``_write_days`` fold). Sketch union is
     exactly how HLL absorbs new members, so the result equals a full
-    rebuild over old+new (asserted in tests)."""
+    rebuild over old+new (asserted in tests). ``lg_k`` must match the
+    build's (pinned in the sidecar): a fold at another lg_k raises."""
     daily = _hll_daily(logs, value_col, site_col, ts_col, lg_k)
-    _write_days(daily, path, "fold", merge=_hll_merge)
+    _write_days(daily, path, "fold", "HLL", {"lg_k": lg_k}, merge=_hll_merge)
 
 
 def uniques_over_range(

@@ -36,9 +36,10 @@ catalogs (see DigestCatalog, exact.py).
 
 from __future__ import annotations
 
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from pond_spark.catalog import CatalogStore, GateCatalog
 
 __all__ = [
     "EmbeddingCatalog", "GateOvershootError", "rhp_gate_coefficient",
@@ -98,7 +99,7 @@ class GateOvershootError(RuntimeError):
     nbits, 71-99% of genuinely-NEW content was falsely gated)."""
 
 
-class EmbeddingCatalog:
+class EmbeddingCatalog(GateCatalog):
     """See module docstring. Two gate modes (VERDICT r8 #2 — the
     verify-less bucket gate's false-drop rate tracks stored-bucket
     occupancy, so it needs either occupancy headroom or a verify leg):
@@ -116,6 +117,9 @@ class EmbeddingCatalog:
       new vector that merely shares a bucket passes.
     """
 
+    _ID = "vec_id"
+    _KEYS = ["table", "bucket"]
+
     def __init__(
         self,
         spark,
@@ -127,31 +131,19 @@ class EmbeddingCatalog:
         store_vectors: bool = False,
         vector_buckets: int | None = None,
     ):
-        from pond_spark.catalog import CatalogStore
-
-        self.spark = spark
-        self.path = path
-        self.params = {
-            "dim": dim, "nbits": nbits, "n_tables": n_tables, "seed": seed,
-            "store_vectors": store_vectors,
-            "vector_buckets": vector_buckets,
-        }
-        # persistence discipline (sidecar pinning / bootstrap /
-        # remnant-refusal / crash-safe compact): pond_spark.catalog
-        self._store = CatalogStore(
+        super().__init__(
             spark,
             path,
+            {"dim": dim, "nbits": nbits, "n_tables": n_tables, "seed": seed,
+             "store_vectors": store_vectors,
+             "vector_buckets": vector_buckets},
             "vec_id long, table int, bucket long",
             "embedding catalog",
-            params=self.params,
-            mismatch_hint=(
-                "bucket keys from different hyperplanes are incomparable"
-            ),
+            "bucket keys from different hyperplanes are incomparable",
             # pre-r9 sidecars predate the verify leg: absent means the
             # catalog never stored vectors; pre-r10 sidecars predate
             # the bucketed sibling
-            stored_defaults={"store_vectors": False,
-                             "vector_buckets": None},
+            stored_defaults={"store_vectors": False, "vector_buckets": None},
         )
         # vectors live in a SIBLING store so probe joins stay ids+ints
         # (the key table never carries the payload); only the verify
@@ -160,21 +152,18 @@ class EmbeddingCatalog:
         # side plans with ZERO exchange — at 10M x dim-64 vectors the
         # ~4 GB payload otherwise crosses the wire on every day-2
         # probe; bucketed, only the candidate ids do.
-        self._vstore = (
-            CatalogStore(
+        self._vstore = None
+        if store_vectors:
+            self._vstore = CatalogStore(
                 spark,
                 path + ".vectors",
                 "vec_id long, vec array<float>",
                 "embedding catalog vectors",
                 bucket_by=(
-                    (["vec_id"], int(vector_buckets))
-                    if vector_buckets
-                    else None
+                    (["vec_id"], int(vector_buckets)) if vector_buckets else None
                 ),
             )
-            if store_vectors
-            else None
-        )
+            self._siblings.append(self._vstore)
 
     def _bucketed(
         self, df: DataFrame, vec_col: str, id_col: str
@@ -203,9 +192,6 @@ class EmbeddingCatalog:
         for b in parts[1:]:
             out = out.unionByName(b)
         return out
-
-    def _read(self) -> DataFrame:
-        return self._store.read()
 
     def filter_new(
         self,
@@ -251,17 +237,8 @@ class EmbeddingCatalog:
             # probe joins its own stored vector at cosine 1.0 and
             # drops (r9 stress caught this: 500k same-id repeats
             # sailed through the verified gate)
-            cand = (
-                self._bucketed(df, vec_col, id_col)
-                .select(F.col("vec_id").alias("new_id"), "table", "bucket")
-                .join(
-                    self._read().select(
-                        F.col("vec_id").alias("old_id"), "table", "bucket"
-                    ),
-                    ["table", "bucket"],
-                )
-                .select("new_id", "old_id")
-                .dropDuplicates(["new_id", "old_id"])
+            cand = self._candidates(
+                self._bucketed(df, vec_col, id_col), self_pairs=True
             )
             new_vecs = df.select(
                 F.col(id_col).alias("new_id"), F.col(vec_col).alias("_nv")
@@ -282,17 +259,7 @@ class EmbeddingCatalog:
             return df.join(hits, id_col, "left_anti")
         if max_overshoot is not None:
             self.gate_check(max_overshoot)
-        hits = (
-            self._bucketed(df, vec_col, id_col)
-            .join(
-                self._read().select("table", "bucket"),
-                ["table", "bucket"],
-                "left_semi",
-            )
-            .select(F.col("vec_id").alias(id_col))
-            .distinct()
-        )
-        return df.join(hits, id_col, "left_anti")
+        return self._filter(df, self._bucketed(df, vec_col, id_col), id_col)
 
     def predicted_gate_overshoot(self) -> float:
         """Predicted false-drop rate of the verify-less bucket gate on
@@ -319,9 +286,7 @@ class EmbeddingCatalog:
           rows singletons — G-T alone would read ~0 there).
         """
         rows = (
-            self._read()
-            .groupBy("table", "bucket")
-            .agg(F.count(F.lit(1)).alias("c"))
+            self._occupancy(self._read())
             .groupBy("table")
             .agg(
                 F.count(F.lit(1)).alias("occupied"),
@@ -380,28 +345,10 @@ class EmbeddingCatalog:
         downstream exact cosine verification. Self-collisions dropped
         (idempotent re-probes of a registered batch).
         ``max_bucket_size`` caps pathological hub buckets on the
-        stored side (broadcast anti-join on the hot key set), the
+        stored side (see GateCatalog._candidates), the
         minhash_lsh_pairs boilerplate rule."""
-        cat = self._read()
-        if max_bucket_size is not None:
-            hot = (
-                cat.groupBy("table", "bucket")
-                .count()
-                .filter(F.col("count") > max_bucket_size)
-                .select("table", "bucket")
-            )
-            cat = cat.join(F.broadcast(hot), ["table", "bucket"], "left_anti")
-        new = self._bucketed(df, vec_col, id_col).select(
-            F.col("vec_id").alias("new_id"), "table", "bucket"
-        )
-        return (
-            new.join(
-                cat.withColumnRenamed("vec_id", "old_id"),
-                ["table", "bucket"],
-            )
-            .filter(F.col("new_id") != F.col("old_id"))
-            .select("new_id", "old_id")
-            .dropDuplicates(["new_id", "old_id"])
+        return self._candidates(
+            self._bucketed(df, vec_col, id_col), max_bucket_size
         )
 
     def register(
@@ -446,60 +393,20 @@ class EmbeddingCatalog:
         if snapshot:
             self.advise(snapshot=True)
 
-    def compact(self) -> None:
-        """Keyed rewrite with the crash-safe double rename
-        (pond_spark.catalog); the vector sibling compacts too."""
-        self._store.compact()
-        if self._vstore is not None:
-            self._vstore.compact()
-
-    def expire(self, before_ts: int) -> dict:
-        """Age-evict bucket rows registered before ``before_ts`` — the
-        reference's max_age discipline (src/Instance.cxx:190-203) for
-        the semantic gate store. Doubly important here: eviction also
-        lowers bucket OCCUPANCY, which is what drives the verify-less
-        gate's false-drop rate (see advise()'s gate sizing). Evicted
-        vectors re-admit — and re-register — on next appearance.
-        Compaction-integrated, recorded in ``.retention.jsonl``; the
-        vector sibling expires on the same horizon so the verify
-        corpus never outlives its bucket keys."""
-        rec = self._store.expire(before_ts)
-        if self._vstore is not None:
-            self._vstore.expire(before_ts)
-        return rec
-
-    def retention_history(self) -> list[dict]:
-        """Recorded evictions, oldest first."""
-        return self._store.stats_history(suffix=".retention.jsonl")
-
-    def advise(
-        self, max_bucket_size: int | None = None, snapshot: bool = False
-    ) -> dict:
-        """Bucket-occupancy advisory (VERDICT r7 ask #4): the
-        (table, bucket) histogram and hot-bucket count (see
-        MinHashCatalog.advise), PLUS an nbits recommendation from the
-        registered volume: ``nbits = clamp(ceil(log2(n_vectors / 32)),
-        4, 24)`` — mean occupancy ~32 per table keeps probe fan-out
-        bounded while buckets stay populated. Grounding (PERF_NOTES r7
-        10M stress): nbits=8 degenerates to 256 always-hot buckets at
-        10M vectors, while nbits=20 (the formula gives 19) probes 1M
-        docs with a 134 MB ids+ints shuffle. Changing nbits requires
-        re-registering (bucket keys are hyperplane-pinned); the
-        advisory tells you when the catalog has outgrown its
-        build-time choice."""
+    def _advise_fields(self, stats: dict) -> None:
+        """advise() extras (see GateCatalog.advise for the histogram):
+        an nbits recommendation from the registered volume: ``nbits =
+        clamp(ceil(log2(n_vectors / 32)), 4, 24)`` — mean occupancy ~32
+        per table keeps probe fan-out bounded while buckets stay
+        populated. Grounding (PERF_NOTES r7 10M stress): nbits=8
+        degenerates to 256 always-hot buckets at 10M vectors, while
+        nbits=20 (the formula gives 19) probes 1M docs with a 134 MB
+        ids+ints shuffle. Changing nbits requires re-registering
+        (bucket keys are hyperplane-pinned); the advisory tells you
+        when the catalog has outgrown its build-time choice. Plus the
+        gate and verify sizing and the predicted gate overshoot."""
         import math
 
-        from pond_spark.catalog import bucket_stats, recommend_cap
-
-        keys = self._read()
-        stats = bucket_stats(keys, ["table", "bucket"])
-        cap = (
-            max_bucket_size
-            if max_bucket_size is not None
-            else recommend_cap(stats)
-        )
-        stats = bucket_stats(keys, ["table", "bucket"], cap=cap)
-        stats["recommended_max_bucket_size"] = recommend_cap(stats)
         n_vecs = stats["n_rows"] // max(1, int(self.params["n_tables"]))
         stats["n_vectors"] = n_vecs
         stats["nbits"] = int(self.params["nbits"])
@@ -558,10 +465,3 @@ class EmbeddingCatalog:
         stats["predicted_gate_overshoot_ppm"] = int(
             round(self.predicted_gate_overshoot() * 1_000_000)
         )
-        if snapshot:
-            self._store.snapshot_stats(stats)
-        return stats
-
-    def advise_history(self) -> list[dict]:
-        """Persisted advisory snapshots, oldest first (round-9 #4)."""
-        return self._store.stats_history()

@@ -163,6 +163,7 @@ class IVFIndex:
                 df.repartition(want)
                 .withColumn("ivf_list", F.lit(int(lid)))
                 .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
                 .partitionBy("ivf_list")
                 .parquet(self.path)
             )

@@ -36,8 +36,8 @@ def _micros_output(spark: SparkSession):
     which would silently kill both row-group time pruning and
     footer-based retention — but mutating the session conf permanently
     would leak the encoding into unrelated parquet writes elsewhere in
-    the same session (same save/restore discipline as
-    util.compact_partition_dirs)."""
+    the same session, so the old value is restored. (Parquet has no
+    writer option for the timestamp type.)"""
     key = "spark.sql.parquet.outputTimestampType"
     try:
         old = spark.conf.get(key)
@@ -175,6 +175,7 @@ class LogStore:
             (
                 self._layout(df, num_partitions=want)
                 .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
                 .partitionBy("p_date")
                 .parquet(self.path)
             )

@@ -194,6 +194,35 @@ def test_store_compact_merges_small_files(spark, tmp_path, logs):
     assert s.read().count() == before  # data unchanged
 
 
+def test_compactions_never_set_partition_overwrite_conf(
+    spark, tmp_path, logs, monkeypatch
+):
+    """LogStore.compact and IVFIndex.compact overwrite only the
+    partitions they rewrite through the writer option, never the
+    process-global partitionOverwriteMode session conf (their rewrites
+    run from several threads)."""
+    from pond_spark.similarity.index import build_ivf_index
+
+    store = LogStore(spark, str(tmp_path / "s"))
+    vecs = spark.createDataFrame(
+        [(i, [float(i % 3), 1.0, float(i)]) for i in range(12)],
+        "vec_id long, embedding array<double>",
+    )
+    idx = build_ivf_index(vecs, str(tmp_path / "ivf"), n_centroids=2)
+    for _ in range(3):
+        store.append(logs)
+        idx.append(vecs)
+    keys = []
+    real_set = spark.conf.set
+    monkeypatch.setattr(
+        spark.conf, "set", lambda k, v: (keys.append(k), real_set(k, v))
+    )
+    assert store.compact() and idx.compact()
+    monkeypatch.undo()
+    assert keys  # the spy saw the timestamp-type scoping
+    assert not [k for k in keys if "partitionOverwriteMode" in k]
+
+
 def test_store_retain_drops_aged_partitions(spark, tmp_path, logs):
     s = LogStore(spark, str(tmp_path / "r"))
     s.append(logs)

@@ -807,6 +807,39 @@ def test_uniques_sketches_incremental_update(spark, tmp_path):
     assert abs(d1.uniques_est - 60) <= 0.1 * 60
 
 
+def test_uniques_sketches_fold_refuses_other_lg_k(spark, tmp_path):
+    """The build pins lg_k in the sidecar; a fold at another lg_k
+    raises before writing, so no day mixes lg_k and range serves keep
+    working (mixed-lg_k days fail every HLL union over them)."""
+    from pond_spark.operators.sketches import (
+        build_uniques_sketches,
+        uniques_over_range,
+        update_uniques_sketches,
+    )
+
+    t0 = dt.datetime(2024, 4, 1)
+    logs = spark.createDataFrame(
+        [(i, t0 + dt.timedelta(days=i % 2, seconds=i), "a", f"u{i}")
+         for i in range(80)],
+        "id long, timestamp timestamp, site string, remote_host string",
+    )
+    path = tmp_path / "cube"
+    build_uniques_sketches(logs, str(path), lg_k=14)
+
+    def files():
+        return {
+            f.relative_to(path): f.read_bytes()
+            for f in path.glob("day=*/*")
+        }
+
+    before = files()
+    with pytest.raises(ValueError, match="lg_k=14"):
+        update_uniques_sketches(logs.limit(50), str(path), lg_k=12)
+    assert files() == before
+    got = uniques_over_range(spark, str(path), "2024-04-01", "2024-04-02")
+    assert abs(got.collect()[0].uniques_est - 80) <= 0.1 * 80
+
+
 def test_asof_join_shared_payload_column_name(spark):
     """Regression (r4 review): a right payload column whose name also
     exists on the left made left rows carry their OWN value through
