@@ -22,7 +22,6 @@ operators can't express.
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -110,7 +109,7 @@ def rate_limit(
             raise ValueError(f"rate_limit: input has no column {c!r}")
     burst = burst if burst is not None else 10.0 * rate
 
-    def bucket(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def bucket(key, pdf):
         # one pandas frame per site group, processed in (ts, id) order
         # — the token bucket is sequential by construction. Rows here
         # are pre-filtered to charged ones (type == message_type with
@@ -166,36 +165,33 @@ def ingest_batch(
     """Full S1 pipeline on a batch of raw datagrams; returns counters
     (the STATS inputs, src/Instance.cxx:51-62) plus the storable rows.
 
-    With ``metrics_dir`` set, the counters also land as one appended
-    parquet row (METRICS_SCHEMA) — the persistent ingest-metrics table
-    that gives STATS its n_received/n_malformed/n_discarded parity
-    across restarts (the reference keeps them in process memory)."""
-    # caches are scoped to THIS call: they serve the 2-3 count actions,
-    # then release before return — a long-running ingest_stream calls
-    # this once per micro-batch, and never-unpersisted entries would
-    # accumulate in executor storage for the life of the query. The
-    # caller's consumption of `stored` re-runs the (cheap, projection-
-    # only) parse once when rate == 0; the rate-limited path instead
-    # pins the flagged frame with localCheckpoint so the token-bucket
-    # shuffle + pandas stage (the expensive part) runs exactly once —
-    # an unpersist-before-return would silently re-execute it when the
-    # caller writes `stored` (r6 review finding). The checkpoint blocks
-    # release via the ContextCleaner when `stored` is dropped.
-    parsed = parse_datagrams(raw, payload_col).cache()
-    try:
-        n_received = parsed.count()
-        n_malformed = parsed.filter("_malformed").count()
-        good = parsed.filter(~F.col("_malformed")).select("_rec.*")
-        if rate > 0:
-            flagged = rate_limit(good, rate).localCheckpoint()
-            n_discarded = flagged.filter("_discarded").count()
-            stored = flagged.filter(~F.col("_discarded")).drop("_discarded")
-        else:
-            n_discarded = 0
-            stored = good
-    finally:
-        parsed.unpersist()
-    if metrics_dir is not None:
+    With ``metrics_dir`` set, a non-empty batch's counters also land as
+    one appended parquet row (METRICS_SCHEMA) — the persistent
+    ingest-metrics table that gives STATS its n_received/n_malformed/
+    n_discarded parity across restarts (the reference keeps them in
+    process memory)."""
+    # a malformed datagram has no record: its null type and site exempt
+    # it from the bucket, so it never takes a token
+    records = parse_datagrams(raw, payload_col).select(
+        F.when(~F.col("_malformed"), F.col("_rec")).alias("_rec"), "_malformed"
+    ).select("_rec.*", "_malformed")
+    # the eager checkpoint is the one pass over the batch: it runs the
+    # parse and the token-bucket stage once, and the counters and
+    # `stored` both read it. The lazy one fills inside that same job,
+    # so the bucket's charged and exempt branches share one parse
+    # instead of each re-reading `raw`. The ContextCleaner frees the
+    # lazy one's blocks after return, the eager one's once `stored` is
+    # dropped.
+    flagged = rate_limit(
+        records.localCheckpoint(eager=False), rate
+    ).localCheckpoint()
+    n_received, n_malformed, n_discarded = flagged.agg(
+        F.count(F.lit(1)), F.count_if("_malformed"), F.count_if("_discarded")
+    ).first()
+    stored = flagged.filter(~F.col("_malformed") & ~F.col("_discarded")).drop(
+        "_malformed", "_discarded"
+    )
+    if metrics_dir is not None and n_received:
         raw.sparkSession.createDataFrame(
             [(batch_id, n_received, n_malformed, n_discarded)], METRICS_SCHEMA
         ).write.mode("append").parquet(metrics_dir)

@@ -5,10 +5,11 @@ The reference's receiver loop (/root/reference/src/Receiver.cxx:12-47)
 runs forever: datagram → malformed check → rate limit → emplace, with
 running counters. Here each micro-batch of raw payloads goes through
 the same parse/validate pipeline, the per-site token bucket applies
-per batch*, and ``foreachBatch`` appends survivors to the ``LogStore``
-while a one-row metrics frame per batch lands in a metrics directory —
-the durable form of the reference's in-memory counters
-(src/Instance.cxx:51-62), folded by ``operators.stats.ingest_stats``.
+per batch*, and ``foreachBatch`` hands each micro-batch to
+``ingest_batch``, which lands a non-empty batch's one-row metrics frame
+in a metrics directory — the durable form of the reference's in-memory counters
+(src/Instance.cxx:51-62), folded by ``operators.stats.ingest_stats`` —
+before the survivors are appended to the ``LogStore``.
 
 *The bucket here replays per batch (each micro-batch starts from a
 full burst) — use ``rate_limit_stream`` upstream of this sink when
@@ -24,9 +25,8 @@ needed.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from pond_spark.sources.ingest import METRICS_SCHEMA, ingest_batch
+from pond_spark.sources.ingest import ingest_batch
 from pond_spark.sources.store import LogStore
 
 
@@ -40,17 +40,17 @@ def ingest_stream(
 ):
     """Wire a raw-payload stream into the store. Returns the started
     StreamingQuery; callers own its lifecycle."""
-    spark = store.spark
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        res = ingest_batch(batch_df, payload_col=payload_col, rate=rate)
-        if res.n_received == 0:
-            return
-        store.append(res.stored)
-        spark.createDataFrame(
-            [(batch_id, res.n_received, res.n_malformed, res.n_discarded)],
-            METRICS_SCHEMA,
-        ).write.mode("append").parquet(metrics_dir)
+        res = ingest_batch(
+            batch_df,
+            payload_col=payload_col,
+            rate=rate,
+            metrics_dir=metrics_dir,
+            batch_id=batch_id,
+        )
+        if res.n_received:
+            store.append(res.stored)
 
     return (
         raw_stream.writeStream.foreachBatch(sink)

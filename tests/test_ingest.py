@@ -8,6 +8,7 @@ import datetime as dt
 import glob
 import json
 import os
+import warnings
 
 import pytest
 
@@ -66,6 +67,64 @@ def test_ingest_metrics_persist_and_stats_fold(spark, tmp_path):
     row = stats(stored, metrics=metrics).collect()[0]
     assert row.n_records == 7
     assert (row.n_received, row.n_malformed, row.n_discarded) == (10, 1, 2)
+
+
+def test_ingest_batch_runs_two_sql_executions(spark):
+    """A rate-limited batch without metrics_dir is one pass: two SQL
+    executions run Spark jobs, the flagged frame's checkpoint and one
+    conditional aggregate for all three counters, with no per-counter
+    count(). The lazy checkpoint that lets the bucket's two branches
+    share one parse is a third execution that runs no job."""
+    t0 = dt.datetime(2024, 1, 1, 10)
+    rows = [(_dg(i, t0, "m", type_="http_error"),) for i in range(1, 8)]
+    rows += [(_dg(20, t0, "a"),), ("nope",)]
+    raw = spark.createDataFrame(rows, "payload string")
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def newest(n):
+        bus.waitUntilEmpty()
+        total = store.executionsCount()
+        if not total:
+            return []
+        seq = store.executionsList(max(0, total - n), min(total, n))
+        return [seq.apply(i) for i in range(seq.size())]
+
+    before = max([e.executionId() for e in newest(1)], default=-1)
+    res = ingest_batch(raw, rate=0.5)
+    jobs = [e.jobs().size() for e in newest(10) if e.executionId() > before]
+    assert len([j for j in jobs if j]) == 2, jobs
+    assert (res.n_received, res.n_malformed, res.n_discarded) == (9, 1, 2)
+    assert sorted(r.id for r in res.stored.collect()) == [1, 2, 3, 4, 5, 20]
+
+
+def test_ingest_oversized_messages_take_no_token(spark):
+    """Well-formed http_error datagrams with a site that hit the
+    4096-byte guard are malformed: counted, not stored, and they never
+    take a token from their site's bucket, even when they sort first."""
+    t0 = dt.datetime(2024, 1, 1, 10)
+    big = [
+        (_dg(i, t0, "m", type_="http_error", message="x" * 4096),)
+        for i in range(1, 4)
+    ]
+    assert all(len(p.encode()) >= 4096 for (p,) in big)
+    # 7 same-second messages on the same site at rate 0.5 (burst 5)
+    msgs = [(_dg(i, t0, "m", type_="http_error"),) for i in range(10, 17)]
+    other = [(_dg(20, t0, "m"),), ("not json",)]
+    raw = spark.createDataFrame(big + msgs + other, "payload string")
+    res = ingest_batch(raw, rate=0.5)
+    assert (res.n_received, res.n_malformed, res.n_discarded) == (12, 4, 2)
+    assert sorted(r.id for r in res.stored.collect()) == [10, 11, 12, 13, 14, 20]
+
+
+def test_rate_limit_raises_no_user_warning(spark):
+    """The grouped map's function carries no partial type hints, so
+    PySpark does not warn that it cannot infer the eval type."""
+    df = _msg_rows(spark, 3, "a", dt.datetime(2024, 1, 1, 10))
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", UserWarning)
+        out = rate_limit(df, rate=1.0)
+    assert out.filter("_discarded").count() == 0
 
 
 def _msg_rows(spark, n, site, t0, spacing_s=0.0):

@@ -1472,8 +1472,6 @@ def test_concurrent_curate_runs_two_processes(spark, tmp_path):
     tools/concurrent_curate_stress.py."""
     from tools.concurrent_curate_stress import run_legs
 
-    report = run_legs(
-        5_000, spark=spark, verbose=False, slow1=30, slow2=75
-    )
+    report = run_legs(5_000, spark=spark, verbose=False)
     assert report["doublefire"]["b"] == "CHILD_ERR:LeaseHeldError"
     assert report["takeover"]["a"] == "CHILD_ERR:LeaseLostError"

@@ -205,47 +205,67 @@ def test_rate_limit_stream_state_survives_batches(spark, tmp_path):
 
 
 def test_ingest_stream_end_to_end(spark, tmp_path):
-    """S1 streaming: raw payload files → parse/validate → store append
-    + per-batch metrics; STATS totals fold the metrics table."""
+    """S1 streaming: raw payload files → parse/validate → rate-limit →
+    store append + per-batch metrics; STATS totals fold the metrics
+    table, whose rows equal what ingest_batch(metrics_dir=) writes for
+    the same payloads."""
     import json
 
     from pond_spark.operators.stats import ingest_stats
+    from pond_spark.sources.ingest import ingest_batch
     from pond_spark.sources.store import LogStore
     from pond_spark.streaming import ingest_stream, read_metrics
 
-    raw_dir = str(tmp_path / "raw")
     t0 = dt.datetime(2024, 1, 1, 10)
 
-    def payload(i, site="a"):
+    def payload(i, site="a", type_="http_access"):
         return json.dumps(
-            {"id": i, "timestamp": t0.isoformat(), "site": site, "type": "http_access"}
+            {"id": i, "timestamp": t0.isoformat(), "site": site, "type": type_}
         )
+
+    def run(name, rows, rate):
+        raw_dir = str(tmp_path / name / "raw")
+        spark.createDataFrame(rows, "payload string").coalesce(1).write.mode(
+            "append"
+        ).format("text").option("compression", "none").save(raw_dir)
+        store = LogStore(spark, str(tmp_path / name / "store"))
+        raw = (
+            spark.readStream.format("text")
+            .load(raw_dir)
+            .withColumnRenamed("value", "payload")
+        )
+        metrics_dir = str(tmp_path / name / "metrics")
+        q = ingest_stream(
+            raw,
+            store,
+            metrics_dir=metrics_dir,
+            checkpoint_dir=str(tmp_path / name / "ckpt"),
+            rate=rate,
+        )
+        q.awaitTermination(120)
+        streamed = read_metrics(spark, metrics_dir)
+        batch_dir = str(tmp_path / name / "batch_metrics")
+        ingest_batch(
+            spark.createDataFrame(rows, "payload string"),
+            rate=rate,
+            metrics_dir=batch_dir,
+        )
+        assert sorted(streamed.collect()) == sorted(
+            read_metrics(spark, batch_dir).collect()
+        )
+        return store, ingest_stats(streamed).collect()[0]
 
     rows = [(payload(i),) for i in range(1, 8)]
     rows.append(("this is not json",))
-    spark.createDataFrame(rows, "payload string").coalesce(1).write.mode(
-        "append"
-    ).format("text").option("compression", "none").save(raw_dir)
-
-    store = LogStore(spark, str(tmp_path / "store"))
-    raw = (
-        spark.readStream.format("text")
-        .load(raw_dir)
-        .withColumnRenamed("value", "payload")
-    )
-    q = ingest_stream(
-        raw,
-        store,
-        metrics_dir=str(tmp_path / "metrics"),
-        checkpoint_dir=str(tmp_path / "ckpt"),
-    )
-    q.awaitTermination(120)
-
+    store, m = run("plain", rows, 0.0)
     assert store.read().count() == 7
-    m = ingest_stats(read_metrics(spark, str(tmp_path / "metrics"))).collect()[0]
-    assert m.n_received == 8
-    assert m.n_malformed == 1
-    assert m.n_discarded == 0
+    assert (m.n_received, m.n_malformed, m.n_discarded) == (8, 1, 0)
+
+    # 7 same-second messages on one site at rate 0.5 (burst 5)
+    burst = [(payload(10 + i, "m", "http_error"),) for i in range(7)]
+    store, m = run("burst", burst, 0.5)
+    assert sorted(r.id for r in store.read().collect()) == [10, 11, 12, 13, 14]
+    assert (m.n_received, m.n_malformed, m.n_discarded) == (7, 0, 2)
 
 
 def test_rollup_stream_watermark_drops_stale(spark, tmp_path):

@@ -6,17 +6,17 @@ with its own SparkSession, racing the same work_dir + shared digest
 catalog.
 
 Leg 1 — scheduler double-fire: writer A acquires the run-level leases
-and stalls inside its first stage; writer B fires against the same
-work_dir/catalog while A is live. B must refuse LOUDLY
-(LeaseHeldError), A must complete normally, and the catalog must equal
-the single-writer reference — no duplicate registration, no partial
-mix.
+and blocks inside its first stage until released; writer B fires
+against the same work_dir/catalog while A is live. B must refuse
+LOUDLY (LeaseHeldError), A must complete normally, and the catalog
+must equal the single-writer reference — no duplicate registration,
+no partial mix.
 
-Leg 2 — ttl takeover: A runs with a short ttl and a long stage; B
-fires after the ttl expires, takes the stale leases over and completes
-the run. A, at its next stage boundary, must get LeaseLostError from
-renew() and ABORT (never reaching register), leaving exactly B's
-single registration in the catalog.
+Leg 2 — ttl takeover: A runs with a short ttl and blocks inside its
+first stage; B fires after the ttl expires, takes the stale leases
+over and completes the run. A, once released, must get LeaseLostError
+from renew() at its next stage boundary and ABORT (never reaching
+register), leaving exactly B's single registration in the catalog.
 
 Usage::
 
@@ -41,32 +41,38 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+#: cap on every wait for a writer process: its run, and a blocked
+#: writer's wait for its release file
+TIMEOUT_S = 900
+
 
 def child_main(argv: list[str]) -> int:
     """One writer process: curate_run over --src into --work with the
-    shared --cat digest catalog, lease_ttl=--ttl. --slow injects a
-    sleep into the FIRST computed stage (monkeypatching the module
-    global ``curate`` that curate_run calls), simulating the long
-    stage the takeover scenario needs. Prints CHILD_OK or
+    shared --cat digest catalog, lease_ttl=--ttl. With --release, the
+    FIRST computed stage (the module global ``curate`` that curate_run
+    calls, monkeypatched) blocks until that file exists: the long
+    stage both races need, lasting exactly until the parent has seen
+    the other writer finish. Prints CHILD_OK or
     CHILD_ERR:<ExceptionName> as its last line."""
     opts = dict(a.split("=", 1) for a in argv if "=" in a)
-    slow_s = float(opts.get("--slow", "0"))
+    release = opts.get("--release")
 
     import pond_spark.pipeline as P
     from pond_spark.pipeline import CurationConfig, curate_run
     from pond_spark.session import get_spark
 
-    if slow_s > 0:
+    if release:
         orig = P.curate
         state = {"done": False}
 
-        def slow_curate(*a, **kw):
+        def blocked_curate(*a, **kw):
             if not state["done"]:
                 state["done"] = True
-                time.sleep(slow_s)
+                if not _wait_for(release, TIMEOUT_S):
+                    raise TimeoutError(f"never released: {release}")
             return orig(*a, **kw)
 
-        P.curate = slow_curate
+        P.curate = blocked_curate
 
     spark = get_spark(
         f"conc_writer_{os.getpid()}",
@@ -93,13 +99,13 @@ def child_main(argv: list[str]) -> int:
         spark.stop()
 
 
-def _spawn(src, work, cat, ttl, slow=0.0):
+def _spawn(src, work, cat, ttl, release=None):
     return subprocess.Popen(
         [
             sys.executable, os.path.abspath(__file__), "--child",
             f"--src={src}", f"--work={work}", f"--cat={cat}",
-            f"--ttl={ttl}", f"--slow={slow}",
-        ],
+            f"--ttl={ttl}",
+        ] + ([f"--release={release}"] if release else []),
         stdout=subprocess.PIPE,
         stderr=subprocess.DEVNULL,
         text=True,
@@ -115,21 +121,18 @@ def _wait_for(path: str, timeout_s: float) -> bool:
     return False
 
 
-def run_legs(
-    n: int, spark=None, verbose: bool = True,
-    slow1: float = 25, slow2: float = 90,
-) -> dict:
+def run_legs(n: int, spark=None, verbose: bool = True) -> dict:
     """Both legs; returns the report dict (also used by the pytest
     twin). ``spark`` is the PARENT session used only to build the
-    corpus and count results. ``slow1``/``slow2`` are the injected
-    stage stalls — slow2 must exceed writer B's whole runtime
-    (session startup + run) so A is still asleep when B finishes."""
+    corpus and count results. In each leg writer A stays blocked in
+    its first stage until writer B has exited."""
     from pond_spark.session import get_spark
     from tools.pipeline_stress import _synth_pipeline_docs
 
     spark = spark or get_spark("conc_stress_parent", master="local[8]",
                                shuffle_partitions=8)
     root = tempfile.mkdtemp(prefix="pond_conc_")
+    blocked = []  # writers waiting on a release file, killed on failure
     report: dict = {"n_docs": n}
     try:
         src = os.path.join(root, "docs")
@@ -138,7 +141,7 @@ def run_legs(
         # single-writer reference
         ref_cat = os.path.join(root, "ref_cat")
         rc = _spawn(src, os.path.join(root, "ref_work"), ref_cat, 3600)
-        out, _ = rc.communicate(timeout=900)
+        out, _ = rc.communicate(timeout=TIMEOUT_S)
         assert "CHILD_OK" in out, out
         ref_rows = spark.read.parquet(ref_cat).count()
         ref_distinct = (
@@ -147,11 +150,14 @@ def run_legs(
 
         # ---- leg 1: double-fire — B must refuse while A is live
         work1, cat1 = os.path.join(root, "w1"), os.path.join(root, "c1")
-        a = _spawn(src, work1, cat1, ttl=3600, slow=slow1)
+        release1 = os.path.join(root, "release1")
+        a = _spawn(src, work1, cat1, ttl=3600, release=release1)
+        blocked.append(a)
         assert _wait_for(work1 + ".lease.json", 120), "A never acquired"
         b = _spawn(src, work1, cat1, ttl=3600)
-        b_out, _ = b.communicate(timeout=900)
-        a_out, _ = a.communicate(timeout=900)
+        b_out, _ = b.communicate(timeout=TIMEOUT_S)
+        open(release1, "w").close()
+        a_out, _ = a.communicate(timeout=TIMEOUT_S)
         leg1 = {
             "a": a_out.strip().splitlines()[-1],
             "b": b_out.strip().splitlines()[-1],
@@ -169,18 +175,21 @@ def run_legs(
         # ---- leg 2: ttl takeover — B takes the stale lease over and
         # completes; A aborts at its next renew, never registering
         work2, cat2 = os.path.join(root, "w2"), os.path.join(root, "c2")
-        a = _spawn(src, work2, cat2, ttl=2, slow=slow2)
+        release2 = os.path.join(root, "release2")
+        a = _spawn(src, work2, cat2, ttl=2, release=release2)
+        blocked.append(a)
         # A renews at every stage boundary, so the ttl clock restarts
         # when its catalog_gate stage lands — wait for THAT, then let
-        # the ttl lapse while A sleeps inside its quality stage (the
-        # injected slow stage: curate() is first called for quality)
+        # the ttl lapse while A is blocked inside its quality stage
+        # (curate() is first called for quality)
         assert _wait_for(
             os.path.join(work2, "stage_00_catalog_gate", "_SUCCESS"), 300
         ), "A never finished its gate stage"
-        time.sleep(4)  # ttl=2 lapses; A is asleep for 90s
+        time.sleep(4)  # ttl=2 lapses
         b = _spawn(src, work2, cat2, ttl=2)
-        b_out, _ = b.communicate(timeout=900)
-        a_out, _ = a.communicate(timeout=900)
+        b_out, _ = b.communicate(timeout=TIMEOUT_S)
+        open(release2, "w").close()
+        a_out, _ = a.communicate(timeout=TIMEOUT_S)
         leg2 = {
             "a": a_out.strip().splitlines()[-1],
             "b": b_out.strip().splitlines()[-1],
@@ -200,6 +209,10 @@ def run_legs(
         assert leg2["catalog_distinct"] == ref_distinct, leg2
         return report
     finally:
+        for p in blocked:
+            if p.poll() is None:
+                p.kill()
+                p.wait()
         shutil.rmtree(root, ignore_errors=True)
 
 
