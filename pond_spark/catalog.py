@@ -55,8 +55,11 @@ class _LocalFS:
             return f.read()
 
     def write_text(self, path: str, text: str) -> None:
-        with open(path, "w") as f:
-            f.write(text)
+        self.write_bytes(path, text.encode("utf-8"))
+
+    def write_bytes(self, path: str, data: bytes) -> None:
+        with open(path, "wb") as f:
+            f.write(data)
 
     def rename(self, src: str, dst: str) -> None:
         os.rename(src, dst)
@@ -162,9 +165,12 @@ class _HadoopFS:
             stream.close()
 
     def write_text(self, path: str, text: str) -> None:
+        self.write_bytes(path, text.encode("utf-8"))
+
+    def write_bytes(self, path: str, data: bytes) -> None:
         out = self._fs.create(self._p(path), True)
         try:
-            out.write(bytearray(text.encode("utf-8")))
+            out.write(bytearray(data))
         finally:
             out.close()
 

@@ -137,10 +137,12 @@ def curate(
             # sf0.1 (in-session interleaved, both orders): curation
             # 2.36 -> 1.69, curation_near 4.12 -> 3.14. Lifecycle:
             # batch drivers clearCache between queries (bench.py,
-            # oracle_check); in foreachBatch the frame becomes
-            # unreferenced after the batch and ContextCleaner
-            # unpersists it — the same contract as the in-operator
-            # ngram/minhash pins.
+            # oracle_check). Nothing else frees it: the CacheManager
+            # holds a strong reference to every persisted frame, so the
+            # ContextCleaner never unpersists it, and a long-lived
+            # session (foreachBatch, repeated curate_run) keeps each
+            # pin until clearCache/unpersist — the same contract as the
+            # in-operator ngram/minhash/line pins.
             keep = keep.persist()
             out = out.join(keep, on=id_col, how="left_semi")
         elif stage == "exact_dedup":

@@ -21,13 +21,16 @@ operators can't express.
 
 from __future__ import annotations
 
+import io
+import uuid
 from dataclasses import dataclass
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from pond_spark.catalog import _fs_for
 from pond_spark.schema import LOG_SCHEMA
 
 MAX_DATAGRAM_SIZE = 4096  # src/Instance.hxx:45
@@ -155,6 +158,27 @@ METRICS_SCHEMA = (
 )
 
 
+def _write_metrics_row(
+    spark: SparkSession, metrics_dir: str, row: tuple[int, ...]
+) -> None:
+    """Land one METRICS_SCHEMA row as a Parquet file built in memory —
+    four longs need no Spark job. The file is written under a
+    ``_``-prefixed name, which Spark's file listing skips, then renamed
+    into place, so readers never see a torn file."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    names = [c.split()[0] for c in METRICS_SCHEMA.split(",")]
+    table = pa.table({n: pa.array([v], pa.int64()) for n, v in zip(names, row)})
+    buf = io.BytesIO()
+    pq.write_table(table, buf)
+    fs = _fs_for(spark, metrics_dir)
+    fs.mkdirs(metrics_dir)
+    base, name = metrics_dir.rstrip("/"), f"part-{uuid.uuid4()}.parquet"
+    fs.write_bytes(f"{base}/_{name}", buf.getvalue())
+    fs.rename(f"{base}/_{name}", f"{base}/{name}")
+
+
 def ingest_batch(
     raw: DataFrame,
     payload_col: str = "payload",
@@ -166,33 +190,46 @@ def ingest_batch(
     (the STATS inputs, src/Instance.cxx:51-62) plus the storable rows.
 
     With ``metrics_dir`` set, a non-empty batch's counters also land as
-    one appended parquet row (METRICS_SCHEMA) — the persistent
-    ingest-metrics table that gives STATS its n_received/n_malformed/
-    n_discarded parity across restarts (the reference keeps them in
-    process memory)."""
+    one small parquet file of one row (METRICS_SCHEMA), written without
+    a Spark job — the persistent ingest-metrics table that gives STATS
+    its n_received/n_malformed/n_discarded parity across restarts (the
+    reference keeps them in process memory). A crash mid-write leaves at
+    most one hidden ``_part-*.parquet`` staged file, which readers skip.
+    An empty batch writes nothing."""
     # a malformed datagram has no record: its null type and site exempt
     # it from the bucket, so it never takes a token
     records = parse_datagrams(raw, payload_col).select(
         F.when(~F.col("_malformed"), F.col("_rec")).alias("_rec"), "_malformed"
     ).select("_rec.*", "_malformed")
     # the eager checkpoint is the one pass over the batch: it runs the
-    # parse and the token-bucket stage once, and the counters and
-    # `stored` both read it. The lazy one fills inside that same job,
-    # so the bucket's charged and exempt branches share one parse
-    # instead of each re-reading `raw`. The ContextCleaner frees the
-    # lazy one's blocks after return, the eager one's once `stored` is
-    # dropped.
-    flagged = rate_limit(
-        records.localCheckpoint(eager=False), rate
-    ).localCheckpoint()
-    n_received, n_malformed, n_discarded = flagged.agg(
-        F.count(F.lit(1)), F.count_if("_malformed"), F.count_if("_discarded")
-    ).first()
+    # parse and the token-bucket stage once, the counters are observed
+    # on it as rows pass, and `stored` reads it. The lazy one fills
+    # inside that same job, so the bucket's charged and exempt branches
+    # share one parse instead of each re-reading `raw`. The
+    # ContextCleaner frees the lazy one's blocks after return, the eager
+    # one's once `stored` is dropped.
+    counters = Observation()
+    flagged = (
+        rate_limit(records.localCheckpoint(eager=False), rate)
+        .observe(
+            counters,
+            F.count(F.lit(1)).alias("n_received"),
+            F.count_if("_malformed").alias("n_malformed"),
+            F.count_if("_discarded").alias("n_discarded"),
+        )
+        .localCheckpoint()
+    )
+    got = counters.get
+    n_received, n_malformed, n_discarded = (
+        got["n_received"], got["n_malformed"], got["n_discarded"]
+    )
     stored = flagged.filter(~F.col("_malformed") & ~F.col("_discarded")).drop(
         "_malformed", "_discarded"
     )
     if metrics_dir is not None and n_received:
-        raw.sparkSession.createDataFrame(
-            [(batch_id, n_received, n_malformed, n_discarded)], METRICS_SCHEMA
-        ).write.mode("append").parquet(metrics_dir)
+        _write_metrics_row(
+            raw.sparkSession,
+            metrics_dir,
+            (batch_id, n_received, n_malformed, n_discarded),
+        )
     return IngestResult(n_received, n_malformed, n_discarded, stored)

@@ -6,7 +6,7 @@ runs forever: datagram → malformed check → rate limit → emplace, with
 running counters. Here each micro-batch of raw payloads goes through
 the same parse/validate pipeline, the per-site token bucket applies
 per batch*, and ``foreachBatch`` hands each micro-batch to
-``ingest_batch``, which lands a non-empty batch's one-row metrics frame
+``ingest_batch``, which lands a non-empty batch's one-row metrics file
 in a metrics directory — the durable form of the reference's in-memory counters
 (src/Instance.cxx:51-62), folded by ``operators.stats.ingest_stats`` —
 before the survivors are appended to the ``LogStore``.
@@ -17,9 +17,9 @@ cross-batch bucket state matters; ``foreachBatch`` itself cannot host
 ``applyInPandasWithState`` (it sees plain batch frames).
 
 Scale notes: the sink path is the store's write discipline
-(date-partitioned, range-distributed, site-sorted); metrics are one
-tiny file per batch, compacted by ``LogStore.compact`` cadence if
-needed.
+(date-partitioned, range-distributed, site-sorted); each non-empty
+batch writes one small metrics file, with no Spark job (an empty batch
+writes none). Nothing compacts the metrics directory.
 """
 
 from __future__ import annotations

@@ -8,6 +8,8 @@ import datetime as dt
 import glob
 import json
 import os
+import threading
+import uuid
 import warnings
 
 import pytest
@@ -69,16 +71,9 @@ def test_ingest_metrics_persist_and_stats_fold(spark, tmp_path):
     assert (row.n_received, row.n_malformed, row.n_discarded) == (10, 1, 2)
 
 
-def test_ingest_batch_runs_two_sql_executions(spark):
-    """A rate-limited batch without metrics_dir is one pass: two SQL
-    executions run Spark jobs, the flagged frame's checkpoint and one
-    conditional aggregate for all three counters, with no per-counter
-    count(). The lazy checkpoint that lets the bucket's two branches
-    share one parse is a third execution that runs no job."""
-    t0 = dt.datetime(2024, 1, 1, 10)
-    rows = [(_dg(i, t0, "m", type_="http_error"),) for i in range(1, 8)]
-    rows += [(_dg(20, t0, "a"),), ("nope",)]
-    raw = spark.createDataFrame(rows, "payload string")
+def _new_executions(spark):
+    """Snapshot the SQL status store; the returned function gives the
+    job count of each SQL execution that started since the snapshot."""
     bus = spark.sparkContext._jsc.sc().listenerBus()
     store = spark._jsparkSession.sharedState().statusStore()
 
@@ -91,11 +86,157 @@ def test_ingest_batch_runs_two_sql_executions(spark):
         return [seq.apply(i) for i in range(seq.size())]
 
     before = max([e.executionId() for e in newest(1)], default=-1)
+    return lambda: [
+        e.jobs().size() for e in newest(20) if e.executionId() > before
+    ]
+
+
+def _rate_batch(spark):
+    """7 same-second messages on one site at rate 0.5 (burst 5), one
+    exempt record and one malformed datagram: counters (9, 1, 2)."""
+    t0 = dt.datetime(2024, 1, 1, 10)
+    rows = [(_dg(i, t0, "m", type_="http_error"),) for i in range(1, 8)]
+    rows += [(_dg(20, t0, "a"),), ("nope",)]
+    return spark.createDataFrame(rows, "payload string")
+
+
+def test_ingest_batch_runs_one_sql_execution(spark):
+    """A rate-limited batch is one pass: the only SQL execution that
+    runs Spark jobs is the flagged frame's checkpoint, on which the
+    three counters are observed as rows pass. The lazy checkpoint that
+    lets the bucket's two branches share one parse is a second
+    execution that runs no job."""
+    raw = _rate_batch(spark)
+    jobs = _new_executions(spark)
     res = ingest_batch(raw, rate=0.5)
-    jobs = [e.jobs().size() for e in newest(10) if e.executionId() > before]
-    assert len([j for j in jobs if j]) == 2, jobs
+    assert len([j for j in jobs() if j]) == 1, jobs()
     assert (res.n_received, res.n_malformed, res.n_discarded) == (9, 1, 2)
     assert sorted(r.id for r in res.stored.collect()) == [1, 2, 3, 4, 5, 20]
+
+
+def test_ingest_batch_metrics_write_starts_no_job(spark, tmp_path):
+    """Writing the metrics row starts no Spark job: the call with
+    metrics_dir starts exactly as many jobs as the call without it."""
+    raw = _rate_batch(spark)
+    counts = []
+    for mdir in (None, str(tmp_path / "metrics")):
+        jobs = _new_executions(spark)
+        res = ingest_batch(raw, rate=0.5, metrics_dir=mdir, batch_id=4)
+        counts.append(sum(jobs()))
+        assert (res.n_received, res.n_malformed, res.n_discarded) == (9, 1, 2)
+    assert counts[0] == counts[1], counts
+    rows = spark.read.parquet(str(tmp_path / "metrics")).collect()
+    assert [tuple(r) for r in rows] == [(4, 9, 1, 2)]
+
+
+def _ingest_returns(raw, **kw):
+    """ingest_batch in a daemon thread: a counter read that blocks
+    fails the test instead of hanging it."""
+    out = []
+    t = threading.Thread(
+        target=lambda: out.append(ingest_batch(raw, **kw)), daemon=True
+    )
+    t.start()
+    t.join(120)
+    assert out, "ingest_batch did not return"
+    return out[0]
+
+
+@pytest.mark.parametrize("partitions", [0, 4])
+def test_ingest_empty_batch_counts_zero_and_writes_no_row(
+    spark, tmp_path, partitions
+):
+    sc = spark.sparkContext
+    rdd = sc.parallelize([], partitions) if partitions else sc.emptyRDD()
+    raw = spark.createDataFrame(rdd, "payload string")
+    assert raw.rdd.getNumPartitions() == partitions
+    mdir = tmp_path / "metrics"
+    res = _ingest_returns(raw, rate=0.5, metrics_dir=str(mdir))
+    assert (res.n_received, res.n_malformed, res.n_discarded) == (0, 0, 0)
+    assert res.stored.count() == 0
+    assert not mdir.exists()
+
+
+def test_ingest_all_malformed_batch(spark, tmp_path):
+    raw = spark.createDataFrame([("nope",), (None,)], "payload string")
+    mdir = str(tmp_path / "metrics")
+    res = _ingest_returns(raw, rate=0.5, metrics_dir=mdir, batch_id=7)
+    assert (res.n_received, res.n_malformed, res.n_discarded) == (2, 2, 0)
+    assert res.stored.count() == 0
+    assert [tuple(r) for r in spark.read.parquet(mdir).collect()] == [
+        (7, 2, 2, 0)
+    ]
+
+
+def test_ingest_rate_zero_discards_nothing(spark):
+    res = _ingest_returns(_rate_batch(spark), rate=0.0)
+    assert (res.n_received, res.n_malformed, res.n_discarded) == (9, 1, 0)
+    assert sorted(r.id for r in res.stored.collect()) == [1, 2, 3, 4, 5, 6, 7, 20]
+
+
+def _assert_metrics_totals(spark, mdir, stored, want):
+    """read_metrics and stats(metrics=) both give the hand-summed
+    (n_received, n_malformed, n_discarded) totals."""
+    from pond_spark.operators.stats import stats
+    from pond_spark.streaming import read_metrics
+
+    rows = read_metrics(spark, mdir).collect()
+    assert tuple(sum(r[c] for r in rows) for c in want) == tuple(want.values())
+    row = stats(stored, metrics=read_metrics(spark, mdir)).collect()[0]
+    assert tuple(row[c] for c in want) == tuple(want.values())
+
+
+def test_metrics_writer_file_uri(spark, tmp_path):
+    """A file: URI metrics_dir goes through the Hadoop FileSystem."""
+    mdir = "file:" + str(tmp_path / "metrics")
+    r1 = ingest_batch(_rate_batch(spark), rate=0.5, metrics_dir=mdir, batch_id=1)
+    r2 = ingest_batch(_rate_batch(spark), metrics_dir=mdir, batch_id=2)
+    # besides them only Hadoop's hidden .crc checksum files
+    live = [n for n in os.listdir(tmp_path / "metrics") if n[0] != "."]
+    assert len(live) == 2
+    assert all(n.startswith("part-") and n.endswith(".parquet") for n in live)
+    _assert_metrics_totals(
+        spark,
+        mdir,
+        r1.stored.unionByName(r2.stored),
+        {"n_received": 18, "n_malformed": 2, "n_discarded": 2},
+    )
+
+
+def test_metrics_writer_appends_to_spark_written_rows(spark, tmp_path):
+    """A directory holding a row from a Spark parquet write (the older
+    writer) reads back together with the rows written now."""
+    from pond_spark.sources.ingest import METRICS_SCHEMA
+
+    mdir = str(tmp_path / "metrics")
+    spark.createDataFrame([(0, 5, 1, 1)], METRICS_SCHEMA).write.mode(
+        "append"
+    ).parquet(mdir)
+    res = ingest_batch(_rate_batch(spark), rate=0.5, metrics_dir=mdir, batch_id=1)
+    _assert_metrics_totals(
+        spark,
+        mdir,
+        res.stored,
+        {"n_received": 14, "n_malformed": 2, "n_discarded": 3},
+    )
+
+
+def test_metrics_reader_skips_staged_file(spark, tmp_path):
+    """A staged ``_part-*.parquet`` left by a crash mid-write (here a
+    torn one) is never read."""
+    mdir = tmp_path / "metrics"
+    res = ingest_batch(
+        _rate_batch(spark), rate=0.5, metrics_dir=str(mdir), batch_id=1
+    )
+    (live,) = os.listdir(mdir)
+    torn = (mdir / live).read_bytes()[:100]
+    (mdir / f"_part-{uuid.uuid4()}.parquet").write_bytes(torn)
+    _assert_metrics_totals(
+        spark,
+        str(mdir),
+        res.stored,
+        {"n_received": 9, "n_malformed": 1, "n_discarded": 2},
+    )
 
 
 def test_ingest_oversized_messages_take_no_token(spark):
