@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pond_spark.util import pin
+
 __all__ = [
     "split_lines",
     "chunk_paragraphs",
@@ -121,10 +123,9 @@ def strip_duplicate_lines(
         lines = split_lines(df, text_col, id_col, delimiter)
     # the line frame feeds the duplicate table, the anti-join AND the
     # per-doc totals; persist so the split/chunk explode runs once
-    # (guide §2.4 — no cross-branch CSE). Lifecycle: session pin,
-    # cleared by loop drivers (bench.py clearCache), the ngram-pin
-    # contract.
-    lines = lines.withColumn("line_hash", F.xxhash64(F.col("line"))).persist()
+    # (guide §2.4 — no cross-branch CSE). Lifecycle: a util.pin, the
+    # ngram-pin contract.
+    lines = pin(lines.withColumn("line_hash", F.xxhash64(F.col("line"))))
     dup = duplicate_line_table(lines, id_col, min_docs)
     kept = lines.join(dup, on="line_hash", how="left_anti")
     sep = " " if words_per_chunk is not None else delimiter

@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pond_spark.catalog import GateCatalog
-from pond_spark.util import fan_out
+from pond_spark.util import fan_out, pin
 
 # Mersenne-31: keeps a*x (a, x < p) under 2^62 — no int64 overflow in
 # the JVM's ANSI arithmetic
@@ -242,12 +242,14 @@ def minhash_lsh_pairs(
     # persist: the signature/shingle relation feeds three plan branches
     # (band explode + both verify sides) — without it the scan and the
     # k-permutation work run once per branch. MEMORY_AND_DISK spills
-    # instead of OOMing at cluster scale.
-    sigs = (
+    # instead of OOMing at cluster scale. Lifecycle: a util.pin, released
+    # by the enclosing pin_scope (curate_run per stage,
+    # curate_foreach_batch per batch), else a session pin.
+    sigs = pin(
         minhash_signatures_from_grams(grams_df, id_col, k=k, seed=seed)
         if grams_df is not None
         else minhash_signatures(df, text_col, id_col, k, n, seed)
-    ).persist()
+    )
 
     # Band join carries ONLY (id, band_key) — shingle arrays would blow
     # up the shuffle and get duplicated per candidate pair. Candidates
@@ -260,7 +262,7 @@ def minhash_lsh_pairs(
         # pin the bucket counts: with skew_salt='auto' the SAME
         # aggregation also feeds the hot-id probe below — unpinned it
         # would run as two separate jobs over the banded frame
-        bucket_counts = banded.groupBy("_band_key").count().persist()
+        bucket_counts = pin(banded.groupBy("_band_key").count())
         hot = bucket_counts.filter(
             F.col("count") > max_bucket_size
         ).select("_band_key")
@@ -310,11 +312,8 @@ def minhash_lsh_pairs(
         # the candidate set now feeds THREE branches (the salted probe
         # side + both broadcast id-prunes) — pin it so the band join
         # evaluates once. The plain path below uses it once: no pin.
-        # Lifecycle: the pin lives until the returned frame is released
-        # (Spark's ContextCleaner unpersists on GC); loop drivers that
-        # hold many results should clearCache between queries, as
-        # bench.py does.
-        cand = cand.persist()
+        # Lifecycle: the same util.pin contract as the sigs pin.
+        cand = pin(cand)
         # prune the build sides to candidate ids BEFORE the salt
         # replication (the candidate id set is tiny → broadcast semi):
         # salting replicates the build side `salt` times, which must

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pond_spark.functions.text import _word_ngrams, _words
-from pond_spark.util import fan_out
+from pond_spark.util import fan_out, pin
 
 
 def gram_hashes(
@@ -83,11 +83,12 @@ def ngram_jaccard_pairs(
             carry_cols=(block_col,) if block_col else (),
         )
         # feeds three branches (prefix explode + both verify sides);
-        # persist so the scan + gram hashing run once. Lifecycle: the
-        # pin lives until the session drops it; loop drivers clearCache
-        # between queries (bench.py does), same as the minhash/LSH
-        # pins. A caller-supplied base arrives pinned already.
-        base = base.persist()
+        # persist so the scan + gram hashing run once. Lifecycle: a
+        # util.pin, released by the enclosing pin_scope (curate_run per
+        # stage, curate_foreach_batch per batch), else a session pin
+        # that loop drivers clearCache (bench.py does). A
+        # caller-supplied base arrives pinned already.
+        base = pin(base)
     if block_col:
         base = base.withColumnRenamed(block_col, "_blk")
 

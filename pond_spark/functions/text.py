@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pond_spark.util import pin
+
 HASH_MOD = 1_000_000_007
 HASH_BASE = 31
 
@@ -243,10 +245,11 @@ def quality_keep_ids(
     """
     # persisted (r11, guide §2.4): the tokenized frame feeds BOTH the
     # word and the bigram explode — unpinned, the scan + split ran
-    # twice. Session pin, cleared by loop drivers (ngram-pin contract).
-    staged = df.select(
+    # twice. A util.pin: released by the enclosing pin_scope, else a
+    # session pin cleared by loop drivers (ngram-pin contract).
+    staged = pin(df.select(
         F.col(id_col), _words(F.col(text_col)).alias("_w")
-    ).persist()
+    ))
     w = staged.select(F.col(id_col), F.explode("_w").alias("word"))
     agg_w = w.groupBy(id_col).agg(
         F.count(F.lit(1)).alias("_nw"),

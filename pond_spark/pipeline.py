@@ -40,6 +40,8 @@ from dataclasses import dataclass, field, replace
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pond_spark.util import pin, pin_scope
+
 __all__ = [
     "CurationConfig",
     "curate",
@@ -135,15 +137,16 @@ def curate(
             # once per consumer. Ids only, so the pin is tiny; the
             # docs scan itself stays lazy per branch. Measured at
             # sf0.1 (in-session interleaved, both orders): curation
-            # 2.36 -> 1.69, curation_near 4.12 -> 3.14. Lifecycle:
-            # batch drivers clearCache between queries (bench.py,
-            # oracle_check). Nothing else frees it: the CacheManager
-            # holds a strong reference to every persisted frame, so the
-            # ContextCleaner never unpersists it, and a long-lived
-            # session (foreachBatch, repeated curate_run) keeps each
-            # pin until clearCache/unpersist — the same contract as the
-            # in-operator ngram/minhash/line pins.
-            keep = keep.persist()
+            # 2.36 -> 1.69, curation_near 4.12 -> 3.14. Lifecycle: a
+            # util.pin, like the in-operator ngram/minhash/line pins:
+            # curate_run releases it once the stage is written,
+            # curate_foreach_batch after each batch; under a bare
+            # curate() it is a session pin until clearCache/unpersist
+            # (bench.py and oracle_check clearCache between queries).
+            # As the last stage (each curate_run stage runs alone) the
+            # caller's one read is the only consumer: no pin.
+            if stage != config.stages[-1]:
+                keep = pin(keep)
             out = out.join(keep, on=id_col, how="left_semi")
         elif stage == "exact_dedup":
             from pond_spark.dedup.exact import dedup_exact
@@ -305,32 +308,29 @@ def curate_foreach_batch(
     checks_done = {"n": 0}
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        gate = _CatalogGate(
-            batch_df.sparkSession, config, text_col, id_col,
-            digest_catalog_path, minhash_catalog_path, embedding_catalog_path,
-        )
-        if not gate:
-            writer(
-                curate(batch_df, config, eval_set, text_col, id_col),
-                batch_id,
+        # every pin a batch makes is released once its writer returns
+        with pin_scope():
+            gate = _CatalogGate(
+                batch_df.sparkSession, config, text_col, id_col,
+                digest_catalog_path, minhash_catalog_path,
+                embedding_catalog_path,
             )
-            return
-        every = max(1, int(config.extra.get("emb_gate_check_every", 16)))
-        # pin `fresh`: it feeds both the writer's curate chain and
-        # register — unpinned, every micro-batch would pay the
-        # catalog joins + within-batch sha256 dedup TWICE
-        fresh = gate.filter_new(
-            batch_df, check=checks_done["n"] % every == 0
-        ).persist()
-        checks_done["n"] += 1
-        try:
-            writer(
-                curate(fresh, config, eval_set, text_col, id_col),
-                batch_id,
-            )
+            if not gate:
+                writer(
+                    curate(batch_df, config, eval_set, text_col, id_col),
+                    batch_id,
+                )
+                return
+            every = max(1, int(config.extra.get("emb_gate_check_every", 16)))
+            # pin `fresh`: it feeds both the writer's curate chain and
+            # register — unpinned, every micro-batch would pay the
+            # catalog joins + within-batch sha256 dedup TWICE
+            fresh = pin(gate.filter_new(
+                batch_df, check=checks_done["n"] % every == 0
+            ))
+            checks_done["n"] += 1
+            writer(curate(fresh, config, eval_set, text_col, id_col), batch_id)
             gate.register(fresh)
-        finally:
-            fresh.unpersist()
 
     return _apply
 
@@ -835,13 +835,17 @@ def curate_run(
         )
         rows: list[dict] = []
         cur_path = input_path
+        # the schema of cur_path when this run wrote it: reading with it
+        # skips the footer-inference job; an input or a resumed stage
+        # still infers
+        cur_schema = None
         recompute = False  # once a stage recomputes, everything after does
         for stage, stage_dir in stage_dirs:
             if not recompute and fs.exists(stage_dir + "/_SUCCESS"):
                 rows.append(
                     {"stage": stage, "path": stage_dir, "status": "resumed"}
                 )
-                cur_path = stage_dir
+                cur_path, cur_schema = stage_dir, None
                 continue
             recompute = True
             t0 = time.perf_counter()
@@ -859,15 +863,21 @@ def curate_run(
                         "new work_dir (compact/rebuild the catalog first "
                         "if this run's content must re-ship)."
                     )
-            src = spark.read.parquet(cur_path)
-            if stage == "catalog_gate":
-                out = gate.filter_new(src)
-            else:
-                out = curate(
-                    src, replace(config, stages=(stage,)), eval_set,
-                    text_col, id_col,
-                )
-            out.write.mode("overwrite").parquet(stage_dir)
+            reader = spark.read
+            if cur_schema is not None:
+                reader = reader.schema(cur_schema)
+            src = reader.parquet(cur_path)
+            # the stage's pins go once its output is written: a kept pin
+            # would be reused by a later run over a rewritten input path
+            with pin_scope():
+                if stage == "catalog_gate":
+                    out = gate.filter_new(src)
+                else:
+                    out = curate(
+                        src, replace(config, stages=(stage,)), eval_set,
+                        text_col, id_col,
+                    )
+                out.write.mode("overwrite").parquet(stage_dir)
             renew()
             rows.append(
                 {
@@ -880,7 +890,7 @@ def curate_run(
                     "seconds": round(time.perf_counter() - t0, 1),
                 }
             )
-            cur_path = stage_dir
+            cur_path, cur_schema = stage_dir, out.schema
         if marker is not None:
             # register AFTER the whole chain shipped (at-least-once: a
             # crashed run must stay re-admittable), from the

@@ -6,6 +6,14 @@ parallelism (the host's core count unless ``SPARK_GRAFT_CPUS`` says
 otherwise; on a real cluster set ~2-3x total cores or rely on AQE
 coalescing), Arrow enabled for the Pandas-UDF slow path, UTC session
 timezone so timestamp semantics match the DuckDB oracle.
+
+Python workers start from pond_spark's daemon module
+(``pond_spark/pydaemon.py``): before each task a pyspark worker asks
+every cached zip importer to re-read pyspark.zip's directory, about
+250 ms of CPU per task on CPython < 3.13; the daemon re-reads an archive
+only when it changed on disk. The directory holding ``pond_spark`` goes
+on the workers' ``PYTHONPATH`` so the daemon imports from any working
+directory.
 """
 
 from __future__ import annotations
@@ -13,6 +21,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+#: the directory that holds the pond_spark package
+_PKG_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _default_driver_mem() -> str:
@@ -70,6 +81,8 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.parquet.aggregatePushdown", "true")
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", "pond_spark.pydaemon")
+        .config("spark.executorEnv.PYTHONPATH", _PKG_PARENT)
         # single-JVM local mode: driver heap IS the executor heap; half
         # the RAM keeps GC pauses out and leaves room for Python workers
         .config(

@@ -2,7 +2,41 @@
 
 from __future__ import annotations
 
+import threading
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame
+
+_scopes = threading.local()
+
+
+def pin(df: DataFrame) -> DataFrame:
+    """``df.persist()``, released when the innermost :func:`pin_scope`
+    open in this thread exits. Outside any scope the pin lives for the
+    session: the CacheManager holds persisted frames strongly, so only
+    ``unpersist``/``clearCache`` drops it."""
+    df = df.persist()
+    stack = getattr(_scopes, "stack", None)
+    if stack:
+        stack[-1].append(df)
+    return df
+
+
+@contextmanager
+def pin_scope():
+    """Unpersist every frame :func:`pin` pinned inside the block when it
+    exits. A kept pin is matched to later plans by their scan's root
+    paths, so a rewritten input would reuse the old pin's rows."""
+    if not hasattr(_scopes, "stack"):
+        _scopes.stack = []
+    pins: list[DataFrame] = []
+    _scopes.stack.append(pins)
+    try:
+        yield
+    finally:
+        _scopes.stack.pop()
+        for df in pins:
+            df.unpersist()
 
 
 def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:

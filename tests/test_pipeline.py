@@ -551,6 +551,80 @@ def test_curate_run_stage_level_resume(spark, corpus, tmp_path):
         )
 
 
+def test_curate_run_releases_stage_pins(spark, tmp_path):
+    """curate_run unpersists every pin a stage made once the stage is
+    written. A kept pin is matched to a later plan by its scan's root
+    path, so a second run over an input rewritten in place reused the
+    first run's quality pins and shipped 0 survivors."""
+    import os
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pond_spark.pipeline import curate_run, final_corpus_path
+
+    good = "clean prose with plenty of ordinary readable words " * 3
+    docs = str(tmp_path / "docs")
+
+    def write(ids):
+        shutil.rmtree(docs, ignore_errors=True)
+        os.makedirs(docs)
+        pq.write_table(
+            pa.table({
+                "doc_id": pa.array(ids, pa.int64()),
+                "text": [f"{good}unique {i}" for i in ids],
+            }),
+            os.path.join(docs, "part-0.parquet"),
+        )
+
+    def survivors(work, stages):
+        rows = curate_run(
+            spark, docs, str(tmp_path / work),
+            CurationConfig(min_words=10, stages=stages),
+        )
+        path = final_corpus_path(rows)
+        return {r.doc_id for r in spark.read.parquet(path).collect()}
+
+    write(list(range(1, 41)))
+    assert survivors("q1", ("quality",)) == set(range(1, 41))
+    write(list(range(100, 140)))
+    assert survivors("q2", ("quality",)) == set(range(100, 140))
+
+    jsc = spark.sparkContext._jsc
+    stages = ("quality", "exact_dedup", "line_dedup", "pii", "sample")
+    pinned = jsc.getPersistentRDDs().size()
+    survivors("r1", stages)
+    after_one = jsc.getPersistentRDDs().size()
+    survivors("r2", stages)
+    survivors("r3", stages)
+    assert jsc.getPersistentRDDs().size() == after_one == pinned
+
+
+def test_curate_foreach_batch_releases_batch_pins(spark, tmp_path):
+    """Each micro-batch unpersists the pins it made (the gate's `fresh`
+    frame, the quality and line pins) once its writer returns."""
+    from pond_spark.pipeline import curate_foreach_batch
+
+    good = "clean prose with plenty of ordinary readable words " * 3
+    batch = spark.createDataFrame(
+        [(i, f"{good}unique {i}") for i in range(1, 9)],
+        "doc_id long, text string",
+    )
+    got: list[int] = []
+    apply = curate_foreach_batch(
+        lambda df, _: got.extend(r.doc_id for r in df.collect()),
+        CurationConfig(min_words=10, stages=("quality", "line_dedup")),
+        digest_catalog_path=str(tmp_path / "catalog"),
+    )
+    jsc = spark.sparkContext._jsc
+    pinned = jsc.getPersistentRDDs().size()
+    apply(batch, 0)
+    apply(batch, 1)  # all seen by batch 0: the digest gate drops them
+    assert sorted(got) == list(range(1, 9))
+    assert jsc.getPersistentRDDs().size() == pinned
+
+
 def test_curate_run_cross_run_incremental_catalogs(spark, tmp_path):
     """round-9 #3: the daily-corpus shape — one work_dir per day, one
     shared Digest/MinHash catalog across days. Day 2 must drop content
