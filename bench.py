@@ -56,14 +56,15 @@ def main(argv: list[str] | None = None) -> None:
     sf = float(m.group(1)) if m else 0.0
 
     import __spark_entry__ as entrymod
+    import bench_rows
 
     all_qs = entrymod.queries()
     contract = set(all_qs)
-    # bench-only probes (approx stage of the recall harnesses, timed
+    # bench-only rows (approx stage of the recall harnesses, timed
     # alone); reported per-query but excluded from the headline total
     # so round-over-round totals compare the same contract surface
-    all_qs.update(getattr(entrymod, "bench_queries", dict)())
-    probes = getattr(entrymod, "bench_probes", dict)()
+    all_qs.update(bench_rows.bench_queries())
+    probes = bench_rows.bench_probes()
     qs = all_qs
     if args.only:
         only = args.only.split(",")

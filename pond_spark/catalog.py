@@ -392,7 +392,6 @@ class CatalogStore:
         params: dict | None = None,
         mismatch_hint: str = "keys from different parameters are incomparable",
         stored_defaults: dict | None = None,
-        lease_mutations: bool = True,
         bucket_by: tuple | None = None,
     ):
         self.spark = spark
@@ -425,13 +424,6 @@ class CatalogStore:
             self._table = (
                 "pond_store_" + hashlib.md5(path.encode()).hexdigest()[:12]
             )
-        #: round-9 #8 — every mutation (append/compact/expire) runs
-        #: under a WriterLease by default, so DIRECT catalog users get
-        #: the scheduler-double-fire gate curate_run(lease_ttl=)
-        #: already had; the process-stable owner makes an outer
-        #: run-level lease re-entrant over these. ``False`` opts out
-        #: (e.g. a caller serializing writers externally).
-        self.lease_mutations = lease_mutations
         self.fs = _fs_for(spark, path)
         if params is not None:
             sidecar = self._sidecar()
@@ -527,12 +519,10 @@ class CatalogStore:
         )
 
     def _mutation_lease(self):
-        """Context for one mutation: a WriterLease when
-        ``lease_mutations`` (the default), else a no-op."""
-        import contextlib
-
-        if not self.lease_mutations:
-            return contextlib.nullcontext()
+        """Context for one mutation (append/compact/expire): a
+        WriterLease, so DIRECT catalog users get the scheduler-double-
+        fire gate curate_run(lease_ttl=) has; the process-stable owner
+        makes an outer run-level lease re-entrant over it."""
         return WriterLease(self.spark, self.path)
 
     def append(self, df: DataFrame, run_ts: int | None = None) -> None:

@@ -75,15 +75,12 @@ def perplexity(
     text_col: str = "text",
     id_col: str = "doc_id",
     alpha: float = 0.5,
-    broadcast_lm: bool = False,
 ) -> DataFrame:
     """Per-document bigram perplexity under ``lm`` (default:
     self-trained on ``df``).
 
     Returns ``(id, n_bigrams, avg_neg_logp, ppl)``; documents with no
-    bigram get NULL scores. ``broadcast_lm=True`` broadcasts the count
-    tables — correct whenever the LM comes from a bounded reference
-    corpus (the CCNet setup).
+    bigram get NULL scores.
     """
     if lm is not None:
         bigrams, unigrams, vocab = lm
@@ -103,8 +100,6 @@ def perplexity(
             F.count(F.lit(1)).alias("c1")
         ).persist()
         vocab = unigrams.agg(F.count(F.lit(1)).alias("v"))
-    if broadcast_lm:
-        bigrams, unigrams = F.broadcast(bigrams), F.broadcast(unigrams)
     scored = (
         pairs.join(bigrams, on=["w1", "w2"], how="left")
         .join(unigrams, on="w1", how="left")

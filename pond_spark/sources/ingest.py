@@ -86,6 +86,26 @@ def token_bucket(
     return flags, tokens, last_us
 
 
+def split_charged(
+    df: DataFrame, site_col: str, type_col: str, message_type: str
+) -> tuple[DataFrame, DataFrame]:
+    """``(charged, exempt)``: the rows that pay a token (message-type
+    records with a site) and the rest, with ``_discarded`` false. Both
+    token buckets (this module's and ``rate_limit_stream``) split here.
+
+    The two must PARTITION the frame under SQL three-valued logic: with
+    a NULL type, (type == msg) is NULL, so both a plain filter and its
+    ~negation exclude the row — it would silently vanish from the
+    union. coalesce(..., False) makes the condition two-valued; exempt
+    is then its exact complement."""
+    is_charged = F.coalesce(
+        (F.col(type_col) == message_type) & F.col(site_col).isNotNull(),
+        F.lit(False),
+    )
+    exempt = df.filter(~is_charged).withColumn("_discarded", F.lit(False))
+    return df.filter(is_charged), exempt
+
+
 def rate_limit(
     df: DataFrame,
     rate: float,
@@ -123,18 +143,7 @@ def rate_limit(
         pdf["_discarded"] = flags
         return pdf
 
-    # charged/exempt must PARTITION the frame under SQL three-valued
-    # logic: with a NULL type, (type == msg) is NULL, so both a plain
-    # filter and its ~negation exclude the row — it would silently
-    # vanish from the union. coalesce(..., False) makes the condition
-    # two-valued; exempt is then its exact complement.
-    is_charged = F.coalesce(
-        (F.col(type_col) == message_type) & F.col(site_col).isNotNull(),
-        F.lit(False),
-    )
-    charged = df.filter(is_charged)
-    exempt = df.filter(~is_charged).withColumn("_discarded", F.lit(False))
-
+    charged, exempt = split_charged(df, site_col, type_col, message_type)
     out_schema = T.StructType(
         df.schema.fields + [T.StructField("_discarded", T.BooleanType())]
     )

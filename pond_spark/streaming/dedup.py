@@ -39,31 +39,23 @@ def dedup_stream(
     text_col: str = "text",
     ts_col: str = "timestamp",
     watermark: str = "10 seconds",
-    exact_window: bool = True,
 ) -> DataFrame:
     """Drop re-deliveries of already-seen content from a stream.
 
-    ``exact_window=True`` uses ``dropDuplicatesWithinWatermark`` —
-    duplicates are suppressed as long as their event times fall within
-    the watermark delay of the first arrival, and state is evicted
-    afterwards (bounded memory; the right default for at-least-once
-    re-delivery, which happens within seconds). With
-    ``exact_window=False`` it falls back to ``dropDuplicates`` whose
-    state never expires — exact over the whole stream but unbounded;
-    only for short-lived backfills.
+    Uses ``dropDuplicatesWithinWatermark``: duplicates are suppressed
+    as long as their event times fall within the watermark delay of
+    the first arrival, and state is evicted afterwards (bounded memory;
+    at-least-once re-delivery happens within seconds).
     """
     # NULL-text rows pass through untouched — absent content proves no
-    # duplication (batch dedup_exact parity, r7 review fix: both
-    # dropDuplicates variants treat NULL keys as EQUAL, so they used
-    # to swallow every NULL-text row after the first)
+    # duplication (batch dedup_exact parity, r7 review fix: the
+    # dedup treats NULL keys as EQUAL, so it used to swallow every
+    # NULL-text row after the first)
     nulls = stream.filter(F.col(text_col).isNull())
     keyed = (
         stream.filter(F.col(text_col).isNotNull())
         .withColumn("_dedup_key", dedup_key(text_col))
         .withWatermark(ts_col, watermark)
     )
-    if exact_window:
-        out = keyed.dropDuplicatesWithinWatermark(["_dedup_key"])
-    else:
-        out = keyed.dropDuplicates(["_dedup_key"])
+    out = keyed.dropDuplicatesWithinWatermark(["_dedup_key"])
     return out.drop("_dedup_key").unionByName(nulls)

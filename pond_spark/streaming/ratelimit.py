@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from pond_spark.sources.ingest import token_bucket
+from pond_spark.sources.ingest import split_charged, token_bucket
 from pond_spark.streaming.conf import set_state_partitions
 
 
@@ -95,17 +95,7 @@ def rate_limit_stream(
         state.update((float(tokens), last_us))
         yield pdf
 
-    # two-valued split (same fix as the batch twin, sources/ingest.py):
-    # a NULL type makes both a plain filter and its ~negation reject
-    # the row under three-valued logic — the record would silently
-    # disappear from the union
-    is_charged = F.coalesce(
-        (F.col(type_col) == message_type) & F.col(site_col).isNotNull(),
-        F.lit(False),
-    )
-    charged = sdf.filter(is_charged)
-    exempt = sdf.filter(~is_charged).withColumn("_discarded", F.lit(False))
-
+    charged, exempt = split_charged(sdf, site_col, type_col, message_type)
     limited = charged.groupBy(site_col).applyInPandasWithState(
         bucket, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
     )

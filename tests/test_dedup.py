@@ -769,8 +769,8 @@ def test_catalog_mutations_lease_by_default(spark, tmp_path):
     """Round-9 #8: register/compact/expire acquire a WriterLease by
     default, so DIRECT catalog users get the scheduler-double-fire
     gate — a foreign live lease refuses the mutation; the same
-    process's outer lease is re-entrant; lease_mutations=False opts
-    out; and the lease is released (not leaked) after each mutation."""
+    process's outer lease is re-entrant; and the lease is released
+    (not leaked) after each mutation."""
     import pytest as _pytest
 
     from pond_spark.catalog import LeaseHeldError, WriterLease
@@ -792,11 +792,6 @@ def test_catalog_mutations_lease_by_default(spark, tmp_path):
         cat.compact()
     with _pytest.raises(LeaseHeldError):
         cat.expire(before_ts=1)
-    # opt-out still mutates (caller serializes externally)
-    from pond_spark.catalog import CatalogStore
-    cat._store.lease_mutations = False
-    cat.compact()
-    cat._store.lease_mutations = True
     foreign.release()
 
     # same-process outer lease (process-stable default owner) is

@@ -57,6 +57,18 @@ def test_every_query_has_a_twin(twins):
     assert len(QUERIES) == 114
 
 
+def test_registry_order_is_pinned():
+    """The names and order of queries() are part of the driver
+    contract; moving a query between registry modules must not
+    change them."""
+    import hashlib
+
+    digest = hashlib.sha256("\n".join(QUERIES).encode()).hexdigest()
+    assert digest == (
+        "12aec8f7726d6a10fd35af34fd997e8fb9754932e18d2579664171c75612156c"
+    )
+
+
 @pytest.mark.parametrize("name", list(QUERIES))
 def test_query_matches_twin(spark, oracle_con, twins, name):
     fn = QUERIES[name]

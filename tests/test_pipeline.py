@@ -382,14 +382,14 @@ def test_curation_near_fuzz_oracle_parity(spark):
     (mutation rate 0-25%), singleton docs, NULL text, empty and
     whitespace-only docs, two lang blocks — each compared row-set
     exact against the SAME parameterized recursive-CTE DuckDB replay
-    the registry twin runs (__spark_entry__.curation_near_oracle_sql),
+    the registry twin runs (pond_spark.registry.dedup.curation_near_oracle_sql),
     not a copy. One seeded draw keeps failures reproducible."""
     import random
 
     import duckdb
 
-    from __spark_entry__ import curation_near_oracle_sql
     from pond_spark.pipeline import CurationConfig, curate
+    from pond_spark.registry.dedup import curation_near_oracle_sql
 
     rng = random.Random(0xC04A)
     vocab = [f"tok{i}" for i in range(200)]
@@ -1147,13 +1147,13 @@ def test_curation_incremental_fuzz_oracle_parity(spark, tmp_path):
     groups, NULL/empty/whitespace docs — each day-split run through
     the REAL curate_run + DigestCatalog machinery and compared row-set
     exact against the SAME parameterized DuckDB replay the registry
-    twin runs (__spark_entry__.curation_incremental_oracle_sql)."""
+    twin runs (pond_spark.registry.dedup.curation_incremental_oracle_sql)."""
     import random
 
     import duckdb
 
-    from __spark_entry__ import curation_incremental_oracle_sql
     from pond_spark.pipeline import CurationConfig, curate_run, final_corpus_path
+    from pond_spark.registry.dedup import curation_incremental_oracle_sql
 
     rng = random.Random(0xD161)
     vocab = [f"w{i}" for i in range(60)]
@@ -1319,7 +1319,7 @@ def test_embedding_gate_fuzz_oracle_parity(spark, tmp_path):
     import duckdb
     import numpy as np
 
-    from __spark_entry__ import _sql_bucket, _sql_cos
+    from pond_spark.registry._common import _sql_bucket, _sql_cos
     from pond_spark.similarity.catalog import (
         EmbeddingCatalog, rhp_gate_coefficient,
     )

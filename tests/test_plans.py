@@ -210,7 +210,7 @@ def test_chunk_documents_is_shuffle_free(spark, entry):
 def test_tfidf_partial_aggregates(spark, entry):
     """Both groupBys (per-(doc, term) TF and per-term DF) must combine
     map-side before their shuffles."""
-    df = entry.q_tfidf_keywords(spark, SF)
+    df = entry.queries()["tfidf_keywords"](spark, SF)
     assert has_partial_aggregate(df), formatted_plan(df)
 
 
@@ -231,7 +231,7 @@ def test_bm25_partial_aggregates_and_broadcast_stats(spark, entry):
     """BM25: the TF/DF/doc-length groupBys combine map-side; the
     single-row corpus-stats frame joins as a broadcast, never a
     sort-merge."""
-    df = entry.q_bm25_search(spark, SF)
+    df = entry.queries()["bm25_search"](spark, SF)
     plan = formatted_plan(df)
     assert has_partial_aggregate(df), plan
     assert has_broadcast_join(df), plan
@@ -240,7 +240,7 @@ def test_bm25_partial_aggregates_and_broadcast_stats(spark, entry):
 def test_nb_classify_broadcasts_class_dims(spark, entry):
     """Naive Bayes: the classes/priors and vocab-size dims are tiny
     and must broadcast; only the (word, class) count table shuffles."""
-    df = entry.q_nb_classify(spark, SF)
+    df = entry.queries()["nb_classify"](spark, SF)
     plan = formatted_plan(df)
     assert has_broadcast_join(df), plan
     assert has_partial_aggregate(df), plan
@@ -249,7 +249,7 @@ def test_nb_classify_broadcasts_class_dims(spark, entry):
 def test_image_dhash_pairs_no_cartesian(spark, entry):
     """The perceptual-hash pair join goes through the pigeonhole
     chunk keys — never a cartesian/broadcast-nested-loop product."""
-    df = entry.q_media_dhash_pairs(spark, SF)
+    df = entry.queries()["media_dhash_pairs"](spark, SF)
     plan = formatted_plan(df)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
@@ -276,8 +276,9 @@ def test_window_offset_fuses_into_take_ordered(spark, entry):
     the shape that stays cheap when the filter matches 10^9 rows."""
     from pond_spark.filters import FilterSpec
     from pond_spark.query import Query
+    from pond_spark.schema import events_as_logs
 
-    logs = entry.events_as_logs(spark, SF)
+    logs = events_as_logs(spark, SF)
     df = (
         Query(logs)
         .filter(FilterSpec(sites=frozenset({"site-001"})))
@@ -296,8 +297,9 @@ def test_window_skip_without_limit_is_global_sort(spark, entry):
     range exchange + Sort + CollectLimit, nothing more."""
     from pond_spark.filters import FilterSpec
     from pond_spark.query import Query
+    from pond_spark.schema import events_as_logs
 
-    logs = entry.events_as_logs(spark, SF)
+    logs = events_as_logs(spark, SF)
     df = (
         Query(logs)
         .filter(FilterSpec(sites=frozenset({"site-001"})))

@@ -74,11 +74,11 @@ def _assert_margin(con, label: str, values_cte: str) -> None:
 
 def test_bm25_contribution_margins(duck):
     """Every per-(doc, term) BM25 contribution for the registered
-    query terms (BM25_TERMS in __spark_entry__) sits far from a
+    query terms (BM25_TERMS in pond_spark.registry.text) sits far from a
     floor boundary."""
-    import __spark_entry__ as entry
+    from pond_spark.registry.text import BM25_TERMS
 
-    terms = ", ".join(f"'{t}'" for t in entry.BM25_TERMS)
+    terms = ", ".join(f"'{t}'" for t in BM25_TERMS)
     _assert_margin(duck, "bm25", f"""
       SELECT * FROM (
         WITH w AS ({TOKENS}),

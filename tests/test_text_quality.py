@@ -93,7 +93,7 @@ def test_perplexity_self_trained(spark):
 
 def test_perplexity_reference_lm_broadcast(spark):
     """Score one corpus under an LM trained on another (the CCNet
-    shape: trusted reference corpus, broadcast joins)."""
+    shape: a trusted reference corpus)."""
     from pond_spark.functions.lm import bigram_lm, perplexity
 
     ref = spark.createDataFrame(
@@ -104,9 +104,7 @@ def test_perplexity_reference_lm_broadcast(spark):
     )
     out = {
         r.doc_id: r
-        for r in perplexity(
-            tgt, lm=bigram_lm(ref), broadcast_lm=True
-        ).collect()
+        for r in perplexity(tgt, lm=bigram_lm(ref)).collect()
     }
     assert out[10].ppl < out[11].ppl
 
