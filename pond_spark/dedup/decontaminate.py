@@ -13,7 +13,8 @@ Spark plan is the one you want at 100 TB:
   broadcast (no shuffle of corpus data at all), then one groupBy on
   ``id_col`` counting surviving grams — the only shuffle, and it only
   carries (id, gram-hit) rows that actually matched, which is tiny for
-  a mostly-clean corpus.
+  a mostly-clean corpus. ``decontaminate`` at ``min_hits <= 1`` needs
+  no count: it anti-joins the semi-join's ids directly.
 
 Tokenization matches dedup.ngram (lower, trim, split on whitespace,
 grams joined by a single space) so the DuckDB oracle can replay the
@@ -59,6 +60,20 @@ def _gram_strings(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFram
     )
 
 
+def _hit_grams(
+    corpus: DataFrame, eval_set: DataFrame, text_col: str, id_col: str, n: int
+) -> DataFrame:
+    """(id, gram) for every distinct corpus gram found in the eval set:
+    the corpus grams semi-joined against the broadcast eval grams."""
+    eval_grams = (
+        _gram_strings(eval_set, text_col, id_col, n)
+        .select("gram")
+        .distinct()
+    )
+    doc_grams = _gram_strings(corpus, text_col, id_col, n)
+    return doc_grams.join(F.broadcast(eval_grams), "gram", "left_semi")
+
+
 def contamination_report(
     corpus: DataFrame,
     eval_set: DataFrame,
@@ -73,14 +88,8 @@ def contamination_report(
     Corpus documents that are also in the eval set are the caller's
     concern (pass a pre-filtered corpus, as ``decontaminate`` does).
     """
-    eval_grams = (
-        _gram_strings(eval_set, text_col, id_col, n)
-        .select("gram")
-        .distinct()
-    )
-    doc_grams = _gram_strings(corpus, text_col, id_col, n)
     hits = (
-        doc_grams.join(F.broadcast(eval_grams), "gram", "left_semi")
+        _hit_grams(corpus, eval_set, text_col, id_col, n)
         .groupBy(id_col)
         .agg(F.count("gram").alias("hit_grams"))
     )
@@ -95,8 +104,13 @@ def decontaminate(
     n: int = 8,
     min_hits: int = 1,
 ) -> DataFrame:
-    """The corpus minus contaminated documents (anti-join on the report)."""
-    report = contamination_report(
-        corpus, eval_set, text_col, id_col, n=n, min_hits=min_hits
-    )
-    return corpus.join(report.select(id_col), id_col, "left_anti")
+    """The corpus minus contaminated documents. At ``min_hits <= 1`` any
+    hit contaminates, so the hit ids are anti-joined without the
+    per-document count."""
+    if min_hits <= 1:
+        hits = _hit_grams(corpus, eval_set, text_col, id_col, n)
+    else:
+        hits = contamination_report(
+            corpus, eval_set, text_col, id_col, n=n, min_hits=min_hits
+        )
+    return corpus.join(hits.select(id_col), id_col, "left_anti")

@@ -13,8 +13,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from pond_spark.util import pin
-
 HASH_MOD = 1_000_000_007
 HASH_BASE = 31
 
@@ -137,159 +135,22 @@ def _word_ngrams(words: Column, n: int) -> Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
-def quality_metrics(
-    df: DataFrame,
-    text_col: str = "text",
-    keep_cols: tuple[str, ...] = ("doc_id",),
-    min_words: int = 20,
-    max_words: int = 100_000,
-    min_mean_word_len: float = 2.0,
-    max_mean_word_len: float = 12.0,
-    min_alpha_word_frac: float = 0.8,
-    max_dup_2gram_frac: float = 0.85,
-) -> DataFrame:
-    """DataFrame twin of :func:`quality_rules` that materializes the
-    word and bigram arrays in staged projections.
-
-    The column-list form re-derives ``split(trim(lower(text)))`` inside
-    every metric — lambda-bound higher-order functions are opaque to
-    Spark's subexpression elimination, so the split ran ~20× per row
-    (measured 6 s → sub-second at sf0.1 after this change). Staged
-    ``select``s survive CollapseProject because each intermediate alias
-    is non-cheap and multiply-referenced, so the split and the bigram
-    build each run exactly once per row.
-    """
-    kept = [F.col(c) for c in keep_cols]
-    staged = df.select(*kept, _words(F.col(text_col)).alias("_qw")).select(
-        *kept,
-        F.col("_qw"),
-        F.size("_qw").alias("n_words"),
-        _word_ngrams(F.col("_qw"), 2).alias("_qbi"),
-    )
-    nw = F.col("n_words").cast("double")
-    nbi = F.size("_qbi").cast("double")
-    scored = staged.select(
-        *kept,
-        F.col("n_words"),
-        F.round(
-            F.when(
-                F.col("n_words") > 0,
-                F.aggregate(
-                    F.col("_qw"),
-                    F.lit(0).cast("long"),
-                    lambda acc, w: acc + F.length(w),
-                ).cast("double")
-                / nw,
-            ).otherwise(F.lit(0.0)),
-            6,
-        ).alias("mean_word_len"),
-        F.round(
-            F.when(
-                F.col("n_words") > 0,
-                F.size(
-                    F.filter(F.col("_qw"), lambda w: w.rlike("[A-Za-z]"))
-                ).cast("double")
-                / nw,
-            ).otherwise(F.lit(0.0)),
-            6,
-        ).alias("alpha_word_frac"),
-        F.round(
-            F.when(
-                F.size("_qbi") > 0,
-                F.lit(1.0)
-                - F.size(F.array_distinct(F.col("_qbi"))).cast("double") / nbi,
-            ).otherwise(F.lit(0.0)),
-            6,
-        ).alias("dup_2gram_frac"),
-    )
-    return scored.select(
-        *kept,
-        "n_words",
-        "mean_word_len",
-        "alpha_word_frac",
-        "dup_2gram_frac",
-        (
-            (F.col("n_words") >= min_words)
-            & (F.col("n_words") <= max_words)
-            & (F.col("mean_word_len") >= min_mean_word_len)
-            & (F.col("mean_word_len") <= max_mean_word_len)
-            & (F.col("alpha_word_frac") >= min_alpha_word_frac)
-            & (F.col("dup_2gram_frac") <= max_dup_2gram_frac)
-        ).alias("keep"),
-    )
+def _let(value: Column, body) -> Column:
+    """``body(value)`` with ``value`` evaluated once: the SQL "let" as
+    ``transform(array(value), v -> body(v))[0]``. A lambda argument is
+    evaluated once per row, while a Column referenced twice inside a
+    higher-order function is re-derived per reference (HOFs are opaque
+    to subexpression elimination, PERF_NOTES.md)."""
+    return F.transform(F.array(value), body)[0]
 
 
-def quality_keep_ids(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_words: int = 20,
-    max_words: int = 100_000,
-    min_mean_word_len: float = 2.0,
-    max_mean_word_len: float = 12.0,
-    min_alpha_word_frac: float = 0.8,
-    max_dup_2gram_frac: float = 0.85,
-) -> DataFrame:
-    """Ids passing the Gopher gate, via explode + integer aggregates.
-
-    The FILTER form of the quality gate. Filtering on
-    :func:`quality_metrics` output looks right but is a trap:
-    predicate pushdown inlines the ``keep`` alias through the staged
-    projections unconditionally, resurrecting the ~20×-per-row split
-    tree (measured: the curation chain went 12.8 s at sf0.1 through
-    that path). Aggregates are pushdown barriers, so this variant
-    explodes words/bigrams once and reduces with INTEGER-exact sums
-    (counts, summed lengths, 0/1 flags) — order-insensitive, so the
-    derived ratios equal quality_metrics'/the DuckDB twin's to the
-    last bit. Three narrow shuffles on the id, map-side combined.
-    """
-    # persisted (r11, guide §2.4): the tokenized frame feeds BOTH the
-    # word and the bigram explode — unpinned, the scan + split ran
-    # twice. A util.pin: released by the enclosing pin_scope, else a
-    # session pin cleared by loop drivers (ngram-pin contract).
-    staged = pin(df.select(
-        F.col(id_col), _words(F.col(text_col)).alias("_w")
-    ))
-    w = staged.select(F.col(id_col), F.explode("_w").alias("word"))
-    agg_w = w.groupBy(id_col).agg(
-        F.count(F.lit(1)).alias("_nw"),
-        F.sum(F.length("word").cast("long")).alias("_chars"),
-        F.sum(F.when(F.col("word").rlike("[A-Za-z]"), 1).otherwise(0)).alias(
-            "_alpha"
-        ),
-    )
-    bi = staged.select(
-        F.col(id_col), F.explode(_word_ngrams(F.col("_w"), 2)).alias("g")
-    )
-    # two-level aggregation (r11, guide §2.3): count + count_distinct
-    # in one agg planned an Expand (×2 duplication of the exploded
-    # bigram stream); per-(id, gram) partials first — map-side combined
-    # — then an exact rollup (sum == bigram count, row count ==
-    # distinct bigrams; grams are never NULL).
-    bc = bi.groupBy(id_col, "g").agg(F.count(F.lit(1)).alias("_k"))
-    agg_b = bc.groupBy(id_col).agg(
-        F.sum("_k").alias("_nbi"),
-        F.count(F.lit(1)).alias("_dbi"),
-    )
-    j = agg_w.join(agg_b, on=id_col)
-    nw = F.col("_nw").cast("double")
-    mean_wl = F.round(F.col("_chars").cast("double") / nw, 6)
-    alpha = F.round(F.col("_alpha").cast("double") / nw, 6)
-    dup2 = F.round(
-        F.lit(1.0) - F.col("_dbi").cast("double") / F.col("_nbi").cast("double"),
-        6,
-    )
-    return j.filter(
-        (F.col("_nw") >= min_words)
-        & (F.col("_nw") <= max_words)
-        & (mean_wl >= min_mean_word_len)
-        & (mean_wl <= max_mean_word_len)
-        & (alpha >= min_alpha_word_frac)
-        & (dup2 <= max_dup_2gram_frac)
-    ).select(id_col)
+#: the fields of :func:`quality_struct`, in output order
+QUALITY_FIELDS = (
+    "n_words", "mean_word_len", "alpha_word_frac", "dup_2gram_frac", "keep",
+)
 
 
-def quality_rules(
+def quality_struct(
     col: Column,
     min_words: int = 20,
     max_words: int = 100_000,
@@ -297,61 +158,103 @@ def quality_rules(
     max_mean_word_len: float = 12.0,
     min_alpha_word_frac: float = 0.8,
     max_dup_2gram_frac: float = 0.85,
-) -> list[Column]:
-    """Gopher/C4-style per-document quality metrics and keep flag.
-
-    Returns aliased columns: n_words, mean_word_len, alpha_word_frac
+) -> Column:
+    """Gopher/C4-style per-document quality metrics and keep flag as
+    one struct expression: n_words, mean_word_len, alpha_word_frac
     (words containing at least one ASCII letter / words),
     dup_2gram_frac (1 - distinct word-bigrams / bigrams — repetition),
     and ``keep`` (all thresholds pass). Ratios are rounded to 6
-    decimals for stable cross-engine hashing."""
-    words = _words(col)
-    n_words = F.size(words)
-    nw = n_words.cast("double")
-    mean_wl = F.round(
-        F.when(
-            n_words > 0,
-            F.aggregate(
-                words,
-                F.lit(0).cast("long"),
-                lambda acc, w: acc + F.length(w),
-            ).cast("double")
-            / nw,
-        ).otherwise(F.lit(0.0)),
-        6,
+    decimals for stable cross-engine hashing.
+
+    The word array, the bigram array and the metrics are each bound
+    once through :func:`_let`, so the split runs once per row and a
+    ``filter`` on ``keep`` evaluates a single expression — no staged
+    alias for predicate pushdown to inline."""
+
+    def metrics(words: Column) -> Column:
+        n_words = F.size(words)
+        nw = n_words.cast("double")
+        mean_wl = F.round(
+            F.when(
+                n_words > 0,
+                F.aggregate(
+                    words,
+                    F.lit(0).cast("long"),
+                    lambda acc, w: acc + F.length(w),
+                ).cast("double")
+                / nw,
+            ).otherwise(F.lit(0.0)),
+            6,
+        )
+        alpha_frac = F.round(
+            F.when(
+                n_words > 0,
+                F.size(F.filter(words, lambda w: w.rlike("[A-Za-z]"))).cast("double")
+                / nw,
+            ).otherwise(F.lit(0.0)),
+            6,
+        )
+        dup2 = _let(
+            _word_ngrams(words, 2),
+            lambda bi: F.round(
+                F.when(
+                    F.size(bi) > 0,
+                    F.lit(1.0)
+                    - F.size(F.array_distinct(bi)).cast("double")
+                    / F.size(bi).cast("double"),
+                ).otherwise(F.lit(0.0)),
+                6,
+            ),
+        )
+        return F.struct(
+            n_words.alias("n_words"),
+            mean_wl.alias("mean_word_len"),
+            alpha_frac.alias("alpha_word_frac"),
+            dup2.alias("dup_2gram_frac"),
+        )
+
+    def verdict(m: Column) -> Column:
+        keep = (
+            (m["n_words"] >= min_words)
+            & (m["n_words"] <= max_words)
+            & (m["mean_word_len"] >= min_mean_word_len)
+            & (m["mean_word_len"] <= max_mean_word_len)
+            & (m["alpha_word_frac"] >= min_alpha_word_frac)
+            & (m["dup_2gram_frac"] <= max_dup_2gram_frac)
+        )
+        return F.struct(
+            *[m[f].alias(f) for f in QUALITY_FIELDS[:-1]], keep.alias("keep")
+        )
+
+    return _let(_let(_words(col), metrics), verdict)
+
+
+def quality_metrics(
+    df: DataFrame,
+    text_col: str = "text",
+    keep_cols: tuple[str, ...] = ("doc_id",),
+    **thresholds,
+) -> DataFrame:
+    """``keep_cols`` plus the five :data:`QUALITY_FIELDS` columns.
+
+    The struct is staged in one select, so the five fields read it
+    instead of re-evaluating it (a non-cheap alias referenced more than
+    once survives CollapseProject). Filter with
+    ``quality_struct(...)["keep"]`` rather than on this frame's
+    ``keep``: pushdown would inline the staged struct into the filter
+    and evaluate it twice."""
+    kept = [F.col(c) for c in keep_cols]
+    staged = df.select(
+        *kept, quality_struct(F.col(text_col), **thresholds).alias("_q")
     )
-    alpha_frac = F.round(
-        F.when(
-            n_words > 0,
-            F.size(F.filter(words, lambda w: w.rlike("[A-Za-z]"))).cast("double")
-            / nw,
-        ).otherwise(F.lit(0.0)),
-        6,
-    )
-    bi = _word_ngrams(words, 2)
-    nbi = F.size(bi).cast("double")
-    dup2 = F.round(
-        F.when(
-            F.size(bi) > 0,
-            F.lit(1.0) - F.size(F.array_distinct(bi)).cast("double") / nbi,
-        ).otherwise(F.lit(0.0)),
-        6,
-    )
-    keep = (
-        (n_words >= min_words)
-        & (n_words <= max_words)
-        & (mean_wl >= min_mean_word_len)
-        & (mean_wl <= max_mean_word_len)
-        & (alpha_frac >= min_alpha_word_frac)
-        & (dup2 <= max_dup_2gram_frac)
-    )
-    return [
-        n_words.alias("n_words"),
-        mean_wl.alias("mean_word_len"),
-        alpha_frac.alias("alpha_word_frac"),
-        dup2.alias("dup_2gram_frac"),
-        keep.alias("keep"),
-    ]
+    return staged.select(*kept, *[F.col("_q")[f].alias(f) for f in QUALITY_FIELDS])
+
+
+def quality_rules(col: Column, **thresholds) -> list[Column]:
+    """The :data:`QUALITY_FIELDS` of :func:`quality_struct` as aliased
+    columns (thresholds as there)."""
+    q = quality_struct(col, **thresholds)
+    return [q[f].alias(f) for f in QUALITY_FIELDS]
 
 
 def quality_rules_sql(

@@ -21,8 +21,9 @@ deterministic):
 7. sample            — deterministic hash sample (operators/sampling.py)
 
 Every stage is declarative, so Catalyst sees ONE plan: the quality
-predicate and the sampling bucket filter push into the scan; the
-shuffling stages (2, 3, 5) each shuffle on narrow hash keys. Nothing
+gate is one per-document filter and the sampling bucket filter pushes
+into the scan; the shuffling stages (2, 3, 4, 6) each shuffle on narrow
+hash keys, and the quality, PII and sample stages are map-only. Nothing
 materializes between stages unless the caller persists.
 
 The report() companion audits the funnel — input rows, survivors per
@@ -98,6 +99,15 @@ def _check_stages(stages) -> None:
             raise ValueError(f"unknown curation stage: {stage}")
 
 
+def _quality_keep(config: CurationConfig, text_col: str):
+    """The Gopher keep flag, one per-document expression (no shuffle)."""
+    from pond_spark.functions.text import quality_struct
+
+    return quality_struct(
+        F.col(text_col), min_words=config.min_words, max_words=config.max_words
+    )["keep"]
+
+
 def curate(
     docs: DataFrame,
     config: CurationConfig = CurationConfig(),
@@ -114,40 +124,7 @@ def curate(
     out = docs
     for stage in config.stages:
         if stage == "quality":
-            # aggregate-based gate, NOT filter(quality_metrics(...)):
-            # predicate pushdown would inline the keep alias through
-            # the staged projections and resurrect the per-metric
-            # split tree (see quality_keep_ids docstring; measured
-            # 12.8 s -> ~2 s for the whole chain at sf0.1)
-            from pond_spark.functions.text import quality_keep_ids
-
-            keep = quality_keep_ids(
-                out,
-                text_col,
-                id_col,
-                min_words=config.min_words,
-                max_words=config.max_words,
-            )
-            # pin the ids-only keep set (r11, guide §1.2/§5): the
-            # gated `out` is consumed by MORE than one downstream
-            # branch in every non-trivial chain (dedup_exact's keeper
-            # aggregation + join-back; near_dedup's pair source + the
-            # final anti-join), and Spark has no cross-branch CSE —
-            # unpinned, the whole quality-metrics aggregation re-runs
-            # once per consumer. Ids only, so the pin is tiny; the
-            # docs scan itself stays lazy per branch. Measured at
-            # sf0.1 (in-session interleaved, both orders): curation
-            # 2.36 -> 1.69, curation_near 4.12 -> 3.14. Lifecycle: a
-            # util.pin, like the in-operator ngram/minhash/line pins:
-            # curate_run releases it once the stage is written,
-            # curate_foreach_batch after each batch; under a bare
-            # curate() it is a session pin until clearCache/unpersist
-            # (bench.py and oracle_check clearCache between queries).
-            # As the last stage (each curate_run stage runs alone) the
-            # caller's one read is the only consumer: no pin.
-            if stage != config.stages[-1]:
-                keep = pin(keep)
-            out = out.join(keep, on=id_col, how="left_semi")
+            out = out.filter(_quality_keep(config, text_col))
         elif stage == "exact_dedup":
             from pond_spark.dedup.exact import dedup_exact
 
@@ -229,13 +206,10 @@ def curate(
         elif stage == "decontaminate":
             if eval_set is None:
                 raise ValueError("decontaminate stage needs eval_set")
-            from pond_spark.dedup.decontaminate import contamination_report
+            from pond_spark.dedup.decontaminate import decontaminate
 
-            hits = contamination_report(
+            out = decontaminate(
                 out, eval_set, text_col, id_col, n=config.decontaminate_n
-            )
-            out = out.join(
-                hits.select(id_col), on=id_col, how="left_anti"
             )
         elif stage == "sample":
             if config.sample_rate < 1.0:
@@ -364,24 +338,7 @@ def curate_stream(
     out = stream
     for stage in config.stages:
         if stage == "quality":
-            from pond_spark.functions.text import quality_metrics
-
-            keep_cols = tuple(
-                c for c in out.columns if c not in (text_col,)
-            )
-            scored = quality_metrics(
-                out.withColumn("_orig_text", F.col(text_col)),
-                text_col,
-                keep_cols=(*keep_cols, "_orig_text"),
-                min_words=config.min_words,
-                max_words=config.max_words,
-            )
-            out = (
-                scored.filter(F.col("keep"))
-                .drop("n_words", "mean_word_len", "alpha_word_frac",
-                      "dup_2gram_frac", "keep")
-                .withColumnRenamed("_orig_text", text_col)
-            )
+            out = out.filter(_quality_keep(config, text_col))
         elif stage == "exact_dedup":
             from pond_spark.streaming.dedup import dedup_stream
 

@@ -46,8 +46,11 @@ def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     expensive map stage — shingling, fingerprinting, vector scoring,
     media decoding — to a single core. When the scan's file count is
     below the cluster's default parallelism, repartition up; on a real
-    cluster where splits already exceed cores this is a no-op, so the
-    (tiny) shuffle only ever buys otherwise-idle cores.
+    cluster where splits already exceed cores this is a no-op. On a
+    small input the shuffle is not free: decontamination without it
+    was faster on a one-file 600-doc stage input, but slower on the
+    one-file 5000-doc sf0.1 documents, so it stays (PERF_NOTES.md,
+    "Curation in fewer jobs").
 
     The probe uses ``df.inputFiles()`` — pure metadata. Checking
     ``df.rdd.getNumPartitions()`` instead would be a trap: with AQE

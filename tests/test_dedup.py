@@ -338,6 +338,15 @@ def test_contamination_min_hits_threshold(spark, docs):
     hits = {r["doc_id"] for r in rep.collect()}
     assert 2 in hits          # exact dup always above threshold
     assert 6 not in hits
+    # decontaminate's counted branch: the corpus minus the report's ids
+    from pond_spark.dedup import decontaminate
+
+    ids = {r["doc_id"] for r in corpus.collect()}
+    kept = decontaminate(corpus, eval_set, "text", "doc_id", n=4, min_hits=4)
+    assert {r["doc_id"] for r in kept.collect()} == ids - hits
+    # ...and its uncounted branch drops the near dups sharing fewer grams
+    kept1 = decontaminate(corpus, eval_set, "text", "doc_id", n=4, min_hits=1)
+    assert {r["doc_id"] for r in kept1.collect()} == {4, 6}
 
 
 def test_contamination_eval_side_broadcasts(spark, docs):

@@ -65,6 +65,78 @@ def test_curate_single_plan(spark, corpus):
     assert "Join" in plan  # dedup semi-join present in the single plan
 
 
+def test_curate_quality_stage_is_one_map_only_pass(spark, corpus):
+    """The quality gate is one per-document filter: its executed plan
+    has no exchange and no cached relation, and it pins nothing."""
+    jsc = spark.sparkContext._jsc
+    pinned = jsc.getPersistentRDDs().size()
+    out = curate(corpus, CurationConfig(stages=("quality",)))
+    out.collect()
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert "Exchange" not in final and "InMemoryRelation" not in final
+    assert jsc.getPersistentRDDs().size() == pinned
+
+
+#: quality-gate edge texts: empty, whitespace-only, NULL, one word
+#: (ASCII and not), non-ASCII prose, a non-Latin script
+_GATE_EDGE_ROWS = [
+    (1, "hello"),
+    (2, "hello world again and again"),
+    (3, ""),
+    (4, "  \t \n "),
+    (5, None),
+    (6, "Zürich"),
+    (7, "héllo wörld ünïcode façade"),
+    (8, "日本語 の テキスト です"),
+    (9, "x"),
+]
+
+
+@pytest.mark.parametrize(
+    "min_words, expected",
+    [(1, {1, 2, 6, 7}), (2, {2, 7}), (0, {1, 2, 6, 7})],
+)
+def test_quality_gate_batch_stream_and_rules_agree(
+    spark, tmp_path, min_words, expected
+):
+    """Batch curate, curate_stream and quality_rules keep the same ids,
+    down to docs too short to have a word bigram (min_words <= 1)."""
+    from pyspark.sql import functions as F
+
+    from pond_spark.functions.text import quality_rules
+    from pond_spark.pipeline import curate_stream
+
+    schema = "doc_id long, text string"
+    docs = spark.createDataFrame(_GATE_EDGE_ROWS, schema)
+    config = CurationConfig(stages=("quality",), min_words=min_words)
+
+    rules = {
+        r.doc_id
+        for r in docs.select("doc_id", *quality_rules(
+            F.col("text"), min_words=min_words
+        )).collect()
+        if r.keep
+    }
+    batch = {r.doc_id for r in curate(docs, config).collect()}
+
+    src = str(tmp_path / "in")
+    docs.coalesce(1).write.parquet(src)
+    name = f"quality_gate_{min_words}"
+    q = (
+        curate_stream(spark.readStream.schema(schema).parquet(src), config)
+        .writeStream.format("memory")
+        .queryName(name)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    stream = {r.doc_id for r in spark.table(name).collect()}
+    spark.catalog.dropTempView(name)
+
+    assert rules == batch == stream == expected
+
+
 def test_curate_unknown_stage_rejected(spark, corpus):
     with pytest.raises(ValueError):
         curate(corpus, CurationConfig(stages=("nonsense",)))
