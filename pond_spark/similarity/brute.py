@@ -5,7 +5,7 @@ array expressions (``zip_with`` + ``aggregate`` — JVM-side, no Python),
 then top-k via ``orderBy().limit(k)`` → TakeOrderedAndProject (per-
 partition heaps, no global sort). This is the correct-by-construction
 reference; the LSH/IVF variants in .lsh trade recall for candidate
-pruning at scale. knn_join's cross_scores runs the same fold in an
+pruning at scale. knn_join and cross_scores run the same fold in an
 Arrow/numpy kernel over a broadcast right side.
 
 Determinism: all arithmetic in double, summation strictly left-to-right
@@ -78,10 +78,11 @@ def brute_force_topk(
     )
 
 
-#: refuse a right side bigger than this many rows. cross_scores
-#: collects it onto the driver and stacks it into float64 matrices —
-#: ≈512 MB at 1M × 64 dims (8 B a value), on top of the collected
-#: Arrow table — then broadcasts that payload pickled, ≈512 MB again.
+#: refuse a right side bigger than this many rows. knn_join and
+#: cross_scores collect it onto the driver and stack it into float64
+#: matrices — ≈512 MB at 1M × 64 dims (8 B a value), on top of the
+#: collected Arrow table — then broadcast that payload pickled,
+#: ≈512 MB again.
 #: A refused call reads at most this many + 1 rows.
 KNN_JOIN_MAX_RIGHT_ROWS = 1_000_000
 
@@ -96,30 +97,55 @@ def knn_join(
     max_right_rows: int = KNN_JOIN_MAX_RIGHT_ROWS,
 ) -> DataFrame:
     """Exact k-NN join: for each left row, its k nearest right rows by
-    cosine, ties by right id. The right side is collected, broadcast
-    and scored against every left row (cross_scores) — exact by
-    construction, and a deliberate scale-killer if the right side is
-    large, so it REFUSES when ``right`` exceeds ``max_right_rows``.
-    That collect is the only side action: it reads at most max+1 rows
-    (ids and vectors), so it never full-scans a 100 TB right side just
-    to refuse it, and an accepted right side costs the driver ≈512 MB
-    of float64 per 1M × 64-dim copy (KNN_JOIN_MAX_RIGHT_ROWS). The
-    kernel pre-prunes each left row to an exact superset of its top k
-    (cross_scores' ``k`` says why it is exact). For large-vs-large,
-    use lsh.embedding_near_pairs / lsh_topk / ivf_topk; to override
-    knowingly, raise ``max_right_rows``."""
-    from pyspark.sql.window import Window
+    cosine, ties by right id — ``(qid, nid, cosine)``. Each left row is
+    ranked on its own, so left rows that share an id (or a NULL id)
+    get k neighbours each, whatever the partitioning. The right side
+    is collected, broadcast and scored against every left row —
+    exact by construction, and a deliberate scale-killer if the right
+    side is large, so it REFUSES when ``right`` exceeds
+    ``max_right_rows``. That collect is the only side action: it reads
+    at most max+1 rows (ids and vectors), so it never full-scans a
+    100 TB right side just to refuse it, and an accepted right side
+    costs the driver ≈512 MB of float64 per 1M × 64-dim copy
+    (KNN_JOIN_MAX_RIGHT_ROWS).
 
-    scored = cross_scores(
-        left, right, vec_col, left_id, right_id,
-        max_right_rows=max_right_rows, k=k,
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("nid").asc())
-    return (
-        scored.withColumn("_rank", F.row_number().over(w))
-        .filter(F.col("_rank") <= k)
-        .drop("_rank")
-    )
+    The Arrow kernel emits one row per scorable left row: its id and
+    an exact superset of its top k (``_scored`` says why it is exact)
+    as ``(nid, _num, _den, _nan)`` structs. The ranking runs in that
+    same stage, as array expressions (_TOPK_SQL) — no exchange, no
+    window: each candidate's cosine is cross_scores' JVM expression,
+    NULL cosines are dropped, the rest sorted by ``(cosine desc, nid
+    asc)`` with NaN first and NULL nids first, sliced to k and
+    exploded. For large-vs-large, use lsh.embedding_near_pairs /
+    lsh_topk / ivf_topk; to override knowingly, raise
+    ``max_right_rows``."""
+    rows = _scored(left, right, vec_col, left_id, right_id, max_right_rows, k)
+    return rows.select("qid", F.inline(F.expr(_TOPK_SQL.format(k=int(k)))))
+
+
+#: the kernel's ``(_num, _den, _nan)`` as the rounded cosine — term for
+#: term ``round(_safe_cos_div(_dot, _norm * _norm), 6)``; ``{c}`` is the
+#: struct prefix. Written as SQL text, like _TOPK_SQL: one parse on the
+#: JVM instead of a py4j call per Column node (PERF_NOTES, "Rank
+#: knn_join in the scoring stage").
+_COSINE_SQL = (
+    "round(CASE WHEN {c}_nan THEN CAST('NaN' AS DOUBLE)"
+    " WHEN {c}_den != 0.0D THEN {c}_num / {c}_den END, 6)"
+)
+
+#: one left row's ``(nid, cosine)`` top k: each candidate's cosine,
+#: NULL cosines dropped, the rest sorted by (cosine desc, nid asc) —
+#: Spark's double comparisons put NaN above every number and a NULL
+#: nid sorts first, as a Window ordered that way does — cut to k
+_TOPK_SQL = (
+    "slice(array_sort(filter(transform(_c, c -> struct(c.nid AS nid, "
+    + _COSINE_SQL.format(c="c.")
+    + " AS cosine)), c -> c.cosine IS NOT NULL), (a, b) -> CASE"
+    " WHEN a.cosine > b.cosine THEN -1 WHEN a.cosine < b.cosine THEN 1"
+    " WHEN a.nid IS NULL THEN IF(b.nid IS NULL, 0, -1)"
+    " WHEN b.nid IS NULL THEN 1 WHEN a.nid < b.nid THEN -1"
+    " WHEN a.nid > b.nid THEN 1 ELSE 0 END), 1, {k})"
+)
 
 
 def _too_large(max_right_rows: int) -> ValueError:
@@ -301,15 +327,31 @@ def cross_scores(
     left_id: str = "vec_id",
     right_id: str = "vec_id",
     max_right_rows: int = KNN_JOIN_MAX_RIGHT_ROWS,
+) -> DataFrame:
+    """The full cross-score frame ``(qid, nid, cosine)``, one row per
+    scorable pair — for a consumer that needs BOTH directions
+    (bitext's forward and backward k-NN) or every pair, so it scores
+    the matrix once instead of twice. Zero-norm rows (NULL cosine) are
+    already filtered; cosines carry knn_join's 6-decimal rounding,
+    exactly as ``cosine_similarity`` over a cross join would compute
+    them. The side action and the kernel are ``_scored``'s, the cosine
+    expression is _COSINE_SQL."""
+    mapped = _scored(left, right, vec_col, left_id, right_id, max_right_rows)
+    return mapped.select(
+        "qid", "nid", F.expr(_COSINE_SQL.format(c="")).alias("cosine")
+    ).filter(F.col("cosine").isNotNull())
+
+
+def _scored(
+    left: DataFrame,
+    right: DataFrame,
+    vec_col: str,
+    left_id: str,
+    right_id: str,
+    max_right_rows: int,
     k: int | None = None,
 ) -> DataFrame:
-    """The cross-score frame ``(qid, nid, cosine)`` both knn_join and
-    bitext_mine rank over — factored out so a consumer that needs BOTH
-    directions (bitext's forward and backward k-NN) scores the
-    symmetric matrix once instead of twice. Zero-norm rows (NULL
-    cosine) are already filtered; cosines carry knn_join's 6-decimal
-    rounding, exactly as ``cosine_similarity`` over a cross join
-    would compute them.
+    """The Arrow kernel's frame over ``left``, scored against ``right``.
 
     One side action, run at call time: ``right``'s ``(id, vector)``
     rows are collected with ``limit(max_right_rows + 1).toArrow()``,
@@ -318,35 +360,28 @@ def cross_scores(
     accepted one. The clean vectors are stacked into per-length
     float64 matrices on the driver and broadcast pickled: ≈512 MB
     each at 1M × 64 dims (KNN_JOIN_MAX_RIGHT_ROWS). A mapInArrow pass
-    over the LEFT side then emits ``(qid, nid, _num, _den, _nan)``
-    id+double rows — the vector payloads cross the Python boundary
-    once per ROW, never once per pair, and the division + HALF_UP
-    rounding stay in the JVM:
-
-        cosine = round(when(_nan, NaN)
-                       .when(_den != 0.0, _num / _den), 6)
-
-    is term-for-term ``round(_safe_cos_div(_dot, _norm * _norm), 6)``
+    over the LEFT side then scores each left row against them — the
+    vector payloads cross the Python boundary once per ROW, never once
+    per pair — and emits ``(_num, _den, _nan)`` doubles per pair, so
+    the division and HALF_UP rounding stay in the JVM (_COSINE_SQL)
     with the dot and norms produced by the bit-exact ascending folds
     above. Pairs whose cosine is provably NULL (NULL vector, null
     element, length mismatch, zero norm) are not emitted.
     ``_num``/``_den`` are never NaN on the wire (pandas/Arrow return
     paths silently null NaN): a NaN cosine rides ``_nan`` instead.
 
-    ``k``: the consumer keeps each qid's top k by ``(cosine desc, nid
-    asc)``, as knn_join does (None: the full matrix). The kernel then
-    emits per left row only the pairs whose UNROUNDED cosine is at
-    least the row's k-th best finite one (in its right length-group)
-    minus one 6-decimal rounding step, plus every NaN/inf pair — an
-    exact superset of the ranked rows: rounding is monotone, cosines
-    that round equal (a tie the nid breaks) lie under 1e-6 apart, and
-    NaN sorts first descending.
+    ``k`` None: one row per pair, ``(qid, nid, _num, _den, _nan)``.
+    ``k`` given: one row per left row with any pair, ``(qid, _c)``,
+    ``_c`` an array of ``(nid, _num, _den, _nan)`` structs holding only
+    the pairs whose UNROUNDED cosine is at least the row's k-th best
+    finite one (in its right length-group) minus one 6-decimal
+    rounding step, plus every NaN/inf pair — an exact superset of the
+    row's top k by ``(cosine desc, nid asc)``: rounding is monotone,
+    cosines that round equal (a tie the nid breaks) lie under 1e-6
+    apart, and NaN sorts first descending.
     """
-    tbl = (
-        right.select(F.col(right_id).alias("nid"), F.col(vec_col).alias("_nv"))
-        .limit(max_right_rows + 1)
-        .toArrow()
-    )
+    r_cols = right.select(F.col(right_id).alias("nid"), F.col(vec_col).alias("_nv"))
+    tbl = r_cols.limit(max_right_rows + 1).toArrow()
     if tbl.num_rows > max_right_rows:
         raise _too_large(max_right_rows)
     payload = _group_vec_rows(
@@ -355,144 +390,128 @@ def cross_scores(
     nid_pa_type = tbl.schema.field("nid").type
     bc = left.sparkSession.sparkContext.broadcast(payload)
 
-    qid_dt = left.select(F.col(left_id)).schema.fields[0].dataType
-    nid_dt = right.select(F.col(right_id)).schema.fields[0].dataType
-    out_schema = (
-        f"qid {qid_dt.simpleString()}, nid {nid_dt.simpleString()}, "
-        "_num double, _den double, _nan boolean"
+    l_cols = left.select(F.col(left_id), F.col(vec_col))
+    qid_dt = l_cols.schema.fields[0].dataType
+    nid_dt = r_cols.schema["nid"].dataType
+    pair = f"nid {nid_dt.simpleString()}, _num double, _den double, _nan boolean"
+    out_schema = f"qid {qid_dt.simpleString()}, " + (
+        pair if k is None else f"_c array<struct<{pair}>>"
     )
 
     def score(batches):
         import numpy as np
         import pyarrow as pa
 
-        r_payload = bc.value
-
-        def emit(qids, nids, num, den, nan):
-            return pa.record_batch(
-                [
-                    qids,
-                    nids,
-                    pa.array(np.asarray(num, dtype=np.float64)),
-                    pa.array(np.asarray(den, dtype=np.float64)),
-                    pa.array(np.asarray(nan, dtype=bool)),
-                ],
-                names=["qid", "nid", "_num", "_den", "_nan"],
-            )
-
         for batch in batches:
-            qtype = batch.schema.field(0).type
-            l_groups = _group_vec_rows(
-                _arrow_vec_rows(batch.column(1)), batch.column(0).to_pylist()
+            parts = _batch_pairs(batch, bc.value, k, nid_pa_type)
+            if k is None:
+                for pos, nids, num, den, nan in parts:
+                    yield pa.record_batch(
+                        [batch.column(0).take(pa.array(pos)), nids,
+                         pa.array(num), pa.array(den), pa.array(nan)],
+                        names=["qid", "nid", "_num", "_den", "_nan"],
+                    )
+                continue
+            parts = list(parts)
+            if not parts:
+                continue
+            # one row per left row: grouped by its POSITION in the
+            # batch, never by id value, so rows sharing an id (or a
+            # NULL id) are ranked apart
+            pos = np.concatenate([p[0] for p in parts])
+            order = np.argsort(pos, kind="stable")
+            rows, starts = np.unique(pos[order], return_index=True)
+            cands = pa.StructArray.from_arrays(
+                [pa.concat_arrays([p[1] for p in parts]).take(pa.array(order))]
+                + [pa.array(np.concatenate([p[i] for p in parts])[order])
+                   for i in (2, 3, 4)],
+                names=["nid", "_num", "_den", "_nan"],
             )
-            for key, lg in l_groups.items():
-                rg = r_payload.get(key)
-                if rg is None:
-                    continue
-                R, rn, nids = rg["Q"], rg["qn"], rg["ids"]
-                m = len(nids)
-                Q, qn = lg["Q"], lg["qn"]
-                l_ids, l_nan, l_inf = lg["ids"], lg["nan_ids"], lg["inf"]
-                nid_arr = (
-                    pa.array(nids, type=nid_pa_type) if m else None
+            offsets = pa.array(np.append(starts, len(pos)).astype(np.int32))
+            yield pa.record_batch(
+                [batch.column(0).take(pa.array(rows)),
+                 pa.ListArray.from_arrays(offsets, cands)],
+                names=["qid", "_c"],
+            )
+
+    return l_cols.mapInArrow(score, out_schema)
+
+
+def _batch_pairs(batch, r_payload, k, nid_pa_type):
+    """The scorable pairs of one left Arrow batch against the broadcast
+    right groups, as ``(pos, nids, num, den, nan)`` blocks: ``pos`` the
+    left row's position in ``batch`` (int64 numpy), ``nids`` an Arrow
+    array, the rest numpy. ``k`` prunes each row to its top-k superset
+    (``_scored``)."""
+    import numpy as np
+    import pyarrow as pa
+
+    # left rows are keyed by their position, never their id
+    l_groups = _group_vec_rows(
+        _arrow_vec_rows(batch.column(1)), range(batch.num_rows)
+    )
+    for key, lg in l_groups.items():
+        rg = r_payload.get(key)
+        if rg is None:
+            continue
+        R, rn, nids = rg["Q"], rg["qn"], rg["ids"]
+        m = len(nids)
+        Q, qn = lg["Q"], lg["qn"]
+        l_ids, l_nan, l_inf = lg["ids"], lg["nan_ids"], lg["inf"]
+        # clean x clean: blocked matrix fold
+        if m and l_ids:
+            l_pos = np.asarray(l_ids, dtype=np.int64)
+            nid_arr = pa.array(nids, type=nid_pa_type)
+            rows_per_block = max(1, _VECTORIZED_BLOCK_CELLS // m)
+            for lo in range(0, len(l_ids), rows_per_block):
+                hi = min(lo + rows_per_block, len(l_ids))
+                DOT = _fold_dot_block(Q[lo:hi], R)
+                DEN = np.multiply.outer(qn[lo:hi], rn)
+                # finite float64 inputs can still overflow the fold to
+                # inf, and inf*0 / inf-inf make NaN — the JVM cosine
+                # for those cells is NaN, which must ride the flag (NaN
+                # doubles do not survive the Arrow return path)
+                nan_cells = np.isnan(DOT) | np.isnan(DEN)
+                # den == 0 is a NULL cosine: never emitted
+                keep = nan_cells | (DEN != 0.0)
+                if k is not None and 0 < k < m:
+                    with np.errstate(divide="ignore", invalid="ignore"):
+                        COS = DOT / DEN
+                    clean = np.isfinite(COS)
+                    kth = np.partition(
+                        np.where(clean, COS, -np.inf), m - k, axis=1
+                    )[:, m - k]
+                    keep &= ~clean | (COS >= (kth - _TOPK_MARGIN)[:, None])
+                rows, cols = np.nonzero(keep)
+                nan = nan_cells[keep]
+                yield (
+                    l_pos[rows + lo],
+                    nid_arr.take(pa.array(cols)),
+                    np.where(nan, 0.0, DOT[keep]),
+                    np.where(nan, 1.0, DEN[keep]),
+                    nan,
                 )
-                # clean x clean: blocked matrix fold
-                if m and l_ids:
-                    l_id_arr = pa.array(l_ids, type=qtype)
-                    rows_per_block = max(
-                        1, _VECTORIZED_BLOCK_CELLS // m
-                    )
-                    for lo in range(0, len(l_ids), rows_per_block):
-                        hi = min(lo + rows_per_block, len(l_ids))
-                        DOT = _fold_dot_block(Q[lo:hi], R)
-                        DEN = np.multiply.outer(qn[lo:hi], rn)
-                        # finite float64 inputs can still overflow the
-                        # fold to inf, and inf*0 / inf-inf make NaN —
-                        # the JVM cosine for those cells is NaN, which
-                        # must ride the flag (NaN doubles do not
-                        # survive the Arrow return path)
-                        nan_cells = np.isnan(DOT) | np.isnan(DEN)
-                        # den == 0 is a NULL cosine: never emitted
-                        keep = nan_cells | (DEN != 0.0)
-                        if k is not None and 0 < k < m:
-                            with np.errstate(divide="ignore", invalid="ignore"):
-                                COS = DOT / DEN
-                            clean = np.isfinite(COS)
-                            kth = np.partition(
-                                np.where(clean, COS, -np.inf), m - k, axis=1
-                            )[:, m - k]
-                            keep &= ~clean | (
-                                COS >= (kth - _TOPK_MARGIN)[:, None]
-                            )
-                        rows, cols = np.nonzero(keep)
-                        nan = nan_cells[keep]
-                        num = np.where(nan, 0.0, DOT[keep])
-                        den = np.where(nan, 1.0, DEN[keep])
-                        yield emit(
-                            l_id_arr.take(pa.array(rows + lo)),
-                            nid_arr.take(pa.array(cols)),
-                            num,
-                            den,
-                            nan,
-                        )
-                # exceptional rows (NaN / inf classes): tiny by
-                # construction, resolved pair-by-pair with the exact
-                # scalar emulation or the NaN-poisoning rule
-                sp_q, sp_n, sp_num, sp_den, sp_nan = [], [], [], [], []
-
-                def nan_pair(q, n):
-                    sp_q.append(q)
-                    sp_n.append(n)
-                    sp_num.append(0.0)
-                    sp_den.append(1.0)
-                    sp_nan.append(True)
-
-                def exact_pair(q, n, a, b):
-                    num, den, nanf = _scalar_cross_pair(a, b)
-                    sp_q.append(q)
-                    sp_n.append(n)
-                    sp_num.append(num)
-                    sp_den.append(den)
-                    sp_nan.append(nanf)
-
-                nan_partners = (
-                    nids
-                    + rg["nan_ids"]
-                    + [nid for nid, _ in rg["inf"]]
-                )
-                for q in l_nan:  # Lnan x (Rclean|Rnan|Rinf)
-                    for n in nan_partners:
-                        nan_pair(q, n)
-                for n in rg["nan_ids"]:  # (Lclean|Linf) x Rnan
-                    for q in l_ids:
-                        nan_pair(q, n)
-                    for q, _ in l_inf:
-                        nan_pair(q, n)
-                for q, a in l_inf:  # Linf x (Rclean|Rinf)
-                    for ri in range(m):
-                        exact_pair(q, nids[ri], a, R[ri])
-                    for n, b in rg["inf"]:
-                        exact_pair(q, n, a, b)
-                for n, b in rg["inf"]:  # Lclean x Rinf
-                    for li in range(len(l_ids)):
-                        exact_pair(l_ids[li], n, Q[li], b)
-                if sp_q:
-                    yield emit(
-                        pa.array(sp_q, type=qtype),
-                        pa.array(sp_n, type=nid_pa_type),
-                        sp_num, sp_den, sp_nan,
-                    )
-
-    mapped = left.select(
-        F.col(left_id), F.col(vec_col)
-    ).mapInArrow(score, out_schema)
-    return mapped.select(
-        "qid",
-        "nid",
-        F.round(
-            F.when(F.col("_nan"), F.lit(float("nan"))).when(
-                F.col("_den") != 0.0, F.col("_num") / F.col("_den")
-            ),
-            6,
-        ).alias("cosine"),
-    ).filter(F.col("cosine").isNotNull())
+        # exceptional rows (NaN / inf classes): tiny by construction,
+        # resolved pair-by-pair with the exact scalar emulation or the
+        # NaN-poisoning rule
+        poisoned = (0.0, 1.0, True)  # num, den, nan of a NaN cosine
+        sp = []  # (pos, nid, num, den, nan) per pair
+        nan_partners = nids + rg["nan_ids"] + [nid for nid, _ in rg["inf"]]
+        for q in l_nan:  # Lnan x (Rclean|Rnan|Rinf)
+            sp += [(q, n, *poisoned) for n in nan_partners]
+        for n in rg["nan_ids"]:  # (Lclean|Linf) x Rnan
+            sp += [(q, n, *poisoned) for q in l_ids + [q for q, _ in l_inf]]
+        for q, a in l_inf:  # Linf x (Rclean|Rinf)
+            sp += [(q, nids[ri], *_scalar_cross_pair(a, R[ri])) for ri in range(m)]
+            sp += [(q, n, *_scalar_cross_pair(a, b)) for n, b in rg["inf"]]
+        for n, b in rg["inf"]:  # Lclean x Rinf
+            sp += [(q, n, *_scalar_cross_pair(Q[li], b)) for li, q in enumerate(l_ids)]
+        if sp:
+            q, n, num, den, nanf = zip(*sp)
+            yield (
+                np.asarray(q, dtype=np.int64),
+                pa.array(n, type=nid_pa_type),
+                np.asarray(num, dtype=np.float64),
+                np.asarray(den, dtype=np.float64),
+                np.asarray(nanf, dtype=bool),
+            )

@@ -965,10 +965,21 @@ def _jvm_cross_scores(left, right):
 
 
 def _score_map(df):
+    rows = df if isinstance(df, list) else df.collect()
     return {
         (r.qid, r.nid): "nan" if math.isnan(r.cosine) else r.cosine
-        for r in df.collect()
+        for r in rows
     }
+
+
+def _score_bag(rows):
+    """``(qid, nid, cosine)`` multiset: keeps repeated keys apart."""
+    from collections import Counter
+
+    return Counter(
+        (r.qid, r.nid, "nan" if math.isnan(r.cosine) else r.cosine)
+        for r in rows
+    )
 
 
 def test_cross_scores_vectorized_bit_exact(spark):
@@ -1098,8 +1109,9 @@ def test_knn_join_fused_topk_matches_jvm(spark):
     """knn_join's fused path (the Arrow kernel keeps each left row's
     top-k superset, the JVM ranks it) must equal an all-JVM rank —
     cosine_similarity over a cross join, row_number over (cosine desc,
-    nid asc) — row for row: an exact tie and a rounding-level tie at
-    the k-th slot, cosines either side of a 6-decimal rounding
+    nid asc) — row for row: an exact tie, a rounding-level tie and a
+    tie with NULL right ids (which a window sorts first) at the k-th
+    slot, cosines either side of a 6-decimal rounding
     boundary there, NaN / +-inf / null-element / zero-norm / short /
     long / NULL vectors, mixed lengths, and k larger than the right
     side. The rounding-level tie is the case that fails if the kernel
@@ -1146,6 +1158,12 @@ def test_knn_join_fused_topk_matches_jvm(spark):
         (1020, plane(4, 1.0, 0.0)),
         (1021, plane(4, 1.0, 0.5)),
         (1022, plane(4, 1.0, 0.5)),
+        # against e5: 1024 first, then NULL, NULL, 1023 tied — a
+        # window's nid asc puts the NULL ids first
+        (None, plane(4, 0.5, 1.0)),
+        (1023, plane(4, 0.5, 1.0)),
+        (None, plane(4, 0.5, 1.0)),
+        (1024, plane(4, 0.0, 1.0)),
         (1100, None),
         (1101, [None] + [0.1] * (dim - 1)),
         (1102, [0.0] * dim),
@@ -1160,7 +1178,7 @@ def test_knn_join_fused_topk_matches_jvm(spark):
         (1201, [math.inf] + [0.1] * (dim - 1)),
         (1202, [-math.inf] + [0.1] * (dim - 1)),
     ]
-    left = [(0, e0), (1, e2), (2, plane(4, 1.0, 0.0))]
+    left = [(0, e0), (1, e2), (2, plane(4, 1.0, 0.0)), (3, plane(4, 0.0, 1.0))]
     left += [(10 + i, [rng.uniform(-1, 1) for _ in range(dim)]) for i in range(30)]
     left += [
         (100, None),
@@ -1185,14 +1203,18 @@ def test_knn_join_fused_topk_matches_jvm(spark):
             fused_df = knn_join(ldf, rdf, k=k)
             plan = fused_df._jdf.queryExecution().executedPlan().toString()
             assert "MapInArrow" in plan
-            fused = _score_map(fused_df)
-            jvm = _score_map(
+            fused_rows = fused_df.collect()
+            jvm_rows = (
                 _jvm_cross_scores(ldf, rdf)
                 .withColumn("_rank", F.row_number().over(w))
                 .filter(F.col("_rank") <= k)
+                .collect()
             )
+            fused, jvm = _score_map(fused_rows), _score_map(jvm_rows)
             diff = sorted(set(fused.items()) ^ set(jvm.items()), key=str)
             assert fused == jvm, (len(rows), k, diff[:6])
+            # the NULL nids are two rows each: compare as multisets too
+            assert _score_bag(fused_rows) == _score_bag(jvm_rows)
             if k == 2 and len(rows) == len(right):
                 # the designed slots really sit at rank k
                 assert {(0, 1000), (0, 1001)} <= jvm.keys()
@@ -1201,6 +1223,10 @@ def test_knn_join_fused_topk_matches_jvm(spark):
                 assert (1, 1011) not in jvm
                 assert {(2, 1020), (2, 1021)} <= jvm.keys()
                 assert (2, 1022) not in jvm
+                # one of the tied NULL ids takes the k-th slot
+                assert {(3, 1024), (3, None)} <= jvm.keys()
+                assert (3, 1023) not in jvm
+                assert _score_bag(jvm_rows)[(3, None, 0.894427)] == 1
             if k == 400:
                 # k past the right side: every scorable pair is kept
                 assert jvm[(1, 1011)] == 0.894427
@@ -1213,7 +1239,7 @@ def test_knn_join_side_actions_never_scan_the_left(spark):
     """knn_join runs exactly one SQL execution before its ranked
     action: the right side's (id, vector) toArrow, which is also the
     row-cap guard. It never reads the left (the caller's query
-    batch)."""
+    batch). The ranked action itself is one Spark job."""
     rng = random.Random(11)
     right = spark.createDataFrame(
         [(i, [rng.gauss(0, 1) for _ in range(16)]) for i in range(300)],
@@ -1234,18 +1260,61 @@ def test_knn_join_side_actions_never_scan_the_left(spark):
         seq = store.executionsList(max(0, total - n), min(total, n))
         return [seq.apply(i) for i in range(seq.size())]
 
+    def since(before):
+        return [e for e in latest(10) if e.executionId() > before]
+
     before = max([e.executionId() for e in latest(1)], default=-1)
     out = knn_join(left, right, k=3, left_id="batch_qid")
-    plans = [
-        e.physicalPlanDescription()
-        for e in latest(10)
-        if e.executionId() > before
-    ]
+    plans = [e.physicalPlanDescription() for e in since(before)]
     assert len(plans) == 1, plans
     # the right side's (nid, vector) collect, no separate count
     assert "_nv" in plans[0] and "count(" not in plans[0], plans
     assert "batch_qid" not in plans[0], plans
-    assert out.count() == 8 * 3
+    # the ranking runs in the scoring stage: no shuffle, no window,
+    # and the ranked collect is one Spark job
+    ranked = out._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in ranked and "Window" not in ranked, ranked
+    before = max(e.executionId() for e in latest(1))
+    assert len(out.collect()) == 8 * 3
+    (action,) = since(before)
+    assert action.jobs().size() == 1, action.physicalPlanDescription()
+
+
+def test_knn_join_ranks_each_left_row_apart(spark):
+    """Each left row gets its own k neighbours: rows that share an id,
+    or have a NULL id, are never merged into one top-k — in one
+    partition or spread over several."""
+    from pyspark.sql import Row
+    from pyspark.sql import functions as F
+    from pyspark.sql.window import Window
+
+    rng = random.Random(0xD0B)
+    dim, k = 6, 3
+    schema = "vec_id long, embedding array<double>"
+
+    def vec():
+        return [rng.uniform(-1, 1) for _ in range(dim)]
+
+    right = spark.createDataFrame([(i, vec()) for i in range(40)], schema)
+    a, b = vec(), vec()
+    lrows = [(7, a), (7, a), (7, b), (None, a), (None, b), (8, b)]
+    # reference: rank each left row by its position, then report its id
+    by_pos = spark.createDataFrame(
+        [(i, v) for i, (_, v) in enumerate(lrows)], schema
+    )
+    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("nid").asc())
+    want = _score_bag(
+        Row(**(r.asDict() | {"qid": lrows[r.qid][0]}))
+        for r in _jvm_cross_scores(by_pos, right)
+        .withColumn("_rank", F.row_number().over(w))
+        .filter(F.col("_rank") <= k)
+        .collect()
+    )
+    assert sum(want.values()) == len(lrows) * k
+    left = spark.createDataFrame(lrows, schema)
+    for parts in (left.coalesce(1), left.repartition(3)):
+        got = _score_bag(knn_join(parts, right, k=k).collect())
+        assert got == want, sorted((got - want) + (want - got), key=str)
 
 
 def test_cross_scores_unguarded_collect_is_capped(spark, vectors):

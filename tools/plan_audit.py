@@ -356,11 +356,14 @@ def main() -> None:
                 " into a scan. Python appears ONLY where Spark lacks"
                 " the primitive (media decode, the stateful rate-limit"
                 " replay in stats) and as the Arrow/numpy kernels that"
-                " replace interpreted JVM folds: cross_scores'"
-                " MapInArrow (knn_join, embedding_catalog_incremental;"
-                " bitext_pairs' sits behind its lazy localCheckpoint,"
-                " which the plan shows as an RDD scan) at every size,"
-                " and lsh's wide RHP signature UDF. Nested-loop joins"
+                " replace interpreted JVM folds: the cross-score"
+                " kernel's MapInArrow (knn_join, embedding_catalog_"
+                "incremental; bitext_pairs' sits behind its lazy"
+                " localCheckpoint, which the plan shows as an RDD scan)"
+                " at every size, and lsh's wide RHP signature UDF."
+                " knn_join ranks each left row in the kernel's own"
+                " stage, so its one exchange is fan_out's repartition"
+                " of the left side. Nested-loop joins"
                 " appear ONLY as single-row broadcast crosses attaching"
                 " a scalar (corpus stats / vocab size in tfidf, bm25,"
                 " nb_classify, perplexity, stats — O(rows x 1)); never"
