@@ -107,7 +107,8 @@ def _sql_cos(a: str, b: str) -> str:
 
 def _sql_bucket(planes, col: str = "embedding") -> str:
     """RHP signature: bit i = sign of dot(vec, plane_i) — the DuckDB
-    twin of similarity.lsh._sig over the same literal hyperplanes."""
+    twin of similarity.lsh.rhp_bucket over the same hyperplanes, folded
+    in the same ascending order."""
     return " + ".join(
         f"(CASE WHEN {_sql_dot(col, _sql_vec(p))} >= 0 THEN {1 << i} ELSE 0 END)"
         for i, p in enumerate(planes)

@@ -3,15 +3,16 @@ embedding column — the scale path next to brute.brute_force_topk.
 
 Bucketing: sign bits of dot products with ``nbits`` deterministic
 pseudo-random hyperplanes (splitmix64-seeded, generated driver-side and
-embedded as literal arrays — no RNG at execution time, reproducible
+shipped in the UDF's closure — no RNG at execution time, reproducible
 across runs/partitions). Vectors whose signatures agree land in the
 same bucket; a query probes its own bucket (and optionally
 multi-probes neighboring buckets at 1-bit flips).
 
-Scale notes: signature computation is a pure map (nbits dot products
-per row, codegen'd); the bucket join shuffles on an int key. Recall is
-tuned by nbits (bucket granularity) and n_tables (independent
-signatures OR-ed together) — the standard LSH trade.
+Scale notes: signature computation is a pure map, one scalar Arrow
+UDF folding each batch against the plane matrix in numpy; the bucket
+join shuffles on an int key. Recall is tuned by nbits (bucket
+granularity) and n_tables (independent signatures OR-ed together) —
+the standard LSH trade.
 """
 
 from __future__ import annotations
@@ -19,10 +20,15 @@ from __future__ import annotations
 import math
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+import pyarrow as pa
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pond_spark.similarity.brute import cosine_similarity
+from pond_spark.similarity.brute import (
+    _arrow_vec_rows,
+    _fold_dot_block,
+    cosine_similarity,
+)
 
 
 def _splitmix(seed: int):
@@ -53,121 +59,6 @@ def hyperplanes(dim: int, nbits: int, seed: int = 42) -> list[list[float]]:
     return planes
 
 
-def _sig(vec: Column, planes: list[list[float]]) -> Column:
-    # NB measured (sf0.1, 64-dim, 16 planes): the interpreted HOF fold
-    # is ~5x faster end-to-end than unrolling the dots into flat
-    # expressions — nbits*dim terms blow Janino's 64 KB method limit,
-    # which disables whole-stage codegen for the entire stage, and the
-    # giant tree also inflates Catalyst planning time. Keep the HOF.
-    bits = []
-    for i, p in enumerate(planes):
-        dot = F.aggregate(
-            F.zip_with(
-                vec,
-                F.array(*[F.lit(x) for x in p]),
-                lambda a, b: a.cast("double") * b,
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bits.append(F.when(dot >= 0, F.lit(1 << i).cast("long")).otherwise(F.lit(0)))
-    out = bits[0]
-    for b in bits[1:]:
-        out = out + b
-    return out
-
-
-#: dim*nbits above which the Arrow-batched numpy signature replaces
-#: the interpreted HOF fold. The HOF's per-element lambda overhead is
-#: ~constant, so its cost grows linearly in dim*nbits; measured on 1M
-#: persisted rows (idle local[32], best-of-2):
-#:
-#:   dim x nbits   HOF      numpy   speedup
-#:   64 x 4        2.2 s    0.8 s   2.7x
-#:   64 x 16       8.3 s    1.0 s   8x
-#:   64 x 36       20.0 s   1.6 s   13x
-#:   256 x 28      27.8 s*  1.8 s*  15x   (*500k rows)
-#:   1024 x 27     48.5 s*  3.8 s*  13x   (*200k rows)
-#:
-#: The numpy fold is BIT-IDENTICAL (see _sig_vectorized), so the
-#: switch is purely a cost decision. Threshold 1024 keeps the tiny
-#: signatures JVM-side — the contract/oracle twins (nbits<=8 at
-#: dim<=64) keep their all-JVM measured plans and tiny inputs avoid
-#: the Python-worker spin-up — while every catalog-scale signature
-#: (gate sizing puts nbits in the 20-40 range) takes the 8-15x.
-_VECTORIZED_MIN_WORK = 1024
-
-
-def _sig_vectorized(vec: Column, planes: list[list[float]]) -> Column:
-    """The SAME signature as _sig, computed as an Arrow-batched numpy
-    fold. Bit-exactness argument, term by term: elements arrive
-    float32 and cast to float64 exactly (both paths); each product is
-    one IEEE double multiply (neither Java nor numpy fuses); the
-    accumulation adds plane-j products in ascending j — the numpy
-    loop iterates j exactly like the HOF fold's left-to-right
-    reduce — so every intermediate double is identical and every sign
-    bit matches. Verified exhaustively by
-    tests/test_similarity.py::test_rhp_bucket_vectorized_bit_exact;
-    this matters because catalogs PIN bucket keys across runs — a
-    catalog registered through one path must probe identically
-    through the other. Degenerate rows reproduce the HOF contract:
-    NULL vector and wrong-length vector (zip_with null-pads -> null
-    dot -> every when() falls to otherwise) yield bucket 0; a NaN
-    element yields ALL bits set — Spark's total order puts NaN above
-    every numeric, so a NaN dot passes ``>= 0`` on every plane.
-
-    Element-level NULLs (ADVICE r10): a null ELEMENT inside an
-    otherwise-well-formed vector nulls the HOF dot (product with null
-    is null) -> bucket 0, but Arrow delivers that null to the numpy
-    fold as NaN — indistinguishable from a GENUINE NaN element once
-    float64. The caller (rhp_bucket) therefore nulls such vectors
-    Spark-side (``exists(vec, x -> x IS NULL)``, where null and NaN
-    are still distinct) before this UDF, so both backends agree:
-    null-element row -> bucket 0, genuine-NaN row -> all bits set."""
-    import pandas as pd
-
-    globals()["pd"] = pd  # the pandas_udf type-hint resolver reads
-    # the function's module globals; a purely local alias leaves
-    # 'pd.Series' unresolvable (UNSUPPORTED_SIGNATURE)
-
-    plane_rows = [list(p) for p in planes]
-
-    @F.pandas_udf("long")
-    def _bucket(v: pd.Series) -> pd.Series:
-        import numpy as np
-
-        P = np.asarray(plane_rows, dtype=np.float64)  # (nbits, dim)
-        nbits, dim = P.shape
-        out = np.zeros(len(v), dtype=np.int64)
-        vals = list(v)
-        ok = [
-            i for i, x in enumerate(vals)
-            if x is not None and len(x) == dim
-        ]
-        if ok:
-            V = np.stack([np.asarray(vals[i]) for i in ok]).astype(
-                np.float64
-            )
-            acc = np.zeros((len(ok), nbits), dtype=np.float64)
-            for j in range(dim):
-                # ascending-j accumulation == the HOF fold's order
-                acc += np.multiply.outer(V[:, j], P[:, j])
-            # Spark's NaN ordering: NaN >= 0 is TRUE (NaN sorts above
-            # every numeric), so a NaN dot sets the bit — numpy's
-            # IEEE comparison says False and must be overridden
-            bits = (acc >= 0.0) | np.isnan(acc)
-            weights = np.left_shift(
-                np.uint64(1), np.arange(nbits, dtype=np.uint64)
-            )
-            out[ok] = (
-                (bits.astype(np.uint64) * weights).sum(axis=1)
-                .astype(np.int64)
-            )
-        return pd.Series(out)
-
-    return _bucket(vec)
-
-
 def rhp_bucket(
     df: DataFrame,
     dim: int,
@@ -175,22 +66,48 @@ def rhp_bucket(
     seed: int = 42,
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Append ``bucket`` (int64 signature) to each row. The signature
-    backend follows the input size: the Arrow/numpy fold when
-    ``dim * nbits >= _VECTORIZED_MIN_WORK``, else the HOF fold; both
-    are bit-identical (catalog keys stay comparable across the
-    switch), so this is purely a cost decision."""
+    """Append ``bucket`` (int64 signature) to each row: bit i is set
+    when the vector's dot with plane i is ``>= 0``. One scalar Arrow
+    UDF computes it with cross_scores' folds (brute._arrow_vec_rows,
+    brute._fold_dot_block), so each dot is the ascending-index IEEE
+    fold of ``brute._dot`` and every bucket equals what that HOF
+    expression would give — catalogs pin bucket keys across runs, so
+    the key format must never move
+    (tests/test_similarity.py::test_rhp_bucket_bit_exact).
+
+    Degenerate rows keep the Spark semantics of that expression: a
+    NULL vector, a wrong-length vector or a null element makes a NULL
+    dot, so bucket 0; a NaN dot sets its bit, since Spark orders NaN
+    above every number (``NaN >= 0`` is true), so a NaN element sets
+    all bits. Bit 63, when ``nbits`` is 64, wraps to the sign bit; an
+    int64 key holds no more bits, so ``nbits`` is refused outside 1..64."""
+    if not 1 <= nbits <= 64:
+        raise ValueError(f"nbits must be in 1..64, got {nbits}")
     planes = hyperplanes(dim, nbits, seed)
-    if dim * nbits >= _VECTORIZED_MIN_WORK:
-        # null ELEMENTS become NaN across Arrow (ADVICE r10) — mask
-        # whole-vector here, while null vs NaN are still distinct, so
-        # the numpy fold sees NULL and lands on the HOF's bucket 0
-        src = F.when(
-            F.exists(F.col(vec_col), lambda x: x.isNull()),
-            F.lit(None).cast(df.schema[vec_col].dataType),
-        ).otherwise(F.col(vec_col))
-        return df.withColumn("bucket", _sig_vectorized(src, planes))
-    return df.withColumn("bucket", _sig(F.col(vec_col), planes))
+
+    @F.arrow_udf("long")
+    def _bucket(v: pa.Array) -> pa.Array:
+        import numpy as np
+
+        P = np.asarray(planes, dtype=np.float64)  # (nbits, dim)
+        rows = _arrow_vec_rows(v)
+        ok = [
+            i for i, (x, nulls) in enumerate(rows)
+            if x is not None and len(x) == dim
+            and (nulls is None or not nulls.any())
+        ]
+        out = np.zeros(len(rows), dtype=np.int64)
+        if ok:
+            # inf elements make inf/NaN dots; both are legal here
+            with np.errstate(invalid="ignore", over="ignore"):
+                dots = _fold_dot_block(np.stack([rows[i][0] for i in ok]), P)
+            # numpy's NaN >= 0 is False; Spark's is True
+            bits = (dots >= 0.0) | np.isnan(dots)
+            weights = np.left_shift(np.uint64(1), np.arange(nbits, dtype=np.uint64))
+            out[ok] = (bits * weights).sum(axis=1, dtype=np.uint64).astype(np.int64)
+        return pa.array(out)
+
+    return df.withColumn("bucket", _bucket(F.col(vec_col)))
 
 
 def lsh_topk(
@@ -212,7 +129,10 @@ def lsh_topk(
     probes all ``nbits`` flip neighbors — the recall-max setting the
     oracle twin replicates; an int trades candidates for recall
     (the r3 form multiplied by nbits, making every value >= 1
-    identical to "all" — the knob did nothing)."""
+    identical to "all" — the knob did nothing). ``nbits`` above 63
+    is refused: a probe with bit 63 set is no int64 literal."""
+    if nbits > 63:
+        raise ValueError(f"lsh_topk needs nbits <= 63, got {nbits}")
     dim = len(query_vec)
     planes = hyperplanes(dim, nbits, seed)
     qsig = 0

@@ -120,7 +120,7 @@ def encode_expr(vec: Column, codebooks: list[list[list[float]]]) -> Column:
     expressions — identical arithmetic and fold order, but m*(a few)
     lambda nodes instead of m*ksub*2, which cuts Catalyst
     analysis/codegen of the encode stage ~10x (the same lesson as the
-    unrolled-dot Janino note at similarity/lsh.py::_sig)."""
+    unrolled-dot Janino note in PERF_NOTES)."""
     m = len(codebooks)
     d = len(codebooks[0][0])
     codes = []

@@ -892,56 +892,121 @@ def test_rhp_gate_coefficient_dim_aware(spark, tmp_path):
     assert stats["gate_nbits_capped_by_dim"] is True
 
 
-def test_rhp_bucket_vectorized_bit_exact(spark, monkeypatch):
-    """Round-10 perf path: the Arrow/numpy signature must be
-    BIT-IDENTICAL to the HOF fold at every dim — catalogs pin bucket
-    keys across runs, so a catalog registered through one backend
-    must probe identically through the other. Random float32 vectors
-    plus the degenerate rows (NULL, wrong length, NaN element) at
-    dims spanning both sides of the auto-switch threshold; each
-    backend is forced by moving the threshold."""
+def _hof_rhp_bucket(vec, planes):
+    """Reference RHP signature as a JVM expression: per plane, the HOF
+    fold of ``brute._dot`` (ascending index, double) against literal
+    plane values, bit i set when that dot is ``>= 0``. A NULL dot
+    (NULL vector, null element, wrong length) falls to ``otherwise``."""
+    from pyspark.sql import functions as F
+
+    out = F.lit(0).cast("long")
+    for i, p in enumerate(planes):
+        dot = F.aggregate(
+            F.zip_with(
+                vec,
+                F.array(*[F.lit(x) for x in p]),
+                lambda a, b: a.cast("double") * b,
+            ),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        )
+        out = out + F.when(dot >= 0, F.lit(1 << i).cast("long")).otherwise(0)
+    return out
+
+
+def test_rhp_bucket_bit_exact(spark):
+    """rhp_bucket's Arrow kernel must equal the HOF fold bit for bit —
+    catalogs pin bucket keys across runs. Random vectors plus the
+    degenerate rows, in float32, double and bigint frames."""
+    from pyspark.sql import functions as F
+
     from pond_spark.plans import formatted_plan
     from pond_spark.similarity import lsh
 
-    def buckets(df, dim, nbits, min_work):
-        monkeypatch.setattr(lsh, "_VECTORIZED_MIN_WORK", min_work)
-        out = lsh.rhp_bucket(df, dim, nbits, vec_col="embedding")
-        arrow = "ArrowEvalPython" in formatted_plan(out)
-        return {r.vec_id: r.bucket for r in out.collect()}, arrow
-
     rng = random.Random(0xB17)
-    for dim, nbits in ((16, 8), (64, 24), (256, 28), (1024, 20)):
-        rows = []
-        for i in range(300):
-            vec = [
-                # float32-exact values AND raw floats — the cast is
-                # exact either way, exercise both
-                rng.uniform(-1, 1) for _ in range(dim)
-            ]
-            rows.append((i, vec))
-        rows.append((9001, None))
-        rows.append((9002, [0.5] * (dim - 1)))          # wrong length
-        rows.append((9003, [math.nan] + [0.1] * (dim - 1)))  # NaN
-        rows.append((9004, [None] + [0.1] * (dim - 1)))  # null ELEMENT
-        # (ADVICE r10: Arrow turns the null element into NaN, which
-        # would set all bits; the Spark-side exists() mask must pin
-        # the HOF's null-dot -> bucket 0 behavior instead)
-        df = spark.createDataFrame(
-            rows, "vec_id long, embedding array<float>"
-        )
-        hof, hof_arrow = buckets(df, dim, nbits, 1 << 62)
-        vec, vec_arrow = buckets(df, dim, nbits, 0)
-        # the backends really differ: only the numpy fold runs in Arrow
-        assert (hof_arrow, vec_arrow) == (False, True)
-        diff = {k for k in hof if hof[k] != vec[k]}
-        assert not diff, (dim, nbits, sorted(diff)[:5],
-                          [(hof[k], vec[k]) for k in sorted(diff)[:3]])
-        # degenerate rows: null dot -> 0; NaN dot -> all bits set
-        # (Spark's NaN>=0 is true — NaN sorts above every numeric)
-        assert hof[9001] == vec[9001] == 0
-        assert hof[9002] == vec[9002] == 0
-        assert hof[9003] == vec[9003] == (1 << nbits) - 1
-        assert hof[9004] == vec[9004] == 0  # null element -> null dot
+    sizes = ((64, 4), (64, 6), (16, 8), (64, 24), (256, 28), (1024, 20))
+    for dim, nbits in sizes:
+        rnd = [[rng.uniform(-1, 1) for _ in range(dim)] for _ in range(300)]
+        degenerate = {
+            9001: None,
+            9002: [0.5] * (dim - 1),                     # wrong length
+            9003: [math.nan] + [0.1] * (dim - 1),        # NaN element
+            9004: [None] + [0.1] * (dim - 1),            # null element
+            9005: [math.inf] + [0.1] * (dim - 1),
+            9006: [math.inf, -math.inf] + [0.1] * (dim - 2),
+            9007: [3e38] * dim,
+            9008: [0.0] * dim,
+        }
+        big = [
+            [rng.randint(-(1 << 60), 1 << 60) for _ in range(dim)]
+            for _ in range(50)
+        ]
+        frames = {
+            "float": (rnd, degenerate),
+            "double": (rnd, {**degenerate, 9009: [1e308] * dim}),
+            "bigint": (big, {
+                9001: None,
+                9002: [3] * (dim + 1),
+                9004: [7] * (dim - 1) + [None],
+                9008: [0] * dim,
+                9010: [(1 << 53) + 1] * dim,  # rounds like long -> double
+            }),
+        }
+        planes = lsh.hyperplanes(dim, nbits)
+        for etype, (vecs, extra) in frames.items():
+            rows = list(enumerate(vecs)) + list(extra.items())
+            df = spark.createDataFrame(
+                rows, f"vec_id long, embedding array<{etype}>"
+            )
+            out = lsh.rhp_bucket(df, dim, nbits).withColumn(
+                "ref", _hof_rhp_bucket(F.col("embedding"), planes)
+            )
+            assert "ArrowEvalPython" in formatted_plan(out)
+            got = {r.vec_id: (r.bucket, r.ref) for r in out.collect()}
+            diff = sorted(k for k, (b, ref) in got.items() if b != ref)
+            assert not diff, (dim, nbits, etype, [(k, got[k]) for k in diff[:3]])
+            # NULL, wrong length and null element make a NULL dot -> 0;
+            # a NaN dot passes >= 0 in Spark, so NaN sets every bit
+            assert got[9001][0] == got[9002][0] == got[9004][0] == 0
+            if etype != "bigint":
+                assert got[9003][0] == (1 << nbits) - 1
+
+
+def test_rhp_bucket_keys_pinned(spark):
+    """Bucket keys computed by the HOF and pandas signature paths that
+    preceded the Arrow kernel: a catalog registered then probes the
+    same buckets now."""
+    from pond_spark.similarity.lsh import rhp_bucket
+
+    rng = random.Random(20240917)
+    rows = [(i, [rng.uniform(-1, 1) for _ in range(64)]) for i in range(8)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    expected = {
+        6: [8, 20, 39, 33, 30, 49, 22, 35],
+        32: [1148246472, 723639316, 3880204327, 6468513,
+             2917267998, 2215784753, 2760181526, 2752637603],
+    }
+    for nbits, keys in expected.items():
+        out = rhp_bucket(df, 64, nbits).orderBy("vec_id").collect()
+        assert [r.bucket for r in out] == keys, nbits
+
+
+def test_rhp_bucket_refuses_bad_nbits(spark, vectors):
+    """A signature needs 1..64 bits and lsh_topk cannot probe a bucket
+    with bit 63 set: both refuse on the driver. 64-bit signatures
+    still compute, bit 63 wrapping to the sign bit."""
+    from pond_spark.similarity.lsh import rhp_bucket
+
+    for bad in (0, -3, 65):
+        with pytest.raises(ValueError, match="nbits"):
+            rhp_bucket(vectors, 16, bad)
+    with pytest.raises(ValueError, match="nbits"):
+        lsh_topk(vectors, [1.0] * 16, nbits=64)
+    df = spark.createDataFrame(
+        [(0, [math.nan] * 16), (1, [0.0] * 16)],
+        "vec_id long, embedding array<double>",
+    )
+    assert [r.bucket for r in rhp_bucket(df, 16, 64).collect()] == [-1, -1]
 
 
 def _jvm_cross_scores(left, right):

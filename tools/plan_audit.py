@@ -360,7 +360,10 @@ def main() -> None:
                 " kernel's MapInArrow (knn_join, embedding_catalog_"
                 "incremental; bitext_pairs' sits behind its lazy"
                 " localCheckpoint, which the plan shows as an RDD scan)"
-                " at every size, and lsh's wide RHP signature UDF."
+                " at every size, and rhp_bucket's ArrowEvalPython"
+                " signature UDF (ann_lsh_topk, embedding_near_pairs,"
+                " the embedding catalogs and gates; bitext_pairs_ann's"
+                " sits behind localCheckpoints too)."
                 " knn_join ranks each left row in the kernel's own"
                 " stage, so its one exchange is fan_out's repartition"
                 " of the left side. Nested-loop joins"
